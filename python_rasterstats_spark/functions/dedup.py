@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..operators.zonal import spread
+
 
 def exact_dups(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash (hash-groupBy dedup).
@@ -58,24 +60,10 @@ def _shingles(n: int = 3, toks=None):
     )
 
 
-def _spread_if_narrow(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to defaultParallelism ONLY when the input
-    has fewer partitions — a small corpus parquet arrives as one split,
-    which serializes the whole explode + partial-aggregation stage
-    (measured: the sf0.1 minhash signature pass ran as a single task).
-    Large corpora already have ≥ parallelism partitions and pass through
-    untouched, so no shuffle is ever added at scale. The partition-count
-    probe plans the scan RDD without executing it."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def _shingled(docs: DataFrame, n: int, *extra_cols):
     """(doc_id[, extra...], shingles) for docs with ≥n tokens — tokens
     split ONCE per row via a projected column (see _shingles)."""
-    docs = _spread_if_narrow(docs)
+    docs = spread(docs)
     base = docs.select(
         "doc_id", *extra_cols, F.split(F.trim(F.col("text")), " ").alias("_toks")
     ).filter(F.size("_toks") >= n)
@@ -415,7 +403,7 @@ def _simhash_agg(docs: DataFrame, *, bits: int = 64) -> DataFrame:
     """Simhashes for docs with tokens only (internal: feeds the pairs path
     without the row-per-doc reinstatement join)."""
     toks = F.array_distinct(F.split(F.trim(F.col("text")), " "))
-    t = _spread_if_narrow(docs).select("doc_id", F.explode(toks).alias("tok")).select(
+    t = spread(docs).select("doc_id", F.explode(toks).alias("tok")).select(
         "doc_id", F.xxhash64("tok").alias("h")
     )
     aggs = [

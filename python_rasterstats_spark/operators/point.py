@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import codecs as C
 from .. import geom as G
 from .. import kernel as K
-from .zonal import collect_dataset_meta
+from .zonal import _BEYOND_EXTENT, collect_dataset_meta
 
 _WINDOWS_SCHEMA = T.StructType(
     [
@@ -186,34 +186,9 @@ def point_query_df(
             for zid, ds, wkb in zip(
                 pdf["zone_id"], pdf["dataset"], pdf["geometry_wkb"]
             ):
-                m = meta.get(ds)
-                if m is None:
-                    raise ValueError(f"zone {zid}: unknown dataset {ds!r}")
-                aff = m["affine"]
-                geom = G.wkb_loads(bytes(wkb))
-                for vi, (x, y) in enumerate(G.geom_vertices(geom)):
-                    if bilin:
-                        win, (ux, uy) = K.point_window_unitxy(x, y, aff)
-                    else:
-                        r, c = K.rowcol(x, y, aff)
-                        win, (ux, uy) = ((r, r + 1), (c, c + 1)), (0.0, 0.0)
-                    if not boundless and K.beyond_extent(
-                        win, (m["height"], m["width"])
-                    ):
-                        raise ValueError(
-                            "Window/bounds is outside dataset extent, "
-                            "boundless reads are disabled"
-                        )
-                    (r0, r1), (c0, c1) = win
-                    by_tile: dict = {}
-                    for pos, (pr, pc) in enumerate(
-                        (pr, pc) for pr in range(r0, r1) for pc in range(c0, c1)
-                    ):
-                        key = (
-                            math.floor(pc / m["tile_w"]),
-                            math.floor(pr / m["tile_h"]),
-                        )
-                        by_tile.setdefault(key, []).append((pr, pc, pos))
+                for vi, ux, uy, by_tile in _vertex_windows(
+                    zid, ds, wkb, meta, bilin=bilin, boundless=boundless
+                ):
                     for (tc, tr), pix in by_tile.items():
                         rows["zone_id"].append(zid)
                         rows["vertex_idx"].append(vi)
@@ -316,47 +291,57 @@ def point_query_df(
     return _interp_join(gathered, vkeys, bilin, _bc)
 
 
+def _vertex_windows(zid, ds, wkb, meta: dict, *, bilin: bool, boundless: bool):
+    """Per-vertex pixel windows of one zone, grouped by covering tile key:
+    yields ``(vertex_idx, ux, uy, {(tc, tr): [(pr, pc, pos), ...]})`` —
+    the one derivation behind both the executor-side explode and the
+    driver-side window dict. Raises the reference's ValueError for an
+    unknown dataset or (boundless=False) a window beyond the extent."""
+    m = meta.get(ds)
+    if m is None:
+        raise ValueError(f"zone {zid}: unknown dataset {ds!r}")
+    aff = m["affine"]
+    for vi, (x, y) in enumerate(G.geom_vertices(G.wkb_loads(bytes(wkb)))):
+        if bilin:
+            win, (ux, uy) = K.point_window_unitxy(x, y, aff)
+        else:
+            r, c = K.rowcol(x, y, aff)
+            win, (ux, uy) = ((r, r + 1), (c, c + 1)), (0.0, 0.0)
+        if not boundless and K.beyond_extent(win, (m["height"], m["width"])):
+            raise ValueError(_BEYOND_EXTENT)
+        (r0, r1), (c0, c1) = win
+        by_tile: dict = {}
+        for pos, (pr, pc) in enumerate(
+            (pr, pc) for pr in range(r0, r1) for pc in range(c0, c1)
+        ):
+            key = (math.floor(pc / m["tile_w"]), math.floor(pr / m["tile_h"]))
+            by_tile.setdefault(key, []).append((pr, pc, pos))
+        yield vi, ux, uy, by_tile
+
+
 def _driver_windows(gd: dict, meta: dict, *, bilin: bool, boundless: bool):
-    """Driver-side twin of the explode_vertices stage: per-vertex pixel
-    windows grouped by covering tile key. Returns
+    """Driver-side twin of the explode_vertices stage. Returns
     ``({(ds, tc, tr): [(zid, vi, [(pr, pc, pos)...], ux, uy)...]},
-    [(zid, vi)...])`` or None when any vertex would hit the
-    boundless=False beyond-extent raise (caller falls back to the lazy
-    executor path so the error surfaces at action time, as before)."""
+    [(zid, vi)...])`` — the vertex keys DISTINCT, as the executor path's
+    ``distinct()`` makes them, so a zone_id under several datasets yields
+    one output row per vertex either way — or None when any zone would
+    raise (caller falls back to the lazy executor path so the error
+    surfaces at action time, as before)."""
     wmap: dict = {}
-    vkeys: list = []
-    for (zid, ds), wkb in gd.items():
-        m = meta.get(ds)
-        if m is None:
-            return None
-        aff = m["affine"]
-        geom = G.wkb_loads(bytes(wkb))
-        for vi, (x, y) in enumerate(G.geom_vertices(geom)):
-            if bilin:
-                win, (ux, uy) = K.point_window_unitxy(x, y, aff)
-            else:
-                r, c = K.rowcol(x, y, aff)
-                win, (ux, uy) = ((r, r + 1), (c, c + 1)), (0.0, 0.0)
-            if not boundless and K.beyond_extent(
-                win, (m["height"], m["width"])
+    vkeys: dict = {}  # insertion-ordered set
+    try:
+        for (zid, ds), wkb in gd.items():
+            for vi, ux, uy, by_tile in _vertex_windows(
+                zid, ds, wkb, meta, bilin=bilin, boundless=boundless
             ):
-                return None
-            (r0, r1), (c0, c1) = win
-            by_tile: dict = {}
-            for pos, (pr, pc) in enumerate(
-                (pr, pc) for pr in range(r0, r1) for pc in range(c0, c1)
-            ):
-                key = (
-                    math.floor(pc / m["tile_w"]),
-                    math.floor(pr / m["tile_h"]),
-                )
-                by_tile.setdefault(key, []).append((pr, pc, pos))
-            for (tc, tr), pix in by_tile.items():
-                wmap.setdefault((ds, tc, tr), []).append(
-                    (zid, vi, pix, ux, uy)
-                )
-            vkeys.append((zid, vi))
-    return wmap, vkeys
+                for (tc, tr), pix in by_tile.items():
+                    wmap.setdefault((ds, tc, tr), []).append(
+                        (zid, vi, pix, ux, uy)
+                    )
+                vkeys[(zid, vi)] = None
+    except ValueError:
+        return None
+    return wmap, list(vkeys)
 
 
 def _interp_join(gathered: DataFrame, vkeys: DataFrame, bilin: bool, _bc):

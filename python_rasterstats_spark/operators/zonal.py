@@ -1,36 +1,44 @@
 """Distributed zonal statistics — the engine's core operator.
 
 Replaces the reference's per-feature Python loop (main.py:183-337) with a
-Spark plan:
+tile-driven Spark plan (Raptor, VLDB 2019: build the vector↔raster
+intersection index from metadata, then make one pass over the raster):
 
-    zones ──mapInPandas──▶ zone_cells (zone_id, dataset, tile_col, tile_row)
-                                   │  inner equi-join on tile key,
-    tiles ─────────────────────────┤  zone side broadcast (or SMJ)    [J1]
-                                   │  + key-only anti join synthesizes
-                                   ▼  missing-tile fill cells         [J4]
-            mapInPandas partial kernel: decode payload, rasterize the
-            zone onto the tile's sub-grid (global alignment → seam-safe),
-            mask, emit mergeable partial structs                      [P2-P5]
+    zones ──driver──▶ cover index {(dataset, tile_col, tile_row): zones}
+                      + scan prune predicate (tile-key / quadkey ranges)
+                                   │ broadcast (SMJ regime: cover cells
+                                   │ grouped per tile key, joined to tiles)
+    tiles ──pruned scan────────────┤ [+ NULL-payload rows for cover keys
+                                   ▼  with no stored tile — J4 fill]
+            ONE mapInPandas partial kernel: per tile, decode the payload
+            once, rasterize each covering zone onto the tile's sub-grid
+            (global alignment → seam-safe), mask, emit mergeable partial
+            structs                                                [P2-P5]
                                    │
          scalar-only: groupBy(zone_id) JVM agg (whole-stage codegen,
          map-side combine)                                         [A1-A6]
-         holistic: ONE groupBy(zone_id) applyInPandas merging scalars +
-         (value, count) arrays together — exact median/percentiles/
-         majority/minority/unique/value_counts; optional salted pre-merge
-         and quantile-summary sketching for continuous rasters    [A7-A15]
+         holistic: ONE zone-keyed merge of scalars + (value, count)
+         arrays — exact median/percentiles/majority/minority/unique/
+         value_counts; optional salted pre-merge and quantile-summary
+         sketching for continuous rasters                         [A7-A15]
                                    │
                                    ▼ broadcast join back to zones      [J2]
                      final projection w/ empty-zone semantics          [A17]
 
 Scale properties:
-- tiles are never shuffled in ANY path (incl. boundless nodata): the
-  zone_cells side is broadcast (inner join) so the scan streams map-side;
-  the only shuffle is the zone-keyed merge, whose payload is partial
-  structs, with map-side combine (scalar path) or salted pre-merge
-  (holistic path) bounding the reduce fan-in.
-- skewed (continent-sized) zones fan out to one row per covering tile, so
-  their partial work spreads across all executors; the salted pre-merge
-  re-spreads the merge of hot zones (north_rule salting requirement).
+- every tile payload crosses Arrow once, whatever the zone count covering
+  it, and tiles are never shuffled in the broadcast regime (incl.
+  boundless nodata, whose missing-tile keys come from a key-only scan);
+  the only shuffle is the zone-keyed merge of partial structs, with
+  map-side combine (scalar path) or salted pre-merge (holistic path)
+  bounding the reduce fan-in.
+- errors the driver detects while building the cover index (unknown
+  dataset, beyond-extent with boundless=False, cover cap) still surface
+  at action time with the reference's messages: the kernel's input is
+  then a one-row stage that raises.
+- skewed (continent-sized) zones fan out to one partial per covering
+  tile, so their partial work spreads across all executors; the salted
+  pre-merge re-spreads the merge of hot zones.
 - holistic stats are exact at parity scale: merged (value, count) pairs
   reproduce np.percentile's linear interpolation and np.unique-order
   tiebreaks (reference main.py:270-292, utils.py:117-122). Past
@@ -82,13 +90,13 @@ def collect_dataset_meta(datasets: DataFrame) -> dict:
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition a narrow table so the following Arrow stage
-    parallelizes — zone tables often arrive as one parquet file → one
-    task. SKIPPED when the input already has ≥ target partitions (r5
-    verdict #6: at 10⁹ zones the unconditional round-robin was a
-    gratuitous full shuffle of an already-spread table). The partition
-    probe plans the RDD without executing it — tens of ms, cheap next to
-    either outcome."""
+    """Repartition a narrow table so the following stage parallelizes —
+    zone tables and small document corpora often arrive as one parquet
+    file → one task. SKIPPED when the input already has ≥ target
+    partitions (r5 verdict #6: at 10⁹ zones the unconditional round-robin
+    was a gratuitous full shuffle of an already-spread table). The
+    partition probe plans the RDD without executing it — tens of ms,
+    cheap next to either outcome."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
@@ -466,6 +474,15 @@ def tile_prune_filter(
     return F.expr(" OR ".join(parts))
 
 
+_BEYOND_EXTENT = (
+    "Window/bounds is outside dataset extent, boundless reads are disabled"
+)
+
+
+def _cap_message(zid, ncells: int, cap: int) -> str:
+    return f"zone {zid} covers {ncells} tiles (> max_cells_per_zone={cap})"
+
+
 def zone_cover_cells(
     zones: DataFrame,
     meta: dict,
@@ -476,7 +493,10 @@ def zone_cover_cells(
     with_geometry: bool = False,
     null_wkb_keys: frozenset | set | None = None,
 ) -> DataFrame:
-    """Explode each zone into its covering tile keys (J1 filter phase).
+    """Explode each zone into its covering tile keys (J1 filter phase) on
+    the executors — the SMJ regime (zone set too large to collect) and the
+    gather/crosstab operators; the broadcast regime derives the same keys
+    on the driver (broadcast_cover_cells).
 
     The bbox→window math is the reference's partition pruning
     (main.py:189-191, io.py:156-161) re-expressed as join-key generation.
@@ -513,10 +533,7 @@ def zone_cover_cells(
                     K.bounds_window(G.geom_bounds(geom), aff),
                     (m["height"], m["width"]),
                 ):
-                    raise ValueError(
-                        "Window/bounds is outside dataset extent, "
-                        "boundless reads are disabled"
-                    )
+                    raise ValueError(_BEYOND_EXTENT)
                 tr0, tr1, tc0, tc1, ncells = _zone_tile_window(
                     geom, m, clip_to_grid
                 )
@@ -524,8 +541,7 @@ def zone_cover_cells(
                     continue
                 if ncells > max_cells_per_zone:
                     raise ValueError(
-                        f"zone {zid} covers {ncells} tiles "
-                        f"(> max_cells_per_zone={max_cells_per_zone})"
+                        _cap_message(zid, ncells, max_cells_per_zone)
                     )
                 trs = np.arange(tr0, tr1 + 1, dtype=np.int32)
                 tcs = np.arange(tc0, tc1 + 1, dtype=np.int32)
@@ -907,12 +923,10 @@ def _pair_processor(
     geoms,
     user_partials: dict,
 ):
-    """Per-(zone, tile) refine body shared by BOTH kernel drivers (the
-    joined-rows kernel and the tile-scan kernel): decode-aware, same
-    masks/partials either way. Returns (process, geom_cache) where
-    ``process(rows, zid, ds, tc, tr, payload, fmt, wkb, decoded)`` appends
-    partial rows and returns the decoded tile array for reuse across the
-    zones of one tile."""
+    """Per-(zone, tile) refine body of partial_kernel. Returns ``process(rows,
+    zid, ds, tc, tr, payload, fmt, wkb, decoded)``, which appends partial
+    rows and returns the decoded tile array for reuse across the zones of
+    one tile (a NULL payload — missing tile — fills with nodata)."""
     geom_cache = K.LRU(1024)
 
     def process(rows, zid, ds, tc, tr, payload, fmt, wkb=None, decoded=None):
@@ -1022,10 +1036,14 @@ def _pair_processor(
     return process
 
 
+_TILE_COLS = ("dataset", "tile_col", "tile_row", "bytes", "fmt")
+
+
 def partial_kernel(
-    joined: DataFrame,
+    tiles: DataFrame,
     meta: dict,
     *,
+    cover=None,
     all_touched: bool,
     nodata_override,
     want_counts: bool,
@@ -1037,8 +1055,23 @@ def partial_kernel(
     geoms=None,
     user_partials: dict | None = None,
 ) -> DataFrame:
-    """Per-(zone, tile) refine + partial aggregation (J1 refine phase +
-    P2-P5 masks + A1-A15 partial states).
+    """The tile-driven refine + partial aggregation (J1 refine phase +
+    P2-P5 masks + A1-A15 partial states): one input row per tile
+    ``(dataset, tile_col, tile_row, bytes, fmt)`` — NULL ``bytes`` for a
+    cover key with no stored tile (boundless nodata fill) — and one
+    partial row per (zone, tile) pair with pixels. Each payload crosses
+    Arrow and is decoded once however many zones cover it.
+
+    A tile's covering zones come from one of two sources:
+
+    - ``cover``: the broadcast dict ``{(dataset, tile_col, tile_row):
+      [zone_id, ...]}`` from broadcast_cover_cells (broadcast regime);
+      geometry comes from ``geoms`` (broadcast_zone_geoms), stored once
+      per zone per executor.
+    - ``cover=None``: a ``zs`` column holding the tile's (zone_id,
+      geometry_wkb) structs, grouped per tile key by the SMJ regime's
+      exchange; a NULL wkb (hybrid regime big zone) resolves from
+      ``geoms``.
 
     ``user_partials`` maps stat name → partial_fn(masked) returning a
     fixed-length float state vector per (zone, tile) block — the SCALABLE
@@ -1047,13 +1080,6 @@ def partial_kernel(
     sees has the same semantics as the reference's (nodata/NaN/outside-
     zone masked), restricted to this partial's block; states merge via the
     matching merge_fn in merged_stats.
-
-    Geometry arrives either via ``geoms`` (a Broadcast dict from
-    broadcast_zone_geoms — the broadcast regime: WKB stored once per zone
-    per executor, never per cell), as a per-row ``geometry_wkb`` column
-    (the SMJ regime), or BOTH (the hybrid regime: large-WKB zones carry
-    NULL per cell and resolve from the broadcast dict; everything else
-    rides the column).
 
     With ``bands`` set, ONE pass emits per-band partial rows: the payload
     is decoded once and the zone rasterized once per (zone, tile) pair,
@@ -1075,202 +1101,126 @@ def partial_kernel(
             sketch_px=sketch_px, compact_vc=compact_vc, bands=bands,
             geoms=geoms, user_partials=user_partials,
         )
-        tile_cache = K.LRU(64)
         for pdf in batches:
             rows = {name: [] for name in schema.fieldNames()}
-            # prefer the per-row column whenever the cells carry it (SMJ /
-            # hybrid regimes); the broadcast dict is the only source in
-            # the broadcast regime and the fallback for hybrid NULL rows
-            wkbs = pdf["geometry_wkb"] if "geometry_wkb" in pdf else None
-            for i, (zid, ds, tc, tr, payload, fmt) in enumerate(zip(
-                pdf["zone_id"], pdf["dataset"], pdf["tile_col"], pdf["tile_row"],
-                pdf["bytes"], pdf["fmt"],
-            )):
-                wkb = None
-                if wkbs is not None:
-                    wkb = wkbs.iloc[i]
-                    # hybrid regime: a large-WKB zone's cells carry NULL;
-                    # its geometry ships once per executor (process falls
-                    # back to the broadcast dict)
-                decoded = None
-                tkey = None
-                if payload is not None:
-                    tkey = (ds, tc, tr)
-                    decoded = tile_cache.get(tkey)
-                decoded = process(
-                    rows, zid, ds, tc, tr, payload, fmt, wkb=wkb,
-                    decoded=decoded,
+            tkeys = list(zip(pdf["dataset"], pdf["tile_col"], pdf["tile_row"]))
+            if cover is None:
+                zlists = (
+                    [(z["zone_id"], z["geometry_wkb"]) for z in zs]
+                    for zs in pdf["zs"]
                 )
-                if decoded is not None and tkey is not None:
-                    tile_cache.put(tkey, decoded)
+            else:
+                # a miss is a scan false positive: the tile covers no zone
+                cov = cover.value
+                zlists = (
+                    [(zid, None) for zid in cov.get(k, ())] for k in tkeys
+                )
+            for (ds, tc, tr), payload, fmt, zl in zip(
+                tkeys, pdf["bytes"], pdf["fmt"], zlists
+            ):
+                decoded = None
+                for zid, wkb in zl:
+                    decoded = process(
+                        rows, zid, ds, tc, tr, payload, fmt, wkb=wkb,
+                        decoded=decoded,
+                    )
             if rows["zone_id"]:
                 yield pd.DataFrame(rows)
 
-    return joined.mapInPandas(gen, schema)
+    cols = _TILE_COLS if cover is not None else (
+        "dataset", "tile_col", "tile_row", "zs", "bytes", "fmt"
+    )
+    return tiles.select(*cols).mapInPandas(gen, schema)
 
 
 def broadcast_cover_cells(
-    zones_spark,
+    spark,
     geoms: dict,
     meta: dict,
     *,
-    max_cells_per_zone: int,
-    raise_beyond_extent: bool,
+    clip_to_grid: bool = True,
+    max_cells_per_zone: int = 4_000_000,
+    raise_beyond_extent: bool = False,
 ):
     """Driver-side twin of zone_cover_cells for the broadcast regime: the
     zone dim is ALREADY collected (broadcast_zone_geoms), so the covering
-    tile keys can be derived on the driver and shipped as one broadcast
-    dict ``{(dataset, tile_col, tile_row): [zone_id, ...]}`` — the same
-    information the broadcast hash relation of the cells⋈tiles join held,
-    at the same memory class, but without the cells mapInPandas stage, the
-    broadcast-exchange build job, or — the big one — the tile payload
-    crossing Arrow once per covering ZONE instead of once per tile
-    (measured 3.7× duplication on the bench corpus).
+    tile keys are derived on the driver and shipped as one broadcast dict
+    ``{(dataset, tile_col, tile_row): [zone_id, ...]}`` — the cover source
+    of partial_kernel. ``clip_to_grid=False`` also keeps keys outside the
+    tile grid (boundless nodata fill, see tile_driven_input).
 
-    Returns the Broadcast, or None when any zone would hit an error path
-    (unknown dataset, beyond-extent with boundless=False, cover-cell cap):
-    the caller then falls back to the executor-side generator so those
-    errors keep surfacing lazily at action time, exactly as before."""
+    Returns the Broadcast, or — when a zone hits an error path (unknown
+    dataset, beyond-extent with boundless=False, cover-cell cap) — the
+    first pending error message, same text as zone_cover_cells raises;
+    tile_driven_input turns it into a stage that raises at action time."""
     cover: dict = {}
     for (zid, ds), wkb in geoms.items():
         m = meta.get(ds)
         if m is None:
-            return None
+            return f"zone {zid}: unknown dataset {ds!r}"
         aff = m["affine"]
         geom = _effective_geom(wkb, aff)
         if raise_beyond_extent and K.beyond_extent(
             K.bounds_window(G.geom_bounds(geom), aff),
             (m["height"], m["width"]),
         ):
-            return None
-        tr0, tr1, tc0, tc1, ncells = _zone_tile_window(geom, m, True)
+            return _BEYOND_EXTENT
+        tr0, tr1, tc0, tc1, ncells = _zone_tile_window(geom, m, clip_to_grid)
         if ncells <= 0:
             continue
         if ncells > max_cells_per_zone:
-            return None
+            return _cap_message(zid, ncells, max_cells_per_zone)
         for tr in range(tr0, tr1 + 1):
             for tc in range(tc0, tc1 + 1):
                 cover.setdefault((ds, tc, tr), []).append(zid)
-    return zones_spark.sparkContext.broadcast(cover)
+    return spark.sparkContext.broadcast(cover)
 
 
-def partial_kernel_tiles(
-    tiles: DataFrame,
-    meta: dict,
-    cover,
-    *,
-    all_touched: bool,
-    nodata_override,
-    want_counts: bool,
-    zone_func=None,
-    band: int = 1,
-    sketch_px: int | None = None,
-    compact_vc: bool = False,
-    bands: list | None = None,
-    geoms=None,
-    user_partials: dict | None = None,
-) -> DataFrame:
-    """The broadcast-regime kernel driven directly off the (pruned) tile
-    scan: for each stored tile, look up its covering zones in the
-    broadcast ``cover`` dict and emit the same partial rows the joined
-    kernel would — zero joins, one Python stage, each payload decoded and
-    Arrow-shipped exactly ONCE however many zones cover it. Downstream
-    (zone-keyed merge, join-back) is unchanged, so results are identical
-    up to partial-row order, which the merges don't observe."""
-    if bands is not None and zone_func is not None:
-        raise ValueError("bands and zone_func cannot be combined")
-    user_partials = user_partials or {}
-    if bands is not None and user_partials:
-        raise ValueError("bands and user add_stats cannot be combined")
-    schema = _partial_schema(
-        compact_vc, with_band=bands is not None, user_cols=tuple(user_partials)
-    )
+def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
+    """(kernel input, cover) for partial_kernel in the broadcast regime,
+    from broadcast_cover_cells' result.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        process = _pair_processor(
-            meta, all_touched=all_touched, nodata_override=nodata_override,
-            want_counts=want_counts, zone_func=zone_func, band=band,
-            sketch_px=sketch_px, compact_vc=compact_vc, bands=bands,
-            geoms=geoms, user_partials=user_partials,
+    ``fill_missing`` (boundless nodata/nan) unions in one NULL-payload row
+    per cover key with no stored tile, so the kernel synthesizes its fill
+    from the cover mask alone. Spark cannot broadcast the left side of an
+    anti join, and cover-keys ⟕ tiles would shuffle the tile table, so the
+    missing keys come from a broadcast inner join of the cover keys
+    against the key-only (column-pruned, no payload bytes) scan, then a
+    left-anti join of the cover keys against that small result.
+
+    A pending error message becomes a one-row stage that raises it when
+    the action runs (with an empty cover): the error surfaces at action
+    time, as with the executor-side generator, and no pruned-to-empty scan
+    can swallow it."""
+    spark = tiles.sparkSession
+    if isinstance(cover, str):
+        msg = cover
+
+        def pending_error(batches):
+            for _ in batches:
+                raise ValueError(msg)
+            yield from ()
+
+        stage = spark.range(1, numPartitions=1).mapInPandas(
+            pending_error,
+            "dataset string, tile_col int, tile_row int, bytes binary, "
+            "fmt string",
         )
-        cov = cover.value
-        for pdf in batches:
-            rows = {name: [] for name in schema.fieldNames()}
-            for ds, tc, tr, payload, fmt in zip(
-                pdf["dataset"], pdf["tile_col"], pdf["tile_row"],
-                pdf["bytes"], pdf["fmt"],
-            ):
-                zids = cov.get((ds, tc, tr))
-                if not zids:
-                    continue  # scan false positive: covers no zone
-                decoded = None
-                for zid in zids:
-                    decoded = process(
-                        rows, zid, ds, tc, tr, payload, fmt, decoded=decoded
-                    )
-            if rows["zone_id"]:
-                yield pd.DataFrame(rows)
-
-    return tiles.select(
-        "dataset", "tile_col", "tile_row", "bytes", "fmt"
-    ).mapInPandas(gen, schema)
-
-
-def partial_kernel_grouped(
-    joined: DataFrame,
-    meta: dict,
-    *,
-    all_touched: bool,
-    nodata_override,
-    want_counts: bool,
-    zone_func=None,
-    band: int = 1,
-    sketch_px: int | None = None,
-    compact_vc: bool = False,
-    bands: list | None = None,
-    geoms=None,
-    user_partials: dict | None = None,
-) -> DataFrame:
-    """The SMJ-regime kernel over tile-grouped join rows: each input row
-    is one tile carrying its covering zones as an array of (zone_id,
-    geometry_wkb) structs (NULL wkb = hybrid big-zone, resolved from the
-    broadcast dict). Same per-pair math as the other kernel drivers via
-    _pair_processor; each payload decoded and Arrow-shipped once per
-    tile."""
-    if bands is not None and zone_func is not None:
-        raise ValueError("bands and zone_func cannot be combined")
-    user_partials = user_partials or {}
-    if bands is not None and user_partials:
-        raise ValueError("bands and user add_stats cannot be combined")
-    schema = _partial_schema(
-        compact_vc, with_band=bands is not None, user_cols=tuple(user_partials)
+        return stage, spark.sparkContext.broadcast({})
+    scan = tiles.select(*_TILE_COLS)
+    if not fill_missing or not cover.value:
+        return scan, cover
+    keys = list(_TILE_COLS[:3])
+    cover_keys = spark.createDataFrame(
+        list(cover.value), "dataset string, tile_col int, tile_row int"
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        process = _pair_processor(
-            meta, all_touched=all_touched, nodata_override=nodata_override,
-            want_counts=want_counts, zone_func=zone_func, band=band,
-            sketch_px=sketch_px, compact_vc=compact_vc, bands=bands,
-            geoms=geoms, user_partials=user_partials,
-        )
-        for pdf in batches:
-            rows = {name: [] for name in schema.fieldNames()}
-            for ds, tc, tr, zs, payload, fmt in zip(
-                pdf["dataset"], pdf["tile_col"], pdf["tile_row"],
-                pdf["zs"], pdf["bytes"], pdf["fmt"],
-            ):
-                decoded = None
-                for z in zs:
-                    decoded = process(
-                        rows, z["zone_id"], ds, tc, tr, payload, fmt,
-                        wkb=z["geometry_wkb"], decoded=decoded,
-                    )
-            if rows["zone_id"]:
-                yield pd.DataFrame(rows)
-
-    return joined.select(
-        "dataset", "tile_col", "tile_row", "zs", "bytes", "fmt"
-    ).mapInPandas(gen, schema)
+    present = F.broadcast(cover_keys).join(tiles.select(*keys), keys, "inner")
+    missing = (
+        cover_keys.join(F.broadcast(present), keys, "left_anti")
+        .withColumn("bytes", F.lit(None).cast("binary"))
+        .withColumn("fmt", F.lit(None).cast("string"))
+    )
+    return scan.unionByName(missing), cover
 
 
 def _append_partial(rows: dict, p: dict, compact_vc: bool) -> None:
@@ -1369,78 +1319,6 @@ def _merge_scalars(pdf: pd.DataFrame) -> dict:
         "nodata_count": int(pdf["nodata_count"].sum()),
         "nan_count": int(pdf["nan_count"].sum()),
     }
-
-
-def _holistic_only_schema(pctiles, want_vc, with_band=False) -> T.StructType:
-    fields = [T.StructField("zone_id", T.LongType())]
-    if with_band:
-        fields.append(T.StructField("band", T.IntegerType()))
-    fields += [
-        T.StructField("median", T.DoubleType()),
-        T.StructField("majority", T.DoubleType()),
-        T.StructField("minority", T.DoubleType()),
-        T.StructField("unique", T.LongType()),
-    ]
-    fields += [T.StructField(p, T.DoubleType()) for p in pctiles]
-    if want_vc:
-        fields.append(
-            T.StructField("value_counts", T.MapType(T.DoubleType(), T.LongType()))
-        )
-    return T.StructType(fields)
-
-
-def exploded_holistic(
-    partials: DataFrame,
-    pctiles: list[str],
-    want_vc: bool,
-    *,
-    keys: tuple = ("zone_id",),
-) -> DataFrame:
-    """EXACT holistic stats via a distributed (zone, value) aggregation —
-    the scale path for SKEWED zones over high-duplication rasters.
-
-    The single-task bound of the in-task merge (a continent-sized zone's
-    whole value multiset sorted in one applyInPandas task) becomes a JVM
-    hash aggregation keyed (zone, value): map-side combine collapses
-    duplicate values BEFORE the shuffle, the exchange moves one row per
-    DISTINCT (zone, value), and the final per-zone task holds only the
-    distinct domain. Measured on the 604 M-px scaling corpus (3 zones
-    covering all 9,216 tiles each): 197 s → see BENCH.md. For all-distinct
-    data this degenerates to a pixel-count shuffle — use
-    holistic_mode='auto' (sketch) there instead.
-    """
-    with_band = "band" in keys
-    schema = _holistic_only_schema(pctiles, want_vc, with_band=with_band)
-    qs = [K.get_percentile(p) for p in pctiles]
-    kv = F.explode(F.arrays_zip("vc_vals", "vc_cnts")).alias("kv")
-    rows = (
-        partials.select(*keys, kv)
-        .select(
-            *keys,
-            F.col("kv.vc_vals").alias("val"),
-            F.col("kv.vc_cnts").alias("cnt"),
-        )
-        .groupBy(*keys, "val")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        row: dict = {k: [pdf[k].iloc[0]] for k in keys}
-        vals = pdf["val"].to_numpy(dtype=np.float64)
-        cnts = pdf["cnt"].to_numpy(dtype=np.int64)
-        o = np.argsort(vals, kind="stable")
-        vals, cnts = vals[o], cnts[o]
-        row["median"] = [K.weighted_percentile(vals, cnts, 50.0)]
-        row["majority"] = [float(vals[int(np.argmax(cnts))])]
-        row["minority"] = [float(vals[int(np.argmin(cnts))])]
-        row["unique"] = [int(vals.size)]
-        for p, q in zip(pctiles, qs):
-            row[p] = [K.weighted_percentile(vals, cnts, q)]
-        if want_vc:
-            row["value_counts"] = [dict(zip(vals.tolist(), cnts.tolist()))]
-        return pd.DataFrame(row)
-
-    return rows.groupBy(*keys).applyInPandas(fin, schema)
 
 
 def _merge_vc_arrays(vlist, clist):
@@ -1726,10 +1604,18 @@ def zonal_stats_df(
     schema (fixtures.py). Returns one row per zone_id with requested stat
     columns (empty zones: count=0, others null — main.py:230-234).
 
-    ``broadcast_zones=True`` hints the cover-cell side into a broadcast
-    hash join so the tile scan is never shuffled — the right plan whenever
-    the zone working set fits executor memory. With huge zone sets, pass
-    False to fall back to a sort-merge join on the tile key; there,
+    The plan is tile-driven (see the module docstring): one partial
+    kernel over the tile scan, each payload crossing Arrow once.
+    ``broadcast_zones=True`` (the right regime whenever the zone working
+    set fits executor memory) collects the zone dim, derives each tile's
+    covering zones on the driver and broadcasts them as a dict; the tile
+    scan is pruned to the zones' working set (``prune_tiles``) and never
+    shuffled. Boundless nodata/nan counts add one NULL-payload row per
+    covering tile key with no stored tile. Driver-detected errors
+    (beyond-extent with ``boundless=False``, ``max_cells_per_zone``,
+    unknown dataset) still raise when the action runs. With huge zone sets
+    pass False: cover cells are generated on the executors, grouped per
+    tile key and sort-merge joined to the tiles; there,
     ``hybrid_wkb_bytes`` bounds per-cell WKB duplication by broadcasting
     the geometries of zones whose wkb×cells product exceeds it (the few
     continent polygons), so shuffle bytes scale with zone count + small
@@ -1754,8 +1640,7 @@ def zonal_stats_df(
     quantiles are wanted on a continuous float raster, else a salted
     two-stage exact merge (see auto_holistic_plan). ``'exact'`` forces the
     exact merge at any size, ``'sketch'`` forces the bounded summary
-    (quantiles only), ``'exploded'`` runs the distributed (zone, value)
-    JVM aggregation.
+    (quantiles only).
     """
     stats, run_count = K.check_stats(stats, categorical)
     pctiles = [s for s in stats if s.startswith("percentile_")]
@@ -1772,8 +1657,6 @@ def zonal_stats_df(
             )
         if uname in K.VALID_STATS or uname in stats:
             raise ValueError(f"add_stats name {uname!r} shadows a builtin stat")
-    if add_stats and holistic_mode == "exploded":
-        raise ValueError("add_stats is not supported with holistic_mode='exploded'")
     if add_stats and bands is not None:
         raise ValueError("bands and add_stats cannot be combined")
     need_missing = boundless and ("nodata" in stats or "nan" in stats)
@@ -1781,10 +1664,8 @@ def zonal_stats_df(
     # EXACT value domain; median/percentiles alone can run on the bounded
     # quantile summary (the 100×-scale path for continuous float rasters)
     want_exact_domain = run_count or want_vc
-    if holistic_mode not in ("exact", "auto", "sketch", "exploded"):
-        raise ValueError(
-            "holistic_mode must be 'exact', 'auto', 'sketch' or 'exploded'"
-        )
+    if holistic_mode not in ("exact", "auto", "sketch"):
+        raise ValueError("holistic_mode must be 'exact', 'auto' or 'sketch'")
     if holistic_mode == "sketch" and want_exact_domain:
         raise ValueError(
             "holistic_mode='sketch' cannot compute majority/minority/unique/"
@@ -1880,101 +1761,74 @@ def zonal_stats_df(
             use_sketch = want_holistic
         elif plan == "salt" and holistic_salt is None:
             holistic_salt = 16
-    if broadcast_zones and prune_tiles:
-        # scan-level pruning: the zone dim is already on the driver, so a
-        # per-zone tile-key range predicate costs nothing to build and
-        # reaches the parquet scan as PushedFilters — the tile table reads
-        # only the zones' working set, not the whole corpus. Corpora that
-        # carry a quadkey column (with_quadkey; sorted storage) get 1-D
-        # quadkey range sets, which align with row groups/files.
-        pred = tile_prune_filter(
-            geoms_bc.value, meta,
-            quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-            quadkey_level=quadkey_level,
-            prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
-        )
-        if pred is not None:
-            tiles = tiles.filter(pred)
-
-    # broadcast fast path: the zone dim is on the driver already, so the
-    # cover cells are derived THERE and broadcast as a dict — no cells
-    # stage, no join, each tile payload crosses Arrow once (guide §8:
-    # decide with small rows, move big rows once). Zones that would hit a
-    # lazy error path (beyond-extent, cover cap, unknown dataset) return
-    # None and fall through to the executor-side generator + join plan, so
-    # error timing and messages are unchanged.
-    fast_cover = None
-    if broadcast_zones and not need_missing and prune_tiles:
-        fast_cover = broadcast_cover_cells(
+    if broadcast_zones:
+        if prune_tiles:
+            # scan-level pruning: the zone dim is already on the driver,
+            # so a per-zone tile-key range predicate costs nothing to
+            # build and reaches the parquet scan as PushedFilters — the
+            # tile table reads only the zones' working set, not the whole
+            # corpus. Corpora that carry a quadkey column (with_quadkey;
+            # sorted storage) get 1-D quadkey range sets, which align
+            # with row groups/files.
+            pred = tile_prune_filter(
+                geoms_bc.value, meta,
+                quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
+                quadkey_level=quadkey_level,
+                prefix_col=(
+                    "qk_prefix" if "qk_prefix" in tiles.columns else None
+                ),
+            )
+            if pred is not None:
+                tiles = tiles.filter(pred)
+        # the zone dim is on the driver already, so each tile's covering
+        # zones are derived THERE and broadcast as a dict — no cells stage,
+        # no join, each tile payload crosses Arrow once (guide §8: decide
+        # with small rows, move big rows once)
+        cover = broadcast_cover_cells(
             zones.sparkSession, geoms_bc.value, meta,
+            clip_to_grid=not need_missing,
             max_cells_per_zone=max_cells_per_zone,
             raise_beyond_extent=not boundless,
         )
-    if fast_cover is None:
-        cells = zone_cover_cells(
-            zones, meta, clip_to_grid=not need_missing,
-            max_cells_per_zone=max_cells_per_zone,
-            raise_beyond_extent=not boundless,
-            with_geometry=not broadcast_zones,
-            null_wkb_keys=big_keys,
+        kernel_in, cover = tile_driven_input(
+            tiles, cover, fill_missing=need_missing
         )
-
-    tile_side = tiles.select(
-        "dataset", "tile_col", "tile_row", "bytes", "fmt"
-    )
-    keys = ["dataset", "tile_col", "tile_row"]
-    if fast_cover is not None:
-        joined = None
-    elif need_missing and broadcast_zones:
-        # J4 without shuffling tiles: Spark cannot broadcast the LEFT side
-        # of a left join, so a plain cells⟕tiles would fall to SMJ and
-        # shuffle the payload-bearing tile corpus. Instead: inner broadcast
-        # join for the present pairs, plus a key-only second tile scan
-        # (column-pruned — no payload bytes read) to find cells with NO
-        # stored tile; those rows get a NULL payload and synthesize their
-        # boundless nodata fill from the cover mask alone (decoded=None path
-        # in the partial kernel). Mirrors the point operator's
-        # inner-broadcast + reinstatement plan (operators/point.py:140-148).
-        present = F.broadcast(cells).join(tile_side, keys, "inner")
-        present_keys = F.broadcast(cells).join(
-            tiles.select(*keys), keys, "inner"
-        )
-        missing = (
-            cells.join(F.broadcast(present_keys), ["zone_id", *keys], "left_anti")
-            .withColumn("bytes", F.lit(None).cast("binary"))
-            .withColumn("fmt", F.lit(None).cast("string"))
-        )
-        joined = present.unionByName(missing)
-    elif not broadcast_zones:
+    else:
         # SMJ regime (zone set too large to broadcast): the cover cells
         # are GROUPED per tile key before the join — the same exchange
         # the join needs anyway now carries one aggregation, and the join
         # emits ONE row per tile with the covering zones as an array
-        # instead of one payload-bearing row per (zone, tile) pair. The
-        # tile payload then crosses the Python boundary once per tile,
-        # not once per covering zone (3.7× fewer Arrow bytes on the bench
-        # corpus, pairs/tiles× in general); the tile side is still never
-        # re-shuffled beyond what the join itself requires. Absent tiles
-        # arrive as NULL payloads directly via the left join (J4).
+        # instead of one payload-bearing row per (zone, tile) pair, so the
+        # tile payload crosses the Python boundary once per tile. Absent
+        # tiles arrive as NULL payloads directly via the left join (J4).
+        cover = None
+        keys = list(_TILE_COLS[:3])
+        cells = zone_cover_cells(
+            zones, meta, clip_to_grid=not need_missing,
+            max_cells_per_zone=max_cells_per_zone,
+            raise_beyond_extent=not boundless,
+            with_geometry=True,
+            null_wkb_keys=big_keys,
+        )
         grouped_cells = cells.groupBy(*keys).agg(
             F.collect_list(F.struct("zone_id", "geometry_wkb")).alias("zs")
         )
-        joined = grouped_cells.join(
-            tile_side, keys, "left" if need_missing else "inner"
+        kernel_in = grouped_cells.join(
+            tiles.select(*_TILE_COLS), keys,
+            "left" if need_missing else "inner",
         )
-    else:
-        joined = F.broadcast(cells).join(tile_side, keys, "inner")
 
     refd = [dataset] if dataset is not None else list(meta)
     # compact only when values are guaranteed float32-representable: raw
     # float32 pixels, no user transform (zone_func output is float64)
     compact = (
         (want_holistic or want_vc)
-        and holistic_mode != "exploded"  # exploding needs real arrays
         and zone_func is None
         and all(meta[d].get("dtype") == "float32" for d in refd)
     )
-    kernel_kw = dict(
+    partials = partial_kernel(
+        kernel_in, meta,
+        cover=cover,
         all_touched=all_touched,
         nodata_override=nodata,
         want_counts=want_holistic or want_vc,
@@ -1986,41 +1840,13 @@ def zonal_stats_df(
         geoms=geoms_bc,
         user_partials={n: t[0] for n, t in add_stats.items()},
     )
-    if fast_cover is not None:
-        partials = partial_kernel_tiles(tiles, meta, fast_cover, **kernel_kw)
-    elif not broadcast_zones:
-        partials = partial_kernel_grouped(joined, meta, **kernel_kw)
-    else:
-        partials = partial_kernel(joined, meta, **kernel_kw)
     group_keys = ("zone_id",) if bands is None else ("zone_id", "band")
 
     # join-back (J2): per-zone aggregates are ≤1 row/zone — same cardinality
     # class as the broadcastable zone side, so broadcast them and keep the
     # whole plan SMJ-free in the broadcast regime
     _bc = F.broadcast if broadcast_zones else (lambda d: d)
-    if (want_holistic or want_vc) and holistic_mode == "exploded":
-        # distributed exact holistic: JVM (zone, value) agg — map-side
-        # combine dedups before the shuffle; right for skewed zones over
-        # high-duplication rasters (the partial kernel is evaluated twice
-        # here — decode+rasterize cost is bought back many times over by
-        # the distributed domain merge on such corpora)
-        scalars = partials.groupBy(*group_keys).agg(
-            F.sum("count").alias("count"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_i").alias("sum_i"),
-            F.sum("sumsq").alias("sumsq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("nodata_count").alias("nodata_count"),
-            F.sum("nan_count").alias("nan_count"),
-        )
-        hol = exploded_holistic(partials, pctiles, want_vc, keys=group_keys)
-        result = (
-            _band_base(zones, bands)
-            .join(_bc(scalars), list(group_keys), "left")
-            .join(_bc(hol), list(group_keys), "left")
-        )
-    elif want_holistic or want_vc or add_stats:
+    if want_holistic or want_vc or add_stats:
         # ONE zone-keyed merge for scalars + holistics (+ user states): the
         # partial kernel (decode + rasterize) is evaluated exactly once,
         # not once per consuming aggregation

@@ -175,8 +175,8 @@ def checkpointed_zonal_bucketed(
     only the buckets that never committed — kill it anywhere and rerun;
     the final merge sees exactly one copy of every partial either way."""
     from ..operators.zonal import (
-        broadcast_zone_geoms, collect_dataset_meta, merged_stats,
-        partial_kernel, zone_cover_cells,
+        broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
+        merged_stats, partial_kernel, tile_driven_input,
     )
     from ..sources.tables import load_corpus
     from .. import kernel as K
@@ -189,18 +189,18 @@ def checkpointed_zonal_bucketed(
     want_holistic = run_count or "median" in stats_list or bool(pctiles)
 
     zones_ds = zones.withColumn("dataset", F.lit(dataset))
-    tile_side = tiles.select("dataset", "tile_col", "tile_row", "bytes", "fmt")
 
     def build_bucket(b: int):
         zb = zones_ds.filter(F.pmod(F.col("zone_id"), F.lit(buckets)) == b)
-        cells = zone_cover_cells(zb, meta, clip_to_grid=True)
-        joined = F.broadcast(cells).join(
-            tile_side, ["dataset", "tile_col", "tile_row"]
+        geoms = broadcast_zone_geoms(zb)
+        kernel_in, cover = tile_driven_input(
+            tiles, broadcast_cover_cells(spark, geoms.value, meta)
         )
         return partial_kernel(
-            joined, meta, all_touched=kw.get("all_touched", False),
+            kernel_in, meta, cover=cover,
+            all_touched=kw.get("all_touched", False),
             nodata_override=kw.get("nodata"), want_counts=want_holistic,
-            geoms=broadcast_zone_geoms(zb),
+            geoms=geoms,
         )
 
     partials = stage_bucketed(
@@ -244,8 +244,8 @@ def checkpointed_zonal(
     partials → result. Killing the job between stages and rerunning skips
     completed work (SURVEY.md §4 step 7)."""
     from ..operators.zonal import (
-        broadcast_zone_geoms, collect_dataset_meta, partial_kernel,
-        zone_cover_cells, zonal_stats_df,
+        broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
+        partial_kernel, tile_driven_input,
     )
     from ..sources.tables import load_corpus
     from .. import kernel as K
@@ -261,15 +261,15 @@ def checkpointed_zonal(
     zones_ds = zones.withColumn("dataset", F.lit(dataset))
 
     def build_partials():
-        cells = zone_cover_cells(zones_ds, meta, clip_to_grid=True)
-        joined = F.broadcast(cells).join(
-            tiles.select("dataset", "tile_col", "tile_row", "bytes", "fmt"),
-            ["dataset", "tile_col", "tile_row"],
+        geoms = broadcast_zone_geoms(zones_ds)
+        kernel_in, cover = tile_driven_input(
+            tiles, broadcast_cover_cells(spark, geoms.value, meta)
         )
         return partial_kernel(
-            joined, meta, all_touched=kw.get("all_touched", False),
+            kernel_in, meta, cover=cover,
+            all_touched=kw.get("all_touched", False),
             nodata_override=kw.get("nodata"), want_counts=want_holistic,
-            geoms=broadcast_zone_geoms(zones_ds),
+            geoms=geoms,
         )
 
     partials = runner.stage("partials", build_partials)

@@ -13,7 +13,27 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """Local SparkSession with the engine's recommended configuration.
+
+    Two settings are SESSION-WIDE and so also change queries the caller
+    runs in the same session, not only the engine's own:
+
+    - ``spark.sql.join.preferSortMergeJoin=false`` lets the planner pick a
+      shuffled hash join wherever a side's per-partition size estimate
+      fits in memory. A hash join's build side cannot spill the way a
+      sort-merge join's sort can, so a misestimated or skewed join in
+      other code may run out of memory where it would have completed.
+      Pass ``extra={"spark.sql.join.preferSortMergeJoin": "true"}`` to
+      restore Spark's default; the engine's broadcast-regime joins are
+      broadcast hash joins, which the flag does not affect.
+    - ``InferFiltersFromGenerate`` is excluded from the optimizer, so no
+      query gets the inferred ``size(arr) > 0 AND isnotnull(arr)`` filter
+      below an explode (see the comment below). Results are unchanged;
+      a query whose pushed-down inferred filter would have pruned rows
+      early loses that pruning.
+
+    ``extra`` entries are applied last and override any default here."""
+    cpus =int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (

@@ -20,8 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.zonal import (
-    broadcast_zone_geoms, collect_dataset_meta, partial_kernel,
-    zone_cover_cells,
+    broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
+    partial_kernel, tile_driven_input,
 )
 
 
@@ -89,8 +89,8 @@ def incremental_zonal(
     transform. Returns the streaming query (awaitTermination for
     availableNow batch-catch-up semantics)."""
     meta = collect_dataset_meta(datasets)
-    cells = zone_cover_cells(zones, meta, clip_to_grid=True)
     geoms_bc = broadcast_zone_geoms(zones)
+    cover = broadcast_cover_cells(spark, geoms_bc.value, meta)
 
     tiles_schema = (
         "image_id string, bytes binary, w int, h int, fmt string, "
@@ -105,13 +105,10 @@ def incremental_zonal(
     )
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        joined = F.broadcast(cells).join(
-            batch_df.select("dataset", "tile_col", "tile_row", "bytes", "fmt"),
-            ["dataset", "tile_col", "tile_row"],
-        )
+        kernel_in, batch_cover = tile_driven_input(batch_df, cover)
         new_partials = partial_kernel(
-            joined, meta, all_touched=all_touched, nodata_override=nodata,
-            want_counts=True, geoms=geoms_bc,
+            kernel_in, meta, cover=batch_cover, all_touched=all_touched,
+            nodata_override=nodata, want_counts=True, geoms=geoms_bc,
         )
         sp = batch_df.sparkSession
         state_path = os.path.join(state_dir, "partials")

@@ -66,28 +66,27 @@ def test_partial_sketch_bounds_state_size(corpus):
     the property that bounds the holistic shuffle at 100× scale."""
     tiles, zones, datasets = corpus
     from python_rasterstats_spark.operators.zonal import (
-        broadcast_zone_geoms, collect_dataset_meta, zone_cover_cells,
+        broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
+        tile_driven_input,
     )
 
     meta = collect_dataset_meta(datasets)
     z = zones.filter(F.col("collection") == "hd_zones").withColumn(
         "dataset", F.lit("slope_hd")
     )
-    cells = zone_cover_cells(z, meta, clip_to_grid=True)
     geoms_bc = broadcast_zone_geoms(z)
-    joined = F.broadcast(cells).join(
-        tiles.select("dataset", "tile_col", "tile_row", "bytes", "fmt"),
-        ["dataset", "tile_col", "tile_row"], "inner",
+    kernel_in, cover = tile_driven_input(
+        tiles, broadcast_cover_cells(tiles.sparkSession, geoms_bc.value, meta)
     )
     parts = partial_kernel(
-        joined, meta, all_touched=False, nodata_override=None,
+        kernel_in, meta, cover=cover, all_touched=False, nodata_override=None,
         want_counts=True, sketch_px=256, geoms=geoms_bc,
     )
     mx = parts.agg(F.max(F.size("vc_vals"))).collect()[0][0]
     assert mx <= 256
     # and without sketching the same partials exceed that (full 32² tiles)
     exact = partial_kernel(
-        joined, meta, all_touched=False, nodata_override=None,
+        kernel_in, meta, cover=cover, all_touched=False, nodata_override=None,
         want_counts=True, geoms=geoms_bc,
     )
     assert exact.agg(F.max(F.size("vc_vals"))).collect()[0][0] > 256

@@ -213,28 +213,6 @@ def test_multiband_one_pass_matches_per_band(corpus):
                        bands=[1, 3], stats=["count"])
 
 
-def test_exploded_holistic_matches_exact(corpus):
-    """holistic_mode='exploded' (distributed (zone,value) JVM agg) is
-    value-identical to the default in-task exact merge, incl. categorical
-    maps — it is a plan choice, not a semantics choice."""
-    tiles, zones, datasets = corpus
-    z = zones.filter(F.col("collection") == "polygons")
-    STATS = "count min max mean sum std median majority minority unique range percentile_25".split()
-    a = {r["zone_id"]: r.asDict() for r in zonal_stats_df(
-        z, tiles, datasets, dataset="slope", stats=STATS).collect()}
-    b = {r["zone_id"]: r.asDict() for r in zonal_stats_df(
-        z, tiles, datasets, dataset="slope", stats=STATS,
-        holistic_mode="exploded").collect()}
-    assert a == b
-    c = {r["zone_id"]: r.asDict() for r in zonal_stats_df(
-        z, tiles, datasets, dataset="slope_classes", stats=["count"],
-        categorical=True, holistic_mode="exploded").collect()}
-    d = {r["zone_id"]: r.asDict() for r in zonal_stats_df(
-        z, tiles, datasets, dataset="slope_classes", stats=["count"],
-        categorical=True).collect()}
-    assert all(c[k]["value_counts"] == d[k]["value_counts"] for k in c)
-
-
 def test_zonal_crosstab_matches_numpy(corpus):
     """Cross-tab vs direct numpy on the mosaicked rasters: per (zone,
     class), count/mean/min/max/sum/std of slope where slope_classes holds

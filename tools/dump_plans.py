@@ -41,7 +41,7 @@ def main():
             stats="count min max mean sum std median majority minority "
                   "unique range percentile_25 percentile_90".split(),
         ),
-        "zonal boundless nodata (anti-join fill synthesis)": zonal_stats_df(
+        "zonal boundless nodata (tile-driven, missing-key fill rows)": zonal_stats_df(
             polys, tiles, datasets, dataset="slope_nodata",
             stats=["count", "nodata", "nan"],
         ),
@@ -64,9 +64,11 @@ def main():
         "",
         "- the payload-bearing **tile table is never shuffled** (no",
         "  SortMergeJoin; no Exchange keyed on the tile key) in the",
-        "  broadcast regime — including the boundless-nodata path;",
+        "  broadcast regime — including the boundless-nodata path, whose",
+        "  NULL-payload rows for missing tiles come from the driver-known",
+        "  cover keys anti-joined against a key-only scan;",
         "- **column pruning reaches the scan**: the tile scan reads only the",
-        "  join keys + payload columns (never caption/phash); the",
+        "  tile key + payload columns (never caption/phash); the",
         "  boundless-nodata plan's SECOND scan reads keys ONLY (no bytes).",
         "",
         "(The codegen-span count reads 0 here because AQE's pre-execution",

@@ -3,15 +3,19 @@ CLASS raster, within each zone (the classic GIS cross-tab / tabulate-area
 operator, generalized to full scalar stats).
 
 Not in the reference (rasterstats handles one raster per call); this is a
-multi-raster composition the tile-corpus model makes natural: both
-datasets share the grid, so one broadcast cover-cell join per raster
-aligns their tiles and the kernel walks both decoded blocks under one
-rasterized cover mask. Output is long format: one row per
+multi-raster composition the tile-corpus model makes natural. Both
+datasets share the grid, so the plan is operators/zonal.py's tile-driven
+one with a paired input: one kernel row per stored (value tile, class
+tile) pair, joined on (tile_col, tile_row). The tile's covering zones come
+from the driver's broadcast cover dict (broadcast regime) or from cover
+cells grouped per tile key (SMJ regime); the kernel decodes both payloads
+once per tile, however many zones cover it, and walks them under each
+zone's rasterized cover mask. Output is long format: one row per
 (zone, class value).
 
-Plan shape matches operators/zonal.py: neither tile scan is shuffled
-(broadcast cover cells, inner joins on the tile key); the only shuffle is
-the (zone, class)-keyed scalar merge, which combines map-side.
+The paired input is the only join between tile tables: each payload
+crosses it once. The other shuffle is the (zone, class)-keyed scalar
+merge, which combines map-side.
 """
 
 from __future__ import annotations
@@ -23,13 +27,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import codecs as C
-from .. import geom as G
-from .. import kernel as K
 from .zonal import (
-    _effective_geom,
+    _cell_block,
+    _zone_lists,
+    _zone_masks,
+    broadcast_cover_cells,
     broadcast_zone_geoms,
     collect_dataset_meta,
+    group_cover_cells,
     hybrid_big_zone_geoms,
+    tile_driven_input,
     tile_prune_filter,
     zone_cell_counts,
     zone_cover_cells,
@@ -80,16 +87,29 @@ def zonal_crosstab_df(
             f"(affine+tile size); got {value_dataset!r} vs {class_dataset!r}"
         )
 
-    # KEY-ONLY cells + once-per-zone geometry broadcast (operators/zonal.py
-    # rationale: never store WKB per covering tile); the SMJ regime
-    # (broadcast_zones=False) carries WKB on the cells through the
-    # tile-key shuffle — bounded by the same hybrid sizing pass as zonal
-    # (large-WKB × many-cell zones broadcast instead, cells carry NULL)
+    # broadcast regime: once-per-zone geometry broadcast + driver cover
+    # dict (operators/zonal.py rationale: never store WKB per covering
+    # tile); the SMJ regime (broadcast_zones=False) carries WKB on the
+    # cells through the tile-key shuffle — bounded by the same hybrid
+    # sizing pass as zonal (large-WKB × many-cell zones broadcast
+    # instead, cells carry NULL)
     zdim = zones.withColumn("dataset", F.lit(value_dataset))
     big_keys: frozenset = frozenset()
     geoms_bc = None
     if broadcast_zones:
         geoms_bc = broadcast_zone_geoms(zdim)
+        # scan-level pruning; the class raster shares the grid (validated
+        # above) so the value-dataset key ranges apply to both scans
+        pred = tile_prune_filter(
+            {**geoms_bc.value, **{
+                (z, class_dataset): w for (z, _), w in geoms_bc.value.items()
+            }},
+            meta,
+            quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
+            quadkey_level=quadkey_level,
+        )
+        if pred is not None:
+            tiles = tiles.filter(pred)
     else:
         # SMJ regime: one distributed sizing pass feeds the hybrid-WKB
         # selection AND the collect-free union-bbox scan fence; the
@@ -117,108 +137,81 @@ def zonal_crosstab_df(
                 f"tile_col BETWEEN {b['tc0']} AND {b['tc1']} AND "
                 f"tile_row BETWEEN {b['tr0']} AND {b['tr1']}"
             ))
-    cells = zone_cover_cells(
-        zdim, meta, clip_to_grid=True, with_geometry=not broadcast_zones,
-        null_wkb_keys=big_keys,
-    ).drop("dataset")
-    if broadcast_zones:
-        # scan-level pruning; the class raster shares the grid (validated
-        # above) so the value-dataset key ranges apply to both scans
-        qk = "quadkey" if "quadkey" in tiles.columns else None
-        pred = tile_prune_filter(
-            geoms_bc.value, meta, quadkey_col=qk, quadkey_level=quadkey_level
-        )
-        pred_c = tile_prune_filter(
-            {(z, class_dataset): w for (z, _), w in geoms_bc.value.items()},
-            meta,
-            quadkey_col=qk,
-            quadkey_level=quadkey_level,
-        )
-        if pred is not None:
-            tiles = tiles.filter(pred | pred_c)
     keys = ["tile_col", "tile_row"]
     tv = tiles.filter(F.col("dataset") == value_dataset).select(
-        *keys, F.col("bytes").alias("vbytes"), F.col("fmt").alias("vfmt")
+        "dataset", *keys,
+        F.col("bytes").alias("vbytes"), F.col("fmt").alias("vfmt"),
     )
     tc = tiles.filter(F.col("dataset") == class_dataset).select(
         *keys, F.col("bytes").alias("cbytes"), F.col("fmt").alias("cfmt")
     )
-    left = F.broadcast(cells) if broadcast_zones else cells
-    joined = left.join(tv, keys, "inner").join(tc, keys, "inner")
+    pairs = tv.join(tc, keys, "inner")
+    if broadcast_zones:
+        kernel_in, cover = tile_driven_input(
+            pairs, broadcast_cover_cells(
+                zones.sparkSession, geoms_bc.value, meta, clip_to_grid=True
+            ),
+        )
+    else:
+        cover = None
+        cells = zone_cover_cells(
+            zdim, meta, clip_to_grid=True, with_geometry=True,
+            null_wkb_keys=big_keys,
+        ).drop("dataset")
+        kernel_in = group_cover_cells(cells, keys).join(pairs, keys, "inner")
 
     vnd = nodata if nodata is not None else mv["nodata"]
     vnd = -999.0 if vnd is None else vnd
     cnd = -999.0 if mc["nodata"] is None else mc["nodata"]
-    aff = mv["affine"]
-    tw, th = mv["tile_w"], mv["tile_h"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache = K.LRU(1024)
+        mask = _zone_masks(meta, geoms_bc, all_touched=all_touched)
         for pdf in batches:
             rows = {name: [] for name in _XTAB_PARTIAL.fieldNames()}
-            wkbs = pdf["geometry_wkb"] if "geometry_wkb" in pdf else None
-            for i, (zid, tcn, trn, vb, vf, cb, cf) in enumerate(zip(
-                pdf["zone_id"], pdf["tile_col"], pdf["tile_row"],
-                pdf["vbytes"], pdf["vfmt"], pdf["cbytes"], pdf["cfmt"],
-            )):
-                cached = geom_cache.get(zid)
-                if cached is None:
-                    if wkbs is None:
-                        wkb = geoms_bc.value[(zid, value_dataset)]
-                    else:
-                        wkb = wkbs.iloc[i]
-                        if wkb is None:  # hybrid regime big zone
-                            wkb = geoms_bc.value[(zid, value_dataset)]
-                    geom = _effective_geom(wkb, aff)
-                    cached = (
-                        K.geom_to_pixel(geom, aff),
-                        K.bounds_window(G.geom_bounds(geom), aff),
+            for ((ds, tcn, trn), zl), vb, vf, cb, cf in zip(
+                _zone_lists(pdf, cover), pdf["vbytes"], pdf["vfmt"],
+                pdf["cbytes"], pdf["cfmt"],
+            ):
+                blocks = None
+                for zid, wkb in zl:
+                    hit = mask(zid, ds, tcn, trn, wkb)
+                    if hit is None:
+                        continue
+                    region, rv = hit
+                    if blocks is None:  # both payloads decoded once per tile
+                        blocks = (
+                            np.asarray(C.decode_tile(bytes(vb), vf)),
+                            np.asarray(C.decode_tile(bytes(cb), cf)),
+                        )
+                    v64 = _cell_block(mv, trn, tcn, blocks[0], region, vnd)
+                    c64 = _cell_block(mv, trn, tcn, blocks[1], region, cnd)
+                    v64 = v64.astype(np.float64, copy=False)
+                    c64 = c64.astype(np.float64, copy=False)
+                    valid = (
+                        rv
+                        & (v64 != vnd) & ~np.isnan(v64)
+                        & (c64 != cnd) & ~np.isnan(c64)
                     )
-                    geom_cache.put(zid, cached)
-                pgeom, ((wr0, wr1), (wc0, wc1)) = cached
-                rr0, rr1 = max(wr0, trn * th), min(wr1, (trn + 1) * th)
-                cc0, cc1 = max(wc0, tcn * tw), min(wc1, (tcn + 1) * tw)
-                if rr0 >= rr1 or cc0 >= cc1:
-                    continue
-                region = ((rr0, rr1), (cc0, cc1))
-                rv = K.rasterize_pixgeom(pgeom, region, all_touched=all_touched)
-                if not rv.any():
-                    continue
-                rel = ((rr0 - trn * th, rr1 - trn * th),
-                       (cc0 - tcn * tw, cc1 - tcn * tw))
-                vblock = K.boundless_array(
-                    np.asarray(C.decode_tile(bytes(vb), vf)), rel, vnd
-                )
-                cblock = K.boundless_array(
-                    np.asarray(C.decode_tile(bytes(cb), cf)), rel, cnd
-                )
-                v64 = vblock.astype(np.float64, copy=False)
-                c64 = cblock.astype(np.float64, copy=False)
-                valid = (
-                    rv
-                    & (v64 != vnd) & ~np.isnan(v64)
-                    & (c64 != cnd) & ~np.isnan(c64)
-                )
-                if not valid.any():
-                    continue
-                vals, cls = v64[valid], c64[valid]
-                order = np.argsort(cls, kind="stable")
-                vals, cls = vals[order], cls[order]
-                uc, starts = np.unique(cls, return_index=True)
-                bounds = np.append(starts, cls.size)
-                for k in range(uc.size):
-                    seg = vals[bounds[k] : bounds[k + 1]]
-                    rows["zone_id"].append(zid)
-                    rows["class"].append(float(uc[k]))
-                    rows["count"].append(int(seg.size))
-                    rows["sum"].append(float(seg.sum()))
-                    rows["sumsq"].append(float(seg @ seg))
-                    rows["min"].append(float(seg.min()))
-                    rows["max"].append(float(seg.max()))
+                    if not valid.any():
+                        continue
+                    vals, cls = v64[valid], c64[valid]
+                    order = np.argsort(cls, kind="stable")
+                    vals, cls = vals[order], cls[order]
+                    uc, starts = np.unique(cls, return_index=True)
+                    bounds = np.append(starts, cls.size)
+                    for k in range(uc.size):
+                        seg = vals[bounds[k] : bounds[k + 1]]
+                        rows["zone_id"].append(zid)
+                        rows["class"].append(float(uc[k]))
+                        rows["count"].append(int(seg.size))
+                        rows["sum"].append(float(seg.sum()))
+                        rows["sumsq"].append(float(seg @ seg))
+                        rows["min"].append(float(seg.min()))
+                        rows["max"].append(float(seg.max()))
             if rows["zone_id"]:
                 yield pd.DataFrame(rows)
 
-    partials = joined.mapInPandas(gen, _XTAB_PARTIAL)
+    partials = kernel_in.mapInPandas(gen, _XTAB_PARTIAL)
     agg = partials.groupBy("zone_id", "class").agg(
         F.sum("count").alias("count"),
         F.sum("sum").alias("sum"),

@@ -1,21 +1,33 @@
 """Distributed point query — raster values at geometry vertices.
 
-Replaces the reference's per-vertex loop (point.py:169-199) with:
+Replaces the reference's per-vertex loop (point.py:169-199) with the same
+tile-driven plan as operators/zonal.py: index each vertex's pixel window
+by tile key, then make one pass over the tiles. A window holds the ≤4
+pixels the interpolation reads; a 2×2 bilinear window can straddle up to
+4 tiles (the seam case, J3).
 
-    zones ──mapInPandas──▶ vertex windows: one row per (vertex, covering
-                           tile), carrying the ≤4 needed pixel positions
-                           (a 2×2 bilinear window can straddle up to 4
-                           tiles — the seam case, J3)
-                │ LEFT equi-join on tile key (missing tile → masked)
-    tiles ──────┘
-                ▼ mapInPandas gather: decode payload once per tile per
-                  batch, emit (vertex, pos, value|null)
-                ▼ groupBy(zone_id, vertex_idx) applyInPandas:
-                  bilinear w/ masked-nearest fallback (point.py:29-65)
-                  or nearest (point.py:179-189)
+    zones ──▶ vertex windows per tile key: (zone_id, vertex_idx,
+              [(row, col, pos), ...], ux, uy)
+              broadcast regime: derived on the driver, shipped as a dict
+              {(dataset, tile_col, tile_row): [window, ...]}; the tile
+              scan keeps only its keys (broadcast left-semi join)
+              SMJ regime: exploded on the executors and grouped into a
+              ``ws`` array per tile key, inner-joined to the tiles
+                                   │
+    tiles ──pruned scan────────────┤
+                                   ▼
+            ONE mapInPandas gather: per tile, decode the payload once and
+            emit (vertex, pos, value|null) for each window pixel on it
+                                   ▼
+            groupBy(zone_id, vertex_idx) JVM agg: bilinear w/ masked-
+            nearest fallback (point.py:29-65) or nearest (point.py:179-189)
+                                   ▼
+            vertex keys ⟕ values: a vertex with no stored tile → NULL (J4)
 
 Returns (zone_id, vertex_idx, value). The API layer reassembles the
-reference's scalar-or-list output shape (point.py:198-199).
+reference's scalar-or-list output shape (point.py:198-199). A window
+beyond the extent with boundless=False raises the reference's ValueError
+when the action runs, in both regimes.
 """
 
 from __future__ import annotations
@@ -30,7 +42,10 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import codecs as C
 from .. import geom as G
 from .. import kernel as K
-from .zonal import _BEYOND_EXTENT, collect_dataset_meta
+from .zonal import (
+    _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, smj_bounds_filter,
+    spread, tile_driven_input, tile_prune_filter, zone_cell_counts,
+)
 
 _WINDOWS_SCHEMA = T.StructType(
     [
@@ -39,9 +54,7 @@ _WINDOWS_SCHEMA = T.StructType(
         T.StructField("dataset", T.StringType()),
         T.StructField("tile_col", T.IntegerType()),
         T.StructField("tile_row", T.IntegerType()),
-        T.StructField("prows", T.ArrayType(T.IntegerType())),
-        T.StructField("pcols", T.ArrayType(T.IntegerType())),
-        T.StructField("poss", T.ArrayType(T.IntegerType())),
+        T.StructField("pix", T.ArrayType(T.ArrayType(T.IntegerType()))),
         T.StructField("ux", T.DoubleType()),
         T.StructField("uy", T.DoubleType()),
     ]
@@ -57,6 +70,7 @@ _GATHER_SCHEMA = T.StructType(
         T.StructField("uy", T.DoubleType()),
     ]
 )
+
 
 def point_query_df(
     zones: DataFrame,
@@ -75,11 +89,18 @@ def point_query_df(
     """Raster values at each vertex of each zone geometry (J3 kNN join:
     k=1 nearest / k=4 bilinear grid neighbors).
 
-    ``broadcast_vertices=True`` hints the vertex-window side (and the
-    per-vertex interpolation output) into broadcast hash joins so the tile
-    scan never shuffles — right whenever the vertex set fits executor
-    memory. For huge vertex sets pass False to keep the SMJ fallback
-    reachable (same regime switch as zonal_stats_df's broadcast_zones)."""
+    ``broadcast_vertices=True`` (right whenever the vertex set fits
+    driver and executor memory) collects the zones, derives every
+    vertex's pixel window on the driver and broadcasts them as a dict
+    keyed by tile; the tile scan is never shuffled and the per-vertex
+    values join back by broadcast. ``broadcast_vertices=False`` (huge
+    vertex sets) explodes the windows on the executors, groups them per
+    tile key and sort-merge joins them to the tiles — the same regime
+    switch as zonal_stats_df's ``broadcast_zones``. Both regimes feed the
+    same gather kernel, one row per tile. ``prune_tiles`` fences the tile
+    scan to the vertices' working set (widened by one tile: a bilinear
+    window reaches 1 px past the geometry's bbox) and changes nothing
+    else."""
     if interpolate not in ("nearest", "bilinear"):
         raise ValueError("interpolate must be nearest or bilinear")
     meta = collect_dataset_meta(datasets)
@@ -88,213 +109,164 @@ def point_query_df(
             raise ValueError(f"dataset {dataset!r} not in datasets table")
         zones = zones.withColumn("dataset", F.lit(dataset))
     bilin = interpolate == "bilinear"
-    fast = None
-    if prune_tiles and broadcast_vertices:
-        # scan-level pruning, same shape as zonal (the vertex set is
-        # broadcast-regime small, so collecting bboxes costs nothing);
-        # bilinear windows reach 1 px outside the bbox — widen by one tile
-        from .zonal import tile_prune_filter
-
+    spark = zones.sparkSession
+    zcols = zones.select("zone_id", "dataset", "geometry_wkb")
+    keys = list(_TILE_COLS[:3])
+    if broadcast_vertices:
         gd = {
             (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
-            for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
+            for r in zcols.collect()
         }
-        pred = tile_prune_filter(
-            gd, meta, pad_tiles=1,
-            quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-            quadkey_level=quadkey_level,
-            prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
+        if prune_tiles:
+            pred = tile_prune_filter(
+                gd, meta, pad_tiles=1,
+                quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
+                quadkey_level=quadkey_level,
+                prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
+            )
+            if pred is not None:
+                tiles = tiles.filter(pred)
+        wins, vkey_rows = _driver_windows(
+            spark, gd, meta, bilin=bilin, boundless=boundless
         )
-        if pred is not None:
-            tiles = tiles.filter(pred)
-        # broadcast fast path (mirrors zonal's broadcast_cover_cells): the
-        # vertex dim is on the driver already, so the per-vertex pixel
-        # windows are derived HERE and broadcast as a tile-keyed dict; the
-        # gather runs as ONE mapInPandas over the pruned tile scan — no
-        # window-explode stage, no persist, no broadcast join. Falls back
-        # to the lazy executor path when any vertex would hit the
-        # boundless=False raise, so error timing is unchanged.
-        fast = _driver_windows(gd, meta, bilin=bilin, boundless=boundless)
-    if fast is not None:
-        wmap, vkey_rows = fast
-        spark = zones.sparkSession
-        bc = spark.sparkContext.broadcast(wmap)
-
-        def gather_tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            wm = bc.value
+        scan = tiles.select(*_TILE_COLS)
+        if not isinstance(wins, str):
+            # exact-key semi join (broadcast, JVM-side): vertex windows
+            # touch few tiles, so without it every pruned-scan tile's
+            # payload would cross Arrow just to be discarded by the dict
+            # lookup
+            scan = scan.join(
+                F.broadcast(spark.createDataFrame(
+                    list(wins.value),
+                    "dataset string, tile_col int, tile_row int",
+                )),
+                keys, "left_semi",
+            )
+        kernel_in, wins = tile_driven_input(scan, wins)
+        vkeys = spark.createDataFrame(vkey_rows, "zone_id long, vertex_idx int")
+    else:
+        def explode_vertices(
+            batches: Iterator[pd.DataFrame],
+        ) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                rows = {name: [] for name in _GATHER_SCHEMA.fieldNames()}
-                for ds, tc, tr, payload, fmt in zip(
-                    pdf["dataset"], pdf["tile_col"], pdf["tile_row"],
-                    pdf["bytes"], pdf["fmt"],
+                rows = {name: [] for name in _WINDOWS_SCHEMA.fieldNames()}
+                for zid, ds, wkb in zip(
+                    pdf["zone_id"], pdf["dataset"], pdf["geometry_wkb"]
                 ):
-                    wins = wm.get((ds, tc, tr))
-                    if not wins:
-                        continue
-                    m = meta[ds]
-                    nd = nodata if nodata is not None else m["nodata"]
-                    nd = -999.0 if nd is None else nd
-                    block = np.asarray(C.decode_tile(bytes(payload), fmt))
-                    if block.ndim == 3:  # band select (S6, io.py:279)
-                        block = block[band - 1]
-                    block = block.astype(np.float64)
-                    for zid, vi, pix, ux, uy in wins:
-                        for pr, pc, pos in pix:
-                            val = None
-                            rr = pr - tr * m["tile_h"]
-                            cc = pc - tc * m["tile_w"]
-                            if 0 <= rr < block.shape[0] and 0 <= cc < block.shape[1]:
-                                v = float(block[rr, cc])
-                                # masked-read semantics: nodata → masked
-                                # (io.py:218-219 with masked=True)
-                                if v != nd:
-                                    val = v
+                    for vi, ux, uy, by_tile in _vertex_windows(
+                        zid, ds, wkb, meta, bilin=bilin, boundless=boundless
+                    ):
+                        for (tc, tr), pix in by_tile.items():
                             rows["zone_id"].append(zid)
                             rows["vertex_idx"].append(vi)
-                            rows["pos"].append(pos)
-                            rows["value"].append(val)
+                            rows["dataset"].append(ds)
+                            rows["tile_col"].append(tc)
+                            rows["tile_row"].append(tr)
+                            rows["pix"].append(pix)
                             rows["ux"].append(ux)
                             rows["uy"].append(uy)
                 if rows["zone_id"]:
                     yield pd.DataFrame(rows)
 
-        # exact-key semi join (broadcast, JVM-side): vertex windows touch
-        # few tiles, so without it every pruned-scan tile's payload would
-        # cross Arrow just to be discarded by the dict lookup. The key set
-        # is driver-known and vertex-sized by regime.
-        keys_df = spark.createDataFrame(
-            [(ds, tc, tr) for (ds, tc, tr) in wmap],
-            "dataset string, tile_col int, tile_row int",
-        )
-        gathered = (
-            tiles.select("dataset", "tile_col", "tile_row", "bytes", "fmt")
-            .join(
-                F.broadcast(keys_df),
-                ["dataset", "tile_col", "tile_row"],
-                "left_semi",
+        # two consumers (grouped windows, vertex keys): persist so the
+        # explode runs once
+        windows = spread(zcols).mapInPandas(
+            explode_vertices, _WINDOWS_SCHEMA
+        ).persist()
+        if prune_tiles:
+            # collect-free fence, the same Morton-bucketed rect aggregation
+            # as zonal's SMJ regime, over each zone's tile window widened
+            # by one tile. The sizing pass does not run the boundless=False
+            # check, so that error still surfaces when the action runs.
+            counts = zone_cell_counts(zcols, meta)
+            pred = smj_bounds_filter(
+                counts.select(
+                    "dataset",
+                    *((F.col(c) + d).alias(c) for c, d in (
+                        ("tc0", -1), ("tc1", 1), ("tr0", -1), ("tr1", 1)
+                    )),
+                ),
+                meta,
             )
-            .mapInPandas(gather_tiles, _GATHER_SCHEMA)
-        )
-        vkeys = spark.createDataFrame(
-            vkey_rows, "zone_id long, vertex_idx int"
-        )
-        return _interp_join(gathered, vkeys, bilin, F.broadcast)
+            if pred is not None:
+                tiles = tiles.filter(pred)
+        wins = None
+        kernel_in = windows.groupBy(*keys).agg(
+            F.collect_list(
+                F.struct("zone_id", "vertex_idx", "pix", "ux", "uy")
+            ).alias("ws")
+        ).join(tiles.select(*_TILE_COLS), keys, "inner")
+        vkeys = windows.select("zone_id", "vertex_idx").distinct()
+    gathered = kernel_in.mapInPandas(
+        _gather(meta, wins, nodata=nodata, band=band), _GATHER_SCHEMA
+    )
+    # INNER joins to the tiles (a left join can't broadcast its left side
+    # and would shuffle the tile table); vertices whose tiles are all
+    # missing are reinstated as NULL after interpolation via vkeys
+    return _interp_join(
+        gathered, vkeys, bilin,
+        F.broadcast if broadcast_vertices else (lambda d: d),
+    )
 
-    def explode_vertices(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _gather(meta: dict, wins, *, nodata, band: int):
+    """The gather kernel of both regimes. Input: one row per tile
+    ``(dataset, tile_col, tile_row, bytes, fmt)``; the tile's vertex
+    windows come from the broadcast dict ``wins`` or, with ``wins=None``,
+    from the row's ``ws`` structs. Each payload is decoded once; output is
+    one (zone_id, vertex_idx, pos, value|null, ux, uy) row per window
+    pixel, nodata masked (io.py:218-219 with masked=True)."""
+
+    def gather_tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {name: [] for name in _WINDOWS_SCHEMA.fieldNames()}
-            for zid, ds, wkb in zip(
-                pdf["zone_id"], pdf["dataset"], pdf["geometry_wkb"]
+            rows = {name: [] for name in _GATHER_SCHEMA.fieldNames()}
+            tkeys = list(zip(pdf["dataset"], pdf["tile_col"], pdf["tile_row"]))
+            if wins is None:
+                wlists = (
+                    [(w["zone_id"], w["vertex_idx"], w["pix"], w["ux"], w["uy"])
+                     for w in ws]
+                    for ws in pdf["ws"]
+                )
+            else:
+                wm = wins.value
+                wlists = (wm.get(k) for k in tkeys)
+            for (ds, tc, tr), payload, fmt, wl in zip(
+                tkeys, pdf["bytes"], pdf["fmt"], wlists
             ):
-                for vi, ux, uy, by_tile in _vertex_windows(
-                    zid, ds, wkb, meta, bilin=bilin, boundless=boundless
-                ):
-                    for (tc, tr), pix in by_tile.items():
+                if not wl:
+                    continue
+                m = meta[ds]
+                nd = nodata if nodata is not None else m["nodata"]
+                nd = -999.0 if nd is None else nd
+                block = np.asarray(C.decode_tile(bytes(payload), fmt))
+                if block.ndim == 3:  # band select (S6, io.py:279)
+                    block = block[band - 1]
+                block = block.astype(np.float64)
+                for zid, vi, pix, ux, uy in wl:
+                    for pr, pc, pos in pix:
+                        val = None
+                        rr = pr - tr * m["tile_h"]
+                        cc = pc - tc * m["tile_w"]
+                        if 0 <= rr < block.shape[0] and 0 <= cc < block.shape[1]:
+                            v = float(block[rr, cc])
+                            if v != nd:
+                                val = v
                         rows["zone_id"].append(zid)
                         rows["vertex_idx"].append(vi)
-                        rows["dataset"].append(ds)
-                        rows["tile_col"].append(tc)
-                        rows["tile_row"].append(tr)
-                        rows["prows"].append([p[0] for p in pix])
-                        rows["pcols"].append([p[1] for p in pix])
-                        rows["poss"].append([p[2] for p in pix])
+                        rows["pos"].append(pos)
+                        rows["value"].append(val)
                         rows["ux"].append(ux)
                         rows["uy"].append(uy)
             if rows["zone_id"]:
                 yield pd.DataFrame(rows)
 
-    from .zonal import spread
-
-    windows = spread(zones.select("zone_id", "dataset", "geometry_wkb")).mapInPandas(
-        explode_vertices, _WINDOWS_SCHEMA
-    )
-
-    # the vertex-window table is tiny by construction — persist it so the
-    # vkeys branch below doesn't recompute the explode
-    windows = windows.persist()
-    if prune_tiles and not broadcast_vertices:
-        # SMJ regime (vertex set too large to collect): fence the tile
-        # scan with the same collect-free Morton-bucketed rect aggregation
-        # zonal uses (smj_bounds_filter) — the persisted window table
-        # already carries the exact tile keys, so each key is its own
-        # degenerate rect and only ≤64 tiny rows per dataset reach the
-        # driver. Superset-safe: dropped tiles join no window; missing
-        # tiles are reinstated as NULL via vkeys exactly as before.
-        from .zonal import smj_bounds_filter
-
-        wrects = windows.select(
-            "dataset",
-            F.col("tile_col").cast("long").alias("tc0"),
-            F.col("tile_col").cast("long").alias("tc1"),
-            F.col("tile_row").cast("long").alias("tr0"),
-            F.col("tile_row").cast("long").alias("tr1"),
-        )
-        pred = smj_bounds_filter(wrects, meta)
-        if pred is not None:
-            tiles = tiles.filter(pred)
-    # INNER broadcast join (a left join can't broadcast its left side and
-    # would shuffle the tile table); vertices whose tiles are all missing
-    # are reinstated as NULL after interpolation via vkeys
-    _bc = F.broadcast if broadcast_vertices else (lambda d: d)
-    vkeys = windows.select("zone_id", "vertex_idx").distinct()
-    joined = _bc(windows).join(
-        tiles.select("dataset", "tile_col", "tile_row", "bytes", "fmt"),
-        ["dataset", "tile_col", "tile_row"],
-        "inner",
-    )
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode_cache = K.LRU(256)
-        for pdf in batches:
-            rows = {name: [] for name in _GATHER_SCHEMA.fieldNames()}
-            for (
-                zid, vi, ds, tc, tr, prows, pcols, poss, ux, uy, payload, fmt
-            ) in zip(
-                pdf["zone_id"], pdf["vertex_idx"], pdf["dataset"],
-                pdf["tile_col"], pdf["tile_row"], pdf["prows"], pdf["pcols"],
-                pdf["poss"], pdf["ux"], pdf["uy"], pdf["bytes"], pdf["fmt"],
-            ):
-                m = meta[ds]
-                nd = nodata if nodata is not None else m["nodata"]
-                nd = -999.0 if nd is None else nd
-                block = None
-                if payload is not None:
-                    key = (ds, tc, tr)
-                    block = decode_cache.get(key)
-                    if block is None:
-                        block = np.asarray(C.decode_tile(bytes(payload), fmt))
-                        if block.ndim == 3:  # band select (S6, io.py:279)
-                            block = block[band - 1]
-                        block = block.astype(np.float64)
-                        decode_cache.put(key, block)
-                for pr, pc, pos in zip(prows, pcols, poss):
-                    val = None
-                    if block is not None:
-                        rr = pr - tr * m["tile_h"]
-                        cc = pc - tc * m["tile_w"]
-                        if 0 <= rr < block.shape[0] and 0 <= cc < block.shape[1]:
-                            v = float(block[rr, cc])
-                            # masked-read semantics: nodata → masked
-                            # (io.py:218-219 with masked=True)
-                            if v != nd:
-                                val = v
-                    rows["zone_id"].append(zid)
-                    rows["vertex_idx"].append(vi)
-                    rows["pos"].append(pos)
-                    rows["value"].append(val)
-                    rows["ux"].append(ux)
-                    rows["uy"].append(uy)
-            if rows["zone_id"]:
-                yield pd.DataFrame(rows)
-
-    gathered = joined.mapInPandas(gather, _GATHER_SCHEMA)
-    return _interp_join(gathered, vkeys, bilin, _bc)
+    return gather_tiles
 
 
 def _vertex_windows(zid, ds, wkb, meta: dict, *, bilin: bool, boundless: bool):
     """Per-vertex pixel windows of one zone, grouped by covering tile key:
     yields ``(vertex_idx, ux, uy, {(tc, tr): [(pr, pc, pos), ...]})`` —
-    the one derivation behind both the executor-side explode and the
+    the one derivation behind both the SMJ regime's explode and the
     driver-side window dict. Raises the reference's ValueError for an
     unknown dataset or (boundless=False) a window beyond the extent."""
     m = meta.get(ds)
@@ -319,18 +291,22 @@ def _vertex_windows(zid, ds, wkb, meta: dict, *, bilin: bool, boundless: bool):
         yield vi, ux, uy, by_tile
 
 
-def _driver_windows(gd: dict, meta: dict, *, bilin: bool, boundless: bool):
-    """Driver-side twin of the explode_vertices stage. Returns
-    ``({(ds, tc, tr): [(zid, vi, [(pr, pc, pos)...], ux, uy)...]},
-    [(zid, vi)...])`` — the vertex keys DISTINCT, as the executor path's
-    ``distinct()`` makes them, so a zone_id under several datasets yields
-    one output row per vertex either way — or None when any zone would
-    raise (caller falls back to the lazy executor path so the error
-    surfaces at action time, as before)."""
+def _driver_windows(
+    spark, gd: dict, meta: dict, *, bilin: bool, boundless: bool
+):
+    """Driver-side twin of the SMJ regime's explode_vertices stage.
+    Returns ``(windows, vertex keys)``: windows is a Broadcast of
+    ``{(ds, tc, tr): [(zid, vi, [(pr, pc, pos)...], ux, uy)...]}``, and
+    the vertex keys are DISTINCT, as the SMJ regime's ``distinct()`` makes
+    them, so a zone_id under several datasets yields one output row per
+    vertex either way. When a zone raises (unknown dataset, beyond-extent
+    with boundless=False), windows is the first error message instead,
+    as broadcast_cover_cells returns it; tile_driven_input turns it into
+    a stage that raises at action time."""
     wmap: dict = {}
     vkeys: dict = {}  # insertion-ordered set
-    try:
-        for (zid, ds), wkb in gd.items():
+    for (zid, ds), wkb in gd.items():
+        try:
             for vi, ux, uy, by_tile in _vertex_windows(
                 zid, ds, wkb, meta, bilin=bilin, boundless=boundless
             ):
@@ -339,9 +315,9 @@ def _driver_windows(gd: dict, meta: dict, *, bilin: bool, boundless: bool):
                         (zid, vi, pix, ux, uy)
                     )
                 vkeys[(zid, vi)] = None
-    except ValueError:
-        return None
-    return wmap, list(vkeys)
+        except ValueError as e:
+            return str(e), list(vkeys)
+    return spark.sparkContext.broadcast(wmap), list(vkeys)
 
 
 def _interp_join(gathered: DataFrame, vkeys: DataFrame, bilin: bool, _bc):

@@ -494,9 +494,9 @@ def zone_cover_cells(
     null_wkb_keys: frozenset | set | None = None,
 ) -> DataFrame:
     """Explode each zone into its covering tile keys (J1 filter phase) on
-    the executors — the SMJ regime (zone set too large to collect) and the
-    gather/crosstab operators; the broadcast regime derives the same keys
-    on the driver (broadcast_cover_cells).
+    the executors — the SMJ regime (zone set too large to collect) of the
+    zonal and crosstab operators, and the gather tier; the broadcast
+    regime derives the same keys on the driver (broadcast_cover_cells).
 
     The bbox→window math is the reference's partition pruning
     (main.py:189-191, io.py:156-161) re-expressed as join-key generation.
@@ -882,8 +882,6 @@ def _partial_schema(
     )
 
 
-_PARTIAL_SCHEMA = _partial_schema(False)
-
 
 def _cell_block(m, tile_row, tile_col, decoded, region, fill):
     """Pixel block for ``region`` (global window) inside one cell's nominal
@@ -909,6 +907,67 @@ def _cell_block(m, tile_row, tile_col, decoded, region, fill):
     return K.boundless_array(decoded, rel, fill)
 
 
+def _zone_masks(meta: dict, geoms, *, all_touched: bool):
+    """The per-(zone, tile) refine step of the zonal and crosstab kernels:
+    ``mask(zid, ds, tc, tr, wkb=None)`` → ``(region, rv)``, the zone's
+    pixel window clipped to the tile and the zone rasterized onto it
+    (global alignment → seam-safe), or None when it covers no pixel. Pixel
+    geometry and window are cached per zone; a missing ``wkb`` resolves
+    from the ``geoms`` broadcast."""
+    geom_cache = K.LRU(1024)
+
+    def mask(zid, ds, tc, tr, wkb=None):
+        m = meta[ds]
+        key = (zid, ds)
+        cached = geom_cache.get(key)
+        if cached is None:
+            aff = m["affine"]
+            if wkb is None:
+                wkb = geoms.value[key]
+            geom = _effective_geom(wkb, aff)
+            cached = (
+                K.geom_to_pixel(geom, aff),
+                K.bounds_window(G.geom_bounds(geom), aff),
+            )
+            geom_cache.put(key, cached)
+        pgeom, ((wr0, wr1), (wc0, wc1)) = cached
+        rr0 = max(wr0, tr * m["tile_h"])
+        rr1 = min(wr1, (tr + 1) * m["tile_h"])
+        cc0 = max(wc0, tc * m["tile_w"])
+        cc1 = min(wc1, (tc + 1) * m["tile_w"])
+        if rr0 >= rr1 or cc0 >= cc1:
+            return None
+        region = ((rr0, rr1), (cc0, cc1))
+        rv = K.rasterize_pixgeom(pgeom, region, all_touched=all_touched)
+        return (region, rv) if rv.any() else None
+
+    return mask
+
+
+def _zone_lists(pdf: pd.DataFrame, cover):
+    """Per kernel-input row, ``(tile key, [(zone_id, wkb or None), ...])``:
+    the covering zones from the broadcast ``cover`` dict (a miss is a scan
+    false positive) or, with ``cover=None``, from the ``zs`` column."""
+    tkeys = zip(pdf["dataset"], pdf["tile_col"], pdf["tile_row"])
+    if cover is None:
+        return zip(tkeys, (
+            [(z["zone_id"], z["geometry_wkb"]) for z in zs] for zs in pdf["zs"]
+        ))
+    cov = cover.value
+    return ((k, [(zid, None) for zid in cov.get(k, ())]) for k in tkeys)
+
+
+def group_cover_cells(cells: DataFrame, keys) -> DataFrame:
+    """The SMJ regime's zone-list source: cover cells (``with_geometry``)
+    grouped per tile key into ``zs`` (zone_id, geometry_wkb) structs, so
+    the join to the tiles emits one row per tile, not one payload-bearing
+    row per (zone, tile) pair. A NULL wkb (hybrid big zone) resolves from
+    the geometry broadcast."""
+    return cells.groupBy(*keys).agg(
+        F.collect_list(F.struct("zone_id", "geometry_wkb")).alias("zs")
+    )
+
+
 def _pair_processor(
     meta: dict,
     *,
@@ -927,34 +986,14 @@ def _pair_processor(
     zid, ds, tc, tr, payload, fmt, wkb, decoded)``, which appends partial
     rows and returns the decoded tile array for reuse across the zones of
     one tile (a NULL payload — missing tile — fills with nodata)."""
-    geom_cache = K.LRU(1024)
+    mask = _zone_masks(meta, geoms, all_touched=all_touched)
 
     def process(rows, zid, ds, tc, tr, payload, fmt, wkb=None, decoded=None):
+        hit = mask(zid, ds, tc, tr, wkb)
+        if hit is None:
+            return decoded
+        region, rv = hit
         m = meta[ds]
-        aff = m["affine"]
-        key = (zid, ds)
-        cached = geom_cache.get(key)
-        if cached is None:
-            if wkb is None:
-                wkb = geoms.value[key]
-            geom = _effective_geom(wkb, aff)
-            pgeom = K.geom_to_pixel(geom, aff)
-            win = K.bounds_window(G.geom_bounds(geom), aff)
-            cached = (pgeom, win)
-            geom_cache.put(key, cached)
-        pgeom, win = cached
-        (wr0, wr1), (wc0, wc1) = win
-        # region = zone window ∩ this cell's nominal extent
-        rr0 = max(wr0, tr * m["tile_h"])
-        rr1 = min(wr1, (tr + 1) * m["tile_h"])
-        cc0 = max(wc0, tc * m["tile_w"])
-        cc1 = min(wc1, (tc + 1) * m["tile_w"])
-        if rr0 >= rr1 or cc0 >= cc1:
-            return decoded
-        region = ((rr0, rr1), (cc0, cc1))
-        rv = K.rasterize_pixgeom(pgeom, region, all_touched=all_touched)
-        if not rv.any():
-            return decoded
         if decoded is None and payload is not None:
             # native dtype end-to-end; stats accumulate in f64
             decoded = np.asarray(C.decode_tile(bytes(payload), fmt))
@@ -1062,16 +1101,15 @@ def partial_kernel(
     partial row per (zone, tile) pair with pixels. Each payload crosses
     Arrow and is decoded once however many zones cover it.
 
-    A tile's covering zones come from one of two sources:
+    A tile's covering zones come from one of two sources (_zone_lists):
 
     - ``cover``: the broadcast dict ``{(dataset, tile_col, tile_row):
       [zone_id, ...]}`` from broadcast_cover_cells (broadcast regime);
       geometry comes from ``geoms`` (broadcast_zone_geoms), stored once
       per zone per executor.
     - ``cover=None``: a ``zs`` column holding the tile's (zone_id,
-      geometry_wkb) structs, grouped per tile key by the SMJ regime's
-      exchange; a NULL wkb (hybrid regime big zone) resolves from
-      ``geoms``.
+      geometry_wkb) structs (group_cover_cells, SMJ regime); a NULL wkb
+      (hybrid regime big zone) resolves from ``geoms``.
 
     ``user_partials`` maps stat name → partial_fn(masked) returning a
     fixed-length float state vector per (zone, tile) block — the SCALABLE
@@ -1103,20 +1141,8 @@ def partial_kernel(
         )
         for pdf in batches:
             rows = {name: [] for name in schema.fieldNames()}
-            tkeys = list(zip(pdf["dataset"], pdf["tile_col"], pdf["tile_row"]))
-            if cover is None:
-                zlists = (
-                    [(z["zone_id"], z["geometry_wkb"]) for z in zs]
-                    for zs in pdf["zs"]
-                )
-            else:
-                # a miss is a scan false positive: the tile covers no zone
-                cov = cover.value
-                zlists = (
-                    [(zid, None) for zid in cov.get(k, ())] for k in tkeys
-                )
-            for (ds, tc, tr), payload, fmt, zl in zip(
-                tkeys, pdf["bytes"], pdf["fmt"], zlists
+            for ((ds, tc, tr), zl), payload, fmt in zip(
+                _zone_lists(pdf, cover), pdf["bytes"], pdf["fmt"]
             ):
                 decoded = None
                 for zid, wkb in zl:
@@ -1177,8 +1203,9 @@ def broadcast_cover_cells(
 
 
 def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
-    """(kernel input, cover) for partial_kernel in the broadcast regime,
-    from broadcast_cover_cells' result.
+    """(kernel input, cover) for a tile-driven kernel in the broadcast
+    regime, from the kernel's input ``tiles`` and its cover source
+    (broadcast_cover_cells' result, or the point query's window dict).
 
     ``fill_missing`` (boundless nodata/nan) unions in one NULL-payload row
     per cover key with no stored tile, so the kernel synthesizes its fill
@@ -1188,10 +1215,10 @@ def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
     against the key-only (column-pruned, no payload bytes) scan, then a
     left-anti join of the cover keys against that small result.
 
-    A pending error message becomes a one-row stage that raises it when
-    the action runs (with an empty cover): the error surfaces at action
-    time, as with the executor-side generator, and no pruned-to-empty scan
-    can swallow it."""
+    A pending error message becomes a one-row stage with the schema of
+    ``tiles`` that raises it when the action runs (with an empty cover):
+    the error surfaces at action time, as with the executor-side
+    generators, and no pruned-to-empty scan can swallow it."""
     spark = tiles.sparkSession
     if isinstance(cover, str):
         msg = cover
@@ -1202,14 +1229,11 @@ def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
             yield from ()
 
         stage = spark.range(1, numPartitions=1).mapInPandas(
-            pending_error,
-            "dataset string, tile_col int, tile_row int, bytes binary, "
-            "fmt string",
+            pending_error, tiles.schema
         )
         return stage, spark.sparkContext.broadcast({})
-    scan = tiles.select(*_TILE_COLS)
     if not fill_missing or not cover.value:
-        return scan, cover
+        return tiles, cover
     keys = list(_TILE_COLS[:3])
     cover_keys = spark.createDataFrame(
         list(cover.value), "dataset string, tile_col int, tile_row int"
@@ -1220,7 +1244,7 @@ def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
         .withColumn("bytes", F.lit(None).cast("binary"))
         .withColumn("fmt", F.lit(None).cast("string"))
     )
-    return scan.unionByName(missing), cover
+    return tiles.select(*_TILE_COLS).unionByName(missing), cover
 
 
 def _append_partial(rows: dict, p: dict, compact_vc: bool) -> None:
@@ -1795,12 +1819,9 @@ def zonal_stats_df(
         )
     else:
         # SMJ regime (zone set too large to broadcast): the cover cells
-        # are GROUPED per tile key before the join — the same exchange
-        # the join needs anyway now carries one aggregation, and the join
-        # emits ONE row per tile with the covering zones as an array
-        # instead of one payload-bearing row per (zone, tile) pair, so the
-        # tile payload crosses the Python boundary once per tile. Absent
-        # tiles arrive as NULL payloads directly via the left join (J4).
+        # are grouped per tile key before the join (group_cover_cells), so
+        # the tile payload crosses the Python boundary once per tile.
+        # Absent tiles arrive as NULL payloads via the left join (J4).
         cover = None
         keys = list(_TILE_COLS[:3])
         cells = zone_cover_cells(
@@ -1810,10 +1831,7 @@ def zonal_stats_df(
             with_geometry=True,
             null_wkb_keys=big_keys,
         )
-        grouped_cells = cells.groupBy(*keys).agg(
-            F.collect_list(F.struct("zone_id", "geometry_wkb")).alias("zs")
-        )
-        kernel_in = grouped_cells.join(
+        kernel_in = group_cover_cells(cells, keys).join(
             tiles.select(*_TILE_COLS), keys,
             "left" if need_missing else "inner",
         )

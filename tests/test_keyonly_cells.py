@@ -127,28 +127,76 @@ def test_gather_and_crosstab_plans_key_only(spark, big_corpus):
     assert got["count"] == want["count"]
     assert got["mean"] == pytest.approx(want["mean"], rel=1e-9)
 
-    # crosstab over the same grid (class = value bucketed)
+    # crosstab over the same grid (class = value bucketed), with a second
+    # zone over a subset of the first zone's tiles
     cls = (arr // 25).astype(np.uint8)
     tc, dc = raster_to_tables(
         spark, cls, AFF, dataset="bigc", nodata=255.0, tile=8
     )
-    xdf = zonal_crosstab_df(
-        zones, tiles.unionByName(tc), datasets.unionByName(dc),
-        value_dataset="big", class_dataset="bigc", stats=("count", "sum"),
-    )
+    small = G.box(40.3, 40.3, 200.7, 150.2)
+    zones2 = zones.unionByName(spark.createDataFrame(
+        [{"zone_id": 1, "collection": "t", "geometry_wkb": G.wkb_dumps(small),
+          "geom_type": "Polygon", "properties": {}}],
+        schema=ZONES_DDL,
+    ))
+
+    def xtab(**kw):
+        return zonal_crosstab_df(
+            zones2, tiles.unionByName(tc), datasets.unionByName(dc),
+            value_dataset="big", class_dataset="bigc", stats=("count", "sum"),
+            **kw,
+        )
+
+    xdf = xtab()
     xplan = xdf._jdf.queryExecution().executedPlan().toString()
     _assert_wkb_only_in_cells_stage(xplan)
-    rows = {r["class"]: r for r in xdf.collect()}
-    # numpy differential for one class
-    zero = arr[(cls == 0)]
-    # restrict to zone cover: the dense box covers all but the 0.5 margin
-    # pixels partially — use the kernel oracle mask instead
-    block, rv, win, fill = K.prepare_zone(zone, arr, AFF, nodata=-1.0)
-    cblock, _, _, _ = K.prepare_zone(zone, cls, AFF, nodata=255.0)
-    valid = rv & (block != fill)
-    seg = block[valid & (cblock == 0)]
-    assert rows[0.0]["count"] == seg.size
-    assert rows[0.0]["sum"] == pytest.approx(float(seg.sum(dtype=np.float64)))
+    got = sorted(map(tuple, xdf.collect()))
+    # one kernel row per tile key (all 40x40 tiles), not one per
+    # (zone, tile) pair: both payloads cross into Python once
+    assert _kernel_input_rows(xdf, "vbytes") == 1600
+    smj = xtab(broadcast_zones=False)
+    assert sorted(map(tuple, smj.collect())) == got
+    assert _kernel_input_rows(smj, "vbytes") == 1600
+    # numpy differential, every (zone, class): the kernel oracle's masks
+    want = []
+    for zid, z in ((0, zone), (1, small)):
+        block, rv, win, fill = K.prepare_zone(z, arr, AFF, nodata=-1.0)
+        cblock, _, _, _ = K.prepare_zone(z, cls, AFF, nodata=255.0)
+        valid = rv & (block != fill) & (cblock != 255)
+        for c in np.unique(cblock[valid]):
+            seg = block[valid & (cblock == c)]
+            want.append((zid, float(c), seg.size, float(seg.sum(dtype=np.float64))))
+    assert [g[:3] for g in got] == [w[:3] for w in sorted(want)]
+    for g, w in zip(got, sorted(want)):
+        assert g[3] == pytest.approx(w[3])
+
+
+def _kernel_input_rows(df, column):
+    """Rows into the MapInPandas node whose input has ``column``: the
+    output-row metric of the first node below it that counts rows, from
+    the executed plan (through AQE and query-stage wrappers)."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        plan = stack.pop()
+        cls = plan.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(plan.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(plan.plan())
+            continue
+        if cls == "MapInPandasExec" and column in list(
+            plan.child().schema().fieldNames()
+        ):
+            node = plan.child()
+            while not node.metrics().contains("numOutputRows"):
+                node = node.children().apply(0)
+                if node.getClass().getSimpleName().endswith("QueryStageExec"):
+                    node = node.plan()
+            return node.metrics().apply("numOutputRows").value()
+        children = plan.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    raise AssertionError(f"no MapInPandas over {column!r} in the plan")
 
 
 def test_smj_regime_with_geometry_cells(spark, big_corpus):

@@ -5,8 +5,9 @@
   DataFrame is built, in both regimes.
 - The boundless-nodata kernel input holds each stored tile once plus one
   NULL-payload row per cover key with no stored tile.
-- The point fast path returns one row per (zone_id, vertex_idx), like the
-  executor path, when a zone_id appears under two datasets.
+- The point query returns one row per (zone_id, vertex_idx) in both
+  regimes when a zone_id appears under two datasets, and its
+  beyond-extent error (boundless=False) also surfaces at action time.
 """
 
 import numpy as np
@@ -93,8 +94,8 @@ def test_boundless_input_one_row_per_tile(spark, raster):
 
 
 def test_point_fast_path_one_row_per_vertex(spark):
-    """A zone_id under two datasets: the fast path used to emit each
-    (zone_id, vertex_idx) once per dataset."""
+    """A zone_id under two datasets: the broadcast regime used to emit
+    each (zone_id, vertex_idx) once per dataset."""
     arr = np.arange(100, dtype=np.float32).reshape(10, 10)
     ta, da = raster_to_tables(spark, arr, AFF, dataset="pa", nodata=-1.0, tile=4)
     # same grid shape, 1000 units east: the zone's vertices miss every tile
@@ -116,3 +117,22 @@ def test_point_fast_path_one_row_per_vertex(spark):
     fast, executor = run(True), run(False)
     assert fast == executor
     assert [k[:2] for k in fast] == [(0, 0), (0, 1)]
+
+
+@pytest.mark.parametrize("broadcast_vertices", [True, False])
+@pytest.mark.parametrize("every_zone", [False, True])
+def test_point_beyond_extent_raises_at_action(
+    spark, raster, broadcast_vertices, every_zone
+):
+    """With every zone erroring the driver's vertex-key list is empty: the
+    left join from the vertex keys must still run the raising stage."""
+    tiles, datasets = raster
+    far = G.wkt_loads("POINT (20 20)")
+    inside = G.wkt_loads("MULTIPOINT (1.5 6.5, 5.2 3.7)")
+    zones = _zones_df(spark, [far] if every_zone else [inside, far])
+    df = point_query_df(
+        zones, tiles, datasets, dataset="td", boundless=False,
+        broadcast_vertices=broadcast_vertices,
+    )
+    with pytest.raises(Exception, match="outside dataset extent"):
+        df.collect()

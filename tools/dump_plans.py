@@ -21,6 +21,7 @@ def main():
     from pyspark.sql import functions as F
 
     from python_rasterstats_spark.fixtures import ensure_fixtures
+    from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
     from python_rasterstats_spark.operators.point import point_query_df
     from python_rasterstats_spark.operators.zonal import zonal_stats_df
     from python_rasterstats_spark.plans.explain import physical_plan, plan_summary
@@ -53,6 +54,10 @@ def main():
         "point_query bilinear (seam-aware kNN)": point_query_df(
             zones.filter(F.col("collection") == "query_points"), tiles,
             datasets, dataset="slope",
+        ),
+        "zonal_crosstab (tile-driven)": zonal_crosstab_df(
+            polys, tiles, datasets, value_dataset="slope",
+            class_dataset="slope_classes",
         ),
     }
 

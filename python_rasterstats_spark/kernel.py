@@ -796,7 +796,7 @@ def zonal_stats_one(
         # re-derive partial state from the (possibly transformed) array
         arr2 = np.ma.filled(masked.astype(np.float64), np.nan)
         cover2 = ~np.ma.getmaskarray(masked)
-        part = partial_stats(arr2, cover2, None, run_count or _needs_counts(stats))
+        part = partial_stats(arr2, cover2, None, run_count or needs_counts(stats))
         part["nodata_count"] = int(((arr == fill) & rv).sum())
         part["nan_count"] = int((isnan & rv).sum())
         return finalize_stats(
@@ -804,14 +804,15 @@ def zonal_stats_one(
             int_keys=np.issubdtype(array.dtype, np.integer),
         )
 
-    part = partial_stats(arr, rv, fill, run_count or _needs_counts(stats))
+    part = partial_stats(arr, rv, fill, run_count or needs_counts(stats))
     return finalize_stats(
         part, stats, categorical=categorical, category_map=category_map,
         int_keys=np.issubdtype(array.dtype, np.integer),
     )
 
 
-def _needs_counts(stats) -> bool:
+def needs_counts(stats) -> bool:
+    """True when a stat is holistic: it needs the (value, count) pairs."""
     return any(
         s in ("median", "majority", "minority", "unique") or s.startswith("percentile_")
         for s in stats

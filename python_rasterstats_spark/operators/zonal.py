@@ -15,12 +15,16 @@ intersection index from metadata, then make one pass over the raster):
             (global alignment → seam-safe), mask, emit mergeable partial
             structs                                                [P2-P5]
                                    │
+         zonal_result, the one partials→stats tail (also run by the
+         checkpointed jobs and the incremental state):
          scalar-only: groupBy(zone_id) JVM agg (whole-stage codegen,
          map-side combine)                                         [A1-A6]
-         holistic: ONE zone-keyed merge of scalars + (value, count)
-         arrays — exact median/percentiles/majority/minority/unique/
-         value_counts; optional salted pre-merge and quantile-summary
-         sketching for continuous rasters                         [A7-A15]
+         holistic: fold_partials, ONE fold of scalars + (value, count)
+         arrays by zone — exact median/percentiles/majority/minority/
+         unique/value_counts — as the optional salted pre-merge (with
+         quantile-summary re-sketch for continuous rasters) and as the
+         final merge: mapInPandas per partition (broadcast regime) or
+         applyInPandas per zone (SMJ regime)                      [A7-A15]
                                    │
                                    ▼ broadcast join back to zones      [J2]
                      final projection w/ empty-zone semantics          [A17]
@@ -54,6 +58,7 @@ Scale properties:
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Iterator
 
@@ -679,6 +684,40 @@ def auto_holistic_plan(
     return "salt"
 
 
+_DEFAULT_SALT = 16
+
+
+def holistic_plan(
+    holistic_mode: str,
+    *,
+    want_holistic: bool,
+    want_exact_domain: bool,
+    est_px: int,
+    continuous: bool,
+    threshold_px: int,
+    salt: int | None,
+    sketch_px: int,
+):
+    """The holistic merge plan, resolved in ONE step: ``(kernel sketch_px
+    or None, salt, recompress_px)`` for ``holistic_mode`` 'exact',
+    'sketch', or 'auto' (auto_holistic_plan on the per-zone size
+    estimate). The sketch plan always pre-merges: each (zone, salt) group
+    is re-sketched to 8×sketch_px points, so the final merge sees ≤
+    salt×8×sketch_px points per zone whatever the corpus size. The salt
+    plan spreads each hot zone over ``salt`` pre-merge groups."""
+    plan = holistic_mode
+    if want_holistic and plan == "auto":
+        plan = auto_holistic_plan(
+            est_px, want_exact_domain=want_exact_domain,
+            continuous=continuous, threshold_px=threshold_px,
+        )
+    if want_holistic and plan == "sketch":
+        return sketch_px, salt or _DEFAULT_SALT, sketch_px * 8
+    if want_holistic and plan == "salt" and salt is None:
+        salt = _DEFAULT_SALT
+    return None, salt, None
+
+
 def _morton_expr(colc, colr, level: int = 16):
     """Morton interleave of two integer Columns (col bits even, row bits
     odd) — the JVM-expression twin of kernel.quadkey."""
@@ -1278,18 +1317,13 @@ def _merged_schema(
     pctiles: list[str], want_vc: bool, with_band: bool = False,
     user_cols: tuple = (),
 ) -> T.StructType:
-    fields = [T.StructField("zone_id", T.LongType())]
-    if with_band:
-        fields.append(T.StructField("band", T.IntegerType()))
+    """Finalized-merge schema: the partial row's keys and scalar states,
+    then the holistic stats in place of the value-count arrays."""
+    fields = [
+        f for f in _partial_schema(with_band=with_band).fields
+        if f.name not in ("vc_vals", "vc_cnts")
+    ]
     fields += [
-        T.StructField("count", T.LongType()),
-        T.StructField("sum", T.DoubleType()),
-        T.StructField("sum_i", T.LongType()),
-        T.StructField("sumsq", T.DoubleType()),
-        T.StructField("min", T.DoubleType()),
-        T.StructField("max", T.DoubleType()),
-        T.StructField("nodata_count", T.LongType()),
-        T.StructField("nan_count", T.LongType()),
         T.StructField("median", T.DoubleType()),
         T.StructField("majority", T.DoubleType()),
         T.StructField("minority", T.DoubleType()),
@@ -1321,28 +1355,6 @@ def _row_vc(v, c):
     else:
         cnts = np.asarray(c, dtype=np.int64)
     return vals, cnts
-
-
-def _merge_vc(pdf: pd.DataFrame):
-    """Merge per-partial (value, count) arrays: concat → unique → scatter-add.
-    Associative, so it works as both the salted pre-merge and the final."""
-    return _merge_vc_arrays(list(pdf["vc_vals"]), list(pdf["vc_cnts"]))
-
-
-def _merge_scalars(pdf: pd.DataFrame) -> dict:
-    """Fold a zone's partial rows into one scalar state (A1-A6, A13-A14)."""
-    si = pdf["sum_i"]
-    mins, maxs = pdf["min"].dropna(), pdf["max"].dropna()
-    return {
-        "count": int(pdf["count"].sum()),
-        "sum": float(pdf["sum"].sum()),
-        "sum_i": int(si.dropna().sum()) if si.notna().any() else None,
-        "sumsq": float(pdf["sumsq"].sum()),
-        "min": float(mins.min()) if len(mins) else None,
-        "max": float(maxs.max()) if len(maxs) else None,
-        "nodata_count": int(pdf["nodata_count"].sum()),
-        "nan_count": int(pdf["nan_count"].sum()),
-    }
 
 
 def _merge_vc_arrays(vlist, clist):
@@ -1381,20 +1393,121 @@ def _merge_vc_arrays(vlist, clist):
     return u, merged
 
 
+def fold_partials(
+    pdf: pd.DataFrame,
+    keys,
+    *,
+    finalize: bool,
+    pctiles=(),
+    want_vc: bool = False,
+    user_merges: dict | None = None,
+    recompress_px: int | None = None,
+) -> pd.DataFrame:
+    """THE partial-rows fold (A1-A15): merge a non-empty pandas frame of
+    partial rows, holding any number of groups, by ``keys``.
+
+    ``finalize=False`` returns one merged partial-state row per group
+    (_partial_schema, array wire format); ``recompress_px`` re-sketches
+    each merged value multiset (kernel.sketch_weighted). The fold is
+    associative, so this serves the salted pre-merge and the incremental
+    state fold. ``finalize=True`` returns one _merged_schema row per
+    group: the scalar states, the holistic stats of the merged (value,
+    count) pairs and the finalized user stats. ``user_merges`` maps stat
+    name → (merge_fn, finalize_fn), see merged_stats.
+
+    Groups come from pd.factorize and one stable argsort; each scalar
+    state folds with one ufunc.reduceat over the sorted rows. No pandas
+    groupby: its fixed per-call cost would be paid by every applyInPandas
+    group. Python loops per group only for the value-count and user-state
+    merges."""
+    user_merges = user_merges or {}
+    codes = 0
+    for k in keys:
+        c, u = pd.factorize(pdf[k].to_numpy(), use_na_sentinel=False)
+        codes = codes * len(u) + c
+    order = np.argsort(codes, kind="stable")
+    sc = codes[order]
+    starts = np.flatnonzero(np.concatenate(([True], sc[1:] != sc[:-1])))
+
+    def rows(name, dtype=None, **na):
+        return pdf[name].to_numpy(dtype, **na)[order]
+
+    def summed(name, dtype):
+        return np.add.reduceat(rows(name, dtype), starts)
+
+    out = {k: pdf[k].to_numpy()[order[starts]] for k in keys}
+    out["count"] = summed("count", np.int64)
+    out["sum"] = summed("sum", np.float64)
+    # int64 total, null unless some partial carries one (integer raster);
+    # object dtype keeps it exact past 2^53
+    si = rows("sum_i")
+    has_i = ~pd.isna(si)
+    sum_i = np.add.reduceat(np.where(has_i, si, 0).astype(np.int64), starts)
+    out["sum_i"] = np.where(
+        np.logical_or.reduceat(has_i, starts), sum_i.astype(object), None
+    )
+    out["sumsq"] = summed("sumsq", np.float64)
+    # NaN min/max (→ null) = no valid pixel in any partial of the group
+    out["min"] = np.fmin.reduceat(rows("min", np.float64, na_value=np.nan), starts)
+    out["max"] = np.fmax.reduceat(rows("max", np.float64, na_value=np.nan), starts)
+    out["nodata_count"] = summed("nodata_count", np.int64)
+    out["nan_count"] = summed("nan_count", np.int64)
+
+    quantiles = [("median", 50.0)] + [(p, K.get_percentile(p)) for p in pctiles]
+    holistic = (["median", "majority", "minority", "unique"] + list(pctiles)
+                + (["value_counts"] if want_vc else []))
+    for c in (holistic if finalize else ["vc_vals", "vc_cnts"]):
+        out[c] = []
+    vvals, vcnts = rows("vc_vals"), rows("vc_cnts")
+    ustates = {u: rows(f"u_{u}") for u in user_merges}
+    for u in user_merges:
+        out[f"u_{u}"] = []
+    for a, b in zip(starts, np.append(starts[1:], len(order))):
+        vals, cnts = _merge_vc_arrays(vvals[a:b], vcnts[a:b])
+        if not finalize:
+            if recompress_px:
+                vals, cnts = K.sketch_weighted(vals, cnts, recompress_px)
+            out["vc_vals"].append(vals)
+            out["vc_cnts"].append(cnts)
+        elif vals.size:
+            for name, q in quantiles:
+                out[name].append(K.weighted_percentile(vals, cnts, q))
+            out["majority"].append(float(vals[int(np.argmax(cnts))]))
+            out["minority"].append(float(vals[int(np.argmin(cnts))]))
+            out["unique"].append(int(vals.size))
+            if want_vc:
+                out["value_counts"].append(dict(zip(vals.tolist(), cnts.tolist())))
+        else:
+            for name in holistic:
+                out[name].append(None)
+        for u, (mfn, ffn) in user_merges.items():
+            states = np.asarray(
+                [np.asarray(s, dtype=np.float64) for s in ustates[u][a:b]]
+            )
+            merged = np.asarray(mfn(states), dtype=np.float64).ravel()
+            if finalize:
+                v = ffn(merged)
+                merged = None if v is None else float(v)
+            out[f"u_{u}"].append(merged)
+    return pd.DataFrame(out)
+
+
 def merged_stats(
     partials: DataFrame,
-    pctiles: list[str],
-    want_vc: bool,
+    pctiles=(),
+    want_vc: bool = False,
     *,
     salt: int | None = None,
     recompress_px: int | None = None,
     keys: tuple = ("zone_id",),
     user_merges: dict | None = None,
     vectorized: bool = False,
+    finalize: bool = True,
 ) -> DataFrame:
-    """Scalar AND holistic merges in ONE zone-keyed applyInPandas (A1-A15).
-    ``keys`` extends the grouping (e.g. ("zone_id", "band") for the
-    multiband one-pass path).
+    """Scalar AND holistic merges in ONE zone-keyed plan (A1-A15), every
+    stage running fold_partials. ``keys`` extends the grouping (e.g.
+    ("zone_id", "band") for the multiband one-pass path).
+    ``finalize=False`` returns merged partial-state rows instead of stats.
 
     ``user_merges`` maps stat name → (merge_fn, finalize_fn): merge_fn
     folds the stacked per-partial state vectors (k×len float64 ndarray)
@@ -1417,158 +1530,141 @@ def merged_stats(
     ≤ n/recompress_px).
 
     ``vectorized=True`` (the broadcast regime) runs the FINAL merge as one
-    hash-repartition + mapInPandas over whole partitions instead of
-    per-group applyInPandas: scalar folds become ONE pandas groupby
-    aggregation (C speed) across every zone in the partition, and Python
-    touches each group only for the holistic array merge — measured ~0.5 s
-    of pure per-group DataFrame overhead on the 2008-zone bench corpus.
-    Identical per-zone math. The SMJ regime keeps applyInPandas because
-    its output partitioning (hash on the group keys) feeds the join-back
-    without a new exchange, which matters at 10⁹ zones.
+    hash-repartition + mapInPandas: one fold over each whole partition,
+    instead of one applyInPandas call (and DataFrame round trip) per group
+    — measured ~0.5 s of pure per-group overhead on the 2008-zone bench
+    corpus. Identical per-zone math. Both shapes put a hash exchange on
+    the group keys before the join-back; the SMJ regime keeps
+    applyInPandas because it streams ONE group at a time through Python,
+    where the vectorized fold holds a whole partition — the bounded-memory
+    shape at 10⁹ zones.
     """
-    with_band = "band" in keys
     user_merges = user_merges or {}
-    schema = _merged_schema(
-        pctiles, want_vc, with_band=with_band, user_cols=tuple(user_merges)
+    state_schema = _partial_schema(
+        False, with_band="band" in keys, user_cols=tuple(user_merges)
     )
-    qs = [K.get_percentile(p) for p in pctiles]
-
-    def _merge_user(pdf: pd.DataFrame, finalize: bool) -> dict:
-        out = {}
-        for uname, (mfn, ffn) in user_merges.items():
-            states = np.asarray(
-                [np.asarray(s, dtype=np.float64) for s in pdf[f"u_{uname}"]]
-            )
-            merged = np.asarray(mfn(states), dtype=np.float64).ravel()
-            if finalize:
-                v = ffn(merged)
-                out[f"u_{uname}"] = [None if v is None else float(v)]
-            else:
-                out[f"u_{uname}"] = [merged.tolist()]
-        return out
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        row: dict = {k: [pdf[k].iloc[0]] for k in keys}
-        for k, v in _merge_scalars(pdf).items():
-            row[k] = [v]
-        row.update(_merge_user(pdf, True))
-        vals, cnts = _merge_vc(pdf)
-        if vals.size == 0:
-            for name in ("median", "majority", "minority", "unique"):
-                row[name] = [None]
-            for p in pctiles:
-                row[p] = [None]
-            if want_vc:
-                row["value_counts"] = [None]
-        else:
-            row["median"] = [K.weighted_percentile(vals, cnts, 50.0)]
-            row["majority"] = [float(vals[int(np.argmax(cnts))])]
-            row["minority"] = [float(vals[int(np.argmin(cnts))])]
-            row["unique"] = [int(vals.size)]
-            for p, q in zip(pctiles, qs):
-                row[p] = [K.weighted_percentile(vals, cnts, q)]
-            if want_vc:
-                row["value_counts"] = [dict(zip(vals.tolist(), cnts.tolist()))]
-        return pd.DataFrame(row)
-
+    fold = functools.partial(
+        fold_partials, keys=keys, pctiles=pctiles, want_vc=want_vc,
+        user_merges=user_merges,
+    )
     if salt:
-
-        def pre(pdf: pd.DataFrame) -> pd.DataFrame:
-            row: dict = {k: [pdf[k].iloc[0]] for k in keys}
-            for k, v in _merge_scalars(pdf).items():
-                row[k] = [v]
-            row.update(_merge_user(pdf, False))
-            vals, cnts = _merge_vc(pdf)
-            if recompress_px:
-                vals, cnts = K.sketch_weighted(vals, cnts, recompress_px)
-            row["vc_vals"] = [vals.tolist()]
-            row["vc_cnts"] = [cnts.tolist()]
-            return pd.DataFrame(row)
-
         partials = (
             partials.withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(salt)))
             .groupBy(*keys, "_salt")
             .applyInPandas(
-                lambda pdf: pre(pdf.drop(columns=["_salt"])),
-                _partial_schema(
-                    False, with_band=with_band, user_cols=tuple(user_merges)
-                ),
+                lambda pdf: fold(pdf, finalize=False, recompress_px=recompress_px),
+                state_schema,
             )
         )
+    schema = _merged_schema(
+        pctiles, want_vc, with_band="band" in keys, user_cols=tuple(user_merges)
+    ) if finalize else state_schema
     if not vectorized:
-        return partials.groupBy(*keys).applyInPandas(finalize, schema)
-
-    key_list = list(keys)
+        return partials.groupBy(*keys).applyInPandas(
+            lambda pdf: fold(pdf, finalize=finalize), schema
+        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = [pdf for pdf in batches if len(pdf)]
-        if not pdfs:
-            return
-        big = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        gb = big.groupby(key_list, sort=False, dropna=False)
-        scal = gb.agg(
-            count=("count", "sum"),
-            fsum=("sum", "sum"),
-            sumsq=("sumsq", "sum"),
-            mn=("min", "min"),
-            mx=("max", "max"),
-            nodata_count=("nodata_count", "sum"),
-            nan_count=("nan_count", "sum"),
-        )
-        # min_count=1 → NaN when every partial's sum_i is null (float
-        # raster), matching _merge_scalars' dropna/notna contract
-        sum_i = gb["sum_i"].sum(min_count=1)
-        vvals = big["vc_vals"].to_numpy(dtype=object)
-        vcnts = big["vc_cnts"].to_numpy(dtype=object)
-        ucols = {u: big[f"u_{u}"].to_numpy(dtype=object) for u in user_merges}
-        out: dict = {name: [] for name in schema.fieldNames()}
-        for gkey, idx in gb.indices.items():
-            kt = gkey if isinstance(gkey, tuple) else (gkey,)
-            for kname, kval in zip(keys, kt):
-                out[kname].append(kval)
-            srow = scal.loc[gkey]
-            out["count"].append(int(srow["count"]))
-            out["sum"].append(float(srow["fsum"]))
-            si = sum_i.loc[gkey]
-            out["sum_i"].append(None if pd.isna(si) else int(si))
-            out["sumsq"].append(float(srow["sumsq"]))
-            mn, mx = srow["mn"], srow["mx"]
-            out["min"].append(None if pd.isna(mn) else float(mn))
-            out["max"].append(None if pd.isna(mx) else float(mx))
-            out["nodata_count"].append(int(srow["nodata_count"]))
-            out["nan_count"].append(int(srow["nan_count"]))
-            for uname, (mfn, ffn) in user_merges.items():
-                states = np.asarray(
-                    [np.asarray(s, dtype=np.float64) for s in ucols[uname][idx]]
-                )
-                merged = np.asarray(mfn(states), dtype=np.float64).ravel()
-                v = ffn(merged)
-                out[f"u_{uname}"].append(None if v is None else float(v))
-            vals, cnts = _merge_vc_arrays(vvals[idx], vcnts[idx])
-            if vals.size == 0:
-                for name in ("median", "majority", "minority", "unique"):
-                    out[name].append(None)
-                for p in pctiles:
-                    out[p].append(None)
-                if want_vc:
-                    out["value_counts"].append(None)
-            else:
-                out["median"].append(K.weighted_percentile(vals, cnts, 50.0))
-                out["majority"].append(float(vals[int(np.argmax(cnts))]))
-                out["minority"].append(float(vals[int(np.argmin(cnts))]))
-                out["unique"].append(int(vals.size))
-                for p, q in zip(pctiles, qs):
-                    out[p].append(K.weighted_percentile(vals, cnts, q))
-                if want_vc:
-                    out["value_counts"].append(
-                        dict(zip(vals.tolist(), cnts.tolist()))
-                    )
-        yield pd.DataFrame(out)
+        if pdfs:
+            big = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+            yield fold(big, finalize=finalize)
 
     return partials.repartition(*[F.col(k) for k in keys]).mapInPandas(
         gen, schema
     )
 
+
+def zonal_result(
+    partials: DataFrame,
+    base: DataFrame,
+    stats: list,
+    *,
+    categorical: bool = False,
+    keys: tuple = ("zone_id",),
+    user_merges: dict | None = None,
+    salt: int | None = None,
+    recompress_px: int | None = None,
+    broadcast: bool = True,
+) -> DataFrame:
+    """Partial rows → the output stats: merge, join-back to ``base`` (one
+    row per zone, or zone × band; J2) and the projection with empty-zone
+    semantics (A17: count 0, other stats null). The ONE tail of
+    zonal_stats_df, the checkpointed jobs (plans/lineage.py) and the
+    incremental state (streaming/incremental.py).
+
+    ``stats`` is a check_stats-validated list. Scalar-only requests merge
+    with a JVM groupBy.agg (whole-stage codegen, map-side combine); any
+    holistic, categorical or user stat takes merged_stats (``salt``,
+    ``recompress_px``; vectorized final fold when ``broadcast``). With
+    ``broadcast`` the ≤1-row-per-zone merged side is broadcast into the
+    join-back, keeping the broadcast regime SMJ-free."""
+    user_merges = user_merges or {}
+    pctiles = [s for s in stats if s.startswith("percentile_")]
+    if categorical or user_merges or K.needs_counts(stats):
+        # ONE zone-keyed merge for scalars + holistics (+ user states): the
+        # partial kernel (decode + rasterize) is evaluated exactly once,
+        # not once per consuming aggregation
+        merged = merged_stats(
+            partials, pctiles, categorical, salt=salt,
+            recompress_px=recompress_px, keys=keys, user_merges=user_merges,
+            vectorized=broadcast,
+        )
+    else:
+        merged = partials.groupBy(*keys).agg(
+            F.sum("count").alias("count"),
+            F.sum("sum").alias("sum"),
+            F.sum("sum_i").alias("sum_i"),
+            F.sum("sumsq").alias("sumsq"),
+            F.min("min").alias("min"),
+            F.max("max").alias("max"),
+            F.sum("nodata_count").alias("nodata_count"),
+            F.sum("nan_count").alias("nan_count"),
+        )
+    result = base.join(
+        F.broadcast(merged) if broadcast else merged, list(keys), "left"
+    )
+
+    cnt = F.coalesce(F.col("count"), F.lit(0))
+    nonempty = cnt > 0
+    # int rasters: the int64-accumulated total (sum_i) feeds sum/mean,
+    # matching reference float(masked.sum(dtype='int64')) (main.py:262-267);
+    # std keeps the float64 moments (reference masked.std() has no
+    # accum_dtype, main.py:268-269)
+    total = F.coalesce(F.col("sum_i").cast("double"), F.col("sum"))
+    mean = total / cnt
+    fmean = F.col("sum") / cnt
+    cols = [F.col(k) for k in keys]
+    for s in stats:
+        if s == "count":
+            cols.append(cnt.alias("count"))
+        elif s == "mean":
+            cols.append(F.when(nonempty, mean).alias("mean"))
+        elif s == "std":
+            # population std from merged moments (A6; ddof=0, main.py:268-269)
+            var = F.col("sumsq") / cnt - fmean * fmean
+            cols.append(F.when(nonempty, F.sqrt(F.greatest(var, F.lit(0.0)))).alias("std"))
+        elif s == "range":
+            cols.append(F.when(nonempty, F.col("max") - F.col("min")).alias("range"))
+        elif s == "sum":
+            cols.append(F.when(nonempty, total).alias("sum"))
+        elif s in ("min", "max"):
+            cols.append(F.when(nonempty, F.col(s)).alias(s))
+        elif s == "nodata":
+            cols.append(F.coalesce(F.col("nodata_count"), F.lit(0)).cast("double").alias("nodata"))
+        elif s == "nan":
+            cols.append(F.coalesce(F.col("nan_count"), F.lit(0)).cast("double").alias("nan"))
+        elif s in ("median", "majority", "minority") or s.startswith("percentile_"):
+            # backtick-escape: percentile_12.5 contains a dot (valid per
+            # reference utils.py:21-30 float percentiles)
+            cols.append(F.when(nonempty, F.col(f"`{s}`")).alias(s))
+        elif s == "unique":
+            cols.append(F.when(nonempty, F.col("unique")).alias("unique"))
+    if categorical:
+        cols.append(F.when(nonempty, F.col("value_counts")).alias("value_counts"))
+    for uname in user_merges:
+        cols.append(F.col(f"u_{uname}").alias(uname))
+    return result.select(*cols)
 
 # ---------------------------------------------------------------------------
 # the operator
@@ -1667,9 +1763,7 @@ def zonal_stats_df(
     (quantiles only).
     """
     stats, run_count = K.check_stats(stats, categorical)
-    pctiles = [s for s in stats if s.startswith("percentile_")]
-    want_holistic = run_count or "median" in stats or bool(pctiles)
-    want_vc = bool(categorical)
+    want_holistic = run_count or K.needs_counts(stats)
     add_stats = add_stats or {}
     for uname, triple in add_stats.items():
         if not (isinstance(triple, (tuple, list)) and len(triple) == 3
@@ -1687,7 +1781,7 @@ def zonal_stats_df(
     # sketch eligibility: majority/minority/unique/value_counts need the
     # EXACT value domain; median/percentiles alone can run on the bounded
     # quantile summary (the 100×-scale path for continuous float rasters)
-    want_exact_domain = run_count or want_vc
+    want_exact_domain = run_count
     if holistic_mode not in ("exact", "auto", "sketch"):
         raise ValueError("holistic_mode must be 'exact', 'auto' or 'sketch'")
     if holistic_mode == "sketch" and want_exact_domain:
@@ -1695,15 +1789,10 @@ def zonal_stats_df(
             "holistic_mode='sketch' cannot compute majority/minority/unique/"
             "value_counts — those stats need the exact value domain"
         )
-    use_sketch = (
-        want_holistic and not want_exact_domain and holistic_mode == "sketch"
-    )
     # 'auto' (the default) defers the exact/sketch/salt choice until the
     # per-zone size estimate is available below — parity-small corpora
     # stay EXACT, planetary zones pick the scale plan with no knob
-    auto_holistic = (
-        holistic_mode == "auto" and (want_holistic or want_vc)
-    )
+    auto_holistic = holistic_mode == "auto" and want_holistic
 
     meta = meta if meta is not None else collect_dataset_meta(datasets)
     if dataset is not None:
@@ -1764,27 +1853,22 @@ def zonal_stats_df(
         finally:
             if hybrid_wkb_bytes is not None:
                 counts.unpersist()
-    if auto_holistic:
-        refd_ds = (
+    # float rasters: no duplicate values for a merge to collapse
+    continuous = auto_holistic and all(
+        np.issubdtype(np.dtype(meta[d].get("dtype", "float64")), np.floating)
+        for d in (
             [dataset] if dataset is not None
-            else sorted({ds for _, ds in geoms_bc.value}) if broadcast_zones
-            else list(meta)
+            else {ds for _, ds in geoms_bc.value} if broadcast_zones
+            else meta
         )
-        continuous = all(
-            np.issubdtype(np.dtype(meta[d].get("dtype", "float64")), np.floating)
-            for d in refd_ds
-            if d in meta
-        )
-        plan = auto_holistic_plan(
-            est_px,
-            want_exact_domain=want_exact_domain,
-            continuous=continuous,
-            threshold_px=auto_px_per_zone,
-        )
-        if plan == "sketch":
-            use_sketch = want_holistic
-        elif plan == "salt" and holistic_salt is None:
-            holistic_salt = 16
+        if d in meta
+    )
+    kernel_sketch_px, salt, recompress_px = holistic_plan(
+        holistic_mode, want_holistic=want_holistic,
+        want_exact_domain=want_exact_domain, est_px=est_px,
+        continuous=continuous, threshold_px=auto_px_per_zone,
+        salt=holistic_salt, sketch_px=sketch_px,
+    )
     if broadcast_zones:
         if prune_tiles:
             # scan-level pruning: the zone dim is already on the driver,
@@ -1840,7 +1924,7 @@ def zonal_stats_df(
     # compact only when values are guaranteed float32-representable: raw
     # float32 pixels, no user transform (zone_func output is float64)
     compact = (
-        (want_holistic or want_vc)
+        want_holistic
         and zone_func is None
         and all(meta[d].get("dtype") == "float32" for d in refd)
     )
@@ -1849,94 +1933,18 @@ def zonal_stats_df(
         cover=cover,
         all_touched=all_touched,
         nodata_override=nodata,
-        want_counts=want_holistic or want_vc,
+        want_counts=want_holistic,
         zone_func=zone_func,
         band=band,
-        sketch_px=sketch_px if use_sketch else None,
+        sketch_px=kernel_sketch_px,
         compact_vc=compact,
         bands=bands,
         geoms=geoms_bc,
         user_partials={n: t[0] for n, t in add_stats.items()},
     )
-    group_keys = ("zone_id",) if bands is None else ("zone_id", "band")
-
-    # join-back (J2): per-zone aggregates are ≤1 row/zone — same cardinality
-    # class as the broadcastable zone side, so broadcast them and keep the
-    # whole plan SMJ-free in the broadcast regime
-    _bc = F.broadcast if broadcast_zones else (lambda d: d)
-    if want_holistic or want_vc or add_stats:
-        # ONE zone-keyed merge for scalars + holistics (+ user states): the
-        # partial kernel (decode + rasterize) is evaluated exactly once,
-        # not once per consuming aggregation
-        salt = holistic_salt
-        recompress = None
-        if use_sketch:
-            # pre-merge is mandatory in sketch mode: it re-sketches each
-            # (zone, salt) group so the final merge sees ≤ salt×8×sketch_px
-            # points per zone whatever the corpus size
-            salt = salt or 16
-            recompress = sketch_px * 8
-        merged = merged_stats(
-            partials, pctiles, want_vc, salt=salt, recompress_px=recompress,
-            keys=group_keys,
-            user_merges={n: (t[1], t[2]) for n, t in add_stats.items()},
-            vectorized=broadcast_zones,
-        )
-        result = _band_base(zones, bands).join(
-            _bc(merged), list(group_keys), "left"
-        )
-    else:
-        scalars = partials.groupBy(*group_keys).agg(
-            F.sum("count").alias("count"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_i").alias("sum_i"),
-            F.sum("sumsq").alias("sumsq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("nodata_count").alias("nodata_count"),
-            F.sum("nan_count").alias("nan_count"),
-        )
-        result = _band_base(zones, bands).join(
-            _bc(scalars), list(group_keys), "left"
-        )
-
-    cnt = F.coalesce(F.col("count"), F.lit(0))
-    nonempty = cnt > 0
-    # int rasters: the int64-accumulated total (sum_i) feeds sum/mean,
-    # matching reference float(masked.sum(dtype='int64')) (main.py:262-267);
-    # std keeps the float64 moments (reference masked.std() has no
-    # accum_dtype, main.py:268-269)
-    total = F.coalesce(F.col("sum_i").cast("double"), F.col("sum"))
-    mean = total / cnt
-    fmean = F.col("sum") / cnt
-    cols = [F.col("zone_id")] + ([F.col("band")] if bands is not None else [])
-    for s in stats:
-        if s == "count":
-            cols.append(cnt.alias("count"))
-        elif s == "mean":
-            cols.append(F.when(nonempty, mean).alias("mean"))
-        elif s == "std":
-            # population std from merged moments (A6; ddof=0, main.py:268-269)
-            var = F.col("sumsq") / cnt - fmean * fmean
-            cols.append(F.when(nonempty, F.sqrt(F.greatest(var, F.lit(0.0)))).alias("std"))
-        elif s == "range":
-            cols.append(F.when(nonempty, F.col("max") - F.col("min")).alias("range"))
-        elif s == "sum":
-            cols.append(F.when(nonempty, total).alias("sum"))
-        elif s in ("min", "max"):
-            cols.append(F.when(nonempty, F.col(s)).alias(s))
-        elif s == "nodata":
-            cols.append(F.coalesce(F.col("nodata_count"), F.lit(0)).cast("double").alias("nodata"))
-        elif s == "nan":
-            cols.append(F.coalesce(F.col("nan_count"), F.lit(0)).cast("double").alias("nan"))
-        elif s in ("median", "majority", "minority") or s.startswith("percentile_"):
-            # backtick-escape: percentile_12.5 contains a dot (valid per
-            # reference utils.py:21-30 float percentiles)
-            cols.append(F.when(nonempty, F.col(f"`{s}`")).alias(s))
-        elif s == "unique":
-            cols.append(F.when(nonempty, F.col("unique")).alias("unique"))
-    if want_vc:
-        cols.append(F.when(nonempty, F.col("value_counts")).alias("value_counts"))
-    for uname in add_stats:
-        cols.append(F.col(f"u_{uname}").alias(uname))
-    return result.select(*cols)
+    return zonal_result(
+        partials, _band_base(zones, bands), stats, categorical=categorical,
+        keys=("zone_id",) if bands is None else ("zone_id", "band"),
+        user_merges={n: (t[1], t[2]) for n, t in add_stats.items()},
+        salt=salt, recompress_px=recompress_px, broadcast=broadcast_zones,
+    )

@@ -158,6 +158,33 @@ def stage_bucketed(
     return runner.spark.read.parquet(sdir).drop("bucket")
 
 
+def _zonal_partials(spark, tiles, zones, meta, stats, kw) -> DataFrame:
+    """zonal_stats_df's broadcast-regime partial kernel (boundless reads)
+    over ``zones``: cover dict from the collected zone dim, NULL-payload
+    fill rows for missing tiles when nodata/nan counts are requested."""
+    from ..operators.zonal import (
+        broadcast_cover_cells, broadcast_zone_geoms, partial_kernel,
+        tile_driven_input,
+    )
+    from .. import kernel as K
+
+    need_missing = "nodata" in stats or "nan" in stats
+    geoms = broadcast_zone_geoms(zones)
+    kernel_in, cover = tile_driven_input(
+        tiles,
+        broadcast_cover_cells(
+            spark, geoms.value, meta, clip_to_grid=not need_missing
+        ),
+        fill_missing=need_missing,
+    )
+    return partial_kernel(
+        kernel_in, meta, cover=cover,
+        all_touched=kw.get("all_touched", False),
+        nodata_override=kw.get("nodata"), want_counts=K.needs_counts(stats),
+        geoms=geoms,
+    )
+
+
 def checkpointed_zonal_bucketed(
     spark: SparkSession,
     corpus_dir: str,
@@ -173,61 +200,30 @@ def checkpointed_zonal_bucketed(
     kernel runs one zone-id bucket at a time (pmod(zone_id, buckets)),
     each bucket's partials commit atomically, and a restart recomputes
     only the buckets that never committed — kill it anywhere and rerun;
-    the final merge sees exactly one copy of every partial either way."""
-    from ..operators.zonal import (
-        broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
-        merged_stats, partial_kernel, tile_driven_input,
-    )
+    the final merge sees exactly one copy of every partial either way.
+    The result stage is zonal_stats_df's tail (zonal_result) over the
+    committed partials, so every stat equals the one-shot query's."""
+    from ..operators.zonal import collect_dataset_meta, zonal_result
     from ..sources.tables import load_corpus
     from .. import kernel as K
 
     tiles, zones, datasets = load_corpus(spark, corpus_dir)
     runner = CheckpointRunner(spark, base_dir)
     meta = collect_dataset_meta(datasets)
-    stats_list, run_count = K.check_stats(stats, False)
-    pctiles = [s for s in stats_list if s.startswith("percentile_")]
-    want_holistic = run_count or "median" in stats_list or bool(pctiles)
-
+    stats_list, _ = K.check_stats(stats, False)
     zones_ds = zones.withColumn("dataset", F.lit(dataset))
 
     def build_bucket(b: int):
         zb = zones_ds.filter(F.pmod(F.col("zone_id"), F.lit(buckets)) == b)
-        geoms = broadcast_zone_geoms(zb)
-        kernel_in, cover = tile_driven_input(
-            tiles, broadcast_cover_cells(spark, geoms.value, meta)
-        )
-        return partial_kernel(
-            kernel_in, meta, cover=cover,
-            all_touched=kw.get("all_touched", False),
-            nodata_override=kw.get("nodata"), want_counts=want_holistic,
-            geoms=geoms,
-        )
+        return _zonal_partials(spark, tiles, zb, meta, stats_list, kw)
 
     partials = stage_bucketed(
         runner, "partials", build_bucket, buckets=buckets,
         fail_after=fail_after,
     )
-
-    def build_result():
-        merged = merged_stats(partials, pctiles, False)
-        result = zones.select("zone_id").join(merged, "zone_id", "left")
-        cnt = F.coalesce(F.col("count"), F.lit(0))
-        cols = [F.col("zone_id")]
-        total = F.coalesce(F.col("sum_i").cast("double"), F.col("sum"))
-        for s in stats_list:
-            if s == "count":
-                cols.append(cnt.alias("count"))
-            elif s in ("min", "max", "median"):
-                cols.append(F.when(cnt > 0, F.col(s)).alias(s))
-            elif s.startswith("percentile_"):
-                cols.append(F.when(cnt > 0, F.col(f"`{s}`")).alias(s))
-            elif s == "sum":
-                cols.append(F.when(cnt > 0, total).alias("sum"))
-            elif s == "mean":
-                cols.append(F.when(cnt > 0, total / cnt).alias("mean"))
-        return result.select(*cols)
-
-    final = runner.stage("result", build_result)
+    final = runner.stage("result", lambda: zonal_result(
+        partials, zones.select("zone_id"), stats_list
+    ))
     return final, runner
 
 
@@ -240,60 +236,25 @@ def checkpointed_zonal(
     stats=None,
     **kw,
 ):
-    """The zonal pipeline split into resumable stages: cover-cells →
-    partials → result. Killing the job between stages and rerunning skips
-    completed work (SURVEY.md §4 step 7)."""
-    from ..operators.zonal import (
-        broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
-        partial_kernel, tile_driven_input,
-    )
+    """The zonal pipeline split into resumable stages: partials → result.
+    Killing the job between stages and rerunning skips completed work
+    (SURVEY.md §4 step 7). The result stage is zonal_stats_df's tail
+    (zonal_result) over the checkpointed partials, so every stat equals
+    the one-shot query's."""
+    from ..operators.zonal import collect_dataset_meta, zonal_result
     from ..sources.tables import load_corpus
     from .. import kernel as K
 
     tiles, zones, datasets = load_corpus(spark, corpus_dir)
     runner = CheckpointRunner(spark, base_dir)
     meta = collect_dataset_meta(datasets)
-    stats_list, run_count = K.check_stats(stats, False)
-    want_holistic = run_count or any(
-        s == "median" or s.startswith("percentile_") for s in stats_list
-    )
-
+    stats_list, _ = K.check_stats(stats, False)
     zones_ds = zones.withColumn("dataset", F.lit(dataset))
 
-    def build_partials():
-        geoms = broadcast_zone_geoms(zones_ds)
-        kernel_in, cover = tile_driven_input(
-            tiles, broadcast_cover_cells(spark, geoms.value, meta)
-        )
-        return partial_kernel(
-            kernel_in, meta, cover=cover,
-            all_touched=kw.get("all_touched", False),
-            nodata_override=kw.get("nodata"), want_counts=want_holistic,
-            geoms=geoms,
-        )
-
-    partials = runner.stage("partials", build_partials)
-
-    def build_result():
-        # merge the checkpointed partials exactly like zonal_stats_df's tail
-        scalars = partials.groupBy("zone_id").agg(
-            F.sum("count").alias("count"),
-            F.sum("sum").alias("sum"),
-            F.sum("sumsq").alias("sumsq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("nodata_count").alias("nodata_count"),
-            F.sum("nan_count").alias("nan_count"),
-        )
-        result = zones.select("zone_id").join(scalars, "zone_id", "left")
-        cnt = F.coalesce(F.col("count"), F.lit(0))
-        cols = [F.col("zone_id"), cnt.alias("count")]
-        for s in stats_list:
-            if s in ("min", "max", "sum"):
-                cols.append(F.when(cnt > 0, F.col(s)).alias(s))
-            elif s == "mean":
-                cols.append(F.when(cnt > 0, F.col("sum") / cnt).alias("mean"))
-        return result.select(*cols)
-
-    final = runner.stage("result", build_result)
+    partials = runner.stage("partials", lambda: _zonal_partials(
+        spark, tiles, zones_ds, meta, stats_list, kw
+    ))
+    final = runner.stage("result", lambda: zonal_result(
+        partials, zones.select("zone_id"), stats_list
+    ))
     return final, runner

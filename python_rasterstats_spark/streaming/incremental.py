@@ -9,8 +9,11 @@ partials (same protocol as operators/zonal.py, so the final stats stay
 exact under any arrival order).
 
 This works because every statistic the engine supports — including the
-holistic ones — is derived from the mergeable partial struct: streaming
-merge is just repeated partial-merge.
+holistic ones — is derived from the mergeable partial struct: each
+micro-batch re-merges the touched state with its new partials through the
+batch engine's own fold (merged_stats with finalize=False, one zone group
+at a time through Python, no per-zone list aggregate), and current_stats
+finalizes the state through zonal_stats_df's tail (zonal_result).
 """
 
 from __future__ import annotations
@@ -19,49 +22,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import kernel as K
 from ..operators.zonal import (
     broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
-    partial_kernel, tile_driven_input,
+    merged_stats, partial_kernel, tile_driven_input, zonal_result,
 )
-
-
-def _merge_partial_tables(left: DataFrame) -> DataFrame:
-    """Re-merge a table of partial rows to ≤1 row per (zone, value-domain
-    chunk): scalars sum/min/max; value-count arrays re-merge by explode."""
-    scalars = left.groupBy("zone_id").agg(
-        F.sum("count").alias("count"),
-        F.sum("sum").alias("sum"),
-        F.sum("sum_i").alias("sum_i"),
-        F.sum("sumsq").alias("sumsq"),
-        F.min("min").alias("min"),
-        F.max("max").alias("max"),
-        F.sum("nodata_count").alias("nodata_count"),
-        F.sum("nan_count").alias("nan_count"),
-    )
-    vc = (
-        left.select(
-            "zone_id", F.explode(F.arrays_zip("vc_vals", "vc_cnts")).alias("kv")
-        )
-        .groupBy("zone_id", F.col("kv.vc_vals").alias("val"))
-        .agg(F.sum(F.col("kv.vc_cnts")).alias("cnt"))
-        .groupBy("zone_id")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("val", "cnt")))
-            ).alias("vc")
-        )
-        .select(
-            "zone_id",
-            F.map_keys("vc").alias("vc_vals"),
-            F.map_values("vc").alias("vc_cnts"),
-        )
-    )
-    return scalars.join(vc, "zone_id", "left").select(
-        "zone_id", "count", "sum", "sum_i", "sumsq", "min", "max",
-        "nodata_count", "nan_count",
-        F.coalesce("vc_vals", F.array().cast("array<double>")).alias("vc_vals"),
-        F.coalesce("vc_cnts", F.array().cast("array<bigint>")).alias("vc_cnts"),
-    )
 
 
 def incremental_zonal(
@@ -131,7 +96,7 @@ def incremental_zonal(
             both = old.unionByName(new_partials)
         else:
             both = new_partials
-        merged = _merge_partial_tables(both.drop("bucket")).withColumn(
+        merged = merged_stats(both.drop("bucket"), finalize=False).withColumn(
             "bucket", bucket
         )
         # tmp roundtrip: cannot lazily overwrite files being read; the
@@ -157,49 +122,10 @@ def incremental_zonal(
 def current_stats(
     spark: SparkSession, zones: DataFrame, state_dir: str, stats: list[str]
 ):
-    """Finalize the running state into a stats DataFrame (exact, any time)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .. import kernel as K
-
-    state_path = os.path.join(state_dir, "partials")
-    partials = spark.read.parquet(state_path).drop("bucket")
-
-    fields = [T.StructField("zone_id", T.LongType())]
-    for s in stats:
-        if s in ("count", "unique"):
-            fields.append(T.StructField(s, T.LongType()))
-        else:
-            fields.append(T.StructField(s, T.DoubleType()))
-    schema = T.StructType(fields)
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = pdf.iloc[0]
-        merged = {
-            "count": int(row["count"]),
-            "sum": float(row["sum"]),
-            "sum_i": None if pd.isna(row.get("sum_i")) else int(row["sum_i"]),
-            "sumsq": float(row["sumsq"]),
-            "min": row["min"],
-            "max": row["max"],
-            "nodata_count": int(row["nodata_count"]),
-            "nan_count": int(row["nan_count"]),
-            "vc_vals": np.asarray(row["vc_vals"], dtype=np.float64),
-            "vc_cnts": np.asarray(row["vc_cnts"], dtype=np.int64),
-        }
-        out = K.finalize_stats(merged, stats)
-        rec = {"zone_id": [row["zone_id"]]}
-        for s in stats:
-            v = out.get(s)
-            rec[s] = [None if v is None else v]
-        return pd.DataFrame(rec)
-
-    # state is already merged to one row per zone by fold_batch
-    return (
-        zones.select("zone_id")
-        .join(partials.groupBy("zone_id").applyInPandas(finalize, schema),
-              "zone_id", "left")
-        .withColumn("count", F.coalesce("count", F.lit(0)))
+    """Finalize the running state into a stats DataFrame (exact, any time):
+    zonal_stats_df's tail over the state's partial rows."""
+    partials = spark.read.parquet(os.path.join(state_dir, "partials")).drop("bucket")
+    return zonal_result(
+        partials, zones.select("zone_id"), K.check_stats(stats, False)[0],
+        broadcast=False,
     )

@@ -123,7 +123,8 @@ def test_streaming_incremental_matches_batch(spark, fixture_dir, tmp_path):
     )
     q.awaitTermination(120)
 
-    stats = ["count", "mean", "median", "majority"]
+    stats = ["count", "mean", "median", "majority", "std", "unique", "min",
+             "range"]
     got = (
         current_stats(spark, zones, state_dir, stats)
         .orderBy("zone_id").toPandas()
@@ -133,7 +134,7 @@ def test_streaming_incremental_matches_batch(spark, fixture_dir, tmp_path):
         .orderBy("zone_id").toPandas()
     )
     assert got["count"].tolist() == want["count"].tolist() == [75, 50]
-    for col in ("mean", "median", "majority"):
+    for col in stats[1:]:
         assert got[col].tolist() == pytest.approx(want[col].tolist(), rel=1e-12)
 
 

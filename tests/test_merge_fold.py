@@ -1,0 +1,243 @@
+"""The one partials→stats tail: fold_partials serves the salted pre-merge
+and both final merges, and zonal_result is shared by zonal_stats_df, the
+checkpointed jobs and the incremental state."""
+
+import math
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from python_rasterstats_spark import geom as G
+from python_rasterstats_spark import kernel as K
+from python_rasterstats_spark.operators.zonal import (
+    fold_partials, zonal_stats_df,
+)
+from python_rasterstats_spark.sources.tables import ZONES_DDL, raster_to_tables
+
+AFF = (1.0, 0.0, 0.0, 0.0, -1.0, 16.0)
+ND = -1.0
+HOLISTIC = ["count", "min", "max", "mean", "sum", "std", "range", "median",
+            "majority", "minority", "unique", "nodata", "nan",
+            "percentile_10", "percentile_90"]
+MOMENTS = {"mean", "sum", "std"}  # float sums: order-dependent rounding
+SUMSQ = (
+    lambda m: [float((np.asarray(m.compressed(), dtype=np.float64) ** 2).sum())],
+    lambda states: states.sum(axis=0),
+    lambda s: float(s[0]),
+)
+USER = {"sumsq": (SUMSQ[1], SUMSQ[2])}
+
+
+# --------------------------------------------------------------------------
+# fold_partials unit: many groups in one call == one group per call
+# --------------------------------------------------------------------------
+
+def _partials_frame():
+    def row(zid, count, s, si, mn, mx, nd, vals, cnts, u):
+        return dict(zone_id=zid, count=count, sum=s, sum_i=si, sumsq=s * 2.0,
+                    min=mn, max=mx, nodata_count=nd, nan_count=1,
+                    vc_vals=np.asarray(vals, dtype=np.float64),
+                    vc_cnts=np.asarray(cnts, dtype=np.int64), u_sumsq=[u])
+
+    rows = [
+        # int zone: sum_i on every partial
+        row(3, 3, 6.0, 6, 1.0, 3.0, 0, [1, 2, 3], [1, 1, 1], 14.0),
+        # float zone: sum_i null on every partial
+        row(7, 2, 2.5, None, 0.5, 2.0, 1, [0.5, 2.0], [1, 1], 4.25),
+        row(3, 4, 9.0, 9, 2.0, 3.0, 2, [2, 3], [3, 1], 21.0),
+        # all-empty zone: only nodata pixels, min/max null, no values
+        row(5, 0, 0.0, None, None, None, 4, [], [], 0.0),
+        row(7, 1, 4.0, None, 4.0, 4.0, 0, [4.0], [1], 16.0),
+        row(5, 0, 0.0, None, None, None, 1, [], [], 0.0),
+        row(3, 1, 2.0, 2, 2.0, 2.0, 0, [2], [1], 4.0),
+    ]
+    return pd.DataFrame(rows)
+
+
+def _assert_frames_equal(a: pd.DataFrame, b: pd.DataFrame):
+    assert list(a.columns) == list(b.columns)
+    assert len(a) == len(b)
+    for c in a.columns:
+        for x, y in zip(a[c], b[c]):
+            if isinstance(x, np.ndarray) or isinstance(y, np.ndarray):
+                assert np.array_equal(x, y), c
+            elif isinstance(x, dict):
+                assert x == y, c
+            elif x is None or (isinstance(x, float) and math.isnan(x)):
+                assert y is None or (isinstance(y, float) and math.isnan(y)), c
+            else:
+                assert x == y, c
+
+
+def _reference_scalars(g: pd.DataFrame) -> dict:
+    """Per-group loop reference of the scalar-state fold (A1-A6, A13-A14)."""
+    si, mins, maxs = g["sum_i"].dropna(), g["min"].dropna(), g["max"].dropna()
+    return {
+        "count": int(g["count"].sum()),
+        "sum": float(g["sum"].sum()),
+        "sum_i": int(si.sum()) if len(si) else None,
+        "sumsq": float(g["sumsq"].sum()),
+        "min": float(mins.min()) if len(mins) else None,
+        "max": float(maxs.max()) if len(maxs) else None,
+        "nodata_count": int(g["nodata_count"].sum()),
+        "nan_count": int(g["nan_count"].sum()),
+    }
+
+
+@pytest.mark.parametrize("finalize", [True, False])
+def test_fold_many_groups_equals_one_group_per_call(finalize):
+    pdf = _partials_frame()
+    kw = dict(finalize=finalize, pctiles=["percentile_10"], want_vc=True,
+              user_merges=USER)
+    whole = fold_partials(pdf, ("zone_id",), **kw)
+    per = pd.concat(
+        [fold_partials(g, ("zone_id",), **kw)
+         for _, g in pdf.groupby("zone_id", sort=False)],
+        ignore_index=True,
+    )
+    _assert_frames_equal(whole, per)
+    got = whole.set_index("zone_id")
+    for zid, g in pdf.groupby("zone_id"):
+        for k, v in _reference_scalars(g).items():
+            x = got.loc[zid, k]
+            if v is None:
+                assert x is None or math.isnan(x), (zid, k)
+            else:
+                assert x == pytest.approx(v, rel=1e-15), (zid, k)
+    assert got["count"].to_dict() == {3: 8, 7: 3, 5: 0}
+    assert got["sum_i"].to_dict() == {3: 17, 7: None, 5: None}
+    assert got.loc[5, "nodata_count"] == 5 and math.isnan(got.loc[5, "min"])
+    assert (got.loc[3, "min"], got.loc[3, "max"]) == (1.0, 3.0)
+    if finalize:
+        assert got.loc[3, "value_counts"] == {1.0: 1, 2.0: 5, 3.0: 2}
+        assert got.loc[3, "majority"] == 2.0 and got.loc[3, "unique"] == 3
+        assert got.loc[3, "u_sumsq"] == 39.0
+        assert pd.isna(got.loc[5, "median"]) and got.loc[5, "value_counts"] is None
+    else:
+        assert got.loc[3, "vc_vals"].tolist() == [1.0, 2.0, 3.0]
+        assert got.loc[3, "vc_cnts"].tolist() == [1, 5, 2]
+        # merged states re-fold to the same stats (associativity)
+        again = fold_partials(whole, ("zone_id",), **{**kw, "finalize": True})
+        ref = fold_partials(pdf, ("zone_id",), **{**kw, "finalize": True})
+        _assert_frames_equal(again, ref)
+
+
+# --------------------------------------------------------------------------
+# merge-path parity: broadcast/SMJ × direct/salted == kernel oracle
+# --------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def small(spark):
+    rng = np.random.default_rng(11)
+    arr = rng.integers(0, 6, size=(16, 16)).astype(np.float32)
+    arr[2:4, 2:5] = ND
+    arr[9, 9:12] = np.nan
+    arr[12:16, 0:4] = ND  # zone 4 sees nodata only
+    tiles, datasets = raster_to_tables(
+        spark, arr, AFF, dataset="d", nodata=ND, tile=4
+    )
+    geoms = [
+        G.box(1.0, 1.0, 9.0, 15.0),
+        G.box(6.0, 2.0, 14.0, 10.0),
+        G.box(12.0, 12.0, 20.0, 20.0),  # straddles the raster edge
+        G.box(30.0, 30.0, 34.0, 34.0),  # outside: empty zone
+        G.box(0.2, 0.2, 3.8, 3.8),  # nodata pixels only
+    ]
+    zones = spark.createDataFrame(
+        [{"zone_id": i, "collection": "t", "geometry_wkb": G.wkb_dumps(g),
+          "geom_type": g["type"], "properties": {}}
+         for i, g in enumerate(geoms)],
+        schema=ZONES_DDL,
+    )
+    return arr, geoms, tiles, datasets, zones
+
+
+def _oracle(arr, geom):
+    want = K.zonal_stats_one(
+        geom, arr, AFF, nodata=ND, stats=HOLISTIC, categorical=True
+    )
+    vc = {k: v for k, v in want.items() if not isinstance(k, str)}
+    block, rv, _, fill = K.prepare_zone(geom, arr, AFF, nodata=ND)
+    seg = block[rv & (block != fill) & ~np.isnan(block)].astype(np.float64)
+    return want, vc, float((seg ** 2).sum())
+
+
+def _same(a, b, stat, rel=1e-12):
+    if a is None or b is None:
+        assert a is None and b is None, stat
+    elif stat in MOMENTS or stat == "sumsq":
+        assert a == pytest.approx(b, rel=rel, abs=1e-12), stat
+    else:
+        assert a == b, stat
+
+
+def test_merge_paths_agree_with_oracle(small):
+    arr, geoms, tiles, datasets, zones = small
+    outs = {}
+    for broadcast_zones in (True, False):
+        for salt in (None, 7):
+            df = zonal_stats_df(
+                zones, tiles, datasets, dataset="d", stats=HOLISTIC,
+                categorical=True, add_stats={"sumsq": SUMSQ},
+                broadcast_zones=broadcast_zones, holistic_salt=salt,
+            )
+            assert df.columns == ["zone_id"] + HOLISTIC + ["value_counts", "sumsq"]
+            outs[(broadcast_zones, salt)] = {
+                r["zone_id"]: r.asDict() for r in df.collect()
+            }
+    first = outs[(True, None)]
+    assert sorted(first) == list(range(len(geoms)))
+    assert first[3]["count"] == 0 and first[4]["count"] == 0
+    assert first[4]["nodata"] > 0 and first[2]["nodata"] > 0
+    for got in outs.values():
+        for zid, geom in enumerate(geoms):
+            want, vc, sumsq = _oracle(arr, geom)
+            row = got[zid]
+            for s in HOLISTIC:
+                _same(row[s], want[s], s)
+                _same(row[s], first[zid][s], s)
+            assert dict(row["value_counts"] or {}) == vc
+            if want["count"]:
+                _same(row["sumsq"], sumsq, "sumsq")
+
+
+# --------------------------------------------------------------------------
+# checkpointed jobs finalize through the same tail as zonal_stats_df
+# --------------------------------------------------------------------------
+
+CKPT_STATS = ["count", "min", "max", "mean", "sum", "std", "range", "median",
+              "majority", "minority", "unique", "nodata", "nan",
+              "percentile_10"]
+
+
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_checkpointed_jobs_match_zonal_stats_df(spark, corpus, fixture_dir,
+                                                tmp_path, bucketed):
+    from python_rasterstats_spark.plans.lineage import (
+        checkpointed_zonal, checkpointed_zonal_bucketed,
+    )
+
+    tiles, zones, datasets = corpus
+    if bucketed:
+        got, _ = checkpointed_zonal_bucketed(
+            spark, fixture_dir, str(tmp_path / "b"), dataset="slope",
+            stats=CKPT_STATS, buckets=3,
+        )
+    else:
+        got, _ = checkpointed_zonal(
+            spark, fixture_dir, str(tmp_path / "c"), dataset="slope",
+            stats=CKPT_STATS,
+        )
+    want = zonal_stats_df(zones, tiles, datasets, dataset="slope",
+                          stats=CKPT_STATS)
+    assert got.columns == want.columns == ["zone_id"] + CKPT_STATS
+    got_rows = {r["zone_id"]: r.asDict() for r in got.collect()}
+    want_rows = {r["zone_id"]: r.asDict() for r in want.collect()}
+    assert got_rows.keys() == want_rows.keys()
+    for zid, w in want_rows.items():
+        for s in CKPT_STATS:
+            g = got_rows[zid][s]
+            assert (g is None) == (w[s] is None), (zid, s)
+            if g is not None:
+                assert g == pytest.approx(w[s], rel=1e-12), (zid, s)

@@ -140,30 +140,25 @@ def _resolve_raster(spark, raster, affine, nodata, band, tile=256):
 
 
 def _features_to_zone_rows(spark, vectors, layer):
-    from .sources.tables import ZONES_DDL
+    import pandas as pd
+
+    from .operators.zonal import local_frame
 
     feats = list(G.read_features(vectors, layer))
-    rows = []
-    for i, f in enumerate(feats):
-        g = f["geometry"]
-        rows.append(
-            {
-                "zone_id": i,
-                "collection": "user",
-                "geometry_wkb": G.wkb_dumps(g),
-                "geom_type": g["type"],
-                "properties": {},
-            }
-        )
-    zones = spark.createDataFrame(rows, schema=ZONES_DDL)
-    from pyspark.sql import functions as F
-
-    pj = [json.dumps(f.get("properties") or {}) for f in feats]
-    props_df = spark.createDataFrame(
-        [{"zone_id": i, "properties_json": p} for i, p in enumerate(pj)],
-        schema="zone_id long, properties_json string",
+    zones = local_frame(
+        spark,
+        pd.DataFrame({
+            "zone_id": range(len(feats)),
+            "collection": "user",
+            "geometry_wkb": [G.wkb_dumps(f["geometry"]) for f in feats],
+            "geom_type": [f["geometry"]["type"] for f in feats],
+            "properties_json": [
+                json.dumps(f.get("properties") or {}) for f in feats
+            ],
+        }),
+        "zone_id long, collection string, geometry_wkb binary, "
+        "geom_type string, properties_json string",
     )
-    zones = zones.drop("properties").join(F.broadcast(props_df), "zone_id")
     return feats, zones
 
 

@@ -151,6 +151,7 @@ def zonal_crosstab_df(
             pairs, broadcast_cover_cells(
                 zones.sparkSession, geoms_bc.value, meta, clip_to_grid=True
             ),
+            meta,
         )
     else:
         cover = None

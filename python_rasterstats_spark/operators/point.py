@@ -43,8 +43,9 @@ from .. import codecs as C
 from .. import geom as G
 from .. import kernel as K
 from .zonal import (
-    _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, smj_bounds_filter,
-    spread, tile_driven_input, tile_prune_filter, zone_cell_counts,
+    _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, local_frame,
+    smj_bounds_filter, spread, tile_driven_input, tile_prune_filter,
+    zone_cell_counts,
 )
 
 _WINDOWS_SCHEMA = T.StructType(
@@ -130,20 +131,27 @@ def point_query_df(
             spark, gd, meta, bilin=bilin, boundless=boundless
         )
         scan = tiles.select(*_TILE_COLS)
-        if not isinstance(wins, str):
+        pending = isinstance(wins, str)
+        if not pending:
             # exact-key semi join (broadcast, JVM-side): vertex windows
             # touch few tiles, so without it every pruned-scan tile's
             # payload would cross Arrow just to be discarded by the dict
             # lookup
             scan = scan.join(
-                F.broadcast(spark.createDataFrame(
-                    list(wins.value),
+                F.broadcast(local_frame(
+                    spark, pd.DataFrame(list(wins.value), columns=keys),
                     "dataset string, tile_col int, tile_row int",
                 )),
                 keys, "left_semi",
             )
-        kernel_in, wins = tile_driven_input(scan, wins)
-        vkeys = spark.createDataFrame(vkey_rows, "zone_id long, vertex_idx int")
+        kernel_in, wins = tile_driven_input(scan, wins, meta)
+        # a pending error needs no vertex keys (the action raises), and an
+        # empty vertex-key LocalTableScan would let the optimizer prune the
+        # raising stage out of the left join
+        vkeys = None if pending else local_frame(
+            spark, pd.DataFrame(vkey_rows, columns=["zone_id", "vertex_idx"]),
+            "zone_id long, vertex_idx int",
+        )
     else:
         def explode_vertices(
             batches: Iterator[pd.DataFrame],
@@ -320,7 +328,7 @@ def _driver_windows(
     return spark.sparkContext.broadcast(wmap), list(vkeys)
 
 
-def _interp_join(gathered: DataFrame, vkeys: DataFrame, bilin: bool, _bc):
+def _interp_join(gathered: DataFrame, vkeys: DataFrame | None, bilin: bool, _bc):
     # interpolation entirely in JVM expressions (no per-vertex pandas
     # groups): gather the ≤4 pixels into a pos→value map, then apply the
     # bilinear formula / masked-nearest fallback (point.py:29-65) as CASE
@@ -363,6 +371,8 @@ def _interp_join(gathered: DataFrame, vkeys: DataFrame, bilin: bool, _bc):
         )
         value = F.when(all_valid, bilinear).otherwise(nearest)
     interped = agg.select("zone_id", "vertex_idx", value.alias("value"))
+    if vkeys is None:
+        return interped
     # vertices with no tile at all (beyond extent / absent tiles) → NULL,
     # preserving one output row per vertex (J4 boundless semantics).
     # interped is ≤1 row per vertex — same cardinality class as the

@@ -36,6 +36,17 @@ Scale properties:
   the only shuffle is the zone-keyed merge of partial structs, with
   map-side combine (scalar path) or salted pre-merge (holistic path)
   bounding the reduce fan-in.
+- a small broadcast-regime query runs its Python work in ONE wave of
+  tasks (one per core): tile_driven_input coalesces the kernel input
+  (narrow, no shuffle) to no more tasks than a scan of just the kernel's
+  tiles would have, and never fewer than one wave; every driver-built
+  frame is an Arrow LocalTableScan (local_frame), not a Python RDD; and
+  the join-back base is rebuilt from the zone rows collected at build,
+  so the zones input is read once. Why: a Python task has a fixed cost
+  of 0.15-0.23 s of worker CPU (4-vCPU host, CPython 3.11), most of it
+  ``importlib.invalidate_caches`` re-reading pyspark.zip's directory for
+  each zipimporter on every task — more than the kernel work of a
+  pruned scan's split.
 - errors the driver detects while building the cover index (unknown
   dataset, beyond-extent with boundless=False, cover cap) still surface
   at action time with the reference's messages: the kernel's input is
@@ -60,11 +71,14 @@ from __future__ import annotations
 
 import functools
 import math
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import codecs as C
 from .. import geom as G
@@ -92,6 +106,22 @@ def collect_dataset_meta(datasets: DataFrame) -> dict:
             "dtype": row.asDict().get("dtype"),
         }
     return meta
+
+
+def local_frame(spark, pdf: pd.DataFrame, schema) -> DataFrame:
+    """The one way the engine turns driver-side rows into a DataFrame:
+    ``pdf`` (columns taken by name from ``schema``, a StructType or DDL
+    string) goes to the JVM as Arrow batches and becomes a
+    LocalTableScan (up to spark.sql.execution.arrow.localRelationThreshold,
+    else a JVM-side RDD). A ``createDataFrame`` of a Python list is a
+    Python RDD instead: every scan of it runs Python tasks, each paying
+    the fixed per-task cost (module docstring)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pandas(
+        pdf[schema.names], schema=to_arrow_schema(schema), preserve_index=False
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -161,11 +191,19 @@ def broadcast_zone_geoms(zones: DataFrame):
     Arrow stream. Collecting here costs the same driver memory a broadcast
     hash join of the zone dim would (the driver builds the broadcast
     relation either way)."""
-    spark = zones.sparkSession
-    d = {}
+    geoms, _ = collect_zone_rows(zones)
+    return zones.sparkSession.sparkContext.broadcast(geoms)
+
+
+def collect_zone_rows(zones: DataFrame):
+    """One read of the zone dim: ``({(zone_id, dataset): wkb}, zone_ids)``,
+    ``zone_ids`` holding one entry per input row, in row order, duplicates
+    kept — enough to rebuild the join-back base on the driver."""
+    geoms, zone_ids = {}, []
     for row in zones.select("zone_id", "dataset", "geometry_wkb").collect():
-        d[(row["zone_id"], row["dataset"])] = bytes(row["geometry_wkb"])
-    return spark.sparkContext.broadcast(d)
+        geoms[(row["zone_id"], row["dataset"])] = bytes(row["geometry_wkb"])
+        zone_ids.append(row["zone_id"])
+    return geoms, zone_ids
 
 
 def _zone_tile_rects(geoms: dict, meta: dict, *, pad_tiles: int = 0) -> dict:
@@ -1241,10 +1279,28 @@ def broadcast_cover_cells(
     return spark.sparkContext.broadcast(cover)
 
 
-def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
+def _kernel_tasks(spark, keys, meta: dict) -> int:
+    """Task count of a tile-driven kernel stage over the tile ``keys``
+    ``(dataset, tile_col, tile_row)`` it reads: as many as a scan of just
+    those tiles would have at the session's split size (their raw payload
+    bytes / spark.sql.files.maxPartitionBytes), and at least one wave."""
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    need = 0
+    for ds, n in Counter(k[0] for k in keys).items():
+        m = meta.get(ds)
+        if m is not None:
+            px = m["tile_w"] * m["tile_h"] * m.get("band_count", 1)
+            need += n * px * np.dtype(m.get("dtype") or "float64").itemsize
+    return max(spark.sparkContext.defaultParallelism, -(-need // split))
+
+
+def tile_driven_input(
+    tiles: DataFrame, cover, meta: dict, *, fill_missing: bool = False
+):
     """(kernel input, cover) for a tile-driven kernel in the broadcast
-    regime, from the kernel's input ``tiles`` and its cover source
-    (broadcast_cover_cells' result, or the point query's window dict).
+    regime, from the kernel's input ``tiles``, its cover source
+    (broadcast_cover_cells' result, or the point query's window dict) and
+    the dataset ``meta``.
 
     ``fill_missing`` (boundless nodata/nan) unions in one NULL-payload row
     per cover key with no stored tile, so the kernel synthesizes its fill
@@ -1257,7 +1313,18 @@ def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
     A pending error message becomes a one-row stage with the schema of
     ``tiles`` that raises it when the action runs (with an empty cover):
     the error surfaces at action time, as with the executor-side
-    generators, and no pruned-to-empty scan can swallow it."""
+    generators, and no pruned-to-empty scan can swallow it.
+
+    The input is coalesced (narrow, no shuffle) to _kernel_tasks: a
+    pruned scan keeps the split count of the whole table, so a small
+    query's kernel runs as ONE wave of Python tasks instead of one task
+    per (mostly empty) split, each paying a fixed set-up cost far above
+    its kernel work (module docstring). A scan that admits most of the
+    table keeps its splits: merging those too raised the batch
+    workload's peak RSS by 31-41% (4-vCPU host; the JVM heap grows with
+    the busier pipeline). A task streams its splits through the kernel
+    in Arrow batches, so its Python memory does not grow with the splits
+    it reads."""
     spark = tiles.sparkSession
     if isinstance(cover, str):
         msg = cover
@@ -1271,11 +1338,19 @@ def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
             pending_error, tiles.schema
         )
         return stage, spark.sparkContext.broadcast({})
+    if "bytes" in tiles.columns:
+        # a tile table (crosstab's value⋈class pairs are not): project the
+        # kernel's columns BELOW the coalesce, so the scan's codegen stage
+        # builds each row once — a projection above the coalesce would
+        # copy every payload a second time
+        tiles = tiles.select(*_TILE_COLS)
+    tasks = _kernel_tasks(spark, cover.value, meta)
     if not fill_missing or not cover.value:
-        return tiles, cover
+        return tiles.coalesce(tasks), cover
     keys = list(_TILE_COLS[:3])
-    cover_keys = spark.createDataFrame(
-        list(cover.value), "dataset string, tile_col int, tile_row int"
+    cover_keys = local_frame(
+        spark, pd.DataFrame(list(cover.value), columns=keys),
+        "dataset string, tile_col int, tile_row int",
     )
     present = F.broadcast(cover_keys).join(tiles.select(*keys), keys, "inner")
     missing = (
@@ -1283,7 +1358,7 @@ def tile_driven_input(tiles: DataFrame, cover, *, fill_missing: bool = False):
         .withColumn("bytes", F.lit(None).cast("binary"))
         .withColumn("fmt", F.lit(None).cast("string"))
     )
-    return tiles.select(*_TILE_COLS).unionByName(missing), cover
+    return tiles.unionByName(missing).coalesce(tasks), cover
 
 
 def _append_partial(rows: dict, p: dict, compact_vc: bool) -> None:
@@ -1671,13 +1746,14 @@ def zonal_result(
 # ---------------------------------------------------------------------------
 
 
-def _band_base(zones: DataFrame, bands) -> DataFrame:
+def _band_base(base: DataFrame, bands) -> DataFrame:
     """Join-back base: one row per zone (or per zone × requested band)."""
-    base = zones.select("zone_id")
     if bands is None:
         return base
-    spark = zones.sparkSession
-    bdf = spark.createDataFrame([(int(b),) for b in bands], "band int")
+    bdf = local_frame(
+        base.sparkSession, pd.DataFrame({"band": [int(b) for b in bands]}),
+        "band int",
+    )
     return base.crossJoin(F.broadcast(bdf))
 
 
@@ -1822,8 +1898,18 @@ def zonal_stats_df(
     big_keys: frozenset = frozenset()
     geoms_bc = None
     est_px = 0  # auto-holistic size estimate (filled per regime below)
+    base = zones.select("zone_id")  # join-back base (J2)
     if broadcast_zones:
-        geoms_bc = broadcast_zone_geoms(zones)
+        # the zone dim is read ONCE per query, here: the join-back base is
+        # rebuilt from the same rows (every input row, duplicates and the
+        # input's zone_id type kept) as a LocalTableScan
+        spark = zones.sparkSession
+        geoms, zone_ids = collect_zone_rows(zones)
+        geoms_bc = spark.sparkContext.broadcast(geoms)
+        base = local_frame(
+            spark, pd.DataFrame({"zone_id": pd.Series(zone_ids, dtype=object)}),
+            base.schema,
+        )
         if auto_holistic:
             est_px = _max_zone_px(geoms_bc.value, meta)
     elif hybrid_wkb_bytes is not None or prune_tiles or auto_holistic:
@@ -1893,13 +1979,13 @@ def zonal_stats_df(
         # no join, each tile payload crosses Arrow once (guide §8: decide
         # with small rows, move big rows once)
         cover = broadcast_cover_cells(
-            zones.sparkSession, geoms_bc.value, meta,
+            spark, geoms_bc.value, meta,
             clip_to_grid=not need_missing,
             max_cells_per_zone=max_cells_per_zone,
             raise_beyond_extent=not boundless,
         )
         kernel_in, cover = tile_driven_input(
-            tiles, cover, fill_missing=need_missing
+            tiles, cover, meta, fill_missing=need_missing
         )
     else:
         # SMJ regime (zone set too large to broadcast): the cover cells
@@ -1943,7 +2029,7 @@ def zonal_stats_df(
         user_partials={n: t[0] for n, t in add_stats.items()},
     )
     return zonal_result(
-        partials, _band_base(zones, bands), stats, categorical=categorical,
+        partials, _band_base(base, bands), stats, categorical=categorical,
         keys=("zone_id",) if bands is None else ("zone_id", "band"),
         user_merges={n: (t[1], t[2]) for n, t in add_stats.items()},
         salt=salt, recompress_px=recompress_px, broadcast=broadcast_zones,

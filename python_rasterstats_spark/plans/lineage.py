@@ -175,6 +175,7 @@ def _zonal_partials(spark, tiles, zones, meta, stats, kw) -> DataFrame:
         broadcast_cover_cells(
             spark, geoms.value, meta, clip_to_grid=not need_missing
         ),
+        meta,
         fill_missing=need_missing,
     )
     return partial_kernel(

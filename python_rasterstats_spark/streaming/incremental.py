@@ -70,7 +70,7 @@ def incremental_zonal(
     )
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kernel_in, batch_cover = tile_driven_input(batch_df, cover)
+        kernel_in, batch_cover = tile_driven_input(batch_df, cover, meta)
         new_partials = partial_kernel(
             kernel_in, meta, cover=batch_cover, all_touched=all_touched,
             nodata_override=nodata, want_counts=True, geoms=geoms_bc,

@@ -76,7 +76,8 @@ def test_partial_sketch_bounds_state_size(corpus):
     )
     geoms_bc = broadcast_zone_geoms(z)
     kernel_in, cover = tile_driven_input(
-        tiles, broadcast_cover_cells(tiles.sparkSession, geoms_bc.value, meta)
+        tiles, broadcast_cover_cells(tiles.sparkSession, geoms_bc.value, meta),
+        meta,
     )
     parts = partial_kernel(
         kernel_in, meta, cover=cover, all_touched=False, nodata_override=None,

@@ -84,7 +84,7 @@ def test_boundless_input_one_row_per_tile(spark, raster):
     zones = _zones_df(spark, [G.box(-3.0, -1.0, 7.0, 9.0)], ["td"])
     geoms = broadcast_zone_geoms(zones)
     cover = broadcast_cover_cells(spark, geoms.value, meta, clip_to_grid=False)
-    kernel_in, _ = tile_driven_input(tiles, cover, fill_missing=True)
+    kernel_in, _ = tile_driven_input(tiles, cover, meta, fill_missing=True)
     rows = kernel_in.collect()
     keys = sorted((r["tile_col"], r["tile_row"]) for r in rows)
     assert keys == [(c, r) for c in (-1, 0, 1) for r in (0, 1, 2)]

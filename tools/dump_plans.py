@@ -74,7 +74,13 @@ def main():
         "  cover keys anti-joined against a key-only scan;",
         "- **column pruning reaches the scan**: the tile scan reads only the",
         "  tile key + payload columns (never caption/phash); the",
-        "  boundless-nodata plan's SECOND scan reads keys ONLY (no bytes).",
+        "  boundless-nodata plan's SECOND scan reads keys ONLY (no bytes);",
+        "- **one wave of Python tasks** for small queries: the kernel",
+        "  input is a narrow `Coalesce` to as many tasks as a scan of just",
+        "  the kernel's tiles would have, and at least one wave (8 here),",
+        "  and every driver-built frame (join-back base, cover keys, point",
+        "  window/vertex keys) is a `LocalTableScan` built through Arrow —",
+        "  no `Scan ExistingRDD` (Python RDD) remains.",
         "",
         "(The codegen-span count reads 0 here because AQE's pre-execution",
         "toString elides WholeStageCodegen markers; stage-level codegen is",
@@ -104,6 +110,7 @@ def main():
             "Exchange hashpartitioning(dataset" in plan
             or "Exchange hashpartitioning(tile_col" in plan
         )
+        coalesce = re.findall(r"\bCoalesce \d+", plan)
         lines += [
             f"## {name}",
             "",
@@ -111,6 +118,9 @@ def main():
             f"sort_merge_joins: {s['sort_merge_joins']}, "
             f"exchanges: {s['exchanges']}",
             f"- tile-key exchange present: {tile_exchange}",
+            f"- kernel input: {', '.join(coalesce) or '(no Coalesce)'}; "
+            f"LocalTableScan: {plan.count('LocalTableScan')}, "
+            f"Scan ExistingRDD: {plan.count('Scan ExistingRDD')}",
             "- tiles scan (column-pruned): "
             + ("; ".join(scans) if scans else "(no direct parquet scan — in-memory fixture)"),
             "- pushed filters (scan-level tile pruning): "

@@ -43,10 +43,12 @@ Scale properties:
   frame is an Arrow LocalTableScan (local_frame), not a Python RDD; and
   the join-back base is rebuilt from the zone rows collected at build,
   so the zones input is read once. Why: a Python task has a fixed cost
-  of 0.15-0.23 s of worker CPU (4-vCPU host, CPython 3.11), most of it
-  ``importlib.invalidate_caches`` re-reading pyspark.zip's directory for
-  each zipimporter on every task — more than the kernel work of a
-  pruned scan's split.
+  of about 0.09 core-seconds under get_spark's worker entry (0.21-0.34
+  under stock pyspark.worker, whose importlib.invalidate_caches re-reads
+  pyspark.zip's directory on every task; tools/task_overhead.py,
+  local[4], CPython 3.11) — still more than the kernel work of a pruned
+  scan's split: without the coalesce, sparse_interactive's scalar and
+  holistic medians are 27% and 16% slower.
 - errors the driver detects while building the cover index (unknown
   dataset, beyond-extent with boundless=False, cover cap) still surface
   at action time with the reference's messages: the kernel's input is
@@ -1318,13 +1320,13 @@ def tile_driven_input(
     The input is coalesced (narrow, no shuffle) to _kernel_tasks: a
     pruned scan keeps the split count of the whole table, so a small
     query's kernel runs as ONE wave of Python tasks instead of one task
-    per (mostly empty) split, each paying a fixed set-up cost far above
-    its kernel work (module docstring). A scan that admits most of the
-    table keeps its splits: merging those too raised the batch
-    workload's peak RSS by 31-41% (4-vCPU host; the JVM heap grows with
-    the busier pipeline). A task streams its splits through the kernel
-    in Arrow batches, so its Python memory does not grow with the splits
-    it reads."""
+    per (mostly empty) split, each paying a fixed set-up cost (about
+    0.09 core-seconds, module docstring) above its kernel work. A scan
+    that admits most of the table keeps its splits: merging those too
+    raised the batch workload's peak RSS by 31-41% (4-vCPU host; the JVM
+    heap grows with the busier pipeline). A task streams its splits
+    through the kernel in Arrow batches, so its Python memory does not
+    grow with the splits it reads."""
     spark = tiles.sparkSession
     if isinstance(cover, str):
         msg = cover

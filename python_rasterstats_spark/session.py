@@ -2,9 +2,35 @@
 
 from __future__ import annotations
 
+import importlib.util
 import os
+import sysconfig
 
 from pyspark.sql import SparkSession
+
+WORKER_ENTRY = "pyspark_rasterstats_worker"
+
+
+def _worker_entry_usable(master: str) -> bool:
+    """True when a local daemon can import the engine's worker entry.
+
+    The daemon imports its worker module at start-up, before any
+    ``--py-files`` archive reaches its path, so an entry that resolves
+    only from a zip (a py-files-only submit) would kill every Python task.
+    The entry must be a plain file in a directory the daemon searches: the
+    working directory (``python -m``, unless ``PYTHONSAFEPATH``),
+    ``PYTHONPATH`` or site-packages."""
+    if not master.startswith("local"):
+        return False
+    spec = importlib.util.find_spec(WORKER_ENTRY)
+    if spec is None or not spec.has_location or not os.path.isfile(spec.origin):
+        return False
+    here = os.path.dirname(os.path.realpath(spec.origin))
+    dirs = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    dirs += [sysconfig.get_path("purelib"), sysconfig.get_path("platlib")]
+    if not os.environ.get("PYTHONSAFEPATH"):
+        dirs.append(os.getcwd())
+    return any(d and os.path.realpath(d) == here for d in dirs)
 
 
 def get_spark(
@@ -15,7 +41,7 @@ def get_spark(
 ) -> SparkSession:
     """Local SparkSession with the engine's recommended configuration.
 
-    Two settings are SESSION-WIDE and so also change queries the caller
+    Three settings are SESSION-WIDE and so also change queries the caller
     runs in the same session, not only the engine's own:
 
     - ``spark.sql.join.preferSortMergeJoin=false`` lets the planner pick a
@@ -31,9 +57,20 @@ def get_spark(
       below an explode (see the comment below). Results are unchanged;
       a query whose pushed-down inferred filter would have pruned rows
       early loses that pruning.
+    - ``spark.python.worker.module=pyspark_rasterstats_worker`` runs every
+      Python task of the session, the caller's own UDFs included, through
+      the engine's worker entry. It is stock ``pyspark.worker`` except that
+      a zipimporter re-reads its archive's directory only when the file
+      changed, not on every task. On CPython 3.11 that cuts the fixed cost
+      of a no-op Python task from 0.21-0.34 to about 0.09 core-seconds
+      (``tools/task_overhead.py``, local[4]). Results and plans are
+      unchanged. It is set only on a ``local`` master whose Python daemon
+      can import the entry as a plain file (not from a ``--py-files``
+      zip). Pass ``extra={"spark.python.worker.module": "pyspark.worker"}``
+      to restore stock.
 
     ``extra`` entries are applied last and override any default here."""
-    cpus =int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (
@@ -73,6 +110,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
+    if _worker_entry_usable(master):
+        b = b.config("spark.python.worker.module", WORKER_ENTRY)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

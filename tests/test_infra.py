@@ -451,3 +451,34 @@ def test_spark_submit_pyfiles_smoke(tmp_path):
     line = [l for l in out.stdout.splitlines() if "submit_smoke" in l][-1]
     payload = json.loads(line)
     assert payload["submit_smoke"] == "ok" and payload["count"] == 256
+
+
+def test_spark_submit_pyfiles_get_spark(tmp_path):
+    """A py-files-only submit whose script builds its session with
+    `get_spark`: the Python daemon starts before the zip reaches its path,
+    so it could not import the worker entry; get_spark must keep stock
+    `pyspark.worker` there and the zonal query must run."""
+    import shutil
+
+    submit = shutil.which("spark-submit") or os.path.join(
+        os.environ.get("SPARK_HOME", ""), "bin", "spark-submit")
+    if not os.path.exists(submit):
+        pytest.skip("spark-submit not on this machine")
+    zip_path = str(tmp_path / "prs.zip")
+    subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "make_pyfiles.py"),
+         zip_path],
+        check=True,
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [submit, "--master", "local[4]", "--py-files", zip_path,
+         os.path.join(REPO, "tools", "submit_smoke.py"), "--get-spark"],
+        cwd=str(tmp_path),  # not the repo: the zip must be the only source
+        capture_output=True, text=True, timeout=420, env=env,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = [l for l in out.stdout.splitlines() if "submit_smoke" in l][-1]
+    payload = json.loads(line)
+    assert payload["submit_smoke"] == "ok" and payload["count"] == 256
+    assert payload["worker_module"] == "pyspark.worker"

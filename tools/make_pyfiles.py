@@ -1,5 +1,9 @@
 """Build the --py-files zip for spark-submit (north_rule packaging).
 
+The zip holds the package and the top-level Python worker entry
+``pyspark_rasterstats_worker.py`` (see ``session.get_spark``), so the
+entry ships wherever the engine ships.
+
 Usage:
     python tools/make_pyfiles.py [out.zip]
     spark-submit --py-files dist/prs.zip -m python_rasterstats_spark.cli ...
@@ -26,6 +30,8 @@ def main():
                 if f.endswith(".py"):
                     path = os.path.join(root, f)
                     zf.write(path, os.path.relpath(path, REPO))
+        zf.write(os.path.join(REPO, "pyspark_rasterstats_worker.py"),
+                 "pyspark_rasterstats_worker.py")
     print(out)
 
 

@@ -4,11 +4,14 @@ Run with the engine shipped ONLY via --py-files (no repo on PYTHONPATH):
 
     python tools/make_pyfiles.py
     spark-submit --master local[4] --py-files dist/prs.zip \
-        tools/submit_smoke.py
+        tools/submit_smoke.py [--get-spark]
 
 Builds a tiny in-memory corpus, runs one zonal query, prints one JSON
 line. Exits nonzero if the import or the query fails — the point is that
 executors AND driver resolve python_rasterstats_spark from the zip alone.
+With ``--get-spark`` the session comes from ``session.get_spark`` (the
+engine's configuration, worker-entry choice included) instead of a bare
+builder; the JSON line then also names the session's Python worker module.
 """
 
 import json
@@ -19,7 +22,12 @@ from pyspark.sql import SparkSession
 
 
 def main() -> int:
-    spark = SparkSession.builder.getOrCreate()
+    if "--get-spark" in sys.argv[1:]:
+        from python_rasterstats_spark.session import get_spark
+
+        spark = get_spark(master="local[4]", shuffle_partitions=4)
+    else:
+        spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     # import AFTER the session exists: --py-files is what puts the
     # package on the path
@@ -45,6 +53,8 @@ def main() -> int:
         "submit_smoke": "ok" if ok else "MISMATCH",
         "count": row["count"],
         "mean": row["mean"],
+        "worker_module": spark.conf.get(
+            "spark.python.worker.module", "pyspark.worker"),
     }))
     spark.stop()
     return 0 if ok else 1

@@ -19,12 +19,12 @@ intersection index from metadata, then make one pass over the raster):
          checkpointed jobs and the incremental state):
          scalar-only: groupBy(zone_id) JVM agg (whole-stage codegen,
          map-side combine)                                         [A1-A6]
-         holistic: fold_partials, ONE fold of scalars + (value, count)
-         arrays by zone — exact median/percentiles/majority/minority/
-         unique/value_counts — as the optional salted pre-merge (with
-         quantile-summary re-sketch for continuous rasters) and as the
-         final merge: mapInPandas per partition (broadcast regime) or
-         applyInPandas per zone (SMJ regime)                      [A7-A15]
+         holistic: ONE merge shape — repartition(zone key) +
+         sortWithinPartitions + mapInPandas streaming fold_partials (one
+         fold of scalars + (value, count) arrays: exact median/percentiles/
+         majority/minority/unique/value_counts) over each Arrow batch's
+         complete groups — as the optional salted pre-merge (re-sketched
+         for continuous rasters) and as the final merge           [A7-A15]
                                    │
                                    ▼ broadcast join back to zones      [J2]
                      final projection w/ empty-zone semantics          [A17]
@@ -744,7 +744,8 @@ def holistic_plan(
     estimate). The sketch plan always pre-merges: each (zone, salt) group
     is re-sketched to 8×sketch_px points, so the final merge sees ≤
     salt×8×sketch_px points per zone whatever the corpus size. The salt
-    plan spreads each hot zone over ``salt`` pre-merge groups."""
+    plan spreads each hot zone over ≤ min(``salt``, kernel tasks)
+    pre-merge groups (the salt is the kernel's partition id mod ``salt``)."""
     plan = holistic_mode
     if want_holistic and plan == "auto":
         plan = auto_holistic_plan(
@@ -1442,24 +1443,19 @@ def _merge_vc_arrays(vlist, clist):
     are implicit ones (all-distinct blocks — the continuous-raster case)
     the merged counts are just np.unique's return_counts, skipping the
     big ones array and the scatter-add. Identical values either way."""
-    ones = all(c is None or len(c) == 0 for c in clist)
     if all(isinstance(v, (bytes, bytearray)) for v in vlist):
         # unique in the float32 domain (float32→float64 is injective and
         # order-preserving, so the grouping is identical) — the sort runs
         # over half the bytes; only the much smaller unique array is
         # widened to float64 for the downstream percentile math
-        vals32 = np.frombuffer(b"".join(vlist), dtype=np.float32)
-        if ones:
-            u, cnt = np.unique(vals32, return_counts=True)
-            return u.astype(np.float64), cnt.astype(np.int64, copy=False)
-        vals = vals32.astype(np.float64)
+        vals = np.frombuffer(b"".join(vlist), dtype=np.float32)
     else:
         vals = np.concatenate(
             [_row_vc(v, None)[0] for v in vlist] or [np.empty(0)]
         )
-        if ones:
-            u, cnt = np.unique(vals, return_counts=True)
-            return u, cnt.astype(np.int64, copy=False)
+    if all(c is None or len(c) == 0 for c in clist):
+        u, cnt = np.unique(vals, return_counts=True)
+        return u.astype(np.float64), cnt.astype(np.int64, copy=False)
     cnts = np.concatenate(
         [_row_vc(v, c)[1] for v, c in zip(vlist, clist)]
         or [np.empty(0, dtype=np.int64)]
@@ -1467,7 +1463,7 @@ def _merge_vc_arrays(vlist, clist):
     u, inv = np.unique(vals, return_inverse=True)
     merged = np.zeros(len(u), dtype=np.int64)
     np.add.at(merged, inv, cnts)
-    return u, merged
+    return u.astype(np.float64), merged
 
 
 def fold_partials(
@@ -1494,9 +1490,8 @@ def fold_partials(
 
     Groups come from pd.factorize and one stable argsort; each scalar
     state folds with one ufunc.reduceat over the sorted rows. No pandas
-    groupby: its fixed per-call cost would be paid by every applyInPandas
-    group. Python loops per group only for the value-count and user-state
-    merges."""
+    groupby: its fixed per-call cost would be paid by every call. Python
+    loops per group only for the value-count and user-state merges."""
     user_merges = user_merges or {}
     codes = 0
     for k in keys:
@@ -1569,6 +1564,29 @@ def fold_partials(
     return pd.DataFrame(out)
 
 
+def fold_sorted_batches(batches, keys, **fold_kw) -> Iterator[pd.DataFrame]:
+    """fold_partials over frames sorted by ``keys`` (non-null) where a key
+    group may span any number of frames: each frame's complete groups fold
+    as it arrives; its trailing group is held until a frame starts a new
+    key or the stream ends. Python memory: one frame + the largest group."""
+    held = []  # frames of one key group, the last one seen
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        # rows from ``cut`` on share the frame's last key
+        other = np.flatnonzero(np.logical_or.reduce(
+            [pdf[k].to_numpy() != pdf[k].iat[-1] for k in keys]
+        ))
+        cut = int(other[-1]) + 1 if other.size else 0
+        if cut or (held and any(pdf[k].iat[0] != held[-1][k].iat[-1] for k in keys)):
+            done = [*held, pdf.iloc[:cut]] if cut else held
+            yield fold_partials(pd.concat(done, ignore_index=True), keys, **fold_kw)
+            held = []
+        held.append(pdf.iloc[cut:])
+    if held:
+        yield fold_partials(pd.concat(held, ignore_index=True), keys, **fold_kw)
+
+
 def merged_stats(
     partials: DataFrame,
     pctiles=(),
@@ -1578,13 +1596,11 @@ def merged_stats(
     recompress_px: int | None = None,
     keys: tuple = ("zone_id",),
     user_merges: dict | None = None,
-    vectorized: bool = False,
     finalize: bool = True,
 ) -> DataFrame:
-    """Scalar AND holistic merges in ONE zone-keyed plan (A1-A15), every
-    stage running fold_partials. ``keys`` extends the grouping (e.g.
-    ("zone_id", "band") for the multiband one-pass path).
-    ``finalize=False`` returns merged partial-state rows instead of stats.
+    """Scalar AND holistic merges in ONE zone-keyed plan (A1-A15). ``keys``
+    extends the grouping (e.g. ("zone_id", "band") for the multiband
+    one-pass path). ``finalize=False`` returns merged partial-state rows.
 
     ``user_merges`` maps stat name → (merge_fn, finalize_fn): merge_fn
     folds the stacked per-partial state vectors (k×len float64 ndarray)
@@ -1592,64 +1608,45 @@ def merged_stats(
     scalar — the merge half of the scalable add_stats protocol. merge_fn
     must be associative (it also runs in the salted pre-merge).
 
-    One shuffle, and — unlike two separate aggregations consuming the same
-    ``partials`` subtree — the upstream partial kernel (decode + rasterize)
-    is evaluated exactly once. Per-task memory is bounded by the zone's
-    distinct-value count (exact mode) or by salt × recompress_px points
-    (sketch mode).
+    Every stage has ONE shape, in both regimes: repartition(keys) +
+    sortWithinPartitions (the JVM sort spills) + mapInPandas through
+    fold_sorted_batches, so Python holds one Arrow batch plus the stage's
+    largest group. The partial kernel upstream is evaluated once.
 
-    ``salt`` enables the two-stage merge for hot zones: a pre-merge keyed by
-    (zone_id, upstream-partition-salt) collapses duplicate values early, so
-    the final merge sees ≤salt rows per zone. ``recompress_px`` additionally
-    re-sketches each pre-merged array to that many points (the scale path
-    for continuous rasters whose value domain has no duplicates to collapse
-    — kernel.sketch_weighted keeps count/min/max exact, quantile rank error
-    ≤ n/recompress_px).
-
-    ``vectorized=True`` (the broadcast regime) runs the FINAL merge as one
-    hash-repartition + mapInPandas: one fold over each whole partition,
-    instead of one applyInPandas call (and DataFrame round trip) per group
-    — measured ~0.5 s of pure per-group overhead on the 2008-zone bench
-    corpus. Identical per-zone math. Both shapes put a hash exchange on
-    the group keys before the join-back; the SMJ regime keeps
-    applyInPandas because it streams ONE group at a time through Python,
-    where the vectorized fold holds a whole partition — the bounded-memory
-    shape at 10⁹ zones.
+    ``salt`` adds a pre-merge keyed by (keys, _salt), _salt = upstream
+    partition id mod ``salt``: duplicate values collapse early, and the
+    final merge sees ≤ min(salt, kernel tasks) rows per zone (the
+    broadcast-regime kernel is coalesced to _kernel_tasks).
+    ``recompress_px`` also re-sketches each pre-merged array to that many
+    points (continuous rasters, whose value domain has no duplicates to
+    collapse — kernel.sketch_weighted keeps count/min/max exact, quantile
+    rank error ≤ n/recompress_px).
     """
     user_merges = user_merges or {}
-    state_schema = _partial_schema(
-        False, with_band="band" in keys, user_cols=tuple(user_merges)
-    )
-    fold = functools.partial(
-        fold_partials, keys=keys, pctiles=pctiles, want_vc=want_vc,
-        user_merges=user_merges,
-    )
+    band, user_cols = "band" in keys, tuple(user_merges)
+    state_schema = _partial_schema(False, with_band=band, user_cols=user_cols)
+    fold_kw = dict(pctiles=pctiles, want_vc=want_vc, user_merges=user_merges)
+
+    def fold(df, by, schema, **kw):
+        gen = functools.partial(fold_sorted_batches, keys=by, **fold_kw, **kw)
+        cols = [F.col(k) for k in by]
+        return df.repartition(*cols).sortWithinPartitions(*cols).mapInPandas(
+            gen, schema
+        )
+
     if salt:
-        partials = (
-            partials.withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(salt)))
-            .groupBy(*keys, "_salt")
-            .applyInPandas(
-                lambda pdf: fold(pdf, finalize=False, recompress_px=recompress_px),
-                state_schema,
-            )
+        salted = partials.withColumn(
+            "_salt", F.pmod(F.spark_partition_id(), F.lit(salt))
         )
+        partials = fold(
+            salted, (*keys, "_salt"),
+            T.StructType([*state_schema, T.StructField("_salt", T.IntegerType())]),
+            finalize=False, recompress_px=recompress_px,
+        ).drop("_salt")
     schema = _merged_schema(
-        pctiles, want_vc, with_band="band" in keys, user_cols=tuple(user_merges)
+        pctiles, want_vc, with_band=band, user_cols=user_cols
     ) if finalize else state_schema
-    if not vectorized:
-        return partials.groupBy(*keys).applyInPandas(
-            lambda pdf: fold(pdf, finalize=finalize), schema
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if pdfs:
-            big = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            yield fold(big, finalize=finalize)
-
-    return partials.repartition(*[F.col(k) for k in keys]).mapInPandas(
-        gen, schema
-    )
+    return fold(partials, keys, schema, finalize=finalize)
 
 
 def zonal_result(
@@ -1673,9 +1670,9 @@ def zonal_result(
     ``stats`` is a check_stats-validated list. Scalar-only requests merge
     with a JVM groupBy.agg (whole-stage codegen, map-side combine); any
     holistic, categorical or user stat takes merged_stats (``salt``,
-    ``recompress_px``; vectorized final fold when ``broadcast``). With
-    ``broadcast`` the ≤1-row-per-zone merged side is broadcast into the
-    join-back, keeping the broadcast regime SMJ-free."""
+    ``recompress_px``), the same sorted streaming fold in both regimes.
+    With ``broadcast`` the ≤1-row-per-zone merged side is broadcast into
+    the join-back, keeping the broadcast regime SMJ-free."""
     user_merges = user_merges or {}
     pctiles = [s for s in stats if s.startswith("percentile_")]
     if categorical or user_merges or K.needs_counts(stats):
@@ -1685,7 +1682,6 @@ def zonal_result(
         merged = merged_stats(
             partials, pctiles, categorical, salt=salt,
             recompress_px=recompress_px, keys=keys, user_merges=user_merges,
-            vectorized=broadcast,
         )
     else:
         merged = partials.groupBy(*keys).agg(

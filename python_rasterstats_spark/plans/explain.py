@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -21,3 +23,36 @@ def plan_summary(df: DataFrame) -> dict:
         and "PushedFilters: []" not in plan,
         "batch_scans": plan.count("Scan parquet"),
     }
+
+
+def _names(s: str) -> list:
+    return re.findall(r"([A-Za-z_]\w*)#\d+", s)
+
+
+def map_in_pandas_inputs(plan: str) -> list:
+    """``(output columns, sort keys, hash-exchange keys)`` of every
+    MapInPandas in ``plan`` (physical_plan text; of an executed adaptive
+    plan, its final plan only). The keys are None unless the node reads a
+    Sort over an ``Exchange hashpartitioning`` (through AQE's shuffle
+    read): the shape of the sorted streaming merge."""
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # one node per line, without the tree drawing and codegen-stage prefix;
+    # a unary node's child is the next line
+    nodes = [re.sub(r"^[\s:+|-]*(\*\(\d+\) )?", "", ln) for ln in plan.splitlines()]
+    nodes.append("")
+    out = []
+    for i, node in enumerate(nodes):
+        if not node.startswith("MapInPandas "):
+            continue
+        j = i + 2
+        while nodes[j].startswith(("AQEShuffleRead", "ShuffleQueryStage")):
+            j += 1
+        m = re.match(r"Exchange hashpartitioning\((.*), \d+\)", nodes[j])
+        fed = nodes[i + 1].startswith("Sort [") and m
+        out.append((
+            _names(node[node.rindex("["):]),
+            _names(nodes[i + 1].split("]")[0]) if fed else None,
+            _names(m.group(1)) if fed else None,
+        ))
+    return out

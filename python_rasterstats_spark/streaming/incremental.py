@@ -11,8 +11,8 @@ exact under any arrival order).
 This works because every statistic the engine supports — including the
 holistic ones — is derived from the mergeable partial struct: each
 micro-batch re-merges the touched state with its new partials through the
-batch engine's own fold (merged_stats with finalize=False, one zone group
-at a time through Python, no per-zone list aggregate), and current_stats
+batch engine's own sorted streaming fold (merged_stats with
+finalize=False, no per-zone list aggregate), and current_stats
 finalizes the state through zonal_stats_df's tail (zonal_result).
 """
 

@@ -1,5 +1,6 @@
-"""The one partials→stats tail: fold_partials serves the salted pre-merge
-and both final merges, and zonal_result is shared by zonal_stats_df, the
+"""The one partials→stats tail: fold_partials, streamed over sorted Arrow
+batches by fold_sorted_batches, serves the salted pre-merge and the final
+merge in both regimes, and zonal_result is shared by zonal_stats_df, the
 checkpointed jobs and the incremental state."""
 
 import math
@@ -11,7 +12,10 @@ import pytest
 from python_rasterstats_spark import geom as G
 from python_rasterstats_spark import kernel as K
 from python_rasterstats_spark.operators.zonal import (
-    fold_partials, zonal_stats_df,
+    fold_partials, fold_sorted_batches, zonal_stats_df,
+)
+from python_rasterstats_spark.plans.explain import (
+    map_in_pandas_inputs, physical_plan,
 )
 from python_rasterstats_spark.sources.tables import ZONES_DDL, raster_to_tables
 
@@ -124,6 +128,42 @@ def test_fold_many_groups_equals_one_group_per_call(finalize):
 
 
 # --------------------------------------------------------------------------
+# fold_sorted_batches: groups carried across batch edges == one fold
+# --------------------------------------------------------------------------
+
+@pytest.mark.parametrize("finalize", [True, False])
+@pytest.mark.parametrize("keys, cuts", [
+    # zone 3 = rows 0-2, zone 5 = rows 3-4, zone 7 = rows 5-6: zone 3
+    # spans three frames, the second holding only its middle row; an
+    # empty frame; zone 7 ends the stream and is flushed only at the end
+    (("zone_id",), [1, 2, 2, 4, 6]),
+    (("zone_id",), [1, 2, 3, 4, 5, 6]),  # one row per frame
+    (("zone_id",), [3, 5]),  # frame edges on group edges
+    (("zone_id",), []),  # one frame
+    (("zone_id", "_salt"), [1, 2, 3, 4, 5, 6]),
+    (("zone_id", "_salt"), [2, 2, 5]),
+])
+def test_sorted_batches_fold_equals_one_fold(finalize, keys, cuts):
+    pdf = _partials_frame().assign(_salt=[0, 1, 0, 0, 1, 1, 0])
+    pdf = pdf.sort_values(list(keys), kind="stable", ignore_index=True)
+    edges = [0, *cuts, len(pdf)]
+    frames = [pdf.iloc[a:b] for a, b in zip(edges, edges[1:])]
+    kw = dict(finalize=finalize, pctiles=["percentile_10"], want_vc=True,
+              user_merges=USER)
+    out = list(fold_sorted_batches(iter(frames), keys, **kw))
+    assert all(len(o) for o in out)
+    _assert_frames_equal(
+        pd.concat(out, ignore_index=True), fold_partials(pdf, keys, **kw)
+    )
+
+
+def test_sorted_batches_fold_of_nothing():
+    empty = _partials_frame().iloc[:0]
+    assert list(fold_sorted_batches(iter([]), ("zone_id",), finalize=True)) == []
+    assert list(fold_sorted_batches(iter([empty]), ("zone_id",), finalize=True)) == []
+
+
+# --------------------------------------------------------------------------
 # merge-path parity: broadcast/SMJ × direct/salted == kernel oracle
 # --------------------------------------------------------------------------
 
@@ -172,20 +212,30 @@ def _same(a, b, stat, rel=1e-12):
         assert a == b, stat
 
 
-def test_merge_paths_agree_with_oracle(small):
+def test_merge_paths_agree_with_oracle(spark, small):
     arr, geoms, tiles, datasets, zones = small
     outs = {}
-    for broadcast_zones in (True, False):
-        for salt in (None, 7):
-            df = zonal_stats_df(
-                zones, tiles, datasets, dataset="d", stats=HOLISTIC,
-                categorical=True, add_stats={"sumsq": SUMSQ},
-                broadcast_zones=broadcast_zones, holistic_salt=salt,
-            )
-            assert df.columns == ["zone_id"] + HOLISTIC + ["value_counts", "sumsq"]
-            outs[(broadcast_zones, salt)] = {
-                r["zone_id"]: r.asDict() for r in df.collect()
-            }
+    # two rows per Arrow batch: zone 0's partials (12 tiles) span several
+    # batches of every merge stage, so the fold must carry groups across
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        for broadcast_zones in (True, False):
+            for salt in (None, 7):
+                df = zonal_stats_df(
+                    zones, tiles, datasets, dataset="d", stats=HOLISTIC,
+                    categorical=True, add_stats={"sumsq": SUMSQ},
+                    broadcast_zones=broadcast_zones, holistic_salt=salt,
+                )
+                assert df.columns == (
+                    ["zone_id"] + HOLISTIC + ["value_counts", "sumsq"]
+                )
+                outs[(broadcast_zones, salt)] = {
+                    r["zone_id"]: r.asDict() for r in df.collect()
+                }
+    finally:
+        spark.conf.set(conf, old)
     first = outs[(True, None)]
     assert sorted(first) == list(range(len(geoms)))
     assert first[3]["count"] == 0 and first[4]["count"] == 0
@@ -200,6 +250,28 @@ def test_merge_paths_agree_with_oracle(small):
             assert dict(row["value_counts"] or {}) == vc
             if want["count"]:
                 _same(row["sumsq"], sumsq, "sumsq")
+
+
+@pytest.mark.parametrize("broadcast_zones", [True, False])
+def test_merges_read_a_sort_over_their_key_exchange(small, broadcast_zones):
+    """Each merge stage is repartition + sortWithinPartitions + mapInPandas:
+    without the Sort, a zone's rows would reach the fold in pieces and
+    silently split into several output rows."""
+    _, _, tiles, datasets, zones = small
+    df = zonal_stats_df(
+        zones, tiles, datasets, dataset="d", stats=["count", "median"],
+        broadcast_zones=broadcast_zones, holistic_salt=7,
+    )
+    df.collect()
+    plan = physical_plan(df)
+    assert "FlatMapGroupsInPandas" not in plan
+    merges = [
+        (sort, exch) for cols, sort, exch in map_in_pandas_inputs(plan)
+        if "median" in cols or "_salt" in cols
+    ]
+    assert merges == [
+        (["zone_id"], ["zone_id"]), (["zone_id", "_salt"], ["zone_id", "_salt"]),
+    ]
 
 
 # --------------------------------------------------------------------------

@@ -24,7 +24,9 @@ def main():
     from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
     from python_rasterstats_spark.operators.point import point_query_df
     from python_rasterstats_spark.operators.zonal import zonal_stats_df
-    from python_rasterstats_spark.plans.explain import physical_plan, plan_summary
+    from python_rasterstats_spark.plans.explain import (
+        map_in_pandas_inputs, physical_plan, plan_summary,
+    )
     from python_rasterstats_spark.session import get_spark
     from python_rasterstats_spark.sources.tables import load_corpus
 
@@ -80,7 +82,11 @@ def main():
         "  the kernel's tiles would have, and at least one wave (8 here),",
         "  and every driver-built frame (join-back base, cover keys, point",
         "  window/vertex keys) is a `LocalTableScan` built through Arrow —",
-        "  no `Scan ExistingRDD` (Python RDD) remains.",
+        "  no `Scan ExistingRDD` (Python RDD) remains;",
+        "- **one merge shape**: every holistic merge stage (salted",
+        "  pre-merge and final merge, both regimes) is a `MapInPandas`",
+        "  reading a `Sort` over an `Exchange hashpartitioning` of its keys",
+        "  — no grouped-map `FlatMapGroupsInPandas`.",
         "",
         "(The codegen-span count reads 0 here because AQE's pre-execution",
         "toString elides WholeStageCodegen markers; stage-level codegen is",
@@ -111,6 +117,9 @@ def main():
             or "Exchange hashpartitioning(tile_col" in plan
         )
         coalesce = re.findall(r"\bCoalesce \d+", plan)
+        sort_fed = sum(
+            1 for _, sort, _ in map_in_pandas_inputs(plan) if sort is not None
+        )
         lines += [
             f"## {name}",
             "",
@@ -121,6 +130,9 @@ def main():
             f"- kernel input: {', '.join(coalesce) or '(no Coalesce)'}; "
             f"LocalTableScan: {plan.count('LocalTableScan')}, "
             f"Scan ExistingRDD: {plan.count('Scan ExistingRDD')}",
+            f"- merge: FlatMapGroupsInPandas: "
+            f"{plan.count('FlatMapGroupsInPandas')}, "
+            f"Sort-fed MapInPandas: {sort_fed}",
             "- tiles scan (column-pruned): "
             + ("; ".join(scans) if scans else "(no direct parquet scan — in-memory fixture)"),
             "- pushed filters (scan-level tile pruning): "

@@ -13,9 +13,16 @@ This module makes a zipimporter re-read its archive only when the file's
 file cannot be stat'ed. Every other finder is invalidated as before, and a
 new ``addPyFile`` archive gets a new importer that reads it as usual, so
 the only work skipped is a re-read that would return the same directory.
+
+PySpark's daemon imports this module once and then forks a worker process
+per Python task it cannot hand to an idle worker. So that forked workers
+do not each re-read every archive on their first task, the import reads
+each archive already imported from once, recording its key; the forked
+workers inherit the keys.
 """
 
 import os
+import sys
 import zipimport
 
 from pyspark.worker import main  # noqa: F401  (the daemon calls main)
@@ -36,3 +43,13 @@ def _invalidate_caches(self):
 
 
 zipimport.zipimporter.invalidate_caches = _invalidate_caches
+
+
+def _read_imported_archives():
+    """Re-read every zipimporter's archive once and record its key."""
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            _invalidate_caches(finder)
+
+
+_read_imported_archives()

@@ -21,7 +21,9 @@ Everything here is executor-safe (stdlib + numpy only).
 
 from __future__ import annotations
 
+import ast
 import io
+import math
 import struct
 import zlib
 
@@ -38,8 +40,44 @@ def _npy_encode(arr: np.ndarray) -> bytes:
     return buf.getvalue()
 
 
+_NPY_MAGIC = b"\x93NUMPY"
+_NPY_HEADERS: dict = {}  # header bytes → (data offset, dtype, shape, order)
+
+
+def _npy_header(data: bytes):
+    """(data offset, dtype, shape, order) of an npy payload, parsed once
+    per distinct header: a corpus's tiles share a handful of headers, and
+    np.load's header parse (an ast.literal_eval) costs more than copying a
+    tile's pixels."""
+    major = data[6] if len(data) > 7 and data[:6] == _NPY_MAGIC else 0
+    if major not in (1, 2, 3):
+        return None
+    start = 10 if major == 1 else 12
+    head = bytes(data[:start + int.from_bytes(data[8:start], "little")])
+    spec = _NPY_HEADERS.get(head)
+    if spec is None:
+        d = ast.literal_eval(head[start:].decode("latin1" if major < 3 else "utf8"))
+        dtype = np.lib.format.descr_to_dtype(d["descr"])
+        if dtype.hasobject:
+            return None  # np.load refuses it without allow_pickle
+        spec = (len(head), dtype, tuple(d["shape"]), "F" if d["fortran_order"] else "C")
+        if len(_NPY_HEADERS) >= 256:
+            _NPY_HEADERS.clear()
+        _NPY_HEADERS[head] = spec
+    return spec
+
+
 def _npy_decode(data: bytes) -> np.ndarray:
-    return np.load(io.BytesIO(data), allow_pickle=False)
+    """The array of an npy payload, as np.load returns it: a writable
+    array the caller owns (callers may mutate it), in the stored dtype,
+    byte order and memory order. A truncated payload raises ValueError."""
+    spec = _npy_header(data)
+    if spec is None:
+        return np.load(io.BytesIO(data), allow_pickle=False)
+    offset, dtype, shape, order = spec
+    count = math.prod(shape)
+    arr = np.frombuffer(data, dtype=dtype, count=count, offset=offset)
+    return arr.reshape(shape, order=order).copy(order="K")
 
 
 # ---------------------------------------------------------------------------

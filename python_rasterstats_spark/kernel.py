@@ -180,8 +180,33 @@ def _map_pix(coords, depth, conv):
     return [_map_pix(c, depth - 1, conv) for c in coords]
 
 
-def _fill_rings(rings, window):
-    """Even-odd scanline polygon fill testing pixel CENTERS — vectorized.
+def ring_edges(rings):
+    """A polygon's non-horizontal ring edges for the scanline fill:
+    ``(x1, y1, dx, dy, g_lo, g_hi)`` float64/int64 arrays, ``g_lo..g_hi``
+    the GLOBAL pixel rows whose centers each edge crosses (half-open
+    [ylo, yhi): smallest row i with i+0.5 >= ylo, largest with i+0.5 <
+    yhi). Window-independent, so a zone computes them once and reuses them
+    on every tile it covers."""
+    parts = []
+    for ring in rings:
+        pts = np.asarray(ring, dtype=np.float64)
+        if len(pts) < 3:
+            continue
+        keep = pts[:-1, 1] != pts[1:, 1]  # horizontal edges never cross a scanline
+        parts.append(np.concatenate((pts[:-1], pts[1:]), axis=1)[keep])
+    e = np.concatenate(parts) if parts else np.empty((0, 4))
+    x1, y1, x2, y2 = e.T
+    ylo = np.minimum(y1, y2)
+    yhi = np.maximum(y1, y2)
+    g_lo = np.ceil(ylo - 0.5).astype(np.int64)
+    g_hi = np.ceil(yhi - 0.5).astype(np.int64) - 1
+    return (x1, y1, x2 - x1, y2 - y1, g_lo, g_hi)
+
+
+def _fill_edges(edges, window) -> np.ndarray:
+    """Even-odd scanline fill testing pixel CENTERS, for k zones at once:
+    ``edges`` holds each zone's ring_edges (an empty tuple for a zone with
+    no polygon), the result is a (k, h, w) bool array over ``window``.
 
     Matches GDAL's default (non-all_touched) polygon rule: burn a pixel iff
     its center point is inside the polygon (even-odd over all rings, so
@@ -191,51 +216,28 @@ def _fill_rings(rings, window):
     All arithmetic happens in GLOBAL pixel coordinates (row centers
     ``i + 0.5``, never offset-relative) so the burn decision for a pixel is
     bit-identical whatever window contains it — the tile-seam invariant.
-    Algorithm: for every (edge, crossed-row) pair compute the crossing x,
-    drop a +1 marker at the first cell whose center lies strictly right of
-    it, cumsum along the row — odd prefix parity = inside.
+    Algorithm: for every (zone, edge, crossed-row) triple compute the
+    crossing x and drop a marker at the first cell whose center lies
+    strictly right of it (one bincount over all zones' markers, kept mod 2),
+    then one cumsum along the rows — odd prefix parity = inside.
     """
     (r0, r1), (c0, c1) = window
-    h, w = r1 - r0, c1 - c0
-    out = np.zeros((max(h, 0), max(w, 0)), dtype=bool)
-    if h <= 0 or w <= 0:
-        return out
-    ex1 = []
-    ey1 = []
-    ex2 = []
-    ey2 = []
-    for ring in rings:
-        pts = np.asarray(ring, dtype=np.float64)
-        if len(pts) < 3:
-            continue
-        x1, y1 = pts[:-1, 0], pts[:-1, 1]
-        x2, y2 = pts[1:, 0], pts[1:, 1]
-        keep = y1 != y2  # horizontal edges never cross a scanline
-        ex1.append(x1[keep])
-        ey1.append(y1[keep])
-        ex2.append(x2[keep])
-        ey2.append(y2[keep])
-    if not ex1:
-        return out
-    ex1 = np.concatenate(ex1)
-    ey1 = np.concatenate(ey1)
-    ex2 = np.concatenate(ex2)
-    ey2 = np.concatenate(ey2)
-    ylo = np.minimum(ey1, ey2)
-    yhi = np.maximum(ey1, ey2)
-
-    # global row range each edge crosses, half-open [ylo, yhi):
-    #   smallest global row i with i+0.5 >= ylo ; largest with i+0.5 < yhi
-    g_lo = np.ceil(ylo - 0.5).astype(np.int64)
-    g_hi = np.ceil(yhi - 0.5).astype(np.int64) - 1
-    g_lo = np.maximum(g_lo, r0)
-    g_hi = np.minimum(g_hi, r1 - 1)
+    h, w = max(r1 - r0, 0), max(c1 - c0, 0)
+    k = len(edges)
+    if h == 0 or w == 0:
+        return np.zeros((k, h, w), dtype=bool)
+    zone = np.repeat(np.arange(k), [len(e[0]) if e else 0 for e in edges])
+    cols = [np.concatenate([e[i] for e in edges if e] or [np.empty(0)])
+            for i in range(6)]
+    x1, y1, dx, dy, g_lo, g_hi = cols
+    g_lo = np.maximum(g_lo.astype(np.int64), r0)
+    g_hi = np.minimum(g_hi.astype(np.int64), r1 - 1)
     counts = g_hi - g_lo + 1
     keep = counts > 0
     if not keep.any():
-        return out
-    g_lo, counts = g_lo[keep], counts[keep]
-    ex1, ey1, ex2, ey2 = ex1[keep], ey1[keep], ex2[keep], ey2[keep]
+        return np.zeros((k, h, w), dtype=bool)
+    g_lo, counts, zone = g_lo[keep], counts[keep], zone[keep]
+    x1, y1, dx, dy = x1[keep], y1[keep], dx[keep], dy[keep]
 
     n = counts.sum()
     eidx = np.repeat(np.arange(len(counts)), counts)
@@ -244,20 +246,28 @@ def _fill_rings(rings, window):
     intra = np.arange(n) - np.repeat(starts, counts)
     grow = g_lo[eidx] + intra
     yc = grow + 0.5  # exact: integer + 0.5
-    t = (yc - ey1[eidx]) / (ey2[eidx] - ey1[eidx])
-    xs = ex1[eidx] + t * (ex2[eidx] - ex1[eidx])
+    t = (yc - y1[eidx]) / dy[eidx]
+    xs = x1[eidx] + t * dx[eidx]
 
     # first cell center strictly right of the crossing (searchsorted-left
-    # parity equivalent), in global col space
-    j0 = np.floor(xs - 0.5).astype(np.int64) + 1
-    j = j0 - c0
-    rows_local = (grow - r0).astype(np.int64)
+    # parity equivalent), in global col space; crossings left of the
+    # window pile up at its first column, those right of it drop out
+    j = np.floor(xs - 0.5).astype(np.int64) + 1 - c0
     in_row = j < w
-    j = np.clip(j, 0, None)
-    acc = np.zeros((h, w), dtype=np.int32)
-    np.add.at(acc, (rows_local[in_row], j[in_row]), 1)
-    np.cumsum(acc, axis=1, out=acc)
-    return (acc & 1).astype(bool)
+    # column-major per zone, (k, w, h): the prefix sum along columns then
+    # adds whole contiguous columns (vectorized), ~3x faster than a
+    # cumsum along each row; uint8 wraps mod 256, which keeps the parity
+    flat = (zone[eidx] * w + np.clip(j, 0, None)) * h + (grow - r0)
+    acc = np.bincount(flat[in_row], minlength=k * h * w).astype(np.uint8)
+    acc = acc.reshape(k, w, h)
+    np.cumsum(acc, axis=1, dtype=np.uint8, out=acc)
+    acc &= 1
+    return acc.view(bool).transpose(0, 2, 1)
+
+
+def _fill_rings(rings, window):
+    """The even-odd center fill of one polygon's rings (_fill_edges, k=1)."""
+    return _fill_edges([ring_edges(rings)], window)[0]
 
 
 def _supercover_cells(x1, y1, x2, y2):
@@ -334,8 +344,17 @@ def _burn_cells(out, cells, window):
             out[r - r0, c - c0] = True
 
 
-def rasterize_pixgeom(pgeom: dict, window, all_touched: bool = False) -> np.ndarray:
-    """Boolean cover mask for a geometry in pixel coords over a window.
+def pixgeom_edges(pgeom: dict):
+    """A pixel-space geometry's ring_edges, or an empty tuple when it is no
+    polygon (lines and points burn without a scanline fill)."""
+    if pgeom["type"] in ("Polygon", "MultiPolygon"):
+        return ring_edges(G.polygon_rings(pgeom))
+    return ()
+
+
+def rasterize_many(pgeoms, window, all_touched: bool = False, edges=None) -> np.ndarray:
+    """(k, h, w) boolean cover masks of k geometries in pixel coords over
+    one shared window — the refine step of a tile and all its zones.
 
     Replaces rasterio.features.rasterize (reference: utils.py:33-55):
       - polygons, default:     center-point-in-polygon (even-odd)
@@ -343,34 +362,49 @@ def rasterize_pixgeom(pgeom: dict, window, all_touched: bool = False) -> np.ndar
       - lines,    default:     8-connected Bresenham walk
       - lines,    all_touched: supercover (every cell the segment crosses)
       - points:                cell containing the point
+
+    Every polygon's center fill runs in ONE vectorized scanline pass over
+    all k zones (_fill_edges); all_touched edge burns, lines and points
+    burn zone by zone. ``edges`` (each zone's pixgeom_edges) skips
+    re-deriving them for zones the caller has cached. Decisions are made
+    in global pixel coordinates, so the slice of a zone's mask over any
+    sub-window equals the zone rasterized over that sub-window alone.
+    Memory is k × window bytes (plus an int64 count per pixel during the
+    fill): callers rasterizing many zones bound k.
     """
-    (r0, r1), (c0, c1) = window
-    out = np.zeros((max(r1 - r0, 0), max(c1 - c0, 0)), dtype=bool)
+    if edges is None:
+        edges = [pixgeom_edges(g) for g in pgeoms]
+    out = _fill_edges(edges, window)
     if out.size == 0:
         return out
-    gtype = pgeom["type"]
-    if gtype in ("Polygon", "MultiPolygon"):
-        rings = G.polygon_rings(pgeom)
-        out |= _fill_rings(rings, window)
-        if all_touched:
-            for ring in rings:
-                for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-                    _burn_cells(out, _supercover_cells(x1, y1, x2, y2), window)
-    elif gtype in ("LineString", "MultiLineString"):
-        for line in G.line_segments(pgeom):
-            for (x1, y1), (x2, y2) in zip(line[:-1], line[1:]):
-                cells = (
-                    _supercover_cells(x1, y1, x2, y2)
-                    if all_touched
-                    else _bresenham_cells(x1, y1, x2, y2)
-                )
-                _burn_cells(out, cells, window)
-    elif gtype in ("Point", "MultiPoint"):
-        cells = [(math.floor(y), math.floor(x)) for x, y in G.point_coords(pgeom)]
-        _burn_cells(out, cells, window)
-    else:
-        raise ValueError(gtype)
+    for i, pgeom in enumerate(pgeoms):
+        gtype = pgeom["type"]
+        if gtype in ("Polygon", "MultiPolygon"):
+            if all_touched:
+                for ring in G.polygon_rings(pgeom):
+                    for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+                        _burn_cells(out[i], _supercover_cells(x1, y1, x2, y2), window)
+        elif gtype in ("LineString", "MultiLineString"):
+            for line in G.line_segments(pgeom):
+                for (x1, y1), (x2, y2) in zip(line[:-1], line[1:]):
+                    cells = (
+                        _supercover_cells(x1, y1, x2, y2)
+                        if all_touched
+                        else _bresenham_cells(x1, y1, x2, y2)
+                    )
+                    _burn_cells(out[i], cells, window)
+        elif gtype in ("Point", "MultiPoint"):
+            cells = [(math.floor(y), math.floor(x)) for x, y in G.point_coords(pgeom)]
+            _burn_cells(out[i], cells, window)
+        else:
+            raise ValueError(gtype)
     return out
+
+
+def rasterize_pixgeom(pgeom: dict, window, all_touched: bool = False) -> np.ndarray:
+    """Boolean cover mask of ONE geometry in pixel coords over a window
+    (rasterize_many, k=1)."""
+    return rasterize_many([pgeom], window, all_touched)[0]
 
 
 def boxify_points(geom: dict, aff) -> dict:
@@ -509,6 +543,8 @@ def partial_stats(
     want_counts: bool,
     sketch_px: int | None = None,
     int_sum: bool | None = None,
+    *,
+    masks: tuple | None = None,
 ):
     """Partial aggregation state for one (zone, tile) pixel block.
 
@@ -519,15 +555,20 @@ def partial_stats(
     partials larger than that many valid pixels emit a ≤sketch_px-point
     quantile summary instead of the exact value counts (see sketch_values)
     — only valid when the downstream merge needs median/percentiles only.
+    ``masks`` passes the block's ``(values == nodata, NaN)`` masks when the
+    caller already has them (views of a whole tile's masks), None standing
+    for a mask with no pixel set; without it both are computed here.
     """
     arr = np.asarray(values)
-    is_float = np.issubdtype(arr.dtype, np.floating)
-    isnan = np.isnan(arr) if is_float else np.zeros(arr.shape, dtype=bool)
-    if nodata is None:
-        isnodata = np.zeros(arr.shape, dtype=bool)
+    if masks is None:
+        isnodata = None if nodata is None else arr == nodata
+        isnan = np.isnan(arr) if np.issubdtype(arr.dtype, np.floating) else None
     else:
-        isnodata = arr == nodata
-    valid = cover & ~isnodata & ~isnan
+        isnodata, isnan = masks
+    valid = cover
+    for bad in (isnodata, isnan):
+        if bad is not None:
+            valid = valid & ~bad
     # keep the tile's native dtype until the (much smaller) valid subset;
     # float data accumulates in float64 (float32 → float64 is exact);
     # integer data accumulates the sum in int64 like the reference does on
@@ -552,15 +593,14 @@ def partial_stats(
         else (0 if is_int else None)
     )
     out = {
-        "cover_count": int(cover.sum()),
         "count": n,
         "sum": float(v64.sum()) if n else 0.0,
         "sum_i": sum_i,
         "sumsq": float(v64 @ v64) if n else 0.0,
         "min": float(vals.min()) if n else None,
         "max": float(vals.max()) if n else None,
-        "nodata_count": int((isnodata & cover).sum()),
-        "nan_count": int((isnan & cover).sum()),
+        "nodata_count": 0 if isnodata is None else int(np.count_nonzero(isnodata & cover)),
+        "nan_count": 0 if isnan is None else int(np.count_nonzero(isnan & cover)),
     }
     if want_counts and n:
         if sketch_px is not None and n > sketch_px:

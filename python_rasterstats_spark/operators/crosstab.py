@@ -8,10 +8,12 @@ datasets share the grid, so the plan is operators/zonal.py's tile-driven
 one with a paired input: one kernel row per stored (value tile, class
 tile) pair, joined on (tile_col, tile_row). The tile's covering zones come
 from the driver's broadcast cover dict (broadcast regime) or from cover
-cells grouped per tile key (SMJ regime); the kernel decodes both payloads
-once per tile, however many zones cover it, and walks them under each
-zone's rasterized cover mask. Output is long format: one row per
-(zone, class value).
+cells grouped per tile key (SMJ regime). The kernel makes one pass per
+tile, however many zones cover it: it decodes both payloads and builds
+their joint validity mask once, rasterizes all covering zones in one
+scanline fill (zonal._tile_zones), and walks each zone's view of the tile
+under its cover mask. Output is long format: one row per (zone, class
+value).
 
 The paired input is the only join between tile tables: each payload
 crosses it once. The other shuffle is the (zone, class)-keyed scalar
@@ -28,9 +30,9 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import codecs as C
 from .zonal import (
-    _cell_block,
+    _tile_pixels,
+    _tile_zones,
     _zone_lists,
-    _zone_masks,
     broadcast_cover_cells,
     broadcast_zone_geoms,
     collect_dataset_meta,
@@ -165,37 +167,32 @@ def zonal_crosstab_df(
     vnd = -999.0 if vnd is None else vnd
     cnd = -999.0 if mc["nodata"] is None else mc["nodata"]
 
+    def tile_planes(vb, vf, cb, cf):
+        """Both payloads decoded once per tile, as float64 over the tile's
+        nominal extent, and the mask of pixels valid in both rasters."""
+        v = _tile_pixels(mv, np.asarray(C.decode_tile(bytes(vb), vf)), vnd)
+        c = _tile_pixels(mv, np.asarray(C.decode_tile(bytes(cb), cf)), cnd)
+        v = v.astype(np.float64, copy=False)
+        c = c.astype(np.float64, copy=False)
+        return v, c, (v != vnd) & ~np.isnan(v) & (c != cnd) & ~np.isnan(c)
+
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mask = _zone_masks(meta, geoms_bc, all_touched=all_touched)
+        covered = _tile_zones(meta, geoms_bc, all_touched=all_touched)
         for pdf in batches:
             rows = {name: [] for name in _XTAB_PARTIAL.fieldNames()}
             for ((ds, tcn, trn), zl), vb, vf, cb, cf in zip(
                 _zone_lists(pdf, cover), pdf["vbytes"], pdf["vfmt"],
                 pdf["cbytes"], pdf["cfmt"],
             ):
-                blocks = None
-                for zid, wkb in zl:
-                    hit = mask(zid, ds, tcn, trn, wkb)
-                    if hit is None:
-                        continue
-                    region, rv = hit
-                    if blocks is None:  # both payloads decoded once per tile
-                        blocks = (
-                            np.asarray(C.decode_tile(bytes(vb), vf)),
-                            np.asarray(C.decode_tile(bytes(cb), cf)),
-                        )
-                    v64 = _cell_block(mv, trn, tcn, blocks[0], region, vnd)
-                    c64 = _cell_block(mv, trn, tcn, blocks[1], region, cnd)
-                    v64 = v64.astype(np.float64, copy=False)
-                    c64 = c64.astype(np.float64, copy=False)
-                    valid = (
-                        rv
-                        & (v64 != vnd) & ~np.isnan(v64)
-                        & (c64 != cnd) & ~np.isnan(c64)
-                    )
+                planes = None
+                for zid, (rs, cs), rv in covered(ds, tcn, trn, zl):
+                    if planes is None:
+                        planes = tile_planes(vb, vf, cb, cf)
+                    v, c, ok = planes
+                    valid = rv & ok[rs, cs]
                     if not valid.any():
                         continue
-                    vals, cls = v64[valid], c64[valid]
+                    vals, cls = v[rs, cs][valid], c[rs, cs][valid]
                     order = np.argsort(cls, kind="stable")
                     vals, cls = vals[order], cls[order]
                     uc, starts = np.unique(cls, return_index=True)

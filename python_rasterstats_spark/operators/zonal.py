@@ -10,10 +10,11 @@ intersection index from metadata, then make one pass over the raster):
                                    │ grouped per tile key, joined to tiles)
     tiles ──pruned scan────────────┤ [+ NULL-payload rows for cover keys
                                    ▼  with no stored tile — J4 fill]
-            ONE mapInPandas partial kernel: per tile, decode the payload
-            once, rasterize each covering zone onto the tile's sub-grid
-            (global alignment → seam-safe), mask, emit mergeable partial
-            structs                                                [P2-P5]
+            ONE mapInPandas partial kernel, ONE pass per tile: decode
+            the payload and build its nodata/NaN masks once, rasterize
+            all its covering zones in one scanline fill (global
+            alignment → seam-safe), read each zone's block as a view of
+            the tile, emit mergeable partial structs               [P2-P5]
                                    │
          zonal_result, the one partials→stats tail (also run by the
          checkpointed jobs and the incremental state):
@@ -94,8 +95,13 @@ from .. import kernel as K
 def collect_dataset_meta(datasets: DataFrame) -> dict:
     """Materialize the (tiny) datasets dimension to a plain dict that is
     shipped to executors inside UDF closures."""
+    return dataset_meta(row.asDict() for row in datasets.collect())
+
+
+def dataset_meta(rows) -> dict:
+    """The dataset meta dict of datasets-table rows given as dicts."""
     meta = {}
-    for row in datasets.collect():
+    for row in rows:
         meta[row["dataset"]] = {
             "affine": tuple(row["affine"]),
             "height": int(row["height"]),
@@ -104,8 +110,8 @@ def collect_dataset_meta(datasets: DataFrame) -> dict:
             "tile_h": int(row["tile_h"]),
             "nodata": None if row["nodata"] is None else float(row["nodata"]),
             "fmt": row["fmt"],
-            "band_count": int(row.asDict().get("band_count") or 1),
-            "dtype": row.asDict().get("dtype"),
+            "band_count": int(row.get("band_count") or 1),
+            "dtype": row.get("dtype"),
         }
     return meta
 
@@ -963,65 +969,82 @@ def _partial_schema(
 
 
 
-def _cell_block(m, tile_row, tile_col, decoded, region, fill):
-    """Pixel block for ``region`` (global window) inside one cell's nominal
-    extent; pixels without stored data become nodata fill (J4 boundless).
+_MASK_BUDGET_PX = 1 << 21
+"""Most mask pixels (zones × window) one rasterize_many call of the tile
+pass produces: its (k, h, w) bool masks plus the fill's int64 count per
+pixel stay under ~18 MB however many zones cover a tile. A zone whose own
+window is larger still gets a call of its own."""
 
-    The windowed-read semantics mirror Raster.read (io.py:292-362) with the
-    tile grid taking the place of the rasterio dataset. ``decoded`` is the
-    tile's decoded pixel array (or None for a missing tile). ``fill`` must
-    be the EFFECTIVE nodata (override if set, else dataset nodata, else
-    -999) — the reference fills boundless reads with the effective value
-    (io.py:331-340), so fill pixels always fail the validity test.
-    """
-    (rr0, rr1), (cc0, cc1) = region
+
+def _tile_pixels(m: dict, decoded, fill):
+    """A tile's pixels over its nominal (tile_h, tile_w) extent. Normally
+    the decoded array itself; a short edge tile, or a NULL payload (no
+    stored tile, decoded=None), becomes a copy padded with ``fill`` — the
+    EFFECTIVE nodata (override if set, else dataset nodata, else -999), as
+    the reference fills boundless reads (io.py:331-340), so pad pixels
+    always fail the validity test. The windowed-read semantics mirror
+    Raster.read (io.py:292-362) with the tile grid in place of the
+    rasterio dataset."""
+    shape = (m["tile_h"], m["tile_w"])
     if decoded is None:
-        out = np.full((rr1 - rr0, cc1 - cc0), fill, dtype=np.float64)
-        return out
-    # window relative to the tile's stored pixels
-    row_off = tile_row * m["tile_h"]
-    col_off = tile_col * m["tile_w"]
-    rel = ((rr0 - row_off, rr1 - row_off), (cc0 - col_off, cc1 - col_off))
-    if rel == ((0, decoded.shape[0]), (0, decoded.shape[1])):
-        return decoded  # whole-tile region: no copy (callers don't mutate)
-    return K.boundless_array(decoded, rel, fill)
+        return np.full(shape, fill, dtype=np.float64)
+    if decoded.shape != shape:
+        return K.boundless_array(decoded, ((0, shape[0]), (0, shape[1])), fill)
+    return decoded
 
 
-def _zone_masks(meta: dict, geoms, *, all_touched: bool):
-    """The per-(zone, tile) refine step of the zonal and crosstab kernels:
-    ``mask(zid, ds, tc, tr, wkb=None)`` → ``(region, rv)``, the zone's
-    pixel window clipped to the tile and the zone rasterized onto it
-    (global alignment → seam-safe), or None when it covers no pixel. Pixel
-    geometry and window are cached per zone; a missing ``wkb`` resolves
-    from the ``geoms`` broadcast."""
-    geom_cache = K.LRU(1024)
+def _tile_zones(meta: dict, geoms, *, all_touched: bool):
+    """THE per-tile refine step of the zonal and crosstab kernels.
 
-    def mask(zid, ds, tc, tr, wkb=None):
-        m = meta[ds]
+    ``covered(ds, tc, tr, zl)`` yields ``(zone_id, (rows, cols), rv)`` for
+    each zone of ``zl`` (``[(zone_id, wkb or None), ...]``, _zone_lists)
+    that covers a pixel of the tile, in ``zl`` order: the tile-relative
+    slices of the zone's pixel window clipped to the tile, and its cover
+    mask there. All of a tile's zones are rasterized together, one
+    kernel.rasterize_many call (one scanline pass; global pixel alignment
+    → seam-safe) per chunk of at most _MASK_BUDGET_PX mask pixels. A
+    zone's pixel geometry, scanline edges and window are cached per task;
+    a missing ``wkb`` resolves from the ``geoms`` broadcast."""
+    cache = K.LRU(1024)
+
+    def prepared(zid, ds, wkb):
         key = (zid, ds)
-        cached = geom_cache.get(key)
-        if cached is None:
-            aff = m["affine"]
-            if wkb is None:
-                wkb = geoms.value[key]
-            geom = _effective_geom(wkb, aff)
-            cached = (
-                K.geom_to_pixel(geom, aff),
-                K.bounds_window(G.geom_bounds(geom), aff),
-            )
-            geom_cache.put(key, cached)
-        pgeom, ((wr0, wr1), (wc0, wc1)) = cached
-        rr0 = max(wr0, tr * m["tile_h"])
-        rr1 = min(wr1, (tr + 1) * m["tile_h"])
-        cc0 = max(wc0, tc * m["tile_w"])
-        cc1 = min(wc1, (tc + 1) * m["tile_w"])
-        if rr0 >= rr1 or cc0 >= cc1:
-            return None
-        region = ((rr0, rr1), (cc0, cc1))
-        rv = K.rasterize_pixgeom(pgeom, region, all_touched=all_touched)
-        return (region, rv) if rv.any() else None
+        hit = cache.get(key)
+        if hit is None:
+            aff = meta[ds]["affine"]
+            geom = _effective_geom(geoms.value[key] if wkb is None else wkb, aff)
+            pgeom = K.geom_to_pixel(geom, aff)
+            hit = (pgeom, K.pixgeom_edges(pgeom),
+                   K.bounds_window(G.geom_bounds(geom), aff))
+            cache.put(key, hit)
+        return hit
 
-    return mask
+    def covered(ds, tc, tr, zl):
+        m = meta[ds]
+        th, tw = m["tile_h"], m["tile_w"]
+        ty, tx = tr * th, tc * tw
+        todo = []
+        for zid, wkb in zl:
+            pgeom, edges, ((wr0, wr1), (wc0, wc1)) = prepared(zid, ds, wkb)
+            r0, r1 = max(wr0, ty), min(wr1, ty + th)
+            c0, c1 = max(wc0, tx), min(wc1, tx + tw)
+            if r0 < r1 and c0 < c1:
+                todo.append((zid, pgeom, edges, r0, r1, c0, c1))
+        step = max(1, _MASK_BUDGET_PX // (th * tw))
+        for s in range(0, len(todo), step):
+            chunk = todo[s:s + step]
+            u0, u1 = min(z[3] for z in chunk), max(z[4] for z in chunk)
+            v0, v1 = min(z[5] for z in chunk), max(z[6] for z in chunk)
+            masks = K.rasterize_many(
+                [z[1] for z in chunk], ((u0, u1), (v0, v1)), all_touched,
+                edges=[z[2] for z in chunk],
+            )
+            for (zid, _, _, r0, r1, c0, c1), mask in zip(chunk, masks):
+                rv = mask[r0 - u0:r1 - u0, c0 - v0:c1 - v0]
+                if rv.any():
+                    yield zid, (slice(r0 - ty, r1 - ty), slice(c0 - tx, c1 - tx)), rv
+
+    return covered
 
 
 def _zone_lists(pdf: pd.DataFrame, cover):
@@ -1048,118 +1071,30 @@ def group_cover_cells(cells: DataFrame, keys) -> DataFrame:
     )
 
 
-def _pair_processor(
-    meta: dict,
-    *,
-    all_touched: bool,
-    nodata_override,
-    want_counts: bool,
-    zone_func,
-    band: int,
-    sketch_px,
-    compact_vc: bool,
-    bands,
-    geoms,
-    user_partials: dict,
-):
-    """Per-(zone, tile) refine body of partial_kernel. Returns ``process(rows,
-    zid, ds, tc, tr, payload, fmt, wkb, decoded)``, which appends partial
-    rows and returns the decoded tile array for reuse across the zones of
-    one tile (a NULL payload — missing tile — fills with nodata)."""
-    mask = _zone_masks(meta, geoms, all_touched=all_touched)
-
-    def process(rows, zid, ds, tc, tr, payload, fmt, wkb=None, decoded=None):
-        hit = mask(zid, ds, tc, tr, wkb)
-        if hit is None:
-            return decoded
-        region, rv = hit
-        m = meta[ds]
-        if decoded is None and payload is not None:
-            # native dtype end-to-end; stats accumulate in f64
-            decoded = np.asarray(C.decode_tile(bytes(payload), fmt))
-            if decoded.ndim == 3 and bands is None:
-                decoded = decoded[band - 1]  # band select (S6)
-        nd = nodata_override if nodata_override is not None else m["nodata"]
-        nd = -999.0 if nd is None else nd  # io.py:331-340 default
-        # int64-sum hint from the DATASET dtype: boundless pads may
-        # promote a block to float64 (kernel.fill_dtype) but the
-        # raster stays integer-semantics (kernel.partial_stats)
-        int_sum = (
-            bool(np.issubdtype(np.dtype(m["dtype"]), np.integer))
-            if m.get("dtype") else None
-        )
-        if bands is not None:
-            # one decode + one rasterize per pair, stats per band
-            for bno in bands:
-                db = None
-                if decoded is not None:
-                    db = decoded[bno - 1] if decoded.ndim == 3 else decoded
-                block_b = _cell_block(m, tr, tc, db, region, nd)
-                p = K.partial_stats(block_b, rv, nd, want_counts,
-                                    sketch_px=sketch_px,
-                                    int_sum=int_sum)
-                if (p["count"] == 0 and p["nodata_count"] == 0
-                        and p["nan_count"] == 0):
-                    continue
-                rows["zone_id"].append(zid)
-                rows["band"].append(bno)
-                _append_partial(rows, p, compact_vc)
-            return decoded
-        block = _cell_block(m, tr, tc, decoded, region, nd)
-        if zone_func is not None and block is decoded:
-            block = block.copy()  # user fn may mutate in place
-        if zone_func is not None:
-            # elementwise pre-transform (main.py:217-228); the masked
-            # array the user fn sees is this partial's block
-            is_float = np.issubdtype(block.dtype, np.floating)
-            isnan = np.isnan(block) if is_float else np.zeros(block.shape, bool)
-            masked = np.ma.MaskedArray(
-                block, mask=((block == nd) | isnan | ~rv)
-            )
-            ret = zone_func(masked)
-            if ret is not None:
-                masked = ret
-            tblock = np.ma.filled(masked.astype(np.float64), np.nan)
-            cover2 = ~np.ma.getmaskarray(masked)
-            p = K.partial_stats(
-                tblock, cover2, None, want_counts, sketch_px=sketch_px
-            )
-            p["nodata_count"] = int(((block == nd) & rv).sum())
-            p["nan_count"] = int((isnan & rv).sum())
-        else:
-            p = K.partial_stats(block, rv, nd, want_counts,
-                                sketch_px=sketch_px, int_sum=int_sum)
-        if (
-            p["count"] == 0
-            and p["nodata_count"] == 0
-            and p["nan_count"] == 0
-        ):
-            return decoded
-        rows["zone_id"].append(zid)
-        _append_partial(rows, p, compact_vc)
-        if user_partials:
-            if zone_func is None:
-                is_f = np.issubdtype(block.dtype, np.floating)
-                bnan = (np.isnan(block) if is_f
-                        else np.zeros(block.shape, bool))
-                masked = np.ma.MaskedArray(
-                    block, mask=((block == nd) | bnan | ~rv)
-                )
-            # (zone_func branch: `masked` is the post-transform
-            # array, matching reference add_stats-after-zone_func)
-            for uname, pfn in user_partials.items():
-                st = np.asarray(pfn(masked), dtype=np.float64).ravel()
-                rows[f"u_{uname}"].append(st.tolist())
-        return decoded
-
-    return process
+def _tile_planes(m: dict, payload, fmt, nd, bands):
+    """One tile's pixel planes for the partial kernel, decoded once:
+    ``(label, pixels, pixels == nd, NaN mask)`` per ``(label, band
+    number)`` of ``bands``, each over the tile's nominal extent
+    (_tile_pixels) so that a zone's block and masks are views. A mask
+    with no pixel set is None (kernel.partial_stats ``masks``)."""
+    decoded = None
+    if payload is not None:
+        # native dtype end-to-end; stats accumulate in f64
+        decoded = np.asarray(C.decode_tile(bytes(payload), fmt))
+    planes = []
+    for label, bno in bands:
+        d = decoded
+        if d is not None and d.ndim == 3:
+            d = d[bno - 1]  # band select (S6)
+        px = _tile_pixels(m, d, nd)
+        isnd = px == nd
+        isnan = np.isnan(px) if px.dtype.kind == "f" else None
+        planes.append((label, px, isnd if isnd.any() else None,
+                       isnan if isnan is not None and isnan.any() else None))
+    return planes
 
 
-_TILE_COLS = ("dataset", "tile_col", "tile_row", "bytes", "fmt")
-
-
-def partial_kernel(
-    tiles: DataFrame,
+def partial_generator(
     meta: dict,
     *,
     cover=None,
@@ -1173,13 +1108,122 @@ def partial_kernel(
     bands: list | None = None,
     geoms=None,
     user_partials: dict | None = None,
-) -> DataFrame:
+):
+    """``(gen, schema)``: the body of partial_kernel (same arguments, minus
+    the input DataFrame) — ``gen`` maps an iterator of pandas kernel-input
+    frames to frames of ``schema`` partial rows. partial_kernel runs it in
+    mapInPandas; tools/kernel_body.py replays it in process.
+
+    Per input tile: the covering zones that have pixels in it are
+    rasterized together (_tile_zones); the payload is decoded once, and
+    the tile's nodata and NaN masks are built once (_tile_planes); each
+    zone's block is a view of the tile."""
+    if bands is not None and zone_func is not None:
+        raise ValueError("bands and zone_func cannot be combined")
+    user_partials = user_partials or {}
+    if bands is not None and user_partials:
+        raise ValueError("bands and user add_stats cannot be combined")
+    schema = _partial_schema(
+        compact_vc, with_band=bands is not None, user_cols=tuple(user_partials)
+    )
+    names = schema.fieldNames()
+    plane_bands = ([(None, band)] if bands is None
+                   else [(bno, bno) for bno in bands])
+    consts = {}
+
+    def dataset_consts(ds):
+        """(effective nodata, int64-sum hint) of a dataset, computed once."""
+        if ds not in consts:
+            m = meta[ds]
+            nd = nodata_override if nodata_override is not None else m["nodata"]
+            # int64-sum hint from the DATASET dtype: boundless pads may
+            # promote a block to float64 (kernel.fill_dtype) but the
+            # raster stays integer-semantics (kernel.partial_stats)
+            consts[ds] = (
+                -999.0 if nd is None else nd,  # io.py:331-340 default
+                bool(np.issubdtype(np.dtype(m["dtype"]), np.integer))
+                if m.get("dtype") else None,
+            )
+        return consts[ds]
+
+    def zone_partial(rows, zid, block, bnd, bnan, rv, nd, int_sum):
+        """Append one zone's partial row for one block; False if empty."""
+        if zone_func is None:
+            p = K.partial_stats(block, rv, nd, want_counts, sketch_px=sketch_px,
+                                int_sum=int_sum, masks=(bnd, bnan))
+        if zone_func is not None or user_partials:
+            # the user fn may write into its array: give it a copy, never
+            # a view of the tile the next zone reads
+            block = block.copy()
+            bad = ~rv
+            for mk in (bnd, bnan):
+                if mk is not None:
+                    bad |= mk
+            masked = np.ma.MaskedArray(block, mask=bad)
+        if zone_func is not None:
+            # elementwise pre-transform (main.py:217-228); the masked
+            # array the user fn sees is this partial's block
+            ret = zone_func(masked)
+            if ret is not None:
+                masked = ret
+            tblock = np.ma.filled(masked.astype(np.float64), np.nan)
+            cover2 = ~np.ma.getmaskarray(masked)
+            p = K.partial_stats(tblock, cover2, None, want_counts,
+                                sketch_px=sketch_px)
+            p["nodata_count"] = int(np.count_nonzero((block == nd) & rv))
+            p["nan_count"] = (0 if bnan is None
+                              else int(np.count_nonzero(bnan & rv)))
+        if p["count"] == 0 and p["nodata_count"] == 0 and p["nan_count"] == 0:
+            return False
+        rows["zone_id"].append(zid)
+        _append_partial(rows, p, compact_vc)
+        # (zone_func: `masked` is the post-transform array, matching
+        # reference add_stats-after-zone_func)
+        for uname, pfn in user_partials.items():
+            st = np.asarray(pfn(masked), dtype=np.float64).ravel()
+            rows[f"u_{uname}"].append(st.tolist())
+        return True
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        covered = _tile_zones(meta, geoms, all_touched=all_touched)
+        for pdf in batches:
+            rows = {name: [] for name in names}
+            for ((ds, tc, tr), zl), payload, fmt in zip(
+                _zone_lists(pdf, cover), pdf["bytes"], pdf["fmt"]
+            ):
+                planes = None
+                for zid, (rs, cs), rv in covered(ds, tc, tr, zl):
+                    if planes is None:
+                        nd, int_sum = dataset_consts(ds)
+                        planes = _tile_planes(meta[ds], payload, fmt, nd, plane_bands)
+                    for bno, px, isnd, isnan in planes:
+                        added = zone_partial(
+                            rows, zid, px[rs, cs],
+                            None if isnd is None else isnd[rs, cs],
+                            None if isnan is None else isnan[rs, cs],
+                            rv, nd, int_sum,
+                        )
+                        if added and bno is not None:
+                            rows["band"].append(bno)
+            if rows["zone_id"]:
+                yield pd.DataFrame(rows)
+
+    return gen, schema
+
+
+_TILE_COLS = ("dataset", "tile_col", "tile_row", "bytes", "fmt")
+
+
+def partial_kernel(tiles: DataFrame, meta: dict, *, cover=None, **kw) -> DataFrame:
     """The tile-driven refine + partial aggregation (J1 refine phase +
     P2-P5 masks + A1-A15 partial states): one input row per tile
     ``(dataset, tile_col, tile_row, bytes, fmt)`` — NULL ``bytes`` for a
     cover key with no stored tile (boundless nodata fill) — and one
-    partial row per (zone, tile) pair with pixels. Each payload crosses
-    Arrow and is decoded once however many zones cover it.
+    partial row per (zone, tile) pair with pixels. The body
+    (partial_generator) makes ONE pass per tile: its payload crosses Arrow
+    and is decoded once, its nodata/NaN masks are built once, and all its
+    covering zones are rasterized in one scanline fill; each zone's block
+    is then a view of the tile, not a copy.
 
     A tile's covering zones come from one of two sources (_zone_lists):
 
@@ -1203,36 +1247,7 @@ def partial_kernel(
     is decoded once and the zone rasterized once per (zone, tile) pair,
     shared across all requested bands (the multiband-in-one-pass path;
     mutually exclusive with zone_func)."""
-    if bands is not None and zone_func is not None:
-        raise ValueError("bands and zone_func cannot be combined")
-    user_partials = user_partials or {}
-    if bands is not None and user_partials:
-        raise ValueError("bands and user add_stats cannot be combined")
-    schema = _partial_schema(
-        compact_vc, with_band=bands is not None, user_cols=tuple(user_partials)
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        process = _pair_processor(
-            meta, all_touched=all_touched, nodata_override=nodata_override,
-            want_counts=want_counts, zone_func=zone_func, band=band,
-            sketch_px=sketch_px, compact_vc=compact_vc, bands=bands,
-            geoms=geoms, user_partials=user_partials,
-        )
-        for pdf in batches:
-            rows = {name: [] for name in schema.fieldNames()}
-            for ((ds, tc, tr), zl), payload, fmt in zip(
-                _zone_lists(pdf, cover), pdf["bytes"], pdf["fmt"]
-            ):
-                decoded = None
-                for zid, wkb in zl:
-                    decoded = process(
-                        rows, zid, ds, tc, tr, payload, fmt, wkb=wkb,
-                        decoded=decoded,
-                    )
-            if rows["zone_id"]:
-                yield pd.DataFrame(rows)
-
+    gen, schema = partial_generator(meta, cover=cover, **kw)
     cols = _TILE_COLS if cover is not None else (
         "dataset", "tile_col", "tile_row", "zs", "bytes", "fmt"
     )
@@ -1259,6 +1274,23 @@ def broadcast_cover_cells(
     dataset, beyond-extent with boundless=False, cover-cell cap) — the
     first pending error message, same text as zone_cover_cells raises;
     tile_driven_input turns it into a stage that raises at action time."""
+    cover = cover_dict(
+        geoms, meta, clip_to_grid=clip_to_grid,
+        max_cells_per_zone=max_cells_per_zone,
+        raise_beyond_extent=raise_beyond_extent,
+    )
+    return cover if isinstance(cover, str) else spark.sparkContext.broadcast(cover)
+
+
+def cover_dict(
+    geoms: dict,
+    meta: dict,
+    *,
+    clip_to_grid: bool = True,
+    max_cells_per_zone: int = 4_000_000,
+    raise_beyond_extent: bool = False,
+):
+    """broadcast_cover_cells' dict (or pending error message), unbroadcast."""
     cover: dict = {}
     for (zid, ds), wkb in geoms.items():
         m = meta.get(ds)
@@ -1279,7 +1311,7 @@ def broadcast_cover_cells(
         for tr in range(tr0, tr1 + 1):
             for tc in range(tc0, tc1 + 1):
                 cover.setdefault((ds, tc, tr), []).append(zid)
-    return spark.sparkContext.broadcast(cover)
+    return cover
 
 
 def _kernel_tasks(spark, keys, meta: dict) -> int:
@@ -1672,7 +1704,12 @@ def zonal_result(
     holistic, categorical or user stat takes merged_stats (``salt``,
     ``recompress_px``), the same sorted streaming fold in both regimes.
     With ``broadcast`` the ≤1-row-per-zone merged side is broadcast into
-    the join-back, keeping the broadcast regime SMJ-free."""
+    the join-back, keeping the broadcast regime SMJ-free.
+
+    The scalar aggregation and the projection are SQL text (F.expr, one
+    selectExpr; _result_exprs): under PySpark 4 every Column-API call is
+    a py4j round trip that also sets and clears the call-site origin,
+    which made this tail hundreds of round trips per query."""
     user_merges = user_merges or {}
     pctiles = [s for s in stats if s.startswith("percentile_")]
     if categorical or user_merges or K.needs_counts(stats):
@@ -1684,60 +1721,68 @@ def zonal_result(
             recompress_px=recompress_px, keys=keys, user_merges=user_merges,
         )
     else:
-        merged = partials.groupBy(*keys).agg(
-            F.sum("count").alias("count"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_i").alias("sum_i"),
-            F.sum("sumsq").alias("sumsq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("nodata_count").alias("nodata_count"),
-            F.sum("nan_count").alias("nan_count"),
-        )
+        merged = partials.groupBy(*keys).agg(*(
+            F.expr(f"{fn}({_q(c)}) AS {_q(c)}") for fn, c in _SCALAR_MERGE
+        ))
     result = base.join(
         F.broadcast(merged) if broadcast else merged, list(keys), "left"
     )
+    return result.selectExpr(*_result_exprs(stats, keys, categorical, user_merges))
 
-    cnt = F.coalesce(F.col("count"), F.lit(0))
-    nonempty = cnt > 0
+
+def _q(name: str) -> str:
+    """A backtick-quoted SQL identifier: percentile names contain a dot
+    (percentile_12.5, valid per reference utils.py:21-30) and user stat
+    names are arbitrary."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+_SCALAR_MERGE = (
+    ("sum", "count"), ("sum", "sum"), ("sum", "sum_i"), ("sum", "sumsq"),
+    ("min", "min"), ("max", "max"), ("sum", "nodata_count"),
+    ("sum", "nan_count"),
+)
+
+
+def _result_exprs(stats, keys, categorical: bool, user_merges) -> list:
+    """zonal_result's A17 projection as SQL expression strings."""
+    cnt = "coalesce(`count`, 0)"
+
+    def nonempty(expr: str) -> str:
+        return f"CASE WHEN {cnt} > 0 THEN {expr} END"
+
     # int rasters: the int64-accumulated total (sum_i) feeds sum/mean,
     # matching reference float(masked.sum(dtype='int64')) (main.py:262-267);
     # std keeps the float64 moments (reference masked.std() has no
     # accum_dtype, main.py:268-269)
-    total = F.coalesce(F.col("sum_i").cast("double"), F.col("sum"))
-    mean = total / cnt
-    fmean = F.col("sum") / cnt
-    cols = [F.col(k) for k in keys]
+    total = "coalesce(CAST(`sum_i` AS DOUBLE), `sum`)"
+    fmean = f"(`sum` / {cnt})"
+    scalar = {
+        "count": cnt,
+        "mean": nonempty(f"{total} / {cnt}"),
+        # population std from merged moments (A6; ddof=0, main.py:268-269)
+        "std": nonempty(
+            f"sqrt(greatest(`sumsq` / {cnt} - {fmean} * {fmean}, 0.0D))"
+        ),
+        "range": nonempty("`max` - `min`"),
+        "sum": nonempty(total),
+        "min": nonempty("`min`"),
+        "max": nonempty("`max`"),
+        "nodata": "CAST(coalesce(`nodata_count`, 0) AS DOUBLE)",
+        "nan": "CAST(coalesce(`nan_count`, 0) AS DOUBLE)",
+    }
+    exprs = [_q(k) for k in keys]
     for s in stats:
-        if s == "count":
-            cols.append(cnt.alias("count"))
-        elif s == "mean":
-            cols.append(F.when(nonempty, mean).alias("mean"))
-        elif s == "std":
-            # population std from merged moments (A6; ddof=0, main.py:268-269)
-            var = F.col("sumsq") / cnt - fmean * fmean
-            cols.append(F.when(nonempty, F.sqrt(F.greatest(var, F.lit(0.0)))).alias("std"))
-        elif s == "range":
-            cols.append(F.when(nonempty, F.col("max") - F.col("min")).alias("range"))
-        elif s == "sum":
-            cols.append(F.when(nonempty, total).alias("sum"))
-        elif s in ("min", "max"):
-            cols.append(F.when(nonempty, F.col(s)).alias(s))
-        elif s == "nodata":
-            cols.append(F.coalesce(F.col("nodata_count"), F.lit(0)).cast("double").alias("nodata"))
-        elif s == "nan":
-            cols.append(F.coalesce(F.col("nan_count"), F.lit(0)).cast("double").alias("nan"))
-        elif s in ("median", "majority", "minority") or s.startswith("percentile_"):
-            # backtick-escape: percentile_12.5 contains a dot (valid per
-            # reference utils.py:21-30 float percentiles)
-            cols.append(F.when(nonempty, F.col(f"`{s}`")).alias(s))
-        elif s == "unique":
-            cols.append(F.when(nonempty, F.col("unique")).alias("unique"))
+        if s in scalar:
+            exprs.append(f"{scalar[s]} AS {_q(s)}")
+        elif s in ("median", "majority", "minority", "unique") or s.startswith(
+            "percentile_"
+        ):
+            exprs.append(f"{nonempty(_q(s))} AS {_q(s)}")
     if categorical:
-        cols.append(F.when(nonempty, F.col("value_counts")).alias("value_counts"))
-    for uname in user_merges:
-        cols.append(F.col(f"u_{uname}").alias(uname))
-    return result.select(*cols)
+        exprs.append(f"{nonempty('`value_counts`')} AS `value_counts`")
+    exprs += [f"{_q('u_' + u)} AS {_q(u)}" for u in user_merges]
+    return exprs
 
 # ---------------------------------------------------------------------------
 # the operator

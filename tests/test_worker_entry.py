@@ -1,9 +1,11 @@
 """The engine's Python worker entry (pyspark_rasterstats_worker).
 
 A zipimporter must skip re-reading an unchanged archive and re-read a
-changed one; every Python task of a `get_spark` session must run through
-the entry; modules shipped by `addPyFile` after a task has run must still
-import; and the --py-files zip must carry the entry.
+changed one, also in a worker forked after the daemon imported the entry
+(the daemon's read is inherited); every Python task of a `get_spark`
+session must run through the entry; modules shipped by `addPyFile` after
+a task has run must still import; and the --py-files zip must carry the
+entry.
 """
 
 import importlib
@@ -161,3 +163,55 @@ def test_entry_chosen_only_for_a_local_plain_file(monkeypatch, tmp_path):
                         lambda name: spec)
     monkeypatch.setenv("PYTHONPATH", archive)
     assert not session._worker_entry_usable("local[2]")
+
+
+_FORK_PROBE = r"""
+import importlib, os, sys, zipfile, zipimport
+
+archive, mod = sys.argv[1], sys.argv[2]
+sys.path.insert(0, archive)
+importlib.import_module(mod)  # an importer exists before the entry loads
+import pyspark_rasterstats_worker  # noqa: E402,F401  (the daemon's import)
+
+reads = []
+stock_read = zipimport._read_directory
+
+
+def counting_read(path):
+    if path == archive:
+        reads.append(path)
+    return stock_read(path)
+
+
+zipimport._read_directory = counting_read
+
+
+def reads_in_child():
+    pid = os.fork()
+    if pid == 0:  # a worker forked by the daemon, on its first task
+        importlib.invalidate_caches()
+        os._exit(len(reads))
+    return os.waitpid(pid, 0)[1] >> 8
+
+
+unchanged = reads_in_child()
+with zipfile.ZipFile(archive, "w") as zf:
+    zf.writestr(mod + ".py", "VALUE = 1\n")
+    zf.writestr("extra_member.py", "VALUE = 2\n")
+print(unchanged, reads_in_child())
+"""
+
+
+def test_forked_workers_inherit_the_archive_reads(tmp_path):
+    mod = f"prs_fork_{uuid.uuid4().hex[:8]}"
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {f"{mod}.py": "VALUE = 1\n"})
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE, archive, mod], env=env,
+        check=True, capture_output=True, text=True,
+    ).stdout.split()
+    # no read in a child forked after the import; a rewritten archive
+    # is still re-read
+    assert out == ["0", "1"]

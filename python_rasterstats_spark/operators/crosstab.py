@@ -34,14 +34,15 @@ from .zonal import (
     _tile_zones,
     _zone_lists,
     broadcast_cover_cells,
-    broadcast_zone_geoms,
     collect_dataset_meta,
+    collect_zone_rows,
     group_cover_cells,
     hybrid_big_zone_geoms,
     tile_driven_input,
     tile_prune_filter,
     zone_cell_counts,
     zone_cover_cells,
+    zone_windows,
 )
 
 _XTAB_PARTIAL = T.StructType(
@@ -99,12 +100,14 @@ def zonal_crosstab_df(
     big_keys: frozenset = frozenset()
     geoms_bc = None
     if broadcast_zones:
-        geoms_bc = broadcast_zone_geoms(zdim)
+        geoms, _ = collect_zone_rows(zdim)
+        geoms_bc = zones.sparkSession.sparkContext.broadcast(geoms)
+        windows = zone_windows(geoms, meta)
         # scan-level pruning; the class raster shares the grid (validated
         # above) so the value-dataset key ranges apply to both scans
         pred = tile_prune_filter(
-            {**geoms_bc.value, **{
-                (z, class_dataset): w for (z, _), w in geoms_bc.value.items()
+            {**windows, **{
+                (z, class_dataset): w for (z, _), w in windows.items()
             }},
             meta,
             quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
@@ -151,7 +154,7 @@ def zonal_crosstab_df(
     if broadcast_zones:
         kernel_in, cover = tile_driven_input(
             pairs, broadcast_cover_cells(
-                zones.sparkSession, geoms_bc.value, meta, clip_to_grid=True
+                zones.sparkSession, windows, meta, clip_to_grid=True
             ),
             meta,
         )

@@ -3,12 +3,21 @@
 ``add_stats`` user functions (reference main.py:304-316), ``raster_out``
 mini-rasters (main.py:318-321) and non-elementwise ``zone_func`` transforms
 cannot be split into mergeable partials: they need the whole masked zone
-array. This operator gathers each zone's covering tiles into one task,
-mosaics the bbox window, and runs the exact single-zone kernel there.
+array. This operator runs on the broadcast regime's front half
+(operators/zonal.broadcast_kernel_input: pruned tile scan, driver cover
+dict, NULL-payload rows for cover keys with no stored tile), then
 
-Memory per task is bounded by the zone's bbox window (``max_zone_pixels``
-guard) — this is the documented non-scalable tier; the partial/merge
-protocol in operators/zonal.py is the scale path (SURVEY.md §2.4 A18).
+    tile kernel (mapInPandas, one pass per tile): decode the payload once,
+    select the band, cut each covering zone's part of its bbox window
+                                   │ (zone_id, row_off, col_off, block)
+    groupBy(zone_id).applyInPandas: paste the blocks into the zone's
+    pre-filled canvas and run the exact single-zone kernel there.
+
+Every zone with a covering tile key gets its row, also when all its tiles
+are absent (count 0, reference main.py:230-234). Memory per task is
+bounded by the zone's bbox window (``max_zone_pixels`` guard) — this is
+the documented non-scalable tier; the partial/merge protocol in
+operators/zonal.py is the scale path (SURVEY.md §2.4 A18).
 """
 
 from __future__ import annotations
@@ -22,9 +31,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import codecs as C
-from .. import geom as G
 from .. import kernel as K
-from .zonal import collect_dataset_meta, tile_prune_filter, zone_cover_cells
+from .zonal import (
+    _TILE_COLS, _effective_geom, broadcast_kernel_input, collect_dataset_meta,
+    zone_windows,
+)
 
 _MINI_RASTER_TYPE = T.StructType(
     [
@@ -83,63 +94,64 @@ def zonal_gather_df(
     if "properties_json" not in zones.columns:
         zones = zones.withColumn("properties_json", F.lit(None).cast("string"))
 
-    zcols = zones.select("zone_id", "dataset", "geometry_wkb", "properties_json")
-    # KEY-ONLY cells: geometry + properties ship once per zone via a
-    # broadcast dict (same rationale as operators/zonal.py — never store
-    # WKB per covering tile). The gather tier is broadcast-regime by
-    # definition (each zone must fit one task anyway).
-    cells = zone_cover_cells(
-        zcols, meta, clip_to_grid=False, max_cells_per_zone=max_cells_per_zone,
-        raise_beyond_extent=not boundless,
+    # the zone dim is read once, here: geometry and properties ship once
+    # per zone per executor in a broadcast dict, never per covering tile
+    rows = zones.select(
+        "zone_id", "dataset", "geometry_wkb", "properties_json"
+    ).collect()
+    geoms = {(r[0], r[1]): bytes(r[2]) for r in rows}
+    windows = zone_windows(geoms, meta)
+    kernel_in, cover = broadcast_kernel_input(
+        tiles, windows, meta, fill_missing=True,
+        max_cells_per_zone=max_cells_per_zone, raise_beyond_extent=not boundless,
     )
-    zrows = zcols.collect()
-    zinfo = {
-        row["zone_id"]: (bytes(row["geometry_wkb"]), row["properties_json"])
-        for row in zrows
-    }
-    zbc = zones.sparkSession.sparkContext.broadcast(zinfo)
-    # scan-level tile pruning from the already-collected zone dim
-    pred = tile_prune_filter(
-        {(r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"]) for r in zrows},
-        meta,
+    zbc = zones.sparkSession.sparkContext.broadcast({
+        zid: (ds, geoms[(zid, ds)], props, windows[(zid, ds)])
+        for zid, ds, _, props in rows
+    })
+
+    def tile_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """Per tile and covering zone: the tile's part of the zone's bbox
+        window in native dtype (NULL for a tile with no stored payload)
+        and its offset in that window."""
+        cov, zv = cover.value, zbc.value
+        for pdf in batches:
+            out = []
+            for ds, tc, tr, payload, fmt in zip(*(pdf[c] for c in _TILE_COLS)):
+                zids = cov.get((ds, tc, tr))
+                if not zids:
+                    continue  # scan false positive
+                tile = None
+                if payload is not None:
+                    tile = np.asarray(C.decode_tile(bytes(payload), fmt))
+                    if tile.ndim == 3:  # band select (S6, io.py:279)
+                        tile = tile[band - 1]
+                ty, tx = tr * meta[ds]["tile_h"], tc * meta[ds]["tile_w"]
+                for zid in zids:
+                    (r0, r1), (c0, c1) = zv[zid][3]
+                    rr0, cc0 = max(r0, ty), max(c0, tx)
+                    block = None if tile is None else C.encode_tile(
+                        tile[rr0 - ty:r1 - ty, cc0 - tx:c1 - tx], "npy"
+                    )
+                    out.append((zid, rr0 - r0, cc0 - c0, block))
+            if out:
+                yield pd.DataFrame(
+                    out, columns=["zone_id", "row_off", "col_off", "block"]
+                )
+
+    blocks = kernel_in.select(*_TILE_COLS).mapInPandas(
+        tile_blocks, "zone_id long, row_off int, col_off int, block binary"
     )
-    if pred is not None:
-        tiles = tiles.filter(pred)
-    # Inner broadcast join (a left join cannot broadcast its left side and
-    # would shuffle the tile table — same plan rule as operators/zonal.py).
-    # Zones whose tiles are ALL absent must still produce a count-0 row
-    # (reference main.py:230-234), and missing cells inside a partly
-    # covered zone need no row at all (the mosaic canvas is pre-filled), so
-    # it suffices to reinstate one NULL-payload stub row per zone that the
-    # inner join dropped entirely.
-    keys = ["dataset", "tile_col", "tile_row"]
-    tile_side = tiles.select(*keys, "bytes", "fmt")
-    present = F.broadcast(cells).join(tile_side, keys, "inner")
-    present_zones = F.broadcast(cells).join(
-        tiles.select(*keys), keys, "inner"
-    ).select("zone_id")
-    stubs = (
-        cells.join(F.broadcast(present_zones), "zone_id", "left_anti")
-        .dropDuplicates(["zone_id"])
-        .withColumn("bytes", F.lit(None).cast("binary"))
-        .withColumn("fmt", F.lit(None).cast("string"))
-    )
-    joined = present.unionByName(stubs)
 
     schema = _result_schema(stats, categorical, add_stats, raster_out)
     add_stats = add_stats or {}
 
     def per_zone(pdf: pd.DataFrame) -> pd.DataFrame:
         zid = int(pdf["zone_id"].iloc[0])
-        ds = pdf["dataset"].iloc[0]
+        ds, wkb, props_json, win = zbc.value[zid]
         m = meta[ds]
         aff = m["affine"]
-        wkb, props_json = zbc.value[zid]
-        geom = G.wkb_loads(wkb)
-        geom_eff = (
-            K.boxify_points(geom, aff) if "Point" in geom["type"] else geom
-        )
-        win = K.bounds_window(G.geom_bounds(geom_eff), aff)
+        geom_eff = _effective_geom(wkb, aff)
         (r0, r1), (c0, c1) = win
         if (r1 - r0) * (c1 - c0) > max_zone_pixels:
             raise ValueError(
@@ -157,24 +169,10 @@ def zonal_gather_df(
         # wrap into the data range and corrupt boundless/missing pixels.
         cdtype = np.dtype(m["dtype"]) if m.get("dtype") else np.float64
         canvas = np.full((r1 - r0, c1 - c0), fill, dtype=K.fill_dtype(cdtype, fill))
-        for tc, tr, payload, fmt in zip(
-            pdf["tile_col"], pdf["tile_row"], pdf["bytes"], pdf["fmt"]
-        ):
-            if payload is None:
-                continue
-            block = np.asarray(C.decode_tile(bytes(payload), fmt))
-            if block.ndim == 3:  # band select (S6, io.py:279)
-                block = block[band - 1]
-            rr0 = max(r0, tr * m["tile_h"])
-            rr1 = min(r1, tr * m["tile_h"] + block.shape[0])
-            cc0 = max(c0, tc * m["tile_w"])
-            cc1 = min(c1, tc * m["tile_w"] + block.shape[1])
-            if rr0 >= rr1 or cc0 >= cc1:
-                continue
-            canvas[rr0 - r0 : rr1 - r0, cc0 - c0 : cc1 - c0] = block[
-                rr0 - tr * m["tile_h"] : rr1 - tr * m["tile_h"],
-                cc0 - tc * m["tile_w"] : cc1 - tc * m["tile_w"],
-            ]
+        for ro, co, blk in zip(pdf["row_off"], pdf["col_off"], pdf["block"]):
+            if blk is not None:
+                b = C.decode_tile(bytes(blk), "npy")
+                canvas[ro:ro + b.shape[0], co:co + b.shape[1]] = b
 
         # reference per-feature body (main.py:194-321) on the mosaic
         pgeom = K.geom_to_pixel(geom_eff, aff)
@@ -231,4 +229,4 @@ def zonal_gather_df(
             ]
         return pd.DataFrame(row)
 
-    return joined.groupBy("zone_id").applyInPandas(per_zone, schema)
+    return blocks.groupBy("zone_id").applyInPandas(per_zone, schema)

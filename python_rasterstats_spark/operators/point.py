@@ -45,7 +45,7 @@ from .. import kernel as K
 from .zonal import (
     _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, local_frame,
     smj_bounds_filter, spread, tile_driven_input, tile_prune_filter,
-    zone_cell_counts,
+    zone_cell_counts, zone_windows,
 )
 
 _WINDOWS_SCHEMA = T.StructType(
@@ -120,7 +120,7 @@ def point_query_df(
         }
         if prune_tiles:
             pred = tile_prune_filter(
-                gd, meta, pad_tiles=1,
+                zone_windows(gd, meta), meta, pad_tiles=1,
                 quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
                 quadkey_level=quadkey_level,
                 prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,

@@ -30,6 +30,11 @@ intersection index from metadata, then make one pass over the raster):
                                    ▼ broadcast join back to zones      [J2]
                      final projection w/ empty-zone semantics          [A17]
 
+The broadcast regime's front half (zone windows → scan prune predicate →
+cover dict → kernel input) is broadcast_kernel_input, shared with the
+gather tier (operators/gather.py) and the checkpointed jobs; each zone's
+WKB is parsed once per build (zone_windows).
+
 Scale properties:
 - every tile payload crosses Arrow once, whatever the zone count covering
   it, and tiles are never shuffled in the broadcast regime (incl.
@@ -154,19 +159,39 @@ def _effective_geom(wkb: bytes, aff):
     return geom
 
 
+def _pixel_window(wkb: bytes, aff):
+    """A zone's pixel bounds window ``((r0, r1), (c0, c1))`` — the
+    reference's windowed read extent (main.py:189-191)."""
+    return K.bounds_window(G.geom_bounds(_effective_geom(wkb, aff)), aff)
+
+
+def zone_windows(geoms: dict, meta: dict) -> dict:
+    """``{(zone_id, dataset): pixel window}`` of a collected zone dim
+    ``{(zone_id, dataset): wkb}`` (None for a zone of an unknown dataset).
+    Every driver-side decision of a broadcast-regime build — the scan
+    prune predicate, the cover dict, the auto-holistic size estimate —
+    needs only these windows, so each WKB is parsed once per build."""
+    return {
+        (zid, ds): None if ds not in meta
+        else _pixel_window(wkb, meta[ds]["affine"])
+        for (zid, ds), wkb in geoms.items()
+    }
+
+
 # ---------------------------------------------------------------------------
 # stage 1 — cover cells
 # ---------------------------------------------------------------------------
 
-def _zone_tile_window(geom, m: dict, clip_to_grid: bool):
-    """(tr0, tr1, tc0, tc1, ncells) of a zone's covering tile window —
-    the ONE bbox→tile-window derivation shared by the cover-cell
-    generator, the pruning predicates and the hybrid-WKB sizing pass, so
-    their decisions can never diverge."""
-    aff = m["affine"]
-    (r0, r1), (c0, c1) = K.bounds_window(G.geom_bounds(geom), aff)
-    tr0, tr1 = math.floor(r0 / m["tile_h"]), math.floor((r1 - 1) / m["tile_h"])
-    tc0, tc1 = math.floor(c0 / m["tile_w"]), math.floor((c1 - 1) / m["tile_w"])
+def _zone_tile_window(win, m: dict, clip_to_grid: bool, pad_tiles: int = 0):
+    """(tr0, tr1, tc0, tc1, ncells) of the covering tile window of a zone
+    with pixel window ``win``, widened by ``pad_tiles`` — the ONE
+    bbox→tile-window derivation shared by the cover-cell generator, the
+    pruning predicates and the hybrid-WKB sizing pass, so their decisions
+    can never diverge."""
+    (r0, r1), (c0, c1) = win
+    th, tw = m["tile_h"], m["tile_w"]
+    tr0, tr1 = math.floor(r0 / th) - pad_tiles, math.floor((r1 - 1) / th) + pad_tiles
+    tc0, tc1 = math.floor(c0 / tw) - pad_tiles, math.floor((c1 - 1) / tw) + pad_tiles
     if clip_to_grid:
         ntr = math.ceil(m["height"] / m["tile_h"])
         ntc = math.ceil(m["width"] / m["tile_w"])
@@ -188,25 +213,12 @@ def _cells_schema(with_geometry: bool) -> T.StructType:
     return T.StructType(fields)
 
 
-def broadcast_zone_geoms(zones: DataFrame):
-    """Broadcast the one-row-per-zone geometry dim as a plain dict keyed by
-    (zone_id, dataset).
-
-    The broadcast-regime answer to per-cell WKB duplication: a continent
-    zone covering millions of tiles stores its (potentially multi-MB) WKB
-    exactly ONCE per executor, instead of once per covering tile inside
-    the broadcast relation and again per row through the kernel-stage
-    Arrow stream. Collecting here costs the same driver memory a broadcast
-    hash join of the zone dim would (the driver builds the broadcast
-    relation either way)."""
-    geoms, _ = collect_zone_rows(zones)
-    return zones.sparkSession.sparkContext.broadcast(geoms)
-
-
 def collect_zone_rows(zones: DataFrame):
     """One read of the zone dim: ``({(zone_id, dataset): wkb}, zone_ids)``,
     ``zone_ids`` holding one entry per input row, in row order, duplicates
-    kept — enough to rebuild the join-back base on the driver."""
+    kept — enough to rebuild the join-back base on the driver. Broadcast,
+    the dict stores each (possibly multi-MB) WKB once per executor, never
+    once per covering tile."""
     geoms, zone_ids = {}, []
     for row in zones.select("zone_id", "dataset", "geometry_wkb").collect():
         geoms[(row["zone_id"], row["dataset"])] = bytes(row["geometry_wkb"])
@@ -214,30 +226,19 @@ def collect_zone_rows(zones: DataFrame):
     return geoms, zone_ids
 
 
-def _zone_tile_rects(geoms: dict, meta: dict, *, pad_tiles: int = 0) -> dict:
+def _zone_tile_rects(windows: dict, meta: dict, *, pad_tiles: int = 0) -> dict:
     """Per-ZONE clipped tile rectangles, grouped by dataset:
-    ``{dataset: [(tc0, tc1, tr0, tr1), ...]}`` — the same bbox→tile-window
-    math as zone_cover_cells (so every cover cell lies inside its zone's
-    rect), padded by ``pad_tiles`` and clipped to the stored tile grid
-    (tiles outside the grid don't exist, so clipping cannot lose a join
-    partner)."""
+    ``{dataset: [(tc0, tc1, tr0, tr1), ...]}`` — _zone_tile_window over
+    the zones' pixel ``windows`` (zone_windows), padded by ``pad_tiles``
+    and clipped to the stored tile grid (tiles outside the grid don't
+    exist, so clipping cannot lose a join partner)."""
     rects: dict = {}
-    for (zid, ds), wkb in geoms.items():
+    for (_zid, ds), win in windows.items():
         m = meta.get(ds)
         if m is None:
             continue
-        aff = m["affine"]
-        geom = _effective_geom(wkb, aff)
-        (r0, r1), (c0, c1) = K.bounds_window(G.geom_bounds(geom), aff)
-        tr0 = math.floor(r0 / m["tile_h"]) - pad_tiles
-        tr1 = math.floor((r1 - 1) / m["tile_h"]) + pad_tiles
-        tc0 = math.floor(c0 / m["tile_w"]) - pad_tiles
-        tc1 = math.floor((c1 - 1) / m["tile_w"]) + pad_tiles
-        ntr = math.ceil(m["height"] / m["tile_h"])
-        ntc = math.ceil(m["width"] / m["tile_w"])
-        tr0, tr1 = max(tr0, 0), min(tr1, ntr - 1)
-        tc0, tc1 = max(tc0, 0), min(tc1, ntc - 1)
-        if tr0 > tr1 or tc0 > tc1:
+        tr0, tr1, tc0, tc1, ncells = _zone_tile_window(win, m, True, pad_tiles)
+        if ncells <= 0:
             continue  # zone entirely off-grid: joins no stored tile
         rects.setdefault(ds, []).append((tc0, tc1, tr0, tr1))
     return rects
@@ -372,21 +373,22 @@ def _sql_str(s: str) -> str:
 
 
 def quadkey_prune_ranges(
-    geoms: dict,
+    windows: dict,
     meta: dict,
     *,
     level: int = 16,
     pad_tiles: int = 0,
     max_ranges: int = 64,
 ) -> dict:
-    """Per-dataset quadkey range sets covering every zone's tile window:
-    ``{dataset: [(lo, hi), ...]}`` over the level-``level`` Morton code
-    (sources/tables.with_quadkey layout: col bits even, row bits odd).
+    """Per-dataset quadkey range sets covering the tile window of every
+    zone of ``windows`` (zone_windows): ``{dataset: [(lo, hi), ...]}``
+    over the level-``level`` Morton code (sources/tables.with_quadkey
+    layout: col bits even, row bits odd).
     Ranges are merged and capped at ``max_ranges`` per dataset by
     coalescing across the smallest gaps (superset-safe)."""
     out = {}
     grid = 1 << level
-    for ds, rects in _zone_tile_rects(geoms, meta, pad_tiles=pad_tiles).items():
+    for ds, rects in _zone_tile_rects(windows, meta, pad_tiles=pad_tiles).items():
         if any(r[1] >= grid or r[3] >= grid for r in rects):
             # a grid wider than 2^level tiles overflows the Morton code
             # (with_quadkey drops the high bits, so distant tiles SHARE
@@ -410,7 +412,7 @@ def quadkey_prune_ranges(
 
 
 def tile_prune_filter(
-    geoms: dict,
+    windows: dict,
     meta: dict,
     *,
     pad_tiles: int = 0,
@@ -419,7 +421,8 @@ def tile_prune_filter(
     quadkey_level: int = 16,
     prefix_col: str | None = None,
 ):
-    """Scan-level tile-pruning predicate from the collected zone dim.
+    """Scan-level tile-pruning predicate from the pixel ``windows`` of
+    the collected zone dim (zone_windows).
 
     At 100 TB this is the difference between scanning the planet and
     scanning the working set: the predicate reaches the parquet scan
@@ -455,7 +458,7 @@ def tile_prune_filter(
     parts = []
     if quadkey_col is not None:
         by_ds = quadkey_prune_ranges(
-            geoms, meta, level=quadkey_level, pad_tiles=pad_tiles,
+            windows, meta, level=quadkey_level, pad_tiles=pad_tiles,
             max_ranges=max_ranges,
         )
         for ds, ranges in by_ds.items():
@@ -497,7 +500,7 @@ def tile_prune_filter(
             parts.append(f"({clause})")
     else:
         for ds, rects in _zone_tile_rects(
-            geoms, meta, pad_tiles=pad_tiles
+            windows, meta, pad_tiles=pad_tiles
         ).items():
             rects = _coalesce_rects(rects, max_ranges)
             if not rects:
@@ -530,8 +533,21 @@ _BEYOND_EXTENT = (
 )
 
 
-def _cap_message(zid, ncells: int, cap: int) -> str:
-    return f"zone {zid} covers {ncells} tiles (> max_cells_per_zone={cap})"
+def _cover_window(zid, ds, win, m, *, clip_to_grid: bool,
+                  max_cells_per_zone: int, raise_beyond_extent: bool):
+    """_zone_tile_window of a zone's cover cells, or the message of the
+    error path the zone hits: unknown dataset (``m`` None), beyond-extent
+    with ``raise_beyond_extent`` (reference io.py:323-326), more than
+    ``max_cells_per_zone`` cells — one rule for both cover generators."""
+    if m is None:
+        return f"zone {zid}: unknown dataset {ds!r}"
+    if raise_beyond_extent and K.beyond_extent(win, (m["height"], m["width"])):
+        return _BEYOND_EXTENT
+    tw = _zone_tile_window(win, m, clip_to_grid)
+    if tw[4] > max_cells_per_zone:
+        return (f"zone {zid} covers {tw[4]} tiles "
+                f"(> max_cells_per_zone={max_cells_per_zone})")
+    return tw
 
 
 def zone_cover_cells(
@@ -546,8 +562,8 @@ def zone_cover_cells(
 ) -> DataFrame:
     """Explode each zone into its covering tile keys (J1 filter phase) on
     the executors — the SMJ regime (zone set too large to collect) of the
-    zonal and crosstab operators, and the gather tier; the broadcast
-    regime derives the same keys on the driver (broadcast_cover_cells).
+    zonal and crosstab operators; the broadcast regime derives the same
+    keys on the driver (broadcast_cover_cells).
 
     The bbox→window math is the reference's partition pruning
     (main.py:189-191, io.py:156-161) re-expressed as join-key generation.
@@ -557,7 +573,7 @@ def zone_cover_cells(
     guard (io.py:323-326): a zone window outside the dataset extent raises.
 
     Cells are KEY-ONLY by default — geometry is attached downstream from
-    the one-row-per-zone dim (broadcast_zone_geoms), never stored per
+    the one-row-per-zone dim (collect_zone_rows, broadcast), never stored per
     (zone, tile). ``with_geometry=True`` carries the WKB on each cell row
     instead: the SMJ regime (zone set too large to broadcast/collect)
     needs it to ride the tile-key shuffle, which is cheaper than a second
@@ -576,24 +592,17 @@ def zone_cover_cells(
                 pdf["zone_id"], pdf["dataset"], pdf["geometry_wkb"]
             ):
                 m = meta.get(ds)
-                if m is None:
-                    raise ValueError(f"zone {zid}: unknown dataset {ds!r}")
-                aff = m["affine"]
-                geom = _effective_geom(wkb, aff)
-                if raise_beyond_extent and K.beyond_extent(
-                    K.bounds_window(G.geom_bounds(geom), aff),
-                    (m["height"], m["width"]),
-                ):
-                    raise ValueError(_BEYOND_EXTENT)
-                tr0, tr1, tc0, tc1, ncells = _zone_tile_window(
-                    geom, m, clip_to_grid
+                tw = _cover_window(
+                    zid, ds, m and _pixel_window(wkb, m["affine"]), m,
+                    clip_to_grid=clip_to_grid,
+                    max_cells_per_zone=max_cells_per_zone,
+                    raise_beyond_extent=raise_beyond_extent,
                 )
+                if isinstance(tw, str):
+                    raise ValueError(tw)
+                tr0, tr1, tc0, tc1, ncells = tw
                 if ncells <= 0:
                     continue
-                if ncells > max_cells_per_zone:
-                    raise ValueError(
-                        _cap_message(zid, ncells, max_cells_per_zone)
-                    )
                 trs = np.arange(tr0, tr1 + 1, dtype=np.int32)
                 tcs = np.arange(tc0, tc1 + 1, dtype=np.int32)
                 out_zid.append(np.full(ncells, zid, dtype=np.int64))
@@ -648,9 +657,8 @@ def zone_cell_counts(
                 m = meta.get(ds)
                 if m is None:
                     raise ValueError(f"zone {zid}: unknown dataset {ds!r}")
-                geom = _effective_geom(wkb, m["affine"])
                 tr0, tr1, tc0, tc1, ncells = _zone_tile_window(
-                    geom, m, clip_to_grid
+                    _pixel_window(wkb, m["affine"]), m, clip_to_grid
                 )
                 rows["zone_id"].append(zid)
                 rows["dataset"].append(ds)
@@ -677,21 +685,6 @@ def zone_cell_counts(
 
 # test hook: accumulator of the most recent sizing pass (see docstring)
 _LAST_SIZING_ACC = None
-
-
-def _max_zone_px(geoms: dict, meta: dict) -> int:
-    """Largest per-zone bbox pixel window over the collected zone dim —
-    the broadcast-regime size estimate feeding the auto holistic plan
-    (superset of true zone pixels; same bounds math as the cover cells)."""
-    mx = 0
-    for (_zid, ds), wkb in geoms.items():
-        m = meta.get(ds)
-        if m is None:
-            continue
-        geom = _effective_geom(wkb, m["affine"])
-        (r0, r1), (c0, c1) = K.bounds_window(G.geom_bounds(geom), m["affine"])
-        mx = max(mx, max(0, r1 - r0) * max(0, c1 - c0))
-    return mx
 
 
 def auto_holistic_plan(
@@ -1229,7 +1222,7 @@ def partial_kernel(tiles: DataFrame, meta: dict, *, cover=None, **kw) -> DataFra
 
     - ``cover``: the broadcast dict ``{(dataset, tile_col, tile_row):
       [zone_id, ...]}`` from broadcast_cover_cells (broadcast regime);
-      geometry comes from ``geoms`` (broadcast_zone_geoms), stored once
+      geometry comes from ``geoms`` (collect_zone_rows' dict), stored once
       per zone per executor.
     - ``cover=None``: a ``zs`` column holding the tile's (zone_id,
       geometry_wkb) structs (group_cover_cells, SMJ regime); a NULL wkb
@@ -1256,7 +1249,7 @@ def partial_kernel(tiles: DataFrame, meta: dict, *, cover=None, **kw) -> DataFra
 
 def broadcast_cover_cells(
     spark,
-    geoms: dict,
+    windows: dict,
     meta: dict,
     *,
     clip_to_grid: bool = True,
@@ -1264,18 +1257,19 @@ def broadcast_cover_cells(
     raise_beyond_extent: bool = False,
 ):
     """Driver-side twin of zone_cover_cells for the broadcast regime: the
-    zone dim is ALREADY collected (broadcast_zone_geoms), so the covering
-    tile keys are derived on the driver and shipped as one broadcast dict
-    ``{(dataset, tile_col, tile_row): [zone_id, ...]}`` — the cover source
-    of partial_kernel. ``clip_to_grid=False`` also keeps keys outside the
-    tile grid (boundless nodata fill, see tile_driven_input).
+    zone dim is ALREADY collected (its pixel ``windows``, zone_windows),
+    so the covering tile keys are derived on the driver and shipped as
+    one broadcast dict ``{(dataset, tile_col, tile_row): [zone_id, ...]}``
+    — the cover source of partial_kernel and the gather tier's tile
+    kernel. ``clip_to_grid=False`` also keeps keys outside the tile grid
+    (boundless nodata fill, see tile_driven_input).
 
     Returns the Broadcast, or — when a zone hits an error path (unknown
     dataset, beyond-extent with boundless=False, cover-cell cap) — the
     first pending error message, same text as zone_cover_cells raises;
     tile_driven_input turns it into a stage that raises at action time."""
     cover = cover_dict(
-        geoms, meta, clip_to_grid=clip_to_grid,
+        windows, meta, clip_to_grid=clip_to_grid,
         max_cells_per_zone=max_cells_per_zone,
         raise_beyond_extent=raise_beyond_extent,
     )
@@ -1283,7 +1277,7 @@ def broadcast_cover_cells(
 
 
 def cover_dict(
-    geoms: dict,
+    windows: dict,
     meta: dict,
     *,
     clip_to_grid: bool = True,
@@ -1292,22 +1286,15 @@ def cover_dict(
 ):
     """broadcast_cover_cells' dict (or pending error message), unbroadcast."""
     cover: dict = {}
-    for (zid, ds), wkb in geoms.items():
-        m = meta.get(ds)
-        if m is None:
-            return f"zone {zid}: unknown dataset {ds!r}"
-        aff = m["affine"]
-        geom = _effective_geom(wkb, aff)
-        if raise_beyond_extent and K.beyond_extent(
-            K.bounds_window(G.geom_bounds(geom), aff),
-            (m["height"], m["width"]),
-        ):
-            return _BEYOND_EXTENT
-        tr0, tr1, tc0, tc1, ncells = _zone_tile_window(geom, m, clip_to_grid)
-        if ncells <= 0:
-            continue
-        if ncells > max_cells_per_zone:
-            return _cap_message(zid, ncells, max_cells_per_zone)
+    for (zid, ds), win in windows.items():
+        tw = _cover_window(
+            zid, ds, win, meta.get(ds), clip_to_grid=clip_to_grid,
+            max_cells_per_zone=max_cells_per_zone,
+            raise_beyond_extent=raise_beyond_extent,
+        )
+        if isinstance(tw, str):
+            return tw
+        tr0, tr1, tc0, tc1, _ = tw
         for tr in range(tr0, tr1 + 1):
             for tc in range(tc0, tc1 + 1):
                 cover.setdefault((ds, tc, tr), []).append(zid)
@@ -1394,6 +1381,44 @@ def tile_driven_input(
         .withColumn("fmt", F.lit(None).cast("string"))
     )
     return tiles.unionByName(missing).coalesce(tasks), cover
+
+
+def broadcast_kernel_input(
+    tiles: DataFrame,
+    windows: dict,
+    meta: dict,
+    *,
+    fill_missing: bool = False,
+    max_cells_per_zone: int = 4_000_000,
+    raise_beyond_extent: bool = False,
+    prune_tiles: bool = True,
+    quadkey_level: int = 16,
+):
+    """The broadcast regime's front half: (kernel input, cover) of a
+    tile-driven kernel over the zones of ``windows`` (zone_windows). The
+    tile scan is pruned to their working set (``prune_tiles``:
+    tile_prune_filter, quadkey ranges when ``tiles`` has a quadkey
+    column), each tile key's covering zones are broadcast as a dict
+    (broadcast_cover_cells), and ``fill_missing`` (boundless reads) keeps
+    the cover keys beyond the grid and adds a NULL-payload row per cover
+    key with no stored tile (tile_driven_input). A driver-detected error
+    raises when the action runs."""
+    if prune_tiles:
+        pred = tile_prune_filter(
+            windows, meta,
+            quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
+            quadkey_level=quadkey_level,
+            prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
+        )
+        if pred is not None:
+            tiles = tiles.filter(pred)
+    cover = broadcast_cover_cells(
+        tiles.sparkSession, windows, meta,
+        clip_to_grid=not fill_missing,
+        max_cells_per_zone=max_cells_per_zone,
+        raise_beyond_extent=raise_beyond_extent,
+    )
+    return tile_driven_input(tiles, cover, meta, fill_missing=fill_missing)
 
 
 def _append_partial(rows: dict, p: dict, compact_vc: bool) -> None:
@@ -1846,13 +1871,10 @@ def zonal_stats_df(
     The plan is tile-driven (see the module docstring): one partial
     kernel over the tile scan, each payload crossing Arrow once.
     ``broadcast_zones=True`` (the right regime whenever the zone working
-    set fits executor memory) collects the zone dim, derives each tile's
-    covering zones on the driver and broadcasts them as a dict; the tile
-    scan is pruned to the zones' working set (``prune_tiles``) and never
-    shuffled. Boundless nodata/nan counts add one NULL-payload row per
-    covering tile key with no stored tile. Driver-detected errors
-    (beyond-extent with ``boundless=False``, ``max_cells_per_zone``,
-    unknown dataset) still raise when the action runs. With huge zone sets
+    set fits executor memory) collects the zone dim and runs the shared
+    front half (broadcast_kernel_input: pruned scan with ``prune_tiles``,
+    driver cover dict, NULL-payload rows for boundless nodata/nan counts,
+    driver-detected errors raised when the action runs). With huge zone sets
     pass False: cover cells are generated on the executors, grouped per
     tile key and sort-merge joined to the tiles; there,
     ``hybrid_wkb_bytes`` bounds per-cell WKB duplication by broadcasting
@@ -1928,16 +1950,13 @@ def zonal_stats_df(
                 )
         zones = zones.withColumn("dataset", F.lit(dataset))
 
-    # broadcast regime: cells are KEY-ONLY (4 small columns) and geometry
-    # ships once per zone via a broadcast dict — never once per covering
-    # tile (the r2 verdict's 100×-scale memory risk). SMJ regime: the WKB
-    # rides the cells through the tile-key shuffle instead (one copy per
-    # cell through ONE exchange, vs a second payload-bearing shuffle to
-    # re-attach it by zone) — EXCEPT the few zones whose wkb_bytes×ncells
-    # duplication exceeds hybrid_wkb_bytes (an MB-scale continent polygon
-    # over 10⁴-10⁶ tiles would push GB-TB through that exchange): those
-    # ship once per executor via a small broadcast dict and their cells
-    # carry NULL (the hybrid regime; None disables the sizing pass).
+    # broadcast regime: geometry ships once per zone in a broadcast dict,
+    # never once per covering tile. SMJ regime: the WKB rides the cells
+    # through the tile-key shuffle (one copy per cell through ONE exchange)
+    # — EXCEPT zones whose wkb_bytes×ncells exceeds hybrid_wkb_bytes (an
+    # MB-scale continent polygon over 10⁴-10⁶ tiles): those ship once per
+    # executor via a small broadcast dict and their cells carry NULL (the
+    # hybrid regime; None disables the sizing pass).
     big_keys: frozenset = frozenset()
     geoms_bc = None
     est_px = 0  # auto-holistic size estimate (filled per regime below)
@@ -1949,12 +1968,16 @@ def zonal_stats_df(
         spark = zones.sparkSession
         geoms, zone_ids = collect_zone_rows(zones)
         geoms_bc = spark.sparkContext.broadcast(geoms)
+        windows = zone_windows(geoms, meta)
         base = local_frame(
             spark, pd.DataFrame({"zone_id": pd.Series(zone_ids, dtype=object)}),
             base.schema,
         )
-        if auto_holistic:
-            est_px = _max_zone_px(geoms_bc.value, meta)
+        if auto_holistic:  # largest zone bbox window (⊇ its true pixels)
+            est_px = max((
+                max(0, r1 - r0) * max(0, c1 - c0)
+                for (r0, r1), (c0, c1) in filter(None, windows.values())
+            ), default=0)
     elif hybrid_wkb_bytes is not None or prune_tiles or auto_holistic:
         # SMJ regime: ONE distributed sizing pass over the zone table,
         # summarized by ONE aggregation job that serves all three
@@ -1999,36 +2022,11 @@ def zonal_stats_df(
         salt=holistic_salt, sketch_px=sketch_px,
     )
     if broadcast_zones:
-        if prune_tiles:
-            # scan-level pruning: the zone dim is already on the driver,
-            # so a per-zone tile-key range predicate costs nothing to
-            # build and reaches the parquet scan as PushedFilters — the
-            # tile table reads only the zones' working set, not the whole
-            # corpus. Corpora that carry a quadkey column (with_quadkey;
-            # sorted storage) get 1-D quadkey range sets, which align
-            # with row groups/files.
-            pred = tile_prune_filter(
-                geoms_bc.value, meta,
-                quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-                quadkey_level=quadkey_level,
-                prefix_col=(
-                    "qk_prefix" if "qk_prefix" in tiles.columns else None
-                ),
-            )
-            if pred is not None:
-                tiles = tiles.filter(pred)
-        # the zone dim is on the driver already, so each tile's covering
-        # zones are derived THERE and broadcast as a dict — no cells stage,
-        # no join, each tile payload crosses Arrow once (guide §8: decide
-        # with small rows, move big rows once)
-        cover = broadcast_cover_cells(
-            spark, geoms_bc.value, meta,
-            clip_to_grid=not need_missing,
+        kernel_in, cover = broadcast_kernel_input(
+            tiles, windows, meta, fill_missing=need_missing,
             max_cells_per_zone=max_cells_per_zone,
             raise_beyond_extent=not boundless,
-        )
-        kernel_in, cover = tile_driven_input(
-            tiles, cover, meta, fill_missing=need_missing
+            prune_tiles=prune_tiles, quadkey_level=quadkey_level,
         )
     else:
         # SMJ regime (zone set too large to broadcast): the cover cells

@@ -160,29 +160,23 @@ def stage_bucketed(
 
 def _zonal_partials(spark, tiles, zones, meta, stats, kw) -> DataFrame:
     """zonal_stats_df's broadcast-regime partial kernel (boundless reads)
-    over ``zones``: cover dict from the collected zone dim, NULL-payload
-    fill rows for missing tiles when nodata/nan counts are requested."""
+    over ``zones``, on its front half (broadcast_kernel_input)."""
     from ..operators.zonal import (
-        broadcast_cover_cells, broadcast_zone_geoms, partial_kernel,
-        tile_driven_input,
+        broadcast_kernel_input, collect_zone_rows, partial_kernel,
+        zone_windows,
     )
     from .. import kernel as K
 
-    need_missing = "nodata" in stats or "nan" in stats
-    geoms = broadcast_zone_geoms(zones)
-    kernel_in, cover = tile_driven_input(
-        tiles,
-        broadcast_cover_cells(
-            spark, geoms.value, meta, clip_to_grid=not need_missing
-        ),
-        meta,
-        fill_missing=need_missing,
+    geoms, _ = collect_zone_rows(zones)
+    kernel_in, cover = broadcast_kernel_input(
+        tiles, zone_windows(geoms, meta), meta,
+        fill_missing="nodata" in stats or "nan" in stats,
     )
     return partial_kernel(
         kernel_in, meta, cover=cover,
         all_touched=kw.get("all_touched", False),
         nodata_override=kw.get("nodata"), want_counts=K.needs_counts(stats),
-        geoms=geoms,
+        geoms=spark.sparkContext.broadcast(geoms),
     )
 
 

@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import kernel as K
 from ..operators.zonal import (
-    broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
+    broadcast_cover_cells, collect_dataset_meta, collect_zone_rows,
     merged_stats, partial_kernel, tile_driven_input, zonal_result,
+    zone_windows,
 )
 
 
@@ -54,8 +55,9 @@ def incremental_zonal(
     transform. Returns the streaming query (awaitTermination for
     availableNow batch-catch-up semantics)."""
     meta = collect_dataset_meta(datasets)
-    geoms_bc = broadcast_zone_geoms(zones)
-    cover = broadcast_cover_cells(spark, geoms_bc.value, meta)
+    geoms, _ = collect_zone_rows(zones)
+    geoms_bc = spark.sparkContext.broadcast(geoms)
+    cover = broadcast_cover_cells(spark, zone_windows(geoms, meta), meta)
 
     tiles_schema = (
         "image_id string, bytes binary, w int, h int, fmt string, "

@@ -340,10 +340,10 @@ def test_incremental_state_rewrites_only_touched_buckets(spark, fixture_dir, tmp
 
 
 def test_gather_plan_no_tile_shuffle_and_no_tile_zones(corpus):
-    """Gather tier mirrors the zonal plan rule: inner broadcast join + stub
-    reinstatement instead of a tile-shuffling left join; zones with no
-    stored tiles still produce their count-0 row (reference
-    main.py:230-234)."""
+    """Gather tier runs on the zonal broadcast front half: the tiles are
+    never shuffled (no sort-merge join, no Exchange on the tile key), and
+    zones with no stored tiles still produce their count-0 row (reference
+    main.py:230-234) from the NULL-payload rows of their missing keys."""
     from python_rasterstats_spark.operators.gather import zonal_gather_df
     from python_rasterstats_spark.plans.explain import physical_plan, plan_summary
 

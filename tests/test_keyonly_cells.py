@@ -13,12 +13,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from python_rasterstats_spark import codecs as C
 from python_rasterstats_spark import geom as G
 from python_rasterstats_spark import kernel as K
 from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
 from python_rasterstats_spark.operators.gather import zonal_gather_df
 from python_rasterstats_spark.operators.zonal import (
-    broadcast_zone_geoms, collect_dataset_meta, zonal_stats_df,
+    collect_dataset_meta, collect_zone_rows, zonal_stats_df,
     zone_cover_cells,
 )
 from python_rasterstats_spark.sources.tables import ZONES_DDL, raster_to_tables
@@ -87,8 +88,8 @@ def test_cells_are_key_only(spark, big_corpus):
     assert "geometry_wkb" not in cells.columns
     assert cells.count() == 1600
     # geometry ships once per zone: the dict holds ONE wkb
-    bc = broadcast_zone_geoms(z)
-    assert len(bc.value) == 1
+    geoms, _ = collect_zone_rows(z)
+    assert len(geoms) == 1
     # SMJ regime opts back in explicitly
     cells_g = zone_cover_cells(z, meta, clip_to_grid=True, with_geometry=True)
     assert "geometry_wkb" in cells_g.columns
@@ -173,8 +174,19 @@ def test_gather_and_crosstab_plans_key_only(spark, big_corpus):
 
 def _kernel_input_rows(df, column):
     """Rows into the MapInPandas node whose input has ``column``: the
-    output-row metric of the first node below it that counts rows, from
-    the executed plan (through AQE and query-stage wrappers)."""
+    output-row metric of the first node below it that counts rows (summed
+    over the inputs of a Union), from the executed plan (through AQE and
+    query-stage wrappers)."""
+    def rows(node):
+        while not node.metrics().contains("numOutputRows"):
+            if node.getClass().getSimpleName() == "UnionExec":
+                kids = node.children()
+                return sum(rows(kids.apply(i)) for i in range(kids.size()))
+            node = node.children().apply(0)
+            if node.getClass().getSimpleName().endswith("QueryStageExec"):
+                node = node.plan()
+        return node.metrics().apply("numOutputRows").value()
+
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         plan = stack.pop()
@@ -188,15 +200,69 @@ def _kernel_input_rows(df, column):
         if cls == "MapInPandasExec" and column in list(
             plan.child().schema().fieldNames()
         ):
-            node = plan.child()
-            while not node.metrics().contains("numOutputRows"):
-                node = node.children().apply(0)
-                if node.getClass().getSimpleName().endswith("QueryStageExec"):
-                    node = node.plan()
-            return node.metrics().apply("numOutputRows").value()
+            return rows(plan.child())
         children = plan.children()
         stack.extend(children.apply(i) for i in range(children.size()))
     raise AssertionError(f"no MapInPandas over {column!r} in the plan")
+
+
+def _px_box(r0, r1, c0, c1):
+    """The box over pixel rows r0..r1 and cols c0..c1 (fractional) of AFF."""
+    return G.box(c0, N - r1, c1, N - r0)
+
+
+@pytest.mark.parametrize("all_touched", [False, True])
+def test_gather_tile_driven_differential(spark, big_corpus, all_touched):
+    """Gather tier on the tile-driven input: two overlapping zones whose
+    edges cut through tiles and a third partly off the grid. Each tile
+    key crosses into Python once, whatever its zone count; count, mean, a
+    plain add_stats and the raster_out mini-rasters match the single-zone
+    kernel on the in-memory raster."""
+    arr, _, _, tiles, datasets = big_corpus
+    geoms = [
+        _px_box(19.5, 77.3, 19.5, 77.3),    # tile rows/cols 2..9
+        _px_box(52.2, 109.6, 19.5, 77.3),   # rows 6..13: overlaps the first
+        _px_box(290.4, 334.6, 290.4, 334.6),  # tiles 36..41: 36 keys, 20 off-grid
+    ]
+    zones = spark.createDataFrame(
+        [{"zone_id": i, "collection": "t", "geometry_wkb": G.wkb_dumps(g),
+          "geom_type": "Polygon", "properties": {}}
+         for i, g in enumerate(geoms)],
+        schema=ZONES_DDL,
+    )
+
+    def ss(m):
+        return float((m.compressed().astype(np.float64) ** 2).sum())
+
+    df = zonal_gather_df(
+        zones, tiles, datasets, dataset="big", stats=["count", "mean"],
+        all_touched=all_touched, add_stats={"ss": ss}, raster_out=True,
+    )
+    got = {r["zone_id"]: r for r in df.collect()}
+    # distinct covered tile keys: 8x12 for the overlapping pair + 6x6
+    assert _kernel_input_rows(df, "bytes") == 96 + 36
+    assert sorted(got) == [0, 1, 2]
+    for zid, g in enumerate(geoms):
+        want = K.zonal_stats_one(
+            g, arr, AFF, nodata=-1.0, stats=["count", "mean"],
+            all_touched=all_touched,
+        )
+        block, rv, win, fill = K.prepare_zone(
+            g, arr, AFF, nodata=-1.0, all_touched=all_touched
+        )
+        masked = np.ma.MaskedArray(
+            block, mask=(block == fill) | np.isnan(block) | ~rv
+        )
+        r = got[zid]
+        assert (r["count"], r["mean"]) == (want["count"], want["mean"])
+        assert r["ss"] == ss(masked)
+        mr = r["mini_raster"]
+        assert bytes(mr["data"]) == C.encode_tile(
+            np.ma.filled(masked, fill).astype(np.float32), "npy"
+        )
+        assert bytes(mr["mask"]) == C.encode_tile(np.ma.getmaskarray(masked), "npy")
+        assert tuple(mr["affine"]) == K.window_affine(win, AFF)
+    assert got[2]["count"] < (334 - 290) ** 2  # the off-grid part is fill
 
 
 def test_smj_regime_with_geometry_cells(spark, big_corpus):

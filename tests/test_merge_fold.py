@@ -285,11 +285,19 @@ CKPT_STATS = ["count", "min", "max", "mean", "sum", "std", "range", "median",
 
 @pytest.mark.parametrize("bucketed", [False, True])
 def test_checkpointed_jobs_match_zonal_stats_df(spark, corpus, fixture_dir,
-                                                tmp_path, bucketed):
+                                                tmp_path, bucketed, monkeypatch):
+    from python_rasterstats_spark.plans import lineage
     from python_rasterstats_spark.plans.lineage import (
         checkpointed_zonal, checkpointed_zonal_bucketed,
     )
 
+    # the partials stage runs zonal_stats_df's front half: its tile scan
+    # carries the tile-key prune filter
+    built, real = [], lineage._zonal_partials
+    monkeypatch.setattr(
+        lineage, "_zonal_partials",
+        lambda *a: built.append(real(*a)) or built[-1],
+    )
     tiles, zones, datasets = corpus
     if bucketed:
         got, _ = checkpointed_zonal_bucketed(
@@ -303,6 +311,15 @@ def test_checkpointed_jobs_match_zonal_stats_df(spark, corpus, fixture_dir,
         )
     want = zonal_stats_df(zones, tiles, datasets, dataset="slope",
                           stats=CKPT_STATS)
+    assert len(built) == (3 if bucketed else 1)
+    for df in built:
+        scans = [ln for ln in physical_plan(df).splitlines()
+                 if "FileScan parquet" in ln and "tiles.parquet" in ln]
+        # (plan toString truncates long lines, so match the prefix)
+        assert scans and all(
+            "PushedFilters" in ln and "tile_col" in ln and "GreaterTha" in ln
+            for ln in scans
+        ), scans
     assert got.columns == want.columns == ["zone_id"] + CKPT_STATS
     got_rows = {r["zone_id"]: r.asDict() for r in got.collect()}
     want_rows = {r["zone_id"]: r.asDict() for r in want.collect()}

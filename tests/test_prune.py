@@ -28,6 +28,7 @@ from python_rasterstats_spark.operators.zonal import (
     quadkey_prune_ranges,
     tile_prune_filter,
     zonal_stats_df,
+    zone_windows,
 )
 from python_rasterstats_spark.sources.tables import (
     features_to_zones,
@@ -188,7 +189,8 @@ def test_quadkey_predicate_reaches_parquet_scan(spark, sparse_corpus):
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
     pred = tile_prune_filter(
-        _zone_geom_dict(c["zones"]), meta, quadkey_col="quadkey"
+        zone_windows(_zone_geom_dict(c["zones"]), meta), meta,
+        quadkey_col="quadkey",
     )
     plan = (
         spark.read.parquet(c["qk"])
@@ -208,7 +210,7 @@ def test_rowgroup_pruning_evidence_10x(spark, sparse_corpus):
 
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    gd = _zone_geom_dict(c["zones"])
+    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
     ranges = quadkey_prune_ranges(gd, meta, level=LEVEL)["sparse"]
     assert 1 <= len(ranges) <= 64
 
@@ -251,7 +253,7 @@ def test_quadkey_ranges_cover_every_cover_cell(spark, sparse_corpus):
 
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    gd = _zone_geom_dict(c["zones"])
+    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
     ranges = quadkey_prune_ranges(gd, meta, level=LEVEL)["sparse"]
     cells = zone_cover_cells(
         c["zones"], meta, clip_to_grid=True
@@ -323,7 +325,7 @@ def test_partitioned_quadkey_prunes_directories(spark, sparse_corpus, tmp_path):
 
     meta = collect_dataset_meta(c["datasets"])
     shift = dataset_prefix_shifts(meta)["sparse"]
-    gd = _zone_geom_dict(c["zones"])
+    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
     ranges = quadkey_prune_ranges(gd, meta)["sparse"]
     prefixes = {p for lo, hi in ranges for p in range(lo >> shift, (hi >> shift) + 1)}
     assert len(prefixes) <= 4  # 2 corners -> a handful of directories
@@ -388,7 +390,7 @@ def test_quadkey_overflow_grid_falls_back_to_no_constraint():
     }}
     wkt = "POLYGON ((700000 100, 700100 100, 700100 200, 700000 200, 700000 100))"
     geom = G.parse_feature(wkt)["geometry"]
-    gd = {(0, "huge"): G.wkb_dumps(geom)}
+    gd = zone_windows({(0, "huge"): G.wkb_dumps(geom)}, m)
     ranges = quadkey_prune_ranges(gd, m, level=LEVEL)["huge"]
     assert ranges is None  # no quadkey constraint: superset-safe
     # and the same zone at level 16 (fits) prunes normally
@@ -459,7 +461,7 @@ def test_sorted_writer_rowgroup_sizing_beats_rects(spark, sparse_corpus, tmp_pat
 
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    gd = _zone_geom_dict(c["zones"])
+    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
 
     # plain corpus re-written at the same granularity for a fair audit
     gran = 64 << 10

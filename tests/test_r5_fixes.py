@@ -33,6 +33,7 @@ from python_rasterstats_spark.operators.zonal import (
     quadkey_prune_ranges,
     tile_prune_filter,
     zonal_stats_df,
+    zone_windows,
 )
 from python_rasterstats_spark.sources.tables import (
     features_to_zones,
@@ -67,10 +68,10 @@ def _sorted(df):
 def test_quadkey_overflow_emits_none_sentinel(grid):
     _, _, datasets, zones = grid
     meta = collect_dataset_meta(datasets)
-    gd = {
+    gd = zone_windows({
         (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
         for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
-    }
+    }, meta)
     # level 2 addresses a 4×4 grid; ours is 16×16 → overflow
     assert quadkey_prune_ranges(gd, meta, level=2) == {"g": None}
     pred = tile_prune_filter(gd, meta, quadkey_col="quadkey", quadkey_level=2)

@@ -66,17 +66,19 @@ def test_partial_sketch_bounds_state_size(corpus):
     the property that bounds the holistic shuffle at 100× scale."""
     tiles, zones, datasets = corpus
     from python_rasterstats_spark.operators.zonal import (
-        broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
-        tile_driven_input,
+        broadcast_cover_cells, collect_dataset_meta, collect_zone_rows,
+        tile_driven_input, zone_windows,
     )
 
     meta = collect_dataset_meta(datasets)
     z = zones.filter(F.col("collection") == "hd_zones").withColumn(
         "dataset", F.lit("slope_hd")
     )
-    geoms_bc = broadcast_zone_geoms(z)
+    geoms, _ = collect_zone_rows(z)
+    geoms_bc = tiles.sparkSession.sparkContext.broadcast(geoms)
     kernel_in, cover = tile_driven_input(
-        tiles, broadcast_cover_cells(tiles.sparkSession, geoms_bc.value, meta),
+        tiles,
+        broadcast_cover_cells(tiles.sparkSession, zone_windows(geoms, meta), meta),
         meta,
     )
     parts = partial_kernel(

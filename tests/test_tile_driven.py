@@ -5,6 +5,10 @@
   DataFrame is built, in both regimes.
 - The boundless-nodata kernel input holds each stored tile once plus one
   NULL-payload row per cover key with no stored tile.
+- The gather tier, on the same broadcast front half, raises its
+  driver-detected errors (beyond-extent, cover cap, unknown dataset) at
+  action time too.
+- A broadcast-regime build parses each zone's WKB once on the driver.
 - The point query returns one row per (zone_id, vertex_idx) in both
   regimes when a zone_id appears under two datasets, and its
   beyond-extent error (boundless=False) also surfaces at action time.
@@ -13,11 +17,14 @@
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from python_rasterstats_spark import geom as G
+from python_rasterstats_spark.operators.gather import zonal_gather_df
 from python_rasterstats_spark.operators.point import point_query_df
 from python_rasterstats_spark.operators.zonal import (
-    broadcast_cover_cells, broadcast_zone_geoms, collect_dataset_meta,
-    tile_driven_input, zonal_stats_df,
+    broadcast_cover_cells, collect_dataset_meta, collect_zone_rows,
+    tile_driven_input, zonal_stats_df, zone_windows,
 )
 from python_rasterstats_spark.sources.tables import ZONES_DDL, raster_to_tables
 
@@ -75,6 +82,47 @@ def test_cover_cap_raises_at_action(spark, raster, broadcast_zones):
     assert ok[0]["count"] == 36
 
 
+@pytest.mark.parametrize("case", ["beyond_extent", "cover_cap", "unknown_dataset"])
+def test_gather_errors_raise_at_action(spark, raster, case):
+    tiles, datasets = raster
+    kw, match = {"dataset": "td"}, None
+    if case == "beyond_extent":
+        zones = _zones_df(
+            spark, [G.box(1.0, 4.0, 5.0, 8.0), G.box(20.0, 20.0, 25.0, 25.0)]
+        )
+        kw["boundless"], match = False, "outside dataset extent"
+    elif case == "cover_cap":
+        zones = _zones_df(spark, [G.box(1.0, 3.0, 7.0, 9.0)])  # 4 tiles
+        kw["max_cells_per_zone"], match = 2, "covers 4 tiles"
+    else:
+        zones = _zones_df(spark, [G.box(1.0, 4.0, 5.0, 8.0)], ["nope"])
+        kw, match = {}, "zone 0: unknown dataset 'nope'"
+    df = zonal_gather_df(
+        zones, tiles, datasets, stats=["count"],
+        add_stats={"n": lambda m: float(m.count())}, **kw,
+    )
+    with pytest.raises(Exception, match=match):
+        df.collect()
+    if case == "cover_cap":
+        kw["max_cells_per_zone"] = 4
+        ok = zonal_gather_df(zones, tiles, datasets, stats=["count"], **kw)
+        assert ok.collect()[0]["count"] == 36
+
+
+@pytest.mark.parametrize("stats", [["count", "mean"], ["count", "median"]])
+def test_broadcast_build_parses_each_wkb_once(corpus, monkeypatch, stats):
+    """The scan prune predicate, the cover dict and the auto-holistic
+    size estimate all read the zone windows computed once per build."""
+    tiles, zones, datasets = corpus
+    polys = zones.filter(F.col("collection") == "polygons")
+    n = polys.count()
+    calls = []
+    real = G.wkb_loads
+    monkeypatch.setattr(G, "wkb_loads", lambda b: calls.append(1) or real(b))
+    zonal_stats_df(polys, tiles, datasets, dataset="slope", stats=stats)
+    assert len(calls) == n == 2
+
+
 def test_boundless_input_one_row_per_tile(spark, raster):
     tiles, datasets = raster
     # drop the stored tile (1, 1): its key must come back with no payload
@@ -82,8 +130,10 @@ def test_boundless_input_one_row_per_tile(spark, raster):
     meta = collect_dataset_meta(datasets)
     # pixel cols -3..6, rows 1..10: tile cols -1..1 × tile rows 0..2
     zones = _zones_df(spark, [G.box(-3.0, -1.0, 7.0, 9.0)], ["td"])
-    geoms = broadcast_zone_geoms(zones)
-    cover = broadcast_cover_cells(spark, geoms.value, meta, clip_to_grid=False)
+    geoms, _ = collect_zone_rows(zones)
+    cover = broadcast_cover_cells(
+        spark, zone_windows(geoms, meta), meta, clip_to_grid=False
+    )
     kernel_in, _ = tile_driven_input(tiles, cover, meta, fill_missing=True)
     rows = kernel_in.collect()
     keys = sorted((r["tile_col"], r["tile_row"]) for r in rows)

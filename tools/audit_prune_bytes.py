@@ -111,6 +111,7 @@ def main():
     from python_rasterstats_spark.fixtures import ensure_bench_corpus
     from python_rasterstats_spark.operators.zonal import (
         _zone_tile_rects, collect_dataset_meta, quadkey_prune_ranges,
+        zone_windows,
     )
     from python_rasterstats_spark.session import get_spark
     from python_rasterstats_spark.sources.tables import (
@@ -124,7 +125,7 @@ def main():
     datasets = spark.read.parquet(os.path.join(corpus_dir, "datasets.parquet"))
     meta = collect_dataset_meta(datasets)
     ds = sorted(meta)[0]
-    gd = sparse_zone_dict(meta, ds)
+    gd = zone_windows(sparse_zone_dict(meta, ds), meta)
 
     rects = _zone_tile_rects(gd, meta)[ds]
     union = (

@@ -22,6 +22,7 @@ def main():
 
     from python_rasterstats_spark.fixtures import ensure_fixtures
     from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
+    from python_rasterstats_spark.operators.gather import zonal_gather_df
     from python_rasterstats_spark.operators.point import point_query_df
     from python_rasterstats_spark.operators.zonal import zonal_stats_df
     from python_rasterstats_spark.plans.explain import (
@@ -61,6 +62,10 @@ def main():
             polys, tiles, datasets, value_dataset="slope",
             class_dataset="slope_classes",
         ),
+        "zonal_gather (add_stats, tile-driven)": zonal_gather_df(
+            polys, tiles, datasets, dataset="slope", stats=["count", "mean"],
+            add_stats={"ss": lambda m: float((m.compressed() ** 2).sum())},
+        ),
         "zonal_smj (exact holistic merge, SMJ regime)": zonal_stats_df(
             polys, tiles, datasets, dataset="slope",
             stats="count min max mean median majority unique".split(),
@@ -71,6 +76,8 @@ def main():
     # the tile key) before joining them to the tiles, so the broadcast
     # regime's join checks do not apply to it
     smj_cases = {name for name in cases if "SMJ regime" in name}
+    # the gather tier mosaics each zone in one grouped-map task by design
+    gather_cases = {name for name in cases if name.startswith("zonal_gather")}
 
     lines = [
         "# PLANS — physical-plan evidence for the flagship operators",
@@ -100,7 +107,10 @@ def main():
         "- **one merge shape**: every holistic merge stage (salted",
         "  pre-merge and final merge, both regimes) is a `MapInPandas`",
         "  reading a `Sort` over an `Exchange hashpartitioning` of its keys",
-        "  — no grouped-map `FlatMapGroupsInPandas`.",
+        "  — no grouped-map `FlatMapGroupsInPandas`. The gather tier",
+        "  (`zonal_gather` case) is the one grouped map by design: its tile",
+        "  kernel `MapInPandas` cuts each zone's blocks, one",
+        "  `FlatMapGroupsInPandas` mosaics each zone in one task.",
         "",
         "(The codegen-span count reads 0 here because AQE's pre-execution",
         "toString elides WholeStageCodegen markers; stage-level codegen is",
@@ -158,7 +168,11 @@ def main():
         else:
             assert s["sort_merge_joins"] == 0, name
             assert not tile_exchange, name
-        assert "FlatMapGroupsInPandas" not in plan, name
+        if name in gather_cases:
+            assert plan.count("FlatMapGroupsInPandas") == 1, name
+            assert plan.count("MapInPandas ") == 1, name  # the tile kernel
+        else:
+            assert "FlatMapGroupsInPandas" not in plan, name
 
     lines += _sparse_quadkey_section(spark)
 
@@ -184,8 +198,8 @@ def _sparse_quadkey_section(spark):
     from python_rasterstats_spark.operators.zonal import (
         collect_dataset_meta,
         quadkey_prune_ranges,
-        tile_prune_filter,
         zonal_stats_df,
+        zone_windows,
     )
     from python_rasterstats_spark.sources.tables import (
         features_to_zones,
@@ -220,7 +234,7 @@ def _sparse_quadkey_section(spark):
         (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
         for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
     }
-    ranges = quadkey_prune_ranges(gd, meta)["sparse"]
+    ranges = quadkey_prune_ranges(zone_windows(gd, meta), meta)["sparse"]
     if ranges is None:  # Morton-overflow sentinel: no quadkey constraint
         print("sparse: grid overflows the quadkey level — unpruned scan")
         ranges = [(0, (1 << 63) - 1)]  # admit-all, matching the real scan

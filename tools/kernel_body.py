@@ -71,7 +71,9 @@ def digest(frames) -> tuple[int, str]:
 
 def load(corpus_dir: str, dataset: str):
     """(meta, geoms, cover, kernel input frames) of a corpus."""
-    from python_rasterstats_spark.operators.zonal import cover_dict, dataset_meta
+    from python_rasterstats_spark.operators.zonal import (
+        cover_dict, dataset_meta, zone_windows,
+    )
 
     meta = dataset_meta(
         pq.read_table(os.path.join(corpus_dir, "datasets.parquet")).to_pylist()
@@ -79,7 +81,7 @@ def load(corpus_dir: str, dataset: str):
     z = pq.read_table(os.path.join(corpus_dir, "zones.parquet"),
                       columns=["zone_id", "geometry_wkb"]).to_pydict()
     geoms = {(zid, dataset): w for zid, w in zip(z["zone_id"], z["geometry_wkb"])}
-    cover = cover_dict(geoms, meta)
+    cover = cover_dict(zone_windows(geoms, meta), meta)
     if isinstance(cover, str):
         raise SystemExit(cover)
     tiles = pq.read_table(

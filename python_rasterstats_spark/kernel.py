@@ -545,11 +545,18 @@ def partial_stats(
     int_sum: bool | None = None,
     *,
     masks: tuple | None = None,
+    wire: bool = False,
 ):
     """Partial aggregation state for one (zone, tile) pixel block.
 
     ``values``: 2D pixel block; ``cover``: boolean mask of same shape.
-    Returns a dict of merge-able scalars + optional (vals, cnts) arrays.
+    Returns a dict of merge-able scalars + optional (vals, cnts) arrays
+    ``vc_vals``/``vc_cnts``: the block's sorted distinct values and their
+    counts (float64/int64). With ``wire`` (the partial kernel, which ships
+    them) they take the smaller wire form instead (wire_vc): when the
+    block's n valid values hold u distinct ones and n ≤ 2u, the sorted
+    values in the raster's dtype with EMPTY counts ("one each"), else
+    the pairs. One sort serves either form.
     Mirrors the mask construction of reference main.py:196-208 and the
     nodata/nan accounting of main.py:294-302. With ``sketch_px`` set,
     partials larger than that many valid pixels emit a ≤sketch_px-point
@@ -606,18 +613,44 @@ def partial_stats(
         if sketch_px is not None and n > sketch_px:
             out["vc_vals"], out["vc_cnts"] = sketch_values(v64, sketch_px)
         else:
-            uvals, ucnts = np.unique(vals, return_counts=True)
-            out["vc_vals"] = uvals.astype(np.float64, copy=False)
-            out["vc_cnts"] = ucnts.astype(np.int64)
-            # all-distinct block (continuous data): the counts are all 1s —
-            # callers that understand the convention (merged_stats) read an
-            # EMPTY counts array as "one each", saving a third of the
-            # holistic shuffle bytes
-            out["vc_ones"] = bool(ucnts.size and ucnts[-1] == 1 and ucnts.max() == 1)
+            # one sort in the native dtype; the run lengths give the pairs
+            run = np.sort(vals)
+            # wire_vc's rule, decided from the distinct count alone so a
+            # near-distinct block never builds the pairs it does not ship
+            if wire and n <= 2 * (1 + np.count_nonzero(run[1:] != run[:-1])):
+                out["vc_vals"], out["vc_cnts"] = run, np.empty(0, dtype=np.int64)
+            else:
+                uvals, out["vc_cnts"] = run_counts(run)
+                out["vc_vals"] = uvals.astype(np.float64, copy=False)
     else:
         out["vc_vals"] = np.empty(0, dtype=np.float64)
         out["vc_cnts"] = np.empty(0, dtype=np.int64)
     return out
+
+
+def run_counts(run: np.ndarray, weights: np.ndarray | None = None):
+    """(distinct values, counts) of a SORTED 1-D array: the run-length
+    half of np.unique(return_counts=True), whose sort the caller already
+    did. With ``weights`` (aligned with ``run``) each run's count is the
+    sum of its weights instead of its length."""
+    if run.size == 0:
+        return run, np.empty(0, dtype=np.int64)
+    starts = np.flatnonzero(np.concatenate(([True], run[1:] != run[:-1])))
+    if weights is None:
+        return run[starts], np.diff(np.append(starts, run.size))
+    return run[starts], np.add.reduceat(weights, starts)
+
+
+def wire_vc(vals: np.ndarray, cnts: np.ndarray):
+    """The smaller wire form of a sorted (distinct values, counts) pair
+    holding n values, u of them distinct: the sorted multiset with EMPTY
+    counts ("one each") when n ≤ 2u — a continuous raster's block, where
+    the counts would be nearly all ones — else the pairs themselves (an
+    integer raster's heavy duplicates). Both forms cost the same bytes at
+    n = 2u in either wire (float32 + int32, float64 + int64)."""
+    if int(cnts.sum()) > 2 * vals.size:
+        return vals, cnts
+    return np.repeat(vals, cnts), np.empty(0, dtype=np.int64)
 
 
 def sketch_weighted(vals: np.ndarray, cnts: np.ndarray, S: int):
@@ -645,11 +678,8 @@ def sketch_weighted(vals: np.ndarray, cnts: np.ndarray, S: int):
     # rank r lives in the first point whose cumulative count exceeds it
     idx = np.minimum(np.searchsorted(cum, mids, side="right"), vals.size - 1)
     idx[0], idx[-1] = 0, vals.size - 1
-    pts = vals[idx]
-    u, inv = np.unique(pts, return_inverse=True)
-    m = np.zeros(len(u), dtype=np.int64)
-    np.add.at(m, inv, w)
-    return u, m
+    # idx never decreases, so the points are sorted: sum each run's weights
+    return run_counts(vals[idx], w)
 
 
 def sketch_values(vals: np.ndarray, S: int):
@@ -658,19 +688,24 @@ def sketch_values(vals: np.ndarray, S: int):
     return sketch_weighted(vals, np.ones(vals.size, dtype=np.int64), S)
 
 
-def weighted_percentile(values: np.ndarray, counts: np.ndarray, q: float) -> float:
+def weighted_percentile(
+    values: np.ndarray, counts: np.ndarray, q: float, cum: np.ndarray | None = None
+) -> float:
     """Exact np.percentile (linear interpolation) over (value, count) pairs.
 
     ``values`` must be sorted ascending. Matches
     ``np.percentile(np.repeat(values, counts), q)`` (reference: main.py:289-292).
+    ``cum`` is ``np.cumsum(counts)`` when the caller already has it: a
+    zone's median and percentiles share one.
     """
-    n = int(counts.sum())
+    if cum is None:
+        cum = np.cumsum(counts)
+    n = int(cum[-1]) if cum.size else 0
     if n == 0:
         raise ValueError("empty")
     target = q / 100.0 * (n - 1)
     k = int(math.floor(target))
     frac = target - k
-    cum = np.cumsum(counts)
     lo = values[np.searchsorted(cum, k, side="right")]
     if frac == 0.0:
         return float(lo)
@@ -689,14 +724,17 @@ def finalize_stats(
     """Final per-zone stats from merged partial state (reference: main.py:230-302).
 
     ``merged`` keys: count, sum, sumsq, min, max, nodata_count, nan_count,
-    vc_vals (sorted ascending), vc_cnts. Returns a plain dict with the
-    reference's value conventions (count int, floats elsewhere, None fills,
-    count=0 for empty zones).
+    vc_vals (sorted ascending), vc_cnts — either wire form (wire_vc): the
+    distinct values and their counts, or the sorted multiset with empty
+    counts. Returns a plain dict with the reference's value conventions
+    (count int, floats elsewhere, None fills, count=0 for empty zones).
     """
     n = int(merged["count"])
     out: dict = {}
     vc_vals = np.asarray(merged.get("vc_vals", ()), dtype=np.float64)
     vc_cnts = np.asarray(merged.get("vc_cnts", ()), dtype=np.int64)
+    if vc_vals.size and not vc_cnts.size:  # "one each": a sorted multiset
+        vc_vals, vc_cnts = run_counts(vc_vals)
 
     if n == 0:
         out = {stat: None for stat in stats}
@@ -736,8 +774,9 @@ def finalize_stats(
             fmean = merged["sum"] / n
             var = merged["sumsq"] / n - fmean * fmean  # population (ddof=0)
             out["std"] = float(math.sqrt(max(var, 0.0)))
+        cum = np.cumsum(vc_cnts)  # shared by the median and every percentile
         if "median" in stats:
-            out["median"] = weighted_percentile(vc_vals, vc_cnts, 50.0)
+            out["median"] = weighted_percentile(vc_vals, vc_cnts, 50.0, cum)
         if "majority" in stats:
             # vc_vals sorted ascending ⇒ argmax picks smallest value on ties,
             # matching np.unique order + first-match (main.py:272-273,
@@ -751,7 +790,7 @@ def finalize_stats(
             out["range"] = float(merged["max"]) - float(merged["min"])
         for pctile in [s for s in stats if s.startswith("percentile_")]:
             q = get_percentile(pctile)
-            out[pctile] = weighted_percentile(vc_vals, vc_cnts, q)
+            out[pctile] = weighted_percentile(vc_vals, vc_cnts, q, cum)
 
     if "nodata" in stats:
         out["nodata"] = float(merged["nodata_count"])

@@ -26,6 +26,13 @@ intersection index from metadata, then make one pass over the raster):
          majority/minority/unique/value_counts) over each Arrow batch's
          complete groups — as the optional salted pre-merge (re-sketched
          for continuous rasters) and as the final merge           [A7-A15]
+         The value-count wire has two forms, whichever is smaller for a
+         block of n valid values holding u distinct ones (kernel.wire_vc):
+         n ≤ 2u (continuous rasters) ships the block's sorted values with
+         EMPTY counts ("one each"), else its (distinct value, count)
+         pairs. The kernel sorts each block once for both; a zone whose
+         partials are all sorted multisets merges with one plain sort,
+         and its median and percentiles share one cumsum.
                                    │
                                    ▼ broadcast join back to zones      [J2]
                      final projection w/ empty-zone semantics          [A17]
@@ -1143,7 +1150,7 @@ def partial_generator(
         """Append one zone's partial row for one block; False if empty."""
         if zone_func is None:
             p = K.partial_stats(block, rv, nd, want_counts, sketch_px=sketch_px,
-                                int_sum=int_sum, masks=(bnd, bnan))
+                                int_sum=int_sum, masks=(bnd, bnan), wire=True)
         if zone_func is not None or user_partials:
             # the user fn may write into its array: give it a copy, never
             # a view of the tile the next zone reads
@@ -1162,7 +1169,7 @@ def partial_generator(
             tblock = np.ma.filled(masked.astype(np.float64), np.nan)
             cover2 = ~np.ma.getmaskarray(masked)
             p = K.partial_stats(tblock, cover2, None, want_counts,
-                                sketch_px=sketch_px)
+                                sketch_px=sketch_px, wire=True)
             p["nodata_count"] = int(np.count_nonzero((block == nd) & rv))
             p["nan_count"] = (0 if bnan is None
                               else int(np.count_nonzero(bnan & rv)))
@@ -1430,17 +1437,15 @@ def _append_partial(rows: dict, p: dict, compact_vc: bool) -> None:
     rows["max"].append(p["max"])
     rows["nodata_count"].append(p["nodata_count"])
     rows["nan_count"].append(p["nan_count"])
+    # either wire form (kernel.partial_stats(wire=True))
+    vals, cnts = p["vc_vals"], p["vc_cnts"]
     if compact_vc:
-        rows["vc_vals"].append(
-            p["vc_vals"].astype(np.float32, copy=False).tobytes()
-        )
-        rows["vc_cnts"].append(
-            b"" if p.get("vc_ones")
-            else p["vc_cnts"].astype(np.int32, copy=False).tobytes()
-        )
+        # a float32 raster's sorted block goes to bytes in its own dtype
+        rows["vc_vals"].append(vals.astype(np.float32, copy=False).tobytes())
+        rows["vc_cnts"].append(cnts.astype(np.int32, copy=False).tobytes())
     else:
-        rows["vc_vals"].append(p["vc_vals"])
-        rows["vc_cnts"].append(p["vc_cnts"])
+        rows["vc_vals"].append(vals.astype(np.float64, copy=False))
+        rows["vc_cnts"].append(cnts)
 
 
 # ---------------------------------------------------------------------------
@@ -1475,52 +1480,44 @@ def _merged_schema(
     return T.StructType(fields)
 
 
-def _row_vc(v, c):
-    """One partial's (values, counts) in float64/int64, whatever the wire
-    format: double/long arrays (default), float32/int32 binary blobs
-    (compact), and empty counts meaning "one each" (all-distinct blocks)."""
-    if isinstance(v, (bytes, bytearray)):
-        vals = np.frombuffer(v, dtype=np.float32).astype(np.float64)
-    else:
-        vals = np.asarray(v, dtype=np.float64)
+def _row_counts(v, c):
+    """One partial's counts as int64, whatever the wire: double/long
+    arrays (default) or float32/int32 binary blobs (compact), each in
+    either form of kernel.wire_vc — sorted distinct values with their
+    counts, or a sorted multiset with EMPTY counts meaning "one each"
+    (n ≤ 2u: continuous-raster blocks)."""
     if c is None or len(c) == 0:
-        cnts = np.ones(vals.size, dtype=np.int64)
-    elif isinstance(c, (bytes, bytearray)):
-        cnts = np.frombuffer(c, dtype=np.int32).astype(np.int64)
-    else:
-        cnts = np.asarray(c, dtype=np.int64)
-    return vals, cnts
+        n = len(v) // 4 if isinstance(v, (bytes, bytearray)) else len(v)
+        return np.ones(n, dtype=np.int64)
+    if isinstance(c, (bytes, bytearray)):
+        return np.frombuffer(c, dtype=np.int32).astype(np.int64)
+    return np.asarray(c, dtype=np.int64)
 
 
 def _merge_vc_arrays(vlist, clist):
-    """Merge per-partial (vals, cnts) sequences into one sorted unique
-    (values, counts) pair. Two fast paths for the dominant wire shapes:
-    compact float32 blobs concatenate as ONE buffer (a single frombuffer +
-    astype instead of one per partial), and when every partial's counts
-    are implicit ones (all-distinct blocks — the continuous-raster case)
-    the merged counts are just np.unique's return_counts, skipping the
-    big ones array and the scatter-add. Identical values either way."""
+    """Merge per-partial (vals, cnts) sequences, in either wire form
+    (_row_counts), into one sorted distinct (values, counts) pair. Compact
+    float32 blobs concatenate as ONE buffer (a single frombuffer instead
+    of one per partial), and the sort runs in the float32 domain
+    (float32→float64 is injective and order-preserving, so the grouping
+    is identical) over half the bytes; only the much smaller distinct
+    array is widened to float64 for the percentile math. When every
+    partial is a multiset ("one each" — the continuous-raster case) the
+    merge is one sort and its run lengths; a mix of forms sorts the
+    values with their counts (argsort) and sums each run's counts."""
     if all(isinstance(v, (bytes, bytearray)) for v in vlist):
-        # unique in the float32 domain (float32→float64 is injective and
-        # order-preserving, so the grouping is identical) — the sort runs
-        # over half the bytes; only the much smaller unique array is
-        # widened to float64 for the downstream percentile math
         vals = np.frombuffer(b"".join(vlist), dtype=np.float32)
     else:
         vals = np.concatenate(
-            [_row_vc(v, None)[0] for v in vlist] or [np.empty(0)]
+            [np.asarray(v, dtype=np.float64) for v in vlist] or [np.empty(0)]
         )
     if all(c is None or len(c) == 0 for c in clist):
-        u, cnt = np.unique(vals, return_counts=True)
-        return u.astype(np.float64), cnt.astype(np.int64, copy=False)
-    cnts = np.concatenate(
-        [_row_vc(v, c)[1] for v, c in zip(vlist, clist)]
-        or [np.empty(0, dtype=np.int64)]
-    )
-    u, inv = np.unique(vals, return_inverse=True)
-    merged = np.zeros(len(u), dtype=np.int64)
-    np.add.at(merged, inv, cnts)
-    return u.astype(np.float64), merged
+        u, cnt = K.run_counts(np.sort(vals))
+    else:
+        cnts = np.concatenate([_row_counts(v, c) for v, c in zip(vlist, clist)])
+        order = np.argsort(vals, kind="stable")
+        u, cnt = K.run_counts(vals[order], cnts[order])
+    return u.astype(np.float64), cnt
 
 
 def fold_partials(
@@ -1596,11 +1593,13 @@ def fold_partials(
         if not finalize:
             if recompress_px:
                 vals, cnts = K.sketch_weighted(vals, cnts, recompress_px)
+            vals, cnts = K.wire_vc(vals, cnts)
             out["vc_vals"].append(vals)
             out["vc_cnts"].append(cnts)
         elif vals.size:
+            cum = np.cumsum(cnts)  # shared by the median and every percentile
             for name, q in quantiles:
-                out[name].append(K.weighted_percentile(vals, cnts, q))
+                out[name].append(K.weighted_percentile(vals, cnts, q, cum))
             out["majority"].append(float(vals[int(np.argmax(cnts))]))
             out["minority"].append(float(vals[int(np.argmin(cnts))]))
             out["unique"].append(int(vals.size))

@@ -4,6 +4,7 @@ merge in both regimes, and zonal_result is shared by zonal_stats_df, the
 checkpointed jobs and the incremental state."""
 
 import math
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -11,6 +12,8 @@ import pytest
 
 from python_rasterstats_spark import geom as G
 from python_rasterstats_spark import kernel as K
+from python_rasterstats_spark.codecs import encode_tile
+from python_rasterstats_spark.operators import zonal as Z
 from python_rasterstats_spark.operators.zonal import (
     fold_partials, fold_sorted_batches, zonal_stats_df,
 )
@@ -57,6 +60,40 @@ def _partials_frame():
         row(3, 1, 2.0, 2, 2.0, 2.0, 0, [2], [1], 4.0),
     ]
     return pd.DataFrame(rows)
+
+
+def _near_distinct_frame(seed=4):
+    """_partials_frame's rows with float32 value multisets in the kernel's
+    wire form (kernel.wire_vc): mostly distinct values, a few duplicates
+    within a partial and across a zone's partials."""
+    rng = np.random.default_rng(seed)
+    pdf = _partials_frame()
+    shared = rng.normal(size=4).astype(np.float32)
+    vals, cnts, count = [], [], []
+    for zid, n in zip(pdf["zone_id"], pdf["count"]):
+        run = np.empty(0, dtype=np.float32)
+        if n:
+            run = rng.normal(size=4 * n).astype(np.float32)
+            run[:2] = run[2]  # a duplicate inside the block
+            run[3] = shared[zid % 4]  # and one shared by the zone's blocks
+            run.sort()
+        v, c = K.wire_vc(*K.run_counts(run))
+        vals.append(v.astype(np.float64))
+        cnts.append(c)
+        count.append(run.size)
+    return pdf.assign(vc_vals=vals, vc_cnts=cnts, count=count)
+
+
+def _assert_wire_rule(states: pd.DataFrame):
+    """Merged value-count states take the smaller wire form: a sorted
+    multiset with empty counts when n ≤ 2u, else distinct values with
+    counts."""
+    for v, c in zip(states["vc_vals"], states["vc_cnts"]):
+        assert np.all(np.diff(v) >= 0)
+        if len(c):
+            assert np.all(np.diff(v) > 0) and c.sum() > 2 * len(v)
+        else:
+            assert len(v) <= 2 * len(np.unique(v))
 
 
 def _assert_frames_equal(a: pd.DataFrame, b: pd.DataFrame):
@@ -144,23 +181,151 @@ def test_fold_many_groups_equals_one_group_per_call(finalize):
     (("zone_id", "_salt"), [2, 2, 5]),
 ])
 def test_sorted_batches_fold_equals_one_fold(finalize, keys, cuts):
-    pdf = _partials_frame().assign(_salt=[0, 1, 0, 0, 1, 1, 0])
-    pdf = pdf.sort_values(list(keys), kind="stable", ignore_index=True)
-    edges = [0, *cuts, len(pdf)]
-    frames = [pdf.iloc[a:b] for a, b in zip(edges, edges[1:])]
     kw = dict(finalize=finalize, pctiles=["percentile_10"], want_vc=True,
               user_merges=USER)
-    out = list(fold_sorted_batches(iter(frames), keys, **kw))
-    assert all(len(o) for o in out)
-    _assert_frames_equal(
-        pd.concat(out, ignore_index=True), fold_partials(pdf, keys, **kw)
-    )
+    for data in (_partials_frame(), _near_distinct_frame()):
+        pdf = data.assign(_salt=[0, 1, 0, 0, 1, 1, 0])
+        pdf = pdf.sort_values(list(keys), kind="stable", ignore_index=True)
+        edges = [0, *cuts, len(pdf)]
+        frames = [pdf.iloc[a:b] for a, b in zip(edges, edges[1:])]
+        out = list(fold_sorted_batches(iter(frames), keys, **kw))
+        assert all(len(o) for o in out)
+        whole = fold_partials(pdf, keys, **kw)
+        _assert_frames_equal(pd.concat(out, ignore_index=True), whole)
+        if not finalize:
+            _assert_wire_rule(whole)
 
 
 def test_sorted_batches_fold_of_nothing():
     empty = _partials_frame().iloc[:0]
     assert list(fold_sorted_batches(iter([]), ("zone_id",), finalize=True)) == []
     assert list(fold_sorted_batches(iter([empty]), ("zone_id",), finalize=True)) == []
+
+
+# --------------------------------------------------------------------------
+# the value-count wire: a block's sorted values, or its (value, count) pairs
+# --------------------------------------------------------------------------
+
+def test_continuous_block_ships_its_sorted_values():
+    rng = np.random.default_rng(2)
+    block = rng.normal(size=(9, 7)).astype(np.float32)
+    block[0, :3] = block[4, 4]  # a few duplicates
+    cover = rng.random(block.shape) < 0.8
+    p = K.partial_stats(block, cover, None, True, wire=True)
+    vals, cnts = p["vc_vals"], p["vc_cnts"]
+    assert cnts.size == 0 and vals.dtype == np.float32
+    assert np.array_equal(vals, np.sort(block[cover]))
+    # the oracle and the gather tier still read distinct values + counts
+    p = K.partial_stats(block, cover, None, True)
+    u, c = np.unique(block[cover], return_counts=True)
+    assert np.array_equal(p["vc_vals"], u) and np.array_equal(p["vc_cnts"], c)
+
+
+def test_duplicate_heavy_block_keeps_value_count_pairs():
+    rng = np.random.default_rng(3)
+    block = rng.integers(0, 5, size=(12, 12)).astype(np.int16)
+    p = K.partial_stats(block, np.ones(block.shape, bool), None, True, wire=True)
+    vals, cnts = p["vc_vals"], p["vc_cnts"]
+    u, c = np.unique(block, return_counts=True)
+    assert np.array_equal(vals, u) and np.array_equal(cnts, c)
+    assert cnts.sum() == block.size > 2 * vals.size
+
+
+WIRE_STATS = ["count", "median", "percentile_25", "percentile_90",
+              "majority", "minority", "unique"]
+
+
+def _kernel_rows(arr, meta, tile, zones, compact_vc):
+    """The partial kernel's rows for ``zones`` over ``arr`` cut into
+    ``tile``-px npy tiles."""
+    geoms = {(zid, "t"): G.wkb_dumps(g) for zid, g in zones.items()}
+    keys = [(tc, tr) for tr in range(arr.shape[0] // tile)
+            for tc in range(arr.shape[1] // tile)]
+    gen, _ = Z.partial_generator(
+        meta, cover=SimpleNamespace(value={("t", *k): list(zones) for k in keys}),
+        geoms=SimpleNamespace(value=geoms), all_touched=False,
+        nodata_override=None, want_counts=True, compact_vc=compact_vc,
+    )
+    pdf = pd.DataFrame({
+        "dataset": "t", "tile_col": [k[0] for k in keys],
+        "tile_row": [k[1] for k in keys], "fmt": "npy",
+        "bytes": [encode_tile(arr[tr * tile:(tr + 1) * tile,
+                                  tc * tile:(tc + 1) * tile], "npy")
+                  for tc, tr in keys],
+    })
+    return pd.concat(list(gen(iter([pdf]))), ignore_index=True)
+
+
+@pytest.mark.parametrize("compact_vc", [True, False])
+def test_zone_mixing_both_wire_forms_folds_to_the_oracle(compact_vc):
+    tile = 16
+    rng = np.random.default_rng(9)
+    arr = rng.normal(size=(2 * tile, 2 * tile)).astype(np.float32)
+    arr[:tile, :tile][0, :4] = arr[3, 3]  # continuous, a few duplicates
+    arr[:tile, tile:] = rng.integers(0, 4, size=(tile, tile))  # heavy dups
+    arr[tile:, tile:] = rng.integers(2, 6, size=(tile, tile))
+    arr[tile:, :tile][::3, ::3] = arr[5, 5]  # shared with the first tile
+    arr[tile + 2, 1:6] = ND
+    aff = (1.0, 0.0, 0.0, 0.0, -1.0, float(2 * tile))
+    meta = {"t": {"affine": aff, "height": 2 * tile, "width": 2 * tile,
+                  "tile_w": tile, "tile_h": tile, "nodata": ND, "fmt": "npy",
+                  "band_count": 1, "dtype": "float32"}}
+    zones = {1: G.box(3.0, 3.0, 29.0, 29.0), 2: G.box(1.5, 17.5, 12.0, 30.0),
+             3: G.box(18.0, 18.0, 31.0, 31.0)}
+    rows = _kernel_rows(arr, meta, tile, zones, compact_vc)
+
+    def decode(v, dtype):
+        return np.frombuffer(v, dtype) if isinstance(v, bytes) else np.asarray(v)
+
+    forms = {}
+    for zid, v, c in zip(rows["zone_id"], rows["vc_vals"], rows["vc_cnts"]):
+        v, c = decode(v, np.float32), decode(c, np.int32)
+        assert np.all(np.diff(v) >= 0)
+        if len(c):
+            assert len(c) == len(v) and np.all(np.diff(v) > 0)
+        forms.setdefault(zid, set()).add(bool(len(c)))
+    assert forms[1] == {True, False}  # zone 1 mixes both forms
+    assert forms[2] == {False} and forms[3] == {True}
+
+    got = fold_partials(
+        rows, ("zone_id",), finalize=True,
+        pctiles=["percentile_25", "percentile_90"], want_vc=True,
+    ).set_index("zone_id")
+    for zid, g in zones.items():
+        want = K.zonal_stats_one(g, arr, aff, nodata=ND, stats=WIRE_STATS,
+                                 categorical=True)
+        for s in WIRE_STATS:
+            assert got.loc[zid, s] == want[s], (zid, s)
+        assert got.loc[zid, "value_counts"] == {
+            k: v for k, v in want.items() if not isinstance(k, str)
+        }
+        # kernel.finalize_stats reads the same rows, one by one
+        for _, row in rows[rows["zone_id"] == zid].iterrows():
+            v, c = decode(row["vc_vals"], np.float32), decode(row["vc_cnts"], np.int32)
+            one = K.finalize_stats({**row, "vc_vals": v, "vc_cnts": c}, WIRE_STATS)
+            u, n = np.unique(v, return_counts=True) if not len(c) else (v, c)
+            assert one["unique"] == len(u) and one["count"] == n.sum()
+
+
+def test_majority_picks_the_smallest_value_on_ties():
+    def row(vals, cnts):
+        return dict(zone_id=1, count=int(np.sum(cnts) if len(cnts) else len(vals)),
+                    sum=0.0, sum_i=None, sumsq=0.0, min=0.0, max=9.0,
+                    nodata_count=0, nan_count=0,
+                    vc_vals=np.asarray(vals, np.float64),
+                    vc_cnts=np.asarray(cnts, np.int64))
+
+    # 1.0, 2.0, 5.0 and 6.0 appear three times each, split over both wire
+    # forms; 7.0 and 9.0 once each
+    rows = [row([5.0, 6.0], [3, 2]), row([2.0, 7.0], []),
+            row([1.0, 2.0, 6.0], [2, 2, 1]), row([1.0, 9.0], [])]
+    got = fold_partials(pd.DataFrame(rows), ("zone_id",), finalize=True,
+                        want_vc=True).iloc[0]
+    assert got["value_counts"] == {1.0: 3, 2.0: 3, 5.0: 3, 6.0: 3, 7.0: 1, 9.0: 1}
+    assert got["majority"] == 1.0 and got["minority"] == 7.0
+    rows[3] = row([9.0], [])  # 1.0 drops to two
+    got = fold_partials(pd.DataFrame(rows), ("zone_id",), finalize=True).iloc[0]
+    assert got["majority"] == 2.0 and got["minority"] == 7.0
 
 
 # --------------------------------------------------------------------------

@@ -21,6 +21,13 @@ Prints one JSON line: per request the body's seconds (min over
 ``--repeat`` runs), the partial row count and a SHA-256 over the sorted
 partial rows (every column, floats by their exact bits), so two versions
 of the kernel can be checked for bit-identical output.
+
+Then it replays the merge: ``fold_partials(..., finalize=True)`` over all
+holistic partial rows, sorted by zone, for the benchmark's holistic stats
+(``perfbench.workload.HOLISTIC``), timed the same way. Its entry carries
+the finalized row count and a SHA-256 of the finalized rows. The partial
+digest changes whenever the value-count wire form does; the finalized
+digest must not.
 """
 
 from __future__ import annotations
@@ -102,10 +109,16 @@ def main(argv=None) -> int:
     ap.add_argument("--repeat", type=int, default=3)
     args = ap.parse_args(argv)
 
-    from python_rasterstats_spark.operators.zonal import partial_generator
+    import pandas as pd
+
+    from perfbench.workload import HOLISTIC
+    from python_rasterstats_spark.operators.zonal import (
+        fold_partials, partial_generator,
+    )
 
     meta, geoms, cover, frames = load(args.corpus_dir, args.dataset)
     out = {"tiles": sum(len(f) for f in frames)}
+    partials = {}
     for name, kw in REQUESTS.items():
         times = []
         for _ in range(args.repeat):
@@ -118,9 +131,23 @@ def main(argv=None) -> int:
             parts = list(gen(iter(frames)))
             times.append(time.perf_counter() - t0)
         n, sha = digest(parts)
+        partials[name] = parts
         out[name] = {"seconds": round(min(times), 4),
                      "all_seconds": [round(t, 4) for t in times],
                      "partial_rows": n, "sha256": sha}
+    holistic = pd.concat(partials["holistic"], ignore_index=True).sort_values(
+        "zone_id", kind="stable", ignore_index=True)
+    pctiles = [s for s in HOLISTIC if s.startswith("percentile_")]
+    times = []
+    for _ in range(args.repeat):
+        t0 = time.perf_counter()
+        merged = fold_partials(holistic, ("zone_id",), finalize=True,
+                               pctiles=pctiles)
+        times.append(time.perf_counter() - t0)
+    n, sha = digest([merged])
+    out["merge"] = {"seconds": round(min(times), 4),
+                    "all_seconds": [round(t, 4) for t in times],
+                    "zones": n, "sha256": sha}
     print(json.dumps(out))
     return 0
 

@@ -552,7 +552,7 @@ def q_zonal_qk_part_prune(spark, sf_dir):
     write_quadkey_partitioned_tiles (qk_prefix directories + quadkey-
     sorted, sized row groups), so the scan prunes at THREE levels —
     directory listing (PartitionFilters on qk_prefix), row-group min-max
-    (quadkey), residual row filter. Pruning is a strict superset filter,
+    and bloom filter (quadkey), residual row filter. Pruning is a strict superset filter,
     so the answer equals zonal_default — shared oracle."""
     import tempfile
 
@@ -1026,9 +1026,10 @@ def q_ann_ivf(spark, sf_dir):
 def q_zonal_qk_prune(spark, sf_dir):
     """Quadkey-range scan pruning gate (r4): the tile table carries a
     quadkey column (sources/tables.with_quadkey — the quadkey-sorted
-    storage layout), so zonal_stats_df pushes PER-ZONE 1-D quadkey range
-    sets to the parquet scan instead of bbox rectangles
-    (operators/zonal.quadkey_prune_ranges). Pruning is a strict superset
+    storage layout), so zonal_stats_df pushes a quadkey predicate to the
+    parquet scan instead of bbox rectangles — a sparse zone set's exact
+    key set, else quadkey ranges (operators/zonal.tile_prune_filter).
+    Pruning is a strict superset
     filter, so the answer equals zonal_default — shared oracle."""
     from python_rasterstats_spark.fixtures import ensure_fixtures
     from python_rasterstats_spark.operators.zonal import zonal_stats_df

@@ -5,7 +5,9 @@ tile-driven Spark plan (Raptor, VLDB 2019: build the vector↔raster
 intersection index from metadata, then make one pass over the raster):
 
     zones ──driver──▶ cover index {(dataset, tile_col, tile_row): zones}
-                      + scan prune predicate (tile-key / quadkey ranges)
+                      + scan prune predicate (tile-key rects; on quadkey-
+                        sorted storage a sparse set's exact quadkey set,
+                        else quadkey ranges — tile_prune_filter)
                                    │ broadcast (SMJ regime: cover cells
                                    │ grouped per tile key, joined to tiles)
     tiles ──pruned scan────────────┤ [+ NULL-payload rows for cover keys
@@ -374,9 +376,59 @@ def _merge_ranges(ranges: list, max_ranges: int) -> list:
 # everything anyway, so only the predicate overhead would remain)
 _DENSE_FRAC = 0.5
 
+# most tile keys per dataset a sparse quadkey working set is pushed as
+# (its exact key set); a larger one keeps its ≤ max_ranges ranges.
+# Building, parsing and probing the set grow with its keys, the compile
+# it saves does not. Scattered draws over the sf0.1 sorted table (4
+# vCPUs, 8 paired draws each), key set vs the ranges-or-union choice
+# without it: 178 keys −17%, 523 keys −10%, 1,365 keys +1%, 1,654 keys
+# +5%.
+_MAX_KEYS = 1024
+
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
+
+
+def _quadkey_ranges(rects: list, level: int, max_ranges: int):
+    """Merged level-``level`` quadkey ranges (≤ ``max_ranges``) covering
+    the tile ``rects`` of one dataset, or None when its grid overflows
+    the level (quadkey_prune_ranges)."""
+    grid = 1 << level
+    if any(r[1] >= grid or r[3] >= grid for r in rects):
+        # a grid wider than 2^level tiles overflows the Morton code
+        # (with_quadkey drops the high bits, so distant tiles SHARE
+        # codes); covering only the in-level window would silently
+        # EXCLUDE real tiles — and so would ANY finite key list if
+        # storage was written at a HIGHER level than assumed here
+        # (stored codes can exceed 4^level - 1). Emit the None
+        # sentinel = no quadkey constraint at all for this dataset
+        # (superset-safe: its scan keeps only the dataset clause)
+        return None
+    # bound driver work for huge zone sets: past 4×max_ranges rects
+    # the final cap collapses most ranges anyway, so coalesce rects
+    # first (superset-safe) instead of covering 10⁵ rects one by one
+    ranges: list = []
+    for tc0, tc1, tr0, tr1 in _coalesce_rects(rects, 4 * max_ranges):
+        ranges.extend(_quad_cover_ranges(tc0, tc1, tr0, tr1, level))
+    return _merge_ranges(ranges, max_ranges)
+
+
+def _quadkey_set(rects: list, cap: int):
+    """Sorted quadkeys of every tile of ``rects``, or None past ``cap``
+    distinct keys (checked per rect, so a huge zone costs no more)."""
+    keys: set = set()
+    for tc0, tc1, tr0, tr1 in rects:
+        if (tc1 - tc0 + 1) * (tr1 - tr0 + 1) > cap:
+            return None
+        keys.update(
+            K.quadkey(c, r)
+            for c in range(tc0, tc1 + 1)
+            for r in range(tr0, tr1 + 1)
+        )
+        if len(keys) > cap:
+            return None
+    return sorted(keys)
 
 
 def quadkey_prune_ranges(
@@ -390,32 +442,16 @@ def quadkey_prune_ranges(
     """Per-dataset quadkey range sets covering the tile window of every
     zone of ``windows`` (zone_windows): ``{dataset: [(lo, hi), ...]}``
     over the level-``level`` Morton code (sources/tables.with_quadkey
-    layout: col bits even, row bits odd).
+    layout: col bits even, row bits odd), or ``{dataset: None}`` when
+    the dataset's grid overflows the level.
     Ranges are merged and capped at ``max_ranges`` per dataset by
     coalescing across the smallest gaps (superset-safe)."""
-    out = {}
-    grid = 1 << level
-    for ds, rects in _zone_tile_rects(windows, meta, pad_tiles=pad_tiles).items():
-        if any(r[1] >= grid or r[3] >= grid for r in rects):
-            # a grid wider than 2^level tiles overflows the Morton code
-            # (with_quadkey drops the high bits, so distant tiles SHARE
-            # codes); covering only the in-level window would silently
-            # EXCLUDE real tiles — and so would ANY finite BETWEEN list
-            # if storage was written at a HIGHER level than assumed here
-            # (stored codes can exceed 4^level - 1). Emit the None
-            # sentinel = no quadkey constraint at all for this dataset
-            # (superset-safe: its scan keeps only the dataset clause)
-            out[ds] = None
-            continue
-        # bound driver work for huge zone sets: past 4×max_ranges rects
-        # the final cap collapses most ranges anyway, so coalesce rects
-        # first (superset-safe) instead of covering 10⁵ rects one by one
-        rects = _coalesce_rects(rects, 4 * max_ranges)
-        ranges: list = []
-        for tc0, tc1, tr0, tr1 in rects:
-            ranges.extend(_quad_cover_ranges(tc0, tc1, tr0, tr1, level))
-        out[ds] = _merge_ranges(ranges, max_ranges)
-    return out
+    return {
+        ds: _quadkey_ranges(rects, level, max_ranges)
+        for ds, rects in _zone_tile_rects(
+            windows, meta, pad_tiles=pad_tiles
+        ).items()
+    }
 
 
 def tile_prune_filter(
@@ -447,11 +483,30 @@ def tile_prune_filter(
       unlike the old single union bbox, sparse scattered zone sets keep
       per-zone granularity until ``max_ranges`` rects, then coalesce
       Morton-ordered neighbors (still far tighter than one planet bbox).
-    - ``quadkey_col='quadkey'`` (quadkey-sorted/Iceberg-style storage):
-      per-zone quad-tree cover → ≤ ``max_ranges`` 1-D quadkey ranges per
-      dataset. Because the corpus is SORTED by quadkey, each range maps
-      to a contiguous run of row groups / files, so parquet min-max stats
-      skip everything else — the reference's per-feature windowed read
+    - ``quadkey_col='quadkey'`` (quadkey-sorted/Iceberg-style storage),
+      per dataset, one of:
+
+      - a sparse working set of ≤ _MAX_KEYS tiles: its EXACT tile-key
+        set, ``quadkey IN (...)``. Spark makes an IN list of more than
+        10 values an ``InSet`` whose generated code references its key
+        set instead of inlining it, so a fresh zone set reuses the
+        compiled filter (a BETWEEN list inlines its literals: two Janino
+        compiles per fresh query). The residual filter passes exactly
+        the cover keys to the kernel. Parquet's ``In`` skips a row group
+        by the set's min and max and, per key, by the column's
+        dictionary or bloom filter (sources/tables.
+        write_quadkey_sorted_tiles writes one); the page index prunes by
+        min and max only. A set of ≤10 keys stays an ``In`` with inlined
+        literals and still compiles per query.
+      - a dense one (coverage > _DENSE_FRAC of its span): its one
+        union range. A key set that large costs more to build, parse
+        and probe than the compile it saves (the 2,008-zone sf0.1 set,
+        2,177 keys, as a key set: scalar +1%, holistic +11%).
+      - otherwise: the per-zone quad-tree cover, ≤ ``max_ranges`` 1-D
+        quadkey ranges; on sorted storage each maps to a contiguous run
+        of row groups that min-max stats admit.
+
+      The reference analog is the per-feature windowed read
       (io.py:292-362) done at storage level.
     """
     # Predicates are built as ONE SQL string handed to F.expr: composing
@@ -463,29 +518,32 @@ def tile_prune_filter(
     # (coverage > _DENSE_FRAC of the union) — sparse scattered zones keep
     # full per-zone granularity, dense corpora keep the r3-cheap plan.
     parts = []
+    rects_by_ds = _zone_tile_rects(windows, meta, pad_tiles=pad_tiles)
     if quadkey_col is not None:
-        by_ds = quadkey_prune_ranges(
-            windows, meta, level=quadkey_level, pad_tiles=pad_tiles,
-            max_ranges=max_ranges,
-        )
-        for ds, ranges in by_ds.items():
+        for ds, rects in rects_by_ds.items():
+            ranges = _quadkey_ranges(rects, quadkey_level, max_ranges)
             if ranges is None:
                 # Morton overflow (grid wider than 2^quadkey_level):
-                # stored codes may exceed any range this level can
+                # stored codes may exceed any key this level can
                 # express — keep only the dataset clause (unpruned scan
                 # for this dataset, never a wrong one)
                 parts.append(f"(dataset = {_sql_str(ds)})")
                 continue
-            if not ranges:
-                continue
             span = ranges[-1][1] - ranges[0][0] + 1
             cov = sum(hi - lo + 1 for lo, hi in ranges)
+            keys = None
             if len(ranges) > 1 and cov > _DENSE_FRAC * span:
                 ranges = [(ranges[0][0], ranges[-1][1])]
-            rng = " OR ".join(
-                f"{quadkey_col} BETWEEN {lo} AND {hi}" for lo, hi in ranges
-            )
-            clause = f"dataset = {_sql_str(ds)} AND ({rng})"
+            else:
+                keys = _quadkey_set(rects, _MAX_KEYS)
+            if keys is not None:
+                inlist = ", ".join(map(str, keys))
+                clause = f"dataset = {_sql_str(ds)} AND {quadkey_col} IN ({inlist})"
+            else:
+                rng = " OR ".join(
+                    f"{quadkey_col} BETWEEN {lo} AND {hi}" for lo, hi in ranges
+                )
+                clause = f"dataset = {_sql_str(ds)} AND ({rng})"
             if prefix_col is not None:
                 # partitioned storage: an IN-list over the quad-prefix
                 # partition column prunes whole DIRECTORIES at listing
@@ -495,20 +553,19 @@ def tile_prune_filter(
                 from ..sources.tables import dataset_prefix_shifts
 
                 shift = dataset_prefix_shifts(meta)[ds]
-                prefixes = sorted(
-                    {
+                if keys is not None:
+                    prefixes = {k >> shift for k in keys}
+                else:
+                    prefixes = {
                         p
                         for lo, hi in ranges
                         for p in range(lo >> shift, (hi >> shift) + 1)
                     }
-                )
-                inlist = ", ".join(str(p) for p in prefixes)
+                inlist = ", ".join(map(str, sorted(prefixes)))
                 clause += f" AND {prefix_col} IN ({inlist})"
             parts.append(f"({clause})")
     else:
-        for ds, rects in _zone_tile_rects(
-            windows, meta, pad_tiles=pad_tiles
-        ).items():
+        for ds, rects in rects_by_ds.items():
             rects = _coalesce_rects(rects, max_ranges)
             if not rects:
                 continue
@@ -1404,7 +1461,7 @@ def broadcast_kernel_input(
     """The broadcast regime's front half: (kernel input, cover) of a
     tile-driven kernel over the zones of ``windows`` (zone_windows). The
     tile scan is pruned to their working set (``prune_tiles``:
-    tile_prune_filter, quadkey ranges when ``tiles`` has a quadkey
+    tile_prune_filter, a quadkey predicate when ``tiles`` has a quadkey
     column), each tile key's covering zones are broadcast as a dict
     (broadcast_cover_cells), and ``fill_missing`` (boundless reads) keeps
     the cover keys beyond the grid and adds a NULL-payload row per cover

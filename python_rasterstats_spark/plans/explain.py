@@ -25,6 +25,30 @@ def plan_summary(df: DataFrame) -> dict:
     }
 
 
+def scan_output_rows(df: DataFrame, column: str = "bytes") -> int:
+    """Rows the parquet scans reading ``column`` output in ``df``'s
+    executed plan (their ``numOutputRows`` metric, so run the plan
+    first), through AQE and query-stage wrappers: what row-group and
+    page skipping let through, before any row filter."""
+    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        plan = stack.pop()
+        cls = plan.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(plan.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(plan.plan())
+            continue
+        if cls == "FileSourceScanExec" and column in list(
+            plan.requiredSchema().fieldNames()
+        ):
+            total += plan.metrics().apply("numOutputRows").value()
+        children = plan.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return total
+
+
 def _names(s: str) -> list:
     return re.findall(r"([A-Za-z_]\w*)#\d+", s)
 

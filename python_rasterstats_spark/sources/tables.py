@@ -129,7 +129,7 @@ def with_quadkey(
     dataset); a wider grid wraps the code (high bits dropped) — sorting
     stays deterministic and the pruning predicate detects the overflow
     and falls back to an unpruned scan for that dataset
-    (operators/zonal.quadkey_prune_ranges), so results are never wrong,
+    (operators/zonal.tile_prune_filter), so results are never wrong,
     only unpruned. Raise ``level`` (≤31) for wider grids."""
     qk = None
     for k in range(level):
@@ -146,45 +146,82 @@ def with_quadkey(
     return tiles.withColumn(out, qk)
 
 
-def write_quadkey_sorted_tiles(
-    tiles: DataFrame,
-    path: str,
-    *,
-    level: int = 16,
-    files: int | None = None,
-    row_group_bytes: int = 8 << 20,
-) -> None:
-    """Persist the tile table range-partitioned + sorted by (dataset,
-    quadkey) — the storage layout that makes PER-ZONE scan pruning
-    (operators/zonal.quadkey_prune_ranges) effective: each zone's ≤64
-    1-D quadkey ranges map to contiguous runs of row groups/files, so a
-    sparse zone set over a planet-sized corpus reads only its working
-    set. On a real warehouse this is Iceberg's sort-order/partition
-    transform on the Morton key; plain parquet gets the same row-group
-    min-max skipping from the sort alone.
+def _tile_payload_bytes(tiles: DataFrame) -> int:
+    """Payload bytes of the table's first tile: the writers' estimate of
+    a row's size when they size the quadkey bloom filter (a later tile
+    that is larger only lowers the filter's false-positive rate; one that
+    is smaller raises it, and a false positive only admits a row group)."""
+    row = tiles.select(F.length("bytes")).first()
+    return (row[0] or 1) if row else 1
 
-    ``row_group_bytes`` caps the parquet row-group size (default 8 MiB vs
-    parquet's 128 MiB default): the row group is the min-max skipping
-    granule, so with payload-bearing tile rows the default would make
-    every admitted group drag ~128 MiB of neighbors along — the r4 audit
-    measured 36 MiB/group costing 2.25× the bytes the per-zone rect
-    predicate reads; 8 MiB groups put sorted storage BELOW it (BENCH.md
-    sparse-zone table). The reference analog is the per-feature windowed
-    read (io.py:292-362): read the window, not the strip it lives in."""
-    n = files or tiles.sparkSession.sparkContext.defaultParallelism
-    (
-        with_quadkey(tiles, level=level)
-        .repartitionByRange(n, "dataset", "quadkey")
-        .sortWithinPartitions("dataset", "quadkey")
-        .write.mode("overwrite")
+
+# false-positive rate of the quadkey bloom filter, per probed key. A
+# key-set scan probes every group with each of its keys (up to
+# operators/zonal._MAX_KEYS, ~1,000), and one false positive admits the
+# group, so parquet's default 1% would admit most groups; 1e-5 admits
+# ≤1% at ~24 bits per key (64 bytes for a 1 MiB group of ~16 tiles).
+_QUADKEY_BLOOM_FPP = 1e-5
+
+
+def _quadkey_layout_writer(df: DataFrame, tiles: DataFrame, row_group_bytes: int):
+    """The parquet writer both quadkey layouts share: ``row_group_bytes``
+    row groups and a bloom filter on ``quadkey`` sized for the keys one
+    group holds (``row_group_bytes`` ÷ a tile's payload bytes, at
+    _QUADKEY_BLOOM_FPP). Unsized, parquet gives every column chunk a
+    1 MiB filter."""
+    ndv = max(1, math.ceil(row_group_bytes / _tile_payload_bytes(tiles)))
+    return (
+        df.write.mode("overwrite")
         .option("parquet.block.size", str(row_group_bytes))
         # parquet-mr checks accumulated size only every ≥100 records by
         # default — at ~256 KiB/tile row that floors groups at ~25 MiB
         # regardless of block.size; check every few rows instead
         .option("parquet.page.size.row.check.min", "4")
         .option("parquet.page.size.row.check.max", "64")
-        .parquet(path)
+        .option("parquet.bloom.filter.enabled#quadkey", "true")
+        .option("parquet.bloom.filter.expected.ndv#quadkey", str(ndv))
+        .option("parquet.bloom.filter.fpp#quadkey", str(_QUADKEY_BLOOM_FPP))
     )
+
+
+def write_quadkey_sorted_tiles(
+    tiles: DataFrame,
+    path: str,
+    *,
+    level: int = 16,
+    files: int | None = None,
+    row_group_bytes: int = 1 << 20,
+) -> None:
+    """Persist the tile table range-partitioned + sorted by (dataset,
+    quadkey) — the storage layout that makes PER-ZONE scan pruning
+    (operators/zonal.tile_prune_filter) effective: a sparse zone set's
+    exact tile-key set, or a larger set's ≤64 1-D quadkey ranges, map to
+    few row groups, so a sparse zone set over a planet-sized corpus
+    reads only its working set. On a real warehouse this is Iceberg's
+    sort-order/partition transform on the Morton key.
+
+    ``row_group_bytes`` caps the parquet row-group size (default 1 MiB vs
+    parquet's 128 MiB default): the row group is the skipping granule,
+    so with payload-bearing tile rows the default would make every
+    admitted group drag ~128 MiB of neighbors along. 1 MiB holds ~16
+    tiles of 128×128 float32, so a scattered zone set's few keys per
+    group leave most groups to skip. Skipping a group needs more than its
+    min-max stats: a key-set predicate (parquet ``In``) prunes by the
+    set's min and max only, which span the grid for scattered zones.
+    The sort gives each group a narrow key interval, and the ``quadkey``
+    bloom filter (sized for the keys a group holds,
+    _quadkey_layout_writer) rejects the groups none of whose keys are in
+    the set. Spark writes ``quadkey`` PLAIN (its keys are distinct, so
+    parquet drops the dictionary), so no dictionary can play that role.
+    The reference analog is the per-feature windowed read
+    (io.py:292-362): read the window, not the strip it lives in."""
+    n = files or tiles.sparkSession.sparkContext.defaultParallelism
+    _quadkey_layout_writer(
+        with_quadkey(tiles, level=level)
+        .repartitionByRange(n, "dataset", "quadkey")
+        .sortWithinPartitions("dataset", "quadkey"),
+        tiles, row_group_bytes,
+    ).parquet(path)
 
 
 def quad_prefix_shift(ntc: int, ntr: int, target_partitions: int = 64) -> int:
@@ -217,16 +254,17 @@ def write_quadkey_partitioned_tiles(
     path: str,
     *,
     level: int = 16,
-    row_group_bytes: int = 8 << 20,
+    row_group_bytes: int = 1 << 20,
 ) -> None:
     """Persist the tile table PARTITIONED by the quad-prefix of its
     quadkey (``qk_prefix = quadkey >> shift(dataset)``, ≤64 directories
     per dataset; shift derived from the dataset's grid dims so both this
     writer and the pruning predicate agree) and sorted by quadkey within
     partitions — Iceberg's partition-transform idea on plain parquet. A
-    zone's quadkey ranges then prune at THREE levels: directory listing
+    zone set's quadkey predicate then prunes at THREE levels: directory listing
     (Spark partition pruning on qk_prefix — PartitionFilters in the
-    scan), row-group skipping (quadkey min-max stats), and the residual
+    scan), row-group skipping (quadkey min-max stats and the bloom
+    filter, written as by write_quadkey_sorted_tiles), and the residual
     row filter. The pruning predicate picks the prefix IN-list up
     automatically when the scan has a qk_prefix column
     (operators/zonal.tile_prune_filter)."""
@@ -242,19 +280,12 @@ def write_quadkey_partitioned_tiles(
         f"WHEN dataset = {_q(ds)} THEN shiftright(quadkey, {sh})"
         for ds, sh in shifts.items()
     )
-    (
-        qk.withColumn(
-            "qk_prefix", F.expr(f"CASE {cases} ELSE quadkey END")
-        )
+    _quadkey_layout_writer(
+        qk.withColumn("qk_prefix", F.expr(f"CASE {cases} ELSE quadkey END"))
         .repartition("qk_prefix")
-        .sortWithinPartitions("qk_prefix", "quadkey")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(row_group_bytes))
-        .option("parquet.page.size.row.check.min", "4")
-        .option("parquet.page.size.row.check.max", "64")
-        .partitionBy("qk_prefix")
-        .parquet(path)
-    )
+        .sortWithinPartitions("qk_prefix", "quadkey"),
+        tiles, row_group_bytes,
+    ).partitionBy("qk_prefix").parquet(path)
 
 
 def write_bucketed_tiles(

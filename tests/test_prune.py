@@ -9,7 +9,10 @@ everything". These tests pin the fix:
   analysis of the actual parquet file Spark reads),
 - the predicate reaches the parquet scan (PushedFilters),
 - results are bit-identical with pruning on, off, and in both predicate
-  regimes (rect disjunction / quadkey ranges).
+  regimes (rect disjunction / quadkey ranges),
+- over sorted storage a sparse zone set goes as its exact tile-key set:
+  a fresh zone set compiles no new class, and the executed scan skips
+  row groups per key through the writer's quadkey bloom filter.
 """
 
 import os
@@ -30,6 +33,7 @@ from python_rasterstats_spark.operators.zonal import (
     zonal_stats_df,
     zone_windows,
 )
+from python_rasterstats_spark.plans.explain import scan_output_rows
 from python_rasterstats_spark.sources.tables import (
     features_to_zones,
     raster_to_tables,
@@ -526,3 +530,137 @@ def test_point_query_smj_regime_fenced_and_matches(spark, sparse_corpus):
     pred = smj_bounds_filter(counts, meta)
     admitted = tiles_df.filter(pred).count()
     assert admitted <= 64  # two corner zones: not the 4096-tile corpus
+
+
+@pytest.fixture(scope="module")
+def sorted_tiles(spark, sparse_corpus, tmp_path_factory):
+    """sparse_corpus' tiles written by write_quadkey_sorted_tiles into one
+    file of 16 KiB row groups (~14 tiles each)."""
+    from python_rasterstats_spark.sources.tables import (
+        write_quadkey_sorted_tiles,
+    )
+
+    path = str(tmp_path_factory.mktemp("sorted") / "tiles")
+    write_quadkey_sorted_tiles(
+        spark.read.parquet(sparse_corpus["plain"]), path, files=1,
+        row_group_bytes=16 << 10,
+    )
+    return path
+
+
+def _box_zones(spark, tile_boxes):
+    """One zone per inclusive (tc0, tc1, tr0, tr1) tile box of the
+    sparse_corpus grid (16-px tiles, 1024 px per side, y flipped), inset
+    by 2 px so it covers exactly those tiles."""
+    import python_rasterstats_spark.geom as G
+
+    return features_to_zones(
+        spark,
+        [
+            G.box(tc0 * 16 + 2, 1024 - (tr1 + 1) * 16 + 2,
+                  (tc1 + 1) * 16 - 2, 1024 - tr0 * 16 - 2)
+            for tc0, tc1, tr0, tr1 in tile_boxes
+        ],
+        dataset="sparse",
+    )
+
+
+def test_fresh_sparse_draw_compiles_nothing(spark, sparse_corpus, sorted_tiles):
+    """Over sorted storage, a sparse zone set's predicate is its exact
+    tile-key set, which Spark turns into an InSet whose generated code
+    references the keys: a second query with other zones (each set
+    covering > 10 tiles) reuses every compiled class. A BETWEEN list
+    inlines its bounds and compiles twice per fresh zone set."""
+    c = sparse_corpus
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    stats = ["count", "min", "max", "mean"]
+    tiles = spark.read.parquet(sorted_tiles)
+    first = _box_zones(spark, [(0, 2, 0, 2), (61, 63, 61, 63)])
+    second = _box_zones(spark, [(20, 23, 5, 7), (40, 42, 50, 53)])
+    zonal_stats_df(
+        first, tiles, c["datasets"], dataset="sparse", stats=stats
+    ).collect()
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    got = _collect_sorted(
+        zonal_stats_df(
+            second, tiles, c["datasets"], dataset="sparse", stats=stats
+        )
+    )
+    assert cm.METRIC_COMPILATION_TIME().getCount() - before == 0
+    want = _collect_sorted(
+        zonal_stats_df(
+            second, tiles, c["datasets"], dataset="sparse", stats=stats,
+            prune_tiles=False,
+        )
+    )
+    assert got == want and all(r[1] > 0 for r in got)
+
+
+def test_sorted_scan_prunes_row_groups_per_key(spark, sparse_corpus, sorted_tiles):
+    """The executed scan, not an offline stats replay: the two corner
+    zones' key set spans the whole code space, so min-max stats admit
+    every row group; the sorted writer's quadkey bloom filter rejects
+    the groups holding none of the 18 keys, and the scan outputs ≤ 1/10
+    of the table's rows."""
+    c = sparse_corpus
+    stats = ["count", "min", "max", "mean", "median"]
+    tiles = spark.read.parquet(sorted_tiles)
+    out = zonal_stats_df(
+        c["zones"], tiles, c["datasets"], dataset="sparse", stats=stats
+    )
+    got = _collect_sorted(out)
+    total = tiles.count()
+    assert total == 4096
+    assert 18 <= scan_output_rows(out) <= total // 10
+    want = _collect_sorted(
+        zonal_stats_df(
+            c["zones"], tiles, c["datasets"], dataset="sparse", stats=stats,
+            prune_tiles=False,
+        )
+    )
+    assert got == want and want[0][1] > 0
+
+
+@pytest.mark.parametrize(
+    "boxes, level, form",
+    [
+        # two 3×3-tile corners: 18 keys
+        ([(0, 2, 0, 2), (61, 63, 61, 63)], 16, "keys"),
+        # a 24×24-tile block tiled by four zones: covers > _DENSE_FRAC of
+        # its code span
+        ([(0, 11, 0, 11), (12, 23, 0, 11), (0, 11, 12, 23),
+          (12, 23, 12, 23)], 16, "union"),
+        # two opposite 24×24-tile blocks: 1,152 keys, past _MAX_KEYS
+        ([(0, 23, 0, 23), (40, 63, 40, 63)], 16, "ranges"),
+        # level 2 addresses a 4×4 grid: Morton overflow
+        ([(0, 5, 0, 5)], 2, "dataset"),
+    ],
+    ids=["sparse", "dense", "above_cap", "overflow"],
+)
+def test_quadkey_predicate_form_follows_the_working_set(
+    spark, sparse_corpus, boxes, level, form
+):
+    """Over a quadkey column, a sparse set goes as its exact key set, a
+    dense one as its union range, a sparse one past the key cap as its
+    quadkey ranges, and a Morton overflow as the dataset clause alone."""
+    import re
+
+    from python_rasterstats_spark.operators.zonal import collect_dataset_meta
+
+    meta = collect_dataset_meta(sparse_corpus["datasets"])
+    gd = zone_windows(_zone_geom_dict(_box_zones(spark, boxes)), meta)
+    pred = str(
+        tile_prune_filter(gd, meta, quadkey_col="quadkey", quadkey_level=level)
+    )
+    ins = re.findall(r"quadkey IN \(([^)]*)\)", pred)
+    betweens = pred.count("BETWEEN")
+    if form == "keys":
+        keys = {int(k) for k in ins[0].split(",")}
+        assert len(ins) == 1 and betweens == 0
+        assert keys == _codes(0, 2, 0, 2) | _codes(61, 63, 61, 63)
+    elif form == "union":
+        assert not ins and betweens == 1
+    elif form == "ranges":
+        assert not ins and 1 < betweens <= 64
+    else:
+        assert "quadkey" not in pred and "dataset" in pred

@@ -11,11 +11,16 @@ cost:
 - r4 per-zone rect disjunction on the plain corpus,
 - per-zone quadkey ranges on quadkey-sorted storage written by
   sources.tables.write_quadkey_sorted_tiles — r5 sizes row groups to
-  ``row_group_bytes`` (default 8 MiB) so the sort's locality is no longer
+  ``row_group_bytes`` so the sort's locality is no longer
   granularity-bound (r4 measured 36 MiB/group → 288 MiB must-read, 2.25×
-  the rect number; the layout's point is to be BELOW it).
+  the rect number; the layout's point is to be BELOW it),
+- the exact tile-key set on the same storage, the predicate a sparse
+  zone set gets (operators/zonal.tile_prune_filter): a group is
+  admitted when it holds a covered key — what the writer's quadkey
+  bloom filter admits, without its false positives (min-max stats alone
+  admit every group between the set's min and max).
 
-Usage: python tools/audit_prune_bytes.py [--row-group-mib 8] [--files 64]
+Usage: python tools/audit_prune_bytes.py [--row-group-mib 1] [--files 64]
 """
 
 from __future__ import annotations
@@ -56,15 +61,18 @@ def sparse_zone_dict(meta: dict, dataset: str, n: int = 8, seed: int = 5) -> dic
     return gd
 
 
-def rowgroups(path_or_dir: str):
-    """Yield (pyarrow row-group metadata, schema names) over a parquet
-    file or directory of part files."""
-    paths = (
+def _paths(path_or_dir: str) -> list:
+    return (
         sorted(glob.glob(os.path.join(path_or_dir, "*.parquet")))
         if os.path.isdir(path_or_dir)
         else [path_or_dir]
     )
-    for p in paths:
+
+
+def rowgroups(path_or_dir: str):
+    """Yield (pyarrow row-group metadata, schema names) over a parquet
+    file or directory of part files."""
+    for p in _paths(path_or_dir):
         md = pq.ParquetFile(p).metadata
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         for g in range(md.num_row_groups):
@@ -79,6 +87,22 @@ def admit_bytes(path, admit_fn) -> tuple[int, int, int]:
         if admit_fn(rg, names):
             adm += 1
             by += rg.total_byte_size
+    return adm, tot, by
+
+
+def key_admit_bytes(path_or_dir, keys) -> tuple[int, int, int]:
+    """admit_bytes for the exact key-set predicate: a group is admitted
+    when its ``quadkey`` column holds one of ``keys``."""
+    keys = set(keys)
+    adm = tot = by = 0
+    for p in _paths(path_or_dir):
+        f = pq.ParquetFile(p)
+        for g in range(f.metadata.num_row_groups):
+            tot += 1
+            held = f.read_row_group(g, columns=["quadkey"]).column(0)
+            if not keys.isdisjoint(held.to_pylist()):
+                adm += 1
+                by += f.metadata.row_group(g).total_byte_size
     return adm, tot, by
 
 
@@ -103,15 +127,15 @@ def qk_admit(ranges):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--row-group-mib", type=float, default=8.0)
+    ap.add_argument("--row-group-mib", type=float, default=1.0)
     ap.add_argument("--files", type=int, default=64)
     ap.add_argument("--corpus", default=None)
     args = ap.parse_args()
 
     from python_rasterstats_spark.fixtures import ensure_bench_corpus
     from python_rasterstats_spark.operators.zonal import (
-        _zone_tile_rects, collect_dataset_meta, quadkey_prune_ranges,
-        zone_windows,
+        _quadkey_set, _zone_tile_rects, collect_dataset_meta,
+        quadkey_prune_ranges, zone_windows,
     )
     from python_rasterstats_spark.session import get_spark
     from python_rasterstats_spark.sources.tables import (
@@ -138,15 +162,20 @@ def main():
         row_group_bytes=int(args.row_group_mib * MIB),
     )
     ranges = quadkey_prune_ranges(gd, meta)[ds]
+    keys = _quadkey_set(rects, 1 << 30)
     if ranges is None:  # Morton-overflow sentinel: no quadkey constraint
         print(f"{ds}: grid overflows the quadkey level — unpruned scan")
         ranges = [(0, (1 << 63) - 1)]  # admit-all, matching the real scan
-
+        keys = None
     rows = {
         "union_bbox_plain": admit_bytes(tiles_path, rect_admit([union])),
         "perzone_rects_plain": admit_bytes(tiles_path, rect_admit(rects)),
         f"quadkey_sorted_{args.row_group_mib:g}mib": admit_bytes(
             qk_path, qk_admit(ranges)
+        ),
+        f"quadkey_keys_sorted_{args.row_group_mib:g}mib": (
+            admit_bytes(qk_path, qk_admit(ranges)) if keys is None
+            else key_admit_bytes(qk_path, keys)
         ),
     }
     out = {
@@ -154,6 +183,7 @@ def main():
         "zones": len(gd),
         "rects": len(rects),
         "qk_ranges": len(ranges),
+        "qk_keys": None if keys is None else len(keys),
         "rows": {
             k: {"admitted": a, "groups": t, "mib": round(b / MIB, 1)}
             for k, (a, t, b) in rows.items()

@@ -183,29 +183,31 @@ def main():
 
 
 def _sparse_quadkey_section(spark):
-    """Per-zone quadkey-range pruning evidence (r3 verdict 'Next round
-    #1'): two corner zones over a 64×64-tile corpus stored quadkey-sorted
-    — the union bbox spans the whole grid (zero pruning), the per-zone
-    quadkey ranges reach the scan as PushedFilters and admit only a
-    handful of row groups."""
+    """Per-zone quadkey pruning evidence: two corner zones over a
+    64×64-tile corpus stored by write_quadkey_sorted_tiles — the union
+    bbox spans the whole grid (zero pruning); the zones' exact tile-key
+    set reaches the scan as a pushed ``In`` filter, and the executed
+    scan outputs only the row groups holding a covered key."""
     import re
     import tempfile
 
     import numpy as np
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     from python_rasterstats_spark.operators.zonal import (
+        _quadkey_set,
+        _zone_tile_rects,
         collect_dataset_meta,
         quadkey_prune_ranges,
+        tile_prune_filter,
         zonal_stats_df,
         zone_windows,
     )
     from python_rasterstats_spark.sources.tables import (
         features_to_zones,
         raster_to_tables,
-        with_quadkey,
+        write_quadkey_sorted_tiles,
     )
+    from tools.audit_prune_bytes import admit_bytes, key_admit_bytes, qk_admit
 
     rng = np.random.default_rng(11)
     arr = rng.uniform(0, 100, size=(1024, 1024)).astype(np.float32)
@@ -213,14 +215,8 @@ def _sparse_quadkey_section(spark):
     tiles, datasets = raster_to_tables(
         spark, arr, aff, dataset="sparse", nodata=-9999.0, tile=16
     )
-    qk_path = os.path.join(tempfile.mkdtemp(prefix="plans_qk_"), "tiles.parquet")
-    import pyarrow as pa
-
-    pdf = with_quadkey(tiles, level=16).orderBy("quadkey").toPandas()
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False), qk_path,
-        row_group_size=64,
-    )
+    qk_path = os.path.join(tempfile.mkdtemp(prefix="plans_qk_"), "tiles")
+    write_quadkey_sorted_tiles(tiles, qk_path, files=1, row_group_bytes=16 << 10)
     zones = features_to_zones(
         spark,
         [
@@ -234,26 +230,26 @@ def _sparse_quadkey_section(spark):
         (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
         for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
     }
-    ranges = quadkey_prune_ranges(zone_windows(gd, meta), meta)["sparse"]
-    if ranges is None:  # Morton-overflow sentinel: no quadkey constraint
-        print("sparse: grid overflows the quadkey level — unpruned scan")
-        ranges = [(0, (1 << 63) - 1)]  # admit-all, matching the real scan
-    md = pq.ParquetFile(qk_path).metadata
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    qk_i = names.index("quadkey")
-    rg_quad = sum(
-        1
-        for g in range(md.num_row_groups)
-        if any(
-            lo <= md.row_group(g).column(qk_i).statistics.max
-            and md.row_group(g).column(qk_i).statistics.min <= hi
-            for lo, hi in ranges
-        )
+    windows = zone_windows(gd, meta)
+    ranges = quadkey_prune_ranges(windows, meta)["sparse"]
+    pred = str(tile_prune_filter(windows, meta, quadkey_col="quadkey"))
+    keys = re.search(r"quadkey IN \(([^)]*)\)", pred)
+    nkeys = len(keys.group(1).split(",")) if keys else 0
+    form = (
+        f"`dataset = 'sparse' AND quadkey IN (<{nkeys} keys>)`"
+        if keys else f"`{pred[:120]}`"
+    )
+    rg_quad, groups, _ = admit_bytes(qk_path, qk_admit(ranges))
+    rg_key, _, _ = key_admit_bytes(
+        qk_path, _quadkey_set(_zone_tile_rects(windows, meta)["sparse"], 4096)
     )
     df = zonal_stats_df(
         zones, spark.read.parquet(qk_path), datasets, dataset="sparse"
     )
-    from python_rasterstats_spark.plans.explain import physical_plan
+    df.collect()
+    from python_rasterstats_spark.plans.explain import (
+        physical_plan, scan_output_rows,
+    )
 
     plan = physical_plan(df)
     pushed = next(
@@ -266,11 +262,12 @@ def _sparse_quadkey_section(spark):
         ),
         "(none)",
     )
-    assert rg_quad * 10 <= md.num_row_groups
+    scan_rows = scan_output_rows(df)
+    total = tiles.count()
+    assert nkeys and scan_rows * 10 <= total
 
     # directory-level variant: quad-prefix partitioned storage
     from python_rasterstats_spark.sources.tables import (
-        dataset_prefix_shifts,
         write_quadkey_partitioned_tiles,
     )
 
@@ -290,28 +287,30 @@ def _sparse_quadkey_section(spark):
         ),
         "(none)",
     )
-    shift = dataset_prefix_shifts(meta)["sparse"]
-    prefixes = sorted(
-        {p for lo, hi in ranges for p in range(lo >> shift, (hi >> shift) + 1)}
-    )
+    pf = re.search(r"qk_prefix IN \(([^)]*)\)", str(tile_prune_filter(
+        windows, meta, quadkey_col="quadkey", prefix_col="qk_prefix",
+    )))
+    prefixes = pf.group(1).split(",")
     ndirs = len(
         [d for d in os.listdir(part_path) if d.startswith("qk_prefix=")]
     )
     return [
-        "## zonal sparse zones (per-zone quadkey-range pruning)",
+        "## zonal sparse zones (exact tile-key set over sorted storage)",
         "",
-        "Two 3×3-tile corner zones over a 64×64-tile corpus stored",
-        "quadkey-sorted (sources/tables.write_quadkey_sorted_tiles layout;",
-        "64 row groups). The r3 union-bbox predicate spans the whole grid",
-        "— ZERO row groups pruned; the per-zone quadkey range set reads",
-        "only the working set:",
+        "Two 3×3-tile corner zones over a 64×64-tile corpus written by",
+        "sources/tables.write_quadkey_sorted_tiles (one file, 16 KiB row",
+        f"groups: {groups}, each with a quadkey bloom filter). The r3",
+        "union-bbox predicate spans the whole grid — ZERO row groups",
+        "pruned. A sparse working set is pushed as its exact tile-key set",
+        "(an `InSet` above 10 keys, whose generated code does not change",
+        "with the keys); the set's min and max span the grid too, so the",
+        "groups are skipped by the bloom filter, per key:",
         "",
-        f"- per-zone quadkey ranges pushed: {len(ranges)} "
-        f"(capped at 64/dataset)",
-        f"- row groups admitted: union bbox {md.num_row_groups}/"
-        f"{md.num_row_groups} vs quadkey ranges {rg_quad}/"
-        f"{md.num_row_groups} — "
-        f"{md.num_row_groups / max(rg_quad, 1):.0f}× fewer",
+        f"- predicate: {form}",
+        f"- row groups admitted: union bbox {groups}/{groups}; the ≤64",
+        f"  quadkey ranges, by min-max: {rg_quad}/{groups}; holding a",
+        f"  covered key (the key set, by bloom filter): {rg_key}/{groups}",
+        f"- executed scan output rows: {scan_rows} of {total} tiles",
         f"- pushed filters (reach the parquet reader): {pushed}",
         "",
         "Quad-prefix PARTITIONED storage (write_quadkey_partitioned_tiles)",

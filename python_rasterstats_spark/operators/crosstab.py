@@ -6,9 +6,14 @@ Not in the reference (rasterstats handles one raster per call); this is a
 multi-raster composition the tile-corpus model makes natural. Both
 datasets share the grid, so the plan is operators/zonal.py's tile-driven
 one with a paired input: one kernel row per stored (value tile, class
-tile) pair, joined on (tile_col, tile_row). The tile's covering zones come
-from the driver's broadcast cover dict (broadcast regime) or from cover
-cells grouped per tile key (SMJ regime). The kernel makes one pass per
+tile) pair, joined on (tile_col, tile_row). The front half is
+zonal.front_half in either regime, with the class dataset as the value
+dataset's peer: the scan fence (and, over prefix-partitioned storage,
+the qk_prefix directory pruning) keeps the same tiles of both rasters,
+and the SMJ regime sizes its zones in one summary job. The tile's
+covering zones come from the driver's broadcast cover dict (broadcast
+regime) or from cover cells grouped per tile key (SMJ regime), joined to
+the pairs by front_half's join. The kernel makes one pass per
 tile, however many zones cover it: it decodes both payloads and builds
 their joint validity mask once, rasterizes all covering zones in one
 scanline fill (zonal._tile_zones), and walks each zone's view of the tile
@@ -33,16 +38,8 @@ from .zonal import (
     _tile_pixels,
     _tile_zones,
     _zone_lists,
-    broadcast_cover_cells,
     collect_dataset_meta,
-    collect_zone_rows,
-    group_cover_cells,
-    hybrid_big_zone_geoms,
-    tile_driven_input,
-    tile_prune_filter,
-    zone_cell_counts,
-    zone_cover_cells,
-    zone_windows,
+    front_half,
 )
 
 _XTAB_PARTIAL = T.StructType(
@@ -90,81 +87,24 @@ def zonal_crosstab_df(
             f"(affine+tile size); got {value_dataset!r} vs {class_dataset!r}"
         )
 
-    # broadcast regime: once-per-zone geometry broadcast + driver cover
-    # dict (operators/zonal.py rationale: never store WKB per covering
-    # tile); the SMJ regime (broadcast_zones=False) carries WKB on the
-    # cells through the tile-key shuffle — bounded by the same hybrid
-    # sizing pass as zonal (large-WKB × many-cell zones broadcast
-    # instead, cells carry NULL)
-    zdim = zones.withColumn("dataset", F.lit(value_dataset))
-    big_keys: frozenset = frozenset()
-    geoms_bc = None
-    if broadcast_zones:
-        geoms, _ = collect_zone_rows(zdim)
-        geoms_bc = zones.sparkSession.sparkContext.broadcast(geoms)
-        windows = zone_windows(geoms, meta)
-        # scan-level pruning; the class raster shares the grid (validated
-        # above) so the value-dataset key ranges apply to both scans
-        pred = tile_prune_filter(
-            {**windows, **{
-                (z, class_dataset): w for (z, _), w in windows.items()
-            }},
-            meta,
-            quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-            quadkey_level=quadkey_level,
-        )
-        if pred is not None:
-            tiles = tiles.filter(pred)
-    else:
-        # SMJ regime: one distributed sizing pass feeds the hybrid-WKB
-        # selection AND the collect-free union-bbox scan fence; the
-        # class raster shares the grid, so the value-dataset bounds
-        # apply to both scans (dataset is re-filtered right below)
-        counts = zone_cell_counts(zdim, meta, clip_to_grid=True)
-        if hybrid_wkb_bytes is not None:
-            # two consumers (hybrid selection + scan fence): persist so
-            # the zones table is scanned once, same as zonal_stats_df
-            counts = counts.persist()
-            geoms_bc, big_keys = hybrid_big_zone_geoms(
-                zdim, meta, clip_to_grid=True,
-                threshold_bytes=hybrid_wkb_bytes, counts=counts,
-            )
-        b = counts.agg(
-            F.min("tc0").alias("tc0"), F.max("tc1").alias("tc1"),
-            F.min("tr0").alias("tr0"), F.max("tr1").alias("tr1"),
-        ).first()
-        if hybrid_wkb_bytes is not None:
-            counts.unpersist()
-        if b["tc0"] is not None:
-            # dataset-agnostic bbox: both rasters share the grid and
-            # both scans must survive the fence
-            tiles = tiles.filter(F.expr(
-                f"tile_col BETWEEN {b['tc0']} AND {b['tc1']} AND "
-                f"tile_row BETWEEN {b['tr0']} AND {b['tr1']}"
-            ))
+    # the shared front half (zonal.front_half, either regime). The class
+    # raster shares the grid (validated above), so its scan is a peer of
+    # the value dataset's: the fence keeps the same tiles of both
+    fh = front_half(
+        zones.withColumn("dataset", F.lit(value_dataset)), tiles, meta,
+        broadcast=broadcast_zones, quadkey_level=quadkey_level,
+        hybrid_wkb_bytes=hybrid_wkb_bytes, peers=(class_dataset,),
+    )
     keys = ["tile_col", "tile_row"]
-    tv = tiles.filter(F.col("dataset") == value_dataset).select(
+    tv = fh.tiles.filter(F.col("dataset") == value_dataset).select(
         "dataset", *keys,
         F.col("bytes").alias("vbytes"), F.col("fmt").alias("vfmt"),
     )
-    tc = tiles.filter(F.col("dataset") == class_dataset).select(
+    tc = fh.tiles.filter(F.col("dataset") == class_dataset).select(
         *keys, F.col("bytes").alias("cbytes"), F.col("fmt").alias("cfmt")
     )
-    pairs = tv.join(tc, keys, "inner")
-    if broadcast_zones:
-        kernel_in, cover = tile_driven_input(
-            pairs, broadcast_cover_cells(
-                zones.sparkSession, windows, meta, clip_to_grid=True
-            ),
-            meta,
-        )
-    else:
-        cover = None
-        cells = zone_cover_cells(
-            zdim, meta, clip_to_grid=True, with_geometry=True,
-            null_wkb_keys=big_keys,
-        ).drop("dataset")
-        kernel_in = group_cover_cells(cells, keys).join(pairs, keys, "inner")
+    kernel_in, cover = fh.join(tv.join(tc, keys, "inner"))
+    geoms_bc = fh.geoms()
 
     vnd = nodata if nodata is not None else mv["nodata"]
     vnd = -999.0 if vnd is None else vnd

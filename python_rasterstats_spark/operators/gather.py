@@ -4,8 +4,8 @@
 mini-rasters (main.py:318-321) and non-elementwise ``zone_func`` transforms
 cannot be split into mergeable partials: they need the whole masked zone
 array. This operator runs on the broadcast regime's front half
-(operators/zonal.broadcast_kernel_input: pruned tile scan, driver cover
-dict, NULL-payload rows for cover keys with no stored tile), then
+(operators/zonal.front_half: pruned tile scan, driver cover dict,
+NULL-payload rows for cover keys with no stored tile), then
 
     tile kernel (mapInPandas, one pass per tile): decode the payload once,
     select the band, cut each covering zone's part of its bbox window
@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import codecs as C
 from .. import kernel as K
 from .zonal import (
-    _TILE_COLS, _effective_geom, broadcast_kernel_input, collect_dataset_meta,
-    zone_windows,
+    _TILE_COLS, _effective_geom, collect_dataset_meta, front_half,
 )
 
 _MINI_RASTER_TYPE = T.StructType(
@@ -94,20 +93,18 @@ def zonal_gather_df(
     if "properties_json" not in zones.columns:
         zones = zones.withColumn("properties_json", F.lit(None).cast("string"))
 
-    # the zone dim is read once, here: geometry and properties ship once
-    # per zone per executor in a broadcast dict, never per covering tile
-    rows = zones.select(
-        "zone_id", "dataset", "geometry_wkb", "properties_json"
-    ).collect()
-    geoms = {(r[0], r[1]): bytes(r[2]) for r in rows}
-    windows = zone_windows(geoms, meta)
-    kernel_in, cover = broadcast_kernel_input(
-        tiles, windows, meta, fill_missing=True,
+    # the zone dim is read once, by the front half: geometry and
+    # properties ship once per zone per executor in broadcast dicts,
+    # never per covering tile
+    fh = front_half(
+        zones, tiles, meta, broadcast=True, fill_missing=True,
         max_cells_per_zone=max_cells_per_zone, raise_beyond_extent=not boundless,
+        extra_cols=("properties_json",),
     )
+    kernel_in, cover = fh.join(fh.tiles)
+    geoms_bc = fh.geoms()
     zbc = zones.sparkSession.sparkContext.broadcast({
-        zid: (ds, geoms[(zid, ds)], props, windows[(zid, ds)])
-        for zid, ds, _, props in rows
+        zid: (ds, props, fh.windows[(zid, ds)]) for zid, ds, props in fh.zone_rows
     })
 
     def tile_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -128,7 +125,7 @@ def zonal_gather_df(
                         tile = tile[band - 1]
                 ty, tx = tr * meta[ds]["tile_h"], tc * meta[ds]["tile_w"]
                 for zid in zids:
-                    (r0, r1), (c0, c1) = zv[zid][3]
+                    (r0, r1), (c0, c1) = zv[zid][2]
                     rr0, cc0 = max(r0, ty), max(c0, tx)
                     block = None if tile is None else C.encode_tile(
                         tile[rr0 - ty:r1 - ty, cc0 - tx:c1 - tx], "npy"
@@ -148,7 +145,8 @@ def zonal_gather_df(
 
     def per_zone(pdf: pd.DataFrame) -> pd.DataFrame:
         zid = int(pdf["zone_id"].iloc[0])
-        ds, wkb, props_json, win = zbc.value[zid]
+        ds, props_json, win = zbc.value[zid]
+        wkb = geoms_bc.value[(zid, ds)]
         m = meta[ds]
         aff = m["affine"]
         geom_eff = _effective_geom(wkb, aff)

@@ -24,6 +24,11 @@ pixels the interpolation reads; a 2×2 bilinear window can straddle up to
                                    ▼
             vertex keys ⟕ values: a vertex with no stored tile → NULL (J4)
 
+The scan fence, the zone collect (broadcast regime) and the one-job
+sizing pass (SMJ regime) are zonal.front_half's, with every zone's tile
+window widened by one tile; the vertex windows are this operator's own
+cover, joined to the fenced tiles by the front half's join.
+
 Returns (zone_id, vertex_idx, value). The API layer reassembles the
 reference's scalar-or-list output shape (point.py:198-199). A window
 beyond the extent with boundless=False raises the reference's ValueError
@@ -43,9 +48,8 @@ from .. import codecs as C
 from .. import geom as G
 from .. import kernel as K
 from .zonal import (
-    _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, local_frame,
-    smj_bounds_filter, spread, tile_driven_input, tile_prune_filter,
-    zone_cell_counts, zone_windows,
+    _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, front_half, local_frame,
+    spread,
 )
 
 _WINDOWS_SCHEMA = T.StructType(
@@ -111,26 +115,19 @@ def point_query_df(
         zones = zones.withColumn("dataset", F.lit(dataset))
     bilin = interpolate == "bilinear"
     spark = zones.sparkSession
-    zcols = zones.select("zone_id", "dataset", "geometry_wkb")
     keys = list(_TILE_COLS[:3])
+    # the shared front half (zonal.front_half), its fence widened by one
+    # tile: a bilinear window reaches 1 px past the geometry's bbox. The
+    # vertex windows are this operator's own cover, in the regime's form
+    fh = front_half(
+        zones, tiles, meta, broadcast=broadcast_vertices, pad_tiles=1,
+        prune_tiles=prune_tiles, quadkey_level=quadkey_level,
+    )
     if broadcast_vertices:
-        gd = {
-            (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
-            for r in zcols.collect()
-        }
-        if prune_tiles:
-            pred = tile_prune_filter(
-                zone_windows(gd, meta), meta, pad_tiles=1,
-                quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-                quadkey_level=quadkey_level,
-                prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
-            )
-            if pred is not None:
-                tiles = tiles.filter(pred)
         wins, vkey_rows = _driver_windows(
-            spark, gd, meta, bilin=bilin, boundless=boundless
+            spark, fh.zone_geoms, meta, bilin=bilin, boundless=boundless
         )
-        scan = tiles.select(*_TILE_COLS)
+        scan = fh.tiles.select(*_TILE_COLS)
         pending = isinstance(wins, str)
         if not pending:
             # exact-key semi join (broadcast, JVM-side): vertex windows
@@ -144,7 +141,7 @@ def point_query_df(
                 )),
                 keys, "left_semi",
             )
-        kernel_in, wins = tile_driven_input(scan, wins, meta)
+        kernel_in, wins = fh.join(scan, wins)
         # a pending error needs no vertex keys (the action raises), and an
         # empty vertex-key LocalTableScan would let the optimizer prune the
         # raising stage out of the left join
@@ -178,32 +175,14 @@ def point_query_df(
 
         # two consumers (grouped windows, vertex keys): persist so the
         # explode runs once
-        windows = spread(zcols).mapInPandas(
-            explode_vertices, _WINDOWS_SCHEMA
-        ).persist()
-        if prune_tiles:
-            # collect-free fence, the same Morton-bucketed rect aggregation
-            # as zonal's SMJ regime, over each zone's tile window widened
-            # by one tile. The sizing pass does not run the boundless=False
-            # check, so that error still surfaces when the action runs.
-            counts = zone_cell_counts(zcols, meta)
-            pred = smj_bounds_filter(
-                counts.select(
-                    "dataset",
-                    *((F.col(c) + d).alias(c) for c, d in (
-                        ("tc0", -1), ("tc1", 1), ("tr0", -1), ("tr1", 1)
-                    )),
-                ),
-                meta,
-            )
-            if pred is not None:
-                tiles = tiles.filter(pred)
-        wins = None
-        kernel_in = windows.groupBy(*keys).agg(
+        windows = spread(
+            zones.select("zone_id", "dataset", "geometry_wkb")
+        ).mapInPandas(explode_vertices, _WINDOWS_SCHEMA).persist()
+        kernel_in, wins = fh.join(fh.tiles, windows.groupBy(*keys).agg(
             F.collect_list(
                 F.struct("zone_id", "vertex_idx", "pix", "ux", "uy")
             ).alias("ws")
-        ).join(tiles.select(*_TILE_COLS), keys, "inner")
+        ))
         vkeys = windows.select("zone_id", "vertex_idx").distinct()
     gathered = kernel_in.mapInPandas(
         _gather(meta, wins, nodata=nodata, band=band), _GATHER_SCHEMA

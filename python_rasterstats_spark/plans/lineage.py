@@ -160,23 +160,20 @@ def stage_bucketed(
 
 def _zonal_partials(spark, tiles, zones, meta, stats, kw) -> DataFrame:
     """zonal_stats_df's broadcast-regime partial kernel (boundless reads)
-    over ``zones``, on its front half (broadcast_kernel_input)."""
-    from ..operators.zonal import (
-        broadcast_kernel_input, collect_zone_rows, partial_kernel,
-        zone_windows,
-    )
+    over ``zones``, on its front half (front_half)."""
+    from ..operators.zonal import front_half, partial_kernel
     from .. import kernel as K
 
-    geoms, _ = collect_zone_rows(zones)
-    kernel_in, cover = broadcast_kernel_input(
-        tiles, zone_windows(geoms, meta), meta,
+    fh = front_half(
+        zones, tiles, meta, broadcast=True,
         fill_missing="nodata" in stats or "nan" in stats,
     )
+    kernel_in, cover = fh.join(fh.tiles)
     return partial_kernel(
         kernel_in, meta, cover=cover,
         all_touched=kw.get("all_touched", False),
         nodata_override=kw.get("nodata"), want_counts=K.needs_counts(stats),
-        geoms=spark.sparkContext.broadcast(geoms),
+        geoms=fh.geoms(),
     )
 
 

@@ -17,6 +17,7 @@ from python_rasterstats_spark.operators.zonal import (
     collect_dataset_meta,
     hybrid_big_zone_geoms,
     zonal_stats_df,
+    zone_cell_counts,
     zone_cover_cells,
 )
 from python_rasterstats_spark.sources.tables import (
@@ -95,7 +96,7 @@ def test_hybrid_selects_only_the_continent(spark, skew_corpus):
     _, zones, datasets = skew_corpus
     meta = collect_dataset_meta(datasets)
     bc, keys = hybrid_big_zone_geoms(
-        zones, meta, clip_to_grid=True, threshold_bytes=1 << 20
+        zones, zone_cell_counts(zones, meta), threshold_bytes=1 << 20
     )
     assert keys == frozenset({(0, "skew")})  # the dense ring, nothing else
     assert set(bc.value) == keys
@@ -150,12 +151,11 @@ def test_hybrid_default_threshold_keeps_small_zone_sets_inline(
     duplication) is caught, the small zones never are."""
     _, zones, datasets = skew_corpus
     meta = collect_dataset_meta(datasets)
-    _, keys = hybrid_big_zone_geoms(
-        zones, meta, clip_to_grid=True, threshold_bytes=16 << 20
-    )
+    counts = zone_cell_counts(zones, meta)
+    _, keys = hybrid_big_zone_geoms(zones, counts, threshold_bytes=16 << 20)
     assert keys == frozenset({(0, "skew")})
     _, keys_high = hybrid_big_zone_geoms(
-        zones, meta, clip_to_grid=True, threshold_bytes=1 << 40
+        zones, counts, threshold_bytes=1 << 40
     )
     assert keys_high == frozenset()
 

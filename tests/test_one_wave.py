@@ -95,9 +95,9 @@ def _runs_python(cluster) -> bool:
     return any(_runs_python(children.apply(i)) for i in range(children.size()))
 
 
-def _python_stage_tasks(spark, action):
+def _in_job_group(spark, action):
     """Run ``action`` under a fresh job group; return its result and the
-    task count of every stage of it that ran a Python operator."""
+    ids of the Spark jobs it ran."""
     sc = spark.sparkContext
     group = f"one-wave-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -106,11 +106,18 @@ def _python_stage_tasks(spark, action):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    store, tracker = jsc.statusStore(), sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _python_stage_tasks(spark, action):
+    """Run ``action`` under a fresh job group; return its result and the
+    task count of every stage of it that ran a Python operator."""
+    sc = spark.sparkContext
+    out, jobs = _in_job_group(spark, action)
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
     tasks = []
-    for job in tracker.getJobIdsForGroup(group):
+    for job in jobs:
         for sid in tracker.getJobInfo(job).stageIds:
             info = tracker.getStageInfo(sid)
             if info is None or not info.numCompletedTasks:

@@ -335,6 +335,39 @@ def test_partitioned_quadkey_prunes_directories(spark, sparse_corpus, tmp_path):
     assert len(prefixes) <= 4  # 2 corners -> a handful of directories
 
 
+def test_crosstab_partitioned_prunes_both_scans(spark, corpus, tmp_path):
+    """Crosstab runs zonal's front half: over quad-prefix partitioned
+    storage both payload scans (value and class raster) prune
+    directories at listing time, and the rows equal those over the plain
+    table."""
+    import re
+
+    from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
+    from python_rasterstats_spark.plans.explain import physical_plan
+    from python_rasterstats_spark.sources.tables import (
+        write_quadkey_partitioned_tiles,
+    )
+
+    tiles, zones, datasets = corpus
+    polys = zones.filter(F.col("collection") == "polygons")
+    path = str(tmp_path / "xtab_part")
+    write_quadkey_partitioned_tiles(tiles, datasets, path)
+    kw = dict(value_dataset="slope", class_dataset="slope_classes")
+    want = _collect_sorted(zonal_crosstab_df(polys, tiles, datasets, **kw))
+    out = zonal_crosstab_df(polys, spark.read.parquet(path), datasets, **kw)
+    assert _collect_sorted(out) == want and len(want) > 0
+    # one entry per scan (an executed adaptive plan prints each twice)
+    filters = {
+        m.group(1)
+        for ln in physical_plan(out).splitlines()
+        if "Scan parquet" in ln and "bytes" in ln
+        for m in [re.search(r"PartitionFilters: \[([^\]]*)\]", ln)]
+        if m
+    }
+    assert len(filters) == 2, filters
+    assert all("qk_prefix" in f for f in filters), filters
+
+
 def test_multi_dataset_grids_get_independent_prefix_shifts(spark, tmp_path):
     """Two datasets with different grid sizes partition and prune with
     their OWN grid-adaptive shifts; results equal the unpruned run."""
@@ -403,13 +436,12 @@ def test_quadkey_overflow_grid_falls_back_to_no_constraint():
 
 
 def test_smj_regime_prunes_without_collecting_geoms(spark, sparse_corpus):
-    """The SMJ regime (zone set too large to collect) now fences the tile
-    scan with a DISTRIBUTED per-dataset union bbox from the sizing pass —
+    """The SMJ regime (zone set too large to collect) fences the tile scan
+    with the DISTRIBUTED Morton-bucketed rects of its sizing pass —
     results equal broadcast, and the predicate reaches the scan."""
     from python_rasterstats_spark.operators.zonal import (
         collect_dataset_meta,
-        smj_bounds_filter,
-        zone_cell_counts,
+        front_half,
     )
 
     c = sparse_corpus
@@ -428,21 +460,14 @@ def test_smj_regime_prunes_without_collecting_geoms(spark, sparse_corpus):
     )
     assert want == got
     meta = collect_dataset_meta(c["datasets"])
-    zones = c["zones"]
-    counts = zone_cell_counts(zones, meta)
-    pred = smj_bounds_filter(counts, meta)
-    tiles_df = spark.read.parquet(c["plain"])
-    plan = (
-        tiles_df.filter(pred)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    fenced = front_half(
+        c["zones"], spark.read.parquet(c["plain"]), meta, broadcast=False
+    ).tiles
+    plan = fenced._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "tile_col" in plan
     # per-zone granularity without any geometry collect: the 2 corner
     # zones admit ~their own tiles, not the whole-grid union bbox
-    admitted = tiles_df.filter(pred).count()
-    assert admitted <= 64  # union bbox would admit all 4096
-    union_pred = smj_bounds_filter(counts)  # meta-less fallback
-    assert tiles_df.filter(union_pred).count() == 4096
+    assert fenced.count() <= 64  # union bbox would admit all 4096
 
 
 def test_sorted_writer_rowgroup_sizing_beats_rects(spark, sparse_corpus, tmp_path):
@@ -494,15 +519,14 @@ def test_sorted_writer_rowgroup_sizing_beats_rects(spark, sparse_corpus, tmp_pat
 
 
 def test_point_query_smj_regime_fenced_and_matches(spark, sparse_corpus):
-    """r5: the point operator's SMJ regime (broadcast_vertices=False —
-    vertex sets too large to collect) now fences the tile scan with the
-    same collect-free Morton-bucketed rect aggregation zonal uses, fed by
-    the already-persisted vertex-window table. Results equal the
-    broadcast regime; the predicate reaches the scan and admits ~the
-    working set, not the corpus."""
+    """The point operator's SMJ regime (broadcast_vertices=False — vertex
+    sets too large to collect) fences the tile scan with the front
+    half's collect-free Morton-bucketed rects over each zone's tile
+    window widened by one tile. Results equal the broadcast regime; the
+    fence admits ~the working set, not the corpus."""
     from python_rasterstats_spark.operators.point import point_query_df
     from python_rasterstats_spark.operators.zonal import (
-        collect_dataset_meta, smj_bounds_filter,
+        collect_dataset_meta, front_half,
     )
 
     c = sparse_corpus
@@ -520,16 +544,13 @@ def test_point_query_smj_regime_fenced_and_matches(spark, sparse_corpus):
         )
     )
     assert want == got and len(want) > 0
-    # the fence itself: vertex-window tile keys → ≤64 rects → predicate
+    # the fence itself: padded tile windows → ≤64 rects → predicate
     meta = collect_dataset_meta(c["datasets"])
-    tiles_df = spark.read.parquet(c["plain"])
-    zrows = c["zones"].select("zone_id", "dataset", "geometry_wkb")
-    from python_rasterstats_spark.operators.zonal import zone_cell_counts
-
-    counts = zone_cell_counts(zrows, meta)
-    pred = smj_bounds_filter(counts, meta)
-    admitted = tiles_df.filter(pred).count()
-    assert admitted <= 64  # two corner zones: not the 4096-tile corpus
+    fenced = front_half(
+        c["zones"], spark.read.parquet(c["plain"]), meta, broadcast=False,
+        pad_tiles=1,
+    ).tiles
+    assert fenced.count() <= 64  # two corner zones: not the 4096-tile corpus
 
 
 @pytest.fixture(scope="module")

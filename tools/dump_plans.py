@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -29,12 +30,16 @@ def main():
         map_in_pandas_inputs, physical_plan, plan_summary,
     )
     from python_rasterstats_spark.session import get_spark
-    from python_rasterstats_spark.sources.tables import load_corpus
+    from python_rasterstats_spark.sources.tables import (
+        load_corpus, write_quadkey_partitioned_tiles,
+    )
 
     spark = get_spark(master="local[8]", shuffle_partitions=8, app="plans")
     spark.sparkContext.setLogLevel("ERROR")
     tiles, zones, datasets = load_corpus(spark, ensure_fixtures())
     polys = zones.filter(F.col("collection") == "polygons")
+    part_path = os.path.join(tempfile.mkdtemp(prefix="plans_xt_"), "tiles")
+    write_quadkey_partitioned_tiles(tiles, datasets, part_path)
 
     cases = {
         "zonal_default (scalar stats, broadcast regime)": zonal_stats_df(
@@ -71,6 +76,14 @@ def main():
             stats="count min max mean median majority unique".split(),
             broadcast_zones=False,
         ),
+        "zonal_crosstab over quad-prefix partitioned tiles": zonal_crosstab_df(
+            polys, spark.read.parquet(part_path), datasets,
+            value_dataset="slope", class_dataset="slope_classes",
+        ),
+        "zonal_crosstab (SMJ regime)": zonal_crosstab_df(
+            polys, tiles, datasets, value_dataset="slope",
+            class_dataset="slope_classes", broadcast_zones=False,
+        ),
     }
     # the SMJ regime groups its cover cells per tile key (an Exchange on
     # the tile key) before joining them to the tiles, so the broadcast
@@ -90,7 +103,7 @@ def main():
         "  broadcast regime — including the boundless-nodata path, whose",
         "  NULL-payload rows for missing tiles come from the driver-known",
         "  cover keys anti-joined against a key-only scan. The SMJ regime",
-        "  (`broadcast_zones=False`, last case) is exempt by design: its",
+        "  (`broadcast_zones=False`, the SMJ cases) is exempt by design: its",
         "  cover cells are grouped per tile key (an Exchange on the tile",
         "  key) and joined to the tiles, by a sort-merge join at scale;",
         "  on this small fixture the planner broadcasts the grouped cells",
@@ -140,6 +153,14 @@ def main():
             "Exchange hashpartitioning(dataset" in plan
             or "Exchange hashpartitioning(tile_col" in plan
         )
+        # directory-level pruning evidence (prefix-partitioned storage)
+        partition_filters = sorted({
+            m.group(0)[:120]
+            for ln in plan.splitlines()
+            if "Scan parquet" in ln
+            for m in [re.search(r"PartitionFilters: \[[^\]]+\]", ln)]
+            if m
+        })
         coalesce = re.findall(r"\bCoalesce \d+", plan)
         sort_fed = sum(
             1 for _, sort, _ in map_in_pandas_inputs(plan) if sort is not None
@@ -161,8 +182,13 @@ def main():
             + ("; ".join(scans) if scans else "(no direct parquet scan — in-memory fixture)"),
             "- pushed filters (scan-level tile pruning): "
             + ("; ".join(pushed) if pushed else "(none)"),
-            "",
         ]
+        if partition_filters:
+            lines.append(
+                "- partition filters (directory pruning): "
+                + "; ".join(partition_filters)
+            )
+        lines.append("")
         if name in smj_cases:
             assert tile_exchange, name
         else:
@@ -189,7 +215,6 @@ def _sparse_quadkey_section(spark):
     set reaches the scan as a pushed ``In`` filter, and the executed
     scan outputs only the row groups holding a covered key."""
     import re
-    import tempfile
 
     import numpy as np
 

@@ -8,23 +8,21 @@ Huffman tables, zigzag run-length entropy coding with byte stuffing,
 8×8 DCT-II — decodable by any JPEG reader, and the decoder accepts
 baseline grayscale JPEGs produced by any encoder (DRI/RSTn supported).
 
-Scope (documented): the full practical T.81 DCT matrix —
-baseline-sequential (SOF0/1), progressive (SOF2), sequential-
-arithmetic (SOF9) and progressive-arithmetic (SOF10; QM coder —
-qmcoder.py) — 8-bit,
-grayscale and color in any sampling layout with integral upsample
-ratios — 4:4:4, 4:2:0 (the layout virtually every camera/web encoder
-emits), 4:2:2, 4:4:0, 4:1:1 (YCbCr BT.601; color decode returns a
-(3, h, w) uint8 array — the corpus's multiband convention; the
-encoders can emit all five in all three entropy modes). Progressive
-decode covers the full T.81 G feature set — spectral selection,
-successive approximation (DC + AC refinement with EOB runs),
-interleaved and single-component scans, DHT redefinition between
-scans — and jpeg_encode_progressive emits a spectral+SA scan script
-whose decode is coefficient-exact against the baseline encoding of
-the same image (pinned in test_jpeg); jpeg_encode_arithmetic's
-output is pinned the same way (and DAC conditioning is honored), as
-is jpeg_encode_arithmetic_progressive's (SOF10, T.81 G.1.3 models).
+Scope (documented): the decoder covers the full practical T.81 DCT
+matrix — baseline-sequential (SOF0/1), progressive (SOF2), sequential-
+arithmetic (SOF9) and progressive-arithmetic (SOF10; QM decoder —
+qmcoder.py) — 8-bit, grayscale and color in any sampling layout with
+integral upsample ratios — 4:4:4, 4:2:0 (the layout virtually every
+camera/web encoder emits), 4:2:2, 4:4:0, 4:1:1 (YCbCr BT.601; color
+decode returns a (3, h, w) uint8 array — the corpus's multiband
+convention). Progressive decode covers the full T.81 G feature set —
+spectral selection, successive approximation (DC + AC refinement with
+EOB runs), interleaved and single-component scans, DHT redefinition
+between scans. The encoders are baseline only (jpeg_encode,
+jpeg_encode_color, all five layouts): the engine only ever writes
+baseline tiles. The progressive and arithmetic decode paths are pinned
+by committed byte streams (tests/data/jpeg_streams.npz), each decoded
+coefficient-exact against the baseline encoding of the same image.
 Baseline files may also carry one non-interleaved scan per component
 (T.81-legal; decoded via the same per-scan machinery), and the color
 convention follows the libjpeg rule: an Adobe APP14 transform byte
@@ -433,400 +431,6 @@ def jpeg_encode_color(rgb: np.ndarray, *, quality: int = 95,
     out += entropy
     out += b"\xff\xd9"
     return bytes(out)
-
-
-def _flat_ac_bits_vals():
-    """A valid (canonical, non-degenerate) Huffman table over every AC
-    symbol a progressive scan can emit: (run<<4)|size for size 0..10 —
-    size 0 covers EOB0..EOB14 (run 0..14) and ZRL (run 15). Uniform
-    9-bit codes (Kraft sum 176/512 < 1; the all-ones code stays unused),
-    so no per-scan frequency pass is needed. ~1 bit/symbol worse than
-    Annex K — irrelevant for a correctness-first encoder."""
-    vals = [(r << 4) | s for r in range(16) for s in range(11)]
-    bits = [0] * 16
-    bits[8] = len(vals)  # all codes length 9
-    return bits, vals
-
-
-def _emit_vli(bw_, v: int, cat: int) -> None:
-    if cat:
-        bw_.write(v if v > 0 else v + (1 << cat) - 1, cat)
-
-
-def _frame_headers(sof_marker, h, w, samps, qtids, qts) -> bytearray:
-    """SOI/APP0/DQT(s)/SOF — shared by every _component_grids encoder;
-    only the SOF marker byte (0xC0/0xC2/0xC9/0xCA) differs."""
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xE0, _JFIF_APP0)
-    out += _seg(0xDB, b"\x00" + bytes(qts[0][ZIGZAG].tolist()))
-    if len(qts) > 1:
-        out += _seg(0xDB, b"\x01" + bytes(qts[1][ZIGZAG].tolist()))
-    sof = struct.pack(">BHHB", 8, h, w, len(samps))
-    for ci, (sh, sv) in enumerate(samps):
-        sof += bytes([ci + 1, (sh << 4) | sv, qtids[ci]])
-    out += _seg(sof_marker, sof)
-    return out
-
-
-def _sos_seg(cids, ss, se, ah, al, entropy: bytes) -> bytes:
-    hdr = bytes([len(cids)]) + b"".join(
-        bytes([cid, 0x00]) for cid in cids
-    ) + bytes([ss, se, (ah << 4) | al])
-    return _seg(0xDA, hdr) + entropy
-
-
-def _component_grids(arr: np.ndarray, quality: int, sampling: str):
-    """Shared encoder prep: per-component MCU-padded coefficient grids in
-    raster block order (stride mcux*sh — identical layout to the
-    decoder's grids). The FULL-RES plane is padded to the MCU extent
-    first, then block-mean subsampled (the baseline encoder's order, so
-    coefficients match it exactly). Returns
-    (h, w, samps, qtids, qts, zz, mcux, mcuy, hmax, vmax)."""
-    a = np.asarray(arr)
-    if a.ndim == 3 and a.shape[-1] == 3 and a.shape[0] != 3:
-        a = np.transpose(a, (2, 0, 1))
-    if np.issubdtype(a.dtype, np.floating):
-        raise ValueError("this encoder takes uint8 input")
-    if a.ndim == 2:
-        h, w = a.shape
-        samps = [(1, 1)]
-        qtids = [0]
-        qts = [_quality_qt(quality)]
-        planes = [a.astype(np.float64)]
-    else:
-        assert a.ndim == 3 and a.shape[0] == 3, "color input must be 3-band"
-        if sampling not in SAMPLING_LAYOUTS:
-            raise ValueError("sampling must be one of "
-                             "'444','420','422','440','411'")
-        h, w = a.shape[1:]
-        sh0, sv0 = SAMPLING_LAYOUTS[sampling]
-        samps = [(sh0, sv0), (1, 1), (1, 1)]
-        qtids = [0, 1, 1]
-        qts = [_quality_qt(quality), _chroma_qt(quality)]
-        ycc = _rgb_to_ycbcr(a.astype(np.float64))
-        planes = list(ycc)
-    hmax = max(s for s, _ in samps)
-    vmax = max(s for _, s in samps)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    zz = []
-    fth, ftw = mcuy * vmax * 8, mcux * hmax * 8
-    for ci, (sh, sv) in enumerate(samps):
-        pl = planes[ci]
-        if pl.shape != (fth, ftw):
-            pl = np.pad(pl, ((0, fth - pl.shape[0]), (0, ftw - pl.shape[1])),
-                        mode="edge")
-        ry, rx = vmax // sv, hmax // sh
-        if ry > 1 or rx > 1:
-            pl = pl.reshape(fth // ry, ry, ftw // rx, rx).mean(axis=(1, 3))
-        zz.append(_quantized_zigzag(pl, qts[qtids[ci]]))
-    return h, w, samps, qtids, qts, zz, mcux, mcuy, hmax, vmax
-
-
-def jpeg_encode_progressive(arr: np.ndarray, *, quality: int = 95,
-                            sampling: str = "420") -> bytes:
-    """Encode uint8 grayscale (2D) or RGB (3-band) as a PROGRESSIVE JPEG
-    (SOF2) with both spectral selection and successive approximation —
-    the scan script is DC(Al=1) → DC refine → per-component AC bands
-    (1-5, 6-63 at Al=2) → AC refine (Al=2→1) → AC refine (Al=1→0), so a
-    conforming decoder reconstructs the EXACT same coefficients as the
-    baseline encoding (test_jpeg pins that equivalence against
-    jpeg_decode). Primary role: exercising/validating the progressive
-    decode path plus compatibility output; the corpus hot path stays
-    baseline. Float tiles: use baseline jpeg_encode (APP15 sidecar)."""
-    (h, w, samps, qtids, qts, zz, mcux, mcuy, hmax, vmax) = _component_grids(
-        arr, quality, sampling)
-    ncomp = len(samps)
-
-    dc_codes = _canonical_codes(DC_BITS, DC_VALS)
-    ac_bits, ac_vals = _flat_ac_bits_vals()
-    ac_codes = _canonical_codes(ac_bits, ac_vals)
-
-    def dims(ci):
-        sh, sv = samps[ci]
-        return _comp_block_dims((0, 0, sh, sv), mcux, w, h, hmax, vmax)
-
-    sos = _sos_seg
-    out = _frame_headers(0xC2, h, w, samps, qtids, qts)  # SOF2
-    out += _seg(0xC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-
-    # ---- scan 1: DC first pass, Al=1, interleaved over all components
-    bw_ = _BitWriter()
-    preds = [0] * ncomp
-    for mi in range(mcux * mcuy):
-        my, mx = divmod(mi, mcux)
-        for ci in range(ncomp):
-            sh, sv = samps[ci]
-            bw_c = mcux * sh
-            for v in range(sv):
-                for u in range(sh):
-                    bi = (my * sv + v) * bw_c + (mx * sh + u)
-                    val = int(zz[ci][bi][0]) >> 1  # point transform
-                    diff = val - preds[ci]
-                    preds[ci] = val
-                    cat = _category(diff)
-                    code, ln = dc_codes[cat]
-                    bw_.write(code, ln)
-                    _emit_vli(bw_, diff, cat)
-    out += sos(list(range(1, ncomp + 1)), 0, 0, 0, 1, bw_.flush())
-
-    # ---- scan 2: DC refinement, Ah=1 Al=0 (one raw bit per block)
-    bw_ = _BitWriter()
-    for mi in range(mcux * mcuy):
-        my, mx = divmod(mi, mcux)
-        for ci in range(ncomp):
-            sh, sv = samps[ci]
-            bw_c = mcux * sh
-            for v in range(sv):
-                for u in range(sh):
-                    bi = (my * sv + v) * bw_c + (mx * sh + u)
-                    bw_.write(int(zz[ci][bi][0]) & 1, 1)
-    out += sos(list(range(1, ncomp + 1)), 0, 0, 1, 0, bw_.flush())
-
-    # ---- AC scans per component: spectral bands at Al=2, then two
-    # successive-approximation refinement passes over the full band
-    for ci in range(ncomp):
-        for ss, se in ((1, 5), (6, 63)):
-            out += sos([ci + 1], ss, se, 0, 2,
-                       _ac_first_scan(zz[ci], dims(ci), ss, se, 2, ac_codes))
-    for ah in (2, 1):
-        for ci in range(ncomp):
-            out += sos([ci + 1], 1, 63, ah, ah - 1,
-                       _ac_refine_scan(zz[ci], dims(ci), 1, 63, ah - 1,
-                                       ac_codes))
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def jpeg_encode_arithmetic(arr: np.ndarray, *, quality: int = 95,
-                           sampling: str = "420") -> bytes:
-    """Encode uint8 grayscale (2D) or RGB (3-band) as a SEQUENTIAL
-    ARITHMETIC-coded JPEG (SOF9): same DCT/quantization as baseline, QM
-    entropy coding (qmcoder.py) instead of Huffman — typically 5-10%
-    smaller. Emits an explicit DAC segment with the default conditioning
-    (L=0, U=1, Kx=5). Decode is pinned coefficient-exact against the
-    Huffman baseline in test_jpeg; see qmcoder.py's docstring for the
-    validation scope (roundtrip + cross-path exactness; no
-    arithmetic-capable foreign codec exists in this environment)."""
-    from .qmcoder import ACModel, DCModel, QMEncoder
-
-    (h, w, samps, qtids, qts, zz, mcux, mcuy, hmax, vmax) = _component_grids(
-        arr, quality, sampling)
-    ncomp = len(samps)
-    enc = QMEncoder()
-    dcm, acm = DCModel(), ACModel()  # both tables id 0, shared by comps
-    preds = [0] * ncomp
-    ctxs = [0] * ncomp
-
-    def code_block(ci, bi):
-        blk = zz[ci][bi]
-        diff = int(blk[0]) - preds[ci]
-        preds[ci] = int(blk[0])
-        ctxs[ci] = dcm.encode(enc, diff, ctxs[ci])
-        acm.encode_block(enc, blk)
-
-    comps_like = [(ci + 1, 0, sh, sv) for ci, (sh, sv) in enumerate(samps)]
-    for _unit, ci, bi in _scan_block_order(list(range(ncomp)), comps_like,
-                                           mcux, mcuy, w, h, hmax, vmax):
-        code_block(ci, bi)
-    entropy = enc.flush()
-
-    out = _frame_headers(0xC9, h, w, samps, qtids, qts)  # SOF9
-    # DAC: DC table 0 conditioning (U<<4)|L = 0x10; AC table 0 Kx = 5
-    out += _seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))
-    out += _sos_seg(list(range(1, ncomp + 1)), 0, 63, 0, 0, entropy)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def jpeg_encode_arithmetic_progressive(arr: np.ndarray, *,
-                                       quality: int = 95,
-                                       sampling: str = "420") -> bytes:
-    """Encode uint8 grayscale (2D) or RGB (3-band) as a PROGRESSIVE
-    ARITHMETIC-coded JPEG (SOF10): the progressive encoder's scan script
-    (DC Al=1 → DC refine → AC bands 1-5/6-63 at Al=2 → AC refine 2→1 →
-    1→0) with QM entropy coding per T.81 G.1.3 — statistics reset at
-    every scan, as the decoder requires. Decode is pinned
-    coefficient-exact against the baseline encoding in test_jpeg."""
-    from .qmcoder import ACModel, DCModel, QMEncoder
-
-    (h, w, samps, qtids, qts, zz, mcux, mcuy, hmax, vmax) = _component_grids(
-        arr, quality, sampling)
-    ncomp = len(samps)
-    comps_like = [(ci + 1, 0, sh, sv) for ci, (sh, sv) in enumerate(samps)]
-
-    def order(cis):
-        return _scan_block_order(cis, comps_like, mcux, mcuy, w, h,
-                                 hmax, vmax)
-
-    sos_seg = _sos_seg
-    out = _frame_headers(0xCA, h, w, samps, qtids, qts)  # SOF10
-    out += _seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))  # default DAC
-
-    all_cids = list(range(1, ncomp + 1))
-    # DC first pass (Al=1, interleaved, point-transformed diffs)
-    enc = QMEncoder()
-    dcm = DCModel()
-    preds = [0] * ncomp
-    ctxs = [0] * ncomp
-    for _u, ci, bi in order(list(range(ncomp))):
-        v = int(zz[ci][bi][0]) >> 1
-        ctxs[ci] = dcm.encode(enc, v - preds[ci], ctxs[ci])
-        preds[ci] = v
-    out += sos_seg(all_cids, 0, 0, 0, 1, enc.flush())
-    # DC refinement (one fixed-state bit per block)
-    enc = QMEncoder()
-    for _u, ci, bi in order(list(range(ncomp))):
-        enc.encode_fixed(int(zz[ci][bi][0]) & 1)
-    out += sos_seg(all_cids, 0, 0, 1, 0, enc.flush())
-    # AC spectral bands at Al=2, per component
-    for ci in range(ncomp):
-        for ss, se in ((1, 5), (6, 63)):
-            enc = QMEncoder()
-            acm = ACModel()
-            for _u, _c, bi in order([ci]):
-                acm.encode_block(enc, zz[ci][bi], ss=ss, se=se, al=2)
-            out += sos_seg([ci + 1], ss, se, 0, 2, enc.flush())
-    # AC successive-approximation refinements
-    for ah in (2, 1):
-        for ci in range(ncomp):
-            enc = QMEncoder()
-            acm = ACModel()
-            for _u, _c, bi in order([ci]):
-                acm.encode_refine(enc, zz[ci][bi], ss=1, se=63, al=ah - 1)
-            out += sos_seg([ci + 1], 1, 63, ah, ah - 1, enc.flush())
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _ac_first_scan(zzc, dims, ss, se, al, ac_codes) -> bytes:
-    """Entropy data of one first-pass AC scan (T.81 G.1.2.2): values are
-    point-transformed (truncate toward zero) by 2^Al; all-zero bands
-    accumulate EOB runs (EOBn symbols carry the run length)."""
-    bh_s, bw_s, bw_c = dims
-    bw_ = _BitWriter()
-    eobrun = 0
-
-    def flush_eobrun():
-        nonlocal eobrun
-        if eobrun:
-            n = eobrun.bit_length() - 1
-            code, ln = ac_codes[n << 4]
-            bw_.write(code, ln)
-            bw_.write(eobrun - (1 << n), n)
-            eobrun = 0
-
-    for u in range(bh_s * bw_s):
-        r_, c_ = divmod(u, bw_s)
-        blk = zzc[r_ * bw_c + c_]
-        band = []
-        for k in range(ss, se + 1):
-            v = int(blk[k])
-            band.append(v >> al if v >= 0 else -((-v) >> al))
-        last = -1
-        for i, t in enumerate(band):
-            if t:
-                last = i
-        if last < 0:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                flush_eobrun()
-            continue
-        flush_eobrun()
-        run = 0
-        for t in band[: last + 1]:
-            if t == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_codes[0xF0]  # ZRL
-                bw_.write(code, ln)
-                run -= 16
-            cat = _category(t)
-            code, ln = ac_codes[(run << 4) | cat]
-            bw_.write(code, ln)
-            _emit_vli(bw_, t, cat)
-            run = 0
-        if last < se - ss:
-            eobrun = 1
-    flush_eobrun()
-    return bw_.flush()
-
-
-def _ac_refine_scan(zzc, dims, ss, se, al, ac_codes) -> bytes:
-    """Entropy data of one AC successive-approximation refinement scan
-    (T.81 G.1.2.3). The bit order is dictated by the decoder's traversal,
-    so this emits exactly that read sequence: per newly-significant
-    coefficient (point-transformed magnitude exactly 1) a run symbol
-    counting ZERO-history positions + its sign bit, with one correction
-    bit interleaved for every already-significant coefficient the
-    decoder advances across; blocks (or block tails) without
-    newly-significant coefficients join an EOB run whose correction bits
-    ride immediately after the EOBn code."""
-    bh_s, bw_s, bw_c = dims
-    bw_ = _BitWriter()
-    eobrun = 0
-    eob_bits: list[int] = []  # correction bits owned by the pending run
-
-    def flush_eobrun():
-        nonlocal eobrun
-        if eobrun:
-            n = eobrun.bit_length() - 1
-            code, ln = ac_codes[n << 4]
-            bw_.write(code, ln)
-            bw_.write(eobrun - (1 << n), n)
-            eobrun = 0
-            for b in eob_bits:
-                bw_.write(b, 1)
-            eob_bits.clear()
-
-    nband = se - ss + 1
-    for u in range(bh_s * bw_s):
-        r_, c_ = divmod(u, bw_s)
-        blk = zzc[r_ * bw_c + c_]
-        vals = [int(blk[k]) for k in range(ss, se + 1)]
-        t = [abs(v) >> al for v in vals]
-        newly = [i for i, x in enumerate(t) if x == 1]
-        if not newly:
-            # EOB block: every history coefficient still gets one bit
-            eobrun += 1
-            eob_bits.extend(x & 1 for x in t if x > 1)
-            if eobrun == 0x7FFF:
-                flush_eobrun()
-            continue
-        flush_eobrun()
-        k = 0  # current band-relative position of the decoder
-        for pos in newly:
-            while True:
-                seg = [i for i in range(k, pos) if t[i] == 0]
-                if len(seg) <= 15:
-                    break
-                # ZRL: decoder skips 16 zero-history positions, reading a
-                # correction bit at each nonzero it crosses
-                code, ln = ac_codes[0xF0]
-                bw_.write(code, ln)
-                z16 = seg[15]
-                for i in range(k, z16):
-                    if t[i] > 1:
-                        bw_.write(t[i] & 1, 1)
-                k = z16 + 1
-            r = sum(1 for i in range(k, pos) if t[i] == 0)
-            code, ln = ac_codes[(r << 4) | 1]
-            bw_.write(code, ln)
-            bw_.write(1 if vals[pos] > 0 else 0, 1)
-            for i in range(k, pos):
-                if t[i] > 1:
-                    bw_.write(t[i] & 1, 1)
-            k = pos + 1
-        if k < nband:
-            # trailing region: consumed by the decoder's EOB logic
-            eobrun += 1
-            eob_bits.extend(t[i] & 1 for i in range(k, nband) if t[i] > 1)
-            if eobrun == 0x7FFF:
-                flush_eobrun()
-    flush_eobrun()
-    return bw_.flush()
 
 
 class _BitReader:

@@ -4,20 +4,24 @@
 mini-rasters (main.py:318-321) and non-elementwise ``zone_func`` transforms
 cannot be split into mergeable partials: they need the whole masked zone
 array. This operator runs on the broadcast regime's front half
-(operators/zonal.front_half: pruned tile scan, driver cover dict,
-NULL-payload rows for cover keys with no stored tile), then
+(operators/zonal.front_half: pruned tile scan, driver cover dict of the
+stored grid's keys), then
 
     tile kernel (mapInPandas, one pass per tile): decode the payload once,
     select the band, cut each covering zone's part of its bbox window
                                    │ (zone_id, row_off, col_off, block)
+                                   │ ∪ one NULL-block anchor per zone
     groupBy(zone_id).applyInPandas: paste the blocks into the zone's
     pre-filled canvas and run the exact single-zone kernel there.
 
-Every zone with a covering tile key gets its row, also when all its tiles
-are absent (count 0, reference main.py:230-234). Memory per task is
-bounded by the zone's bbox window (``max_zone_pixels`` guard) — this is
-the documented non-scalable tier; the partial/merge protocol in
-operators/zonal.py is the scale path (SURVEY.md §2.4 A18).
+The tiles are read by one scan and never shuffled; the only Exchange is
+the groupBy's. Every zone of a known dataset with a non-empty tile window
+gets its row, also when all its tiles are off the grid or absent: its
+anchor row (built on the driver) carries no pixels, and the canvas is
+pre-filled with the fill value (count 0, reference main.py:230-234).
+Memory per task is bounded by the zone's bbox window (``max_zone_pixels``
+guard) — this is the documented non-scalable tier; the partial/merge
+protocol in operators/zonal.py is the scale path (SURVEY.md §2.4 A18).
 """
 
 from __future__ import annotations
@@ -33,8 +37,11 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import codecs as C
 from .. import kernel as K
 from .zonal import (
-    _TILE_COLS, _effective_geom, collect_dataset_meta, front_half,
+    _TILE_COLS, _effective_geom, _zone_tile_window, collect_dataset_meta,
+    front_half, local_frame,
 )
+
+_BLOCKS_SCHEMA = "zone_id long, row_off int, col_off int, block binary"
 
 _MINI_RASTER_TYPE = T.StructType(
     [
@@ -97,20 +104,30 @@ def zonal_gather_df(
     # properties ship once per zone per executor in broadcast dicts,
     # never per covering tile
     fh = front_half(
-        zones, tiles, meta, broadcast=True, fill_missing=True,
+        zones, tiles, meta, broadcast=True,
         max_cells_per_zone=max_cells_per_zone, raise_beyond_extent=not boundless,
         extra_cols=("properties_json",),
     )
     kernel_in, cover = fh.join(fh.tiles)
     geoms_bc = fh.geoms()
-    zbc = zones.sparkSession.sparkContext.broadcast({
-        zid: (ds, props, fh.windows[(zid, ds)]) for zid, ds, props in fh.zone_rows
-    })
+    spark = zones.sparkSession
+    windows = fh.windows()
+    zone_info = {
+        zid: (ds, props, windows[(zid, ds)]) for zid, ds, props in fh.zone_rows
+    }
+    zbc = spark.sparkContext.broadcast(zone_info)
+    # the cover holds stored-grid keys only, so a zone whose tiles are all
+    # off the grid or absent gets its row from a NULL-block anchor: every
+    # zone of a known dataset with a non-empty tile window
+    anchors = local_frame(spark, pd.DataFrame(
+        [(zid, 0, 0, None) for zid, (ds, _, win) in zone_info.items()
+         if ds in meta and _zone_tile_window(win, meta[ds], False)[4] > 0],
+        columns=["zone_id", "row_off", "col_off", "block"],
+    ), _BLOCKS_SCHEMA)
 
     def tile_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         """Per tile and covering zone: the tile's part of the zone's bbox
-        window in native dtype (NULL for a tile with no stored payload)
-        and its offset in that window."""
+        window in native dtype and its offset in that window."""
         cov, zv = cover.value, zbc.value
         for pdf in batches:
             out = []
@@ -118,16 +135,14 @@ def zonal_gather_df(
                 zids = cov.get((ds, tc, tr))
                 if not zids:
                     continue  # scan false positive
-                tile = None
-                if payload is not None:
-                    tile = np.asarray(C.decode_tile(bytes(payload), fmt))
-                    if tile.ndim == 3:  # band select (S6, io.py:279)
-                        tile = tile[band - 1]
+                tile = np.asarray(C.decode_tile(bytes(payload), fmt))
+                if tile.ndim == 3:  # band select (S6, io.py:279)
+                    tile = tile[band - 1]
                 ty, tx = tr * meta[ds]["tile_h"], tc * meta[ds]["tile_w"]
                 for zid in zids:
                     (r0, r1), (c0, c1) = zv[zid][2]
                     rr0, cc0 = max(r0, ty), max(c0, tx)
-                    block = None if tile is None else C.encode_tile(
+                    block = C.encode_tile(
                         tile[rr0 - ty:r1 - ty, cc0 - tx:c1 - tx], "npy"
                     )
                     out.append((zid, rr0 - r0, cc0 - c0, block))
@@ -137,8 +152,8 @@ def zonal_gather_df(
                 )
 
     blocks = kernel_in.select(*_TILE_COLS).mapInPandas(
-        tile_blocks, "zone_id long, row_off int, col_off int, block binary"
-    )
+        tile_blocks, _BLOCKS_SCHEMA
+    ).unionByName(anchors)
 
     schema = _result_schema(stats, categorical, add_stats, raster_out)
     add_stats = add_stats or {}

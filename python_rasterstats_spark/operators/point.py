@@ -24,10 +24,11 @@ pixels the interpolation reads; a 2×2 bilinear window can straddle up to
                                    ▼
             vertex keys ⟕ values: a vertex with no stored tile → NULL (J4)
 
-The scan fence, the zone collect (broadcast regime) and the one-job
-sizing pass (SMJ regime) are zonal.front_half's, with every zone's tile
-window widened by one tile; the vertex windows are this operator's own
-cover, joined to the fenced tiles by the front half's join.
+The zone collect and the SMJ regime's one-job sizing pass and fence
+(each zone's tile window widened by one tile) are zonal.front_half's;
+the broadcast regime fences the scan to its vertex windows' own tiles.
+The vertex windows are this operator's cover, joined to the tiles by
+the front half's join.
 
 Returns (zone_id, vertex_idx, value). The API layer reassembles the
 reference's scalar-or-list output shape (point.py:198-199). A window
@@ -49,7 +50,7 @@ from .. import geom as G
 from .. import kernel as K
 from .zonal import (
     _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, front_half, local_frame,
-    spread,
+    spread, storage_fence,
 )
 
 _WINDOWS_SCHEMA = T.StructType(
@@ -103,9 +104,9 @@ def point_query_df(
     tile key and sort-merge joins them to the tiles — the same regime
     switch as zonal_stats_df's ``broadcast_zones``. Both regimes feed the
     same gather kernel, one row per tile. ``prune_tiles`` fences the tile
-    scan to the vertices' working set (widened by one tile: a bilinear
-    window reaches 1 px past the geometry's bbox) and changes nothing
-    else."""
+    scan to the vertices' working set (SMJ: each zone's tile window
+    widened by one tile, as a bilinear window reaches 1 px past the
+    geometry's bbox) and changes nothing else."""
     if interpolate not in ("nearest", "bilinear"):
         raise ValueError("interpolate must be nearest or bilinear")
     meta = collect_dataset_meta(datasets)
@@ -116,25 +117,27 @@ def point_query_df(
     bilin = interpolate == "bilinear"
     spark = zones.sparkSession
     keys = list(_TILE_COLS[:3])
-    # the shared front half (zonal.front_half), its fence widened by one
-    # tile: a bilinear window reaches 1 px past the geometry's bbox. The
-    # vertex windows are this operator's own cover, in the regime's form
+    # the shared front half; the vertex windows are this operator's cover
     fh = front_half(
         zones, tiles, meta, broadcast=broadcast_vertices, pad_tiles=1,
-        prune_tiles=prune_tiles, quadkey_level=quadkey_level,
+        prune_tiles=prune_tiles and not broadcast_vertices,
+        quadkey_level=quadkey_level,
     )
     if broadcast_vertices:
-        wins, vkey_rows = _driver_windows(
+        wins, vwins = _driver_windows(
             spark, fh.zone_geoms, meta, bilin=bilin, boundless=boundless
         )
-        scan = fh.tiles.select(*_TILE_COLS)
+        scan = fh.tiles
         pending = isinstance(wins, str)
         if not pending:
+            if prune_tiles:  # fenced to the vertex windows' own tiles
+                scan = storage_fence(scan, vwins, meta,
+                                     quadkey_level=quadkey_level)
             # exact-key semi join (broadcast, JVM-side): vertex windows
-            # touch few tiles, so without it every pruned-scan tile's
+            # touch few tiles, so without it every fenced-scan tile's
             # payload would cross Arrow just to be discarded by the dict
             # lookup
-            scan = scan.join(
+            scan = scan.select(*_TILE_COLS).join(
                 F.broadcast(local_frame(
                     spark, pd.DataFrame(list(wins.value), columns=keys),
                     "dataset string, tile_col int, tile_row int",
@@ -144,11 +147,12 @@ def point_query_df(
         kernel_in, wins = fh.join(scan, wins)
         # a pending error needs no vertex keys (the action raises), and an
         # empty vertex-key LocalTableScan would let the optimizer prune the
-        # raising stage out of the left join
-        vkeys = None if pending else local_frame(
-            spark, pd.DataFrame(vkey_rows, columns=["zone_id", "vertex_idx"]),
-            "zone_id long, vertex_idx int",
-        )
+        # raising stage out of the left join. DISTINCT keys, as in the SMJ
+        # regime: one row per vertex for a zone_id under several datasets
+        vkeys = None if pending else local_frame(spark, pd.DataFrame(
+            list(dict.fromkeys(k for k, _ in vwins)),
+            columns=["zone_id", "vertex_idx"],
+        ), "zone_id long, vertex_idx int")
     else:
         def explode_vertices(
             batches: Iterator[pd.DataFrame],
@@ -158,7 +162,7 @@ def point_query_df(
                 for zid, ds, wkb in zip(
                     pdf["zone_id"], pdf["dataset"], pdf["geometry_wkb"]
                 ):
-                    for vi, ux, uy, by_tile in _vertex_windows(
+                    for vi, _, ux, uy, by_tile in _vertex_windows(
                         zid, ds, wkb, meta, bilin=bilin, boundless=boundless
                     ):
                         for (tc, tr), pix in by_tile.items():
@@ -252,10 +256,11 @@ def _gather(meta: dict, wins, *, nodata, band: int):
 
 def _vertex_windows(zid, ds, wkb, meta: dict, *, bilin: bool, boundless: bool):
     """Per-vertex pixel windows of one zone, grouped by covering tile key:
-    yields ``(vertex_idx, ux, uy, {(tc, tr): [(pr, pc, pos), ...]})`` —
-    the one derivation behind both the SMJ regime's explode and the
-    driver-side window dict. Raises the reference's ValueError for an
-    unknown dataset or (boundless=False) a window beyond the extent."""
+    yields ``(vertex_idx, window, ux, uy, {(tc, tr): [(pr, pc, pos),
+    ...]})`` — the one derivation behind both the SMJ regime's explode
+    and the driver-side window dict. Raises the reference's ValueError
+    for an unknown dataset or (boundless=False) a window beyond the
+    extent."""
     m = meta.get(ds)
     if m is None:
         raise ValueError(f"zone {zid}: unknown dataset {ds!r}")
@@ -275,36 +280,35 @@ def _vertex_windows(zid, ds, wkb, meta: dict, *, bilin: bool, boundless: bool):
         ):
             key = (math.floor(pc / m["tile_w"]), math.floor(pr / m["tile_h"]))
             by_tile.setdefault(key, []).append((pr, pc, pos))
-        yield vi, ux, uy, by_tile
+        yield vi, win, ux, uy, by_tile
 
 
 def _driver_windows(
     spark, gd: dict, meta: dict, *, bilin: bool, boundless: bool
 ):
     """Driver-side twin of the SMJ regime's explode_vertices stage.
-    Returns ``(windows, vertex keys)``: windows is a Broadcast of
+    Returns ``(windows, vertex windows)``: windows is a Broadcast of
     ``{(ds, tc, tr): [(zid, vi, [(pr, pc, pos)...], ux, uy)...]}``, and
-    the vertex keys are DISTINCT, as the SMJ regime's ``distinct()`` makes
-    them, so a zone_id under several datasets yields one output row per
-    vertex either way. When a zone raises (unknown dataset, beyond-extent
-    with boundless=False), windows is the first error message instead,
-    as broadcast_cover_cells returns it; tile_driven_input turns it into
-    a stage that raises at action time."""
+    the vertex windows ``{((zid, vi), ds): pixel window}`` are in vertex
+    order. When a zone raises (unknown dataset, beyond-extent with
+    boundless=False), windows is the first error message instead, as
+    broadcast_cover_cells returns it; tile_driven_input turns it into a
+    stage that raises at action time."""
     wmap: dict = {}
-    vkeys: dict = {}  # insertion-ordered set
+    vwins: dict = {}
     for (zid, ds), wkb in gd.items():
         try:
-            for vi, ux, uy, by_tile in _vertex_windows(
+            for vi, win, ux, uy, by_tile in _vertex_windows(
                 zid, ds, wkb, meta, bilin=bilin, boundless=boundless
             ):
                 for (tc, tr), pix in by_tile.items():
                     wmap.setdefault((ds, tc, tr), []).append(
                         (zid, vi, pix, ux, uy)
                     )
-                vkeys[(zid, vi)] = None
+                vwins[((zid, vi), ds)] = win
         except ValueError as e:
-            return str(e), list(vkeys)
-    return spark.sparkContext.broadcast(wmap), list(vkeys)
+            return str(e), vwins
+    return spark.sparkContext.broadcast(wmap), vwins
 
 
 def _interp_join(gathered: DataFrame, vkeys: DataFrame | None, bilin: bool, _bc):

@@ -461,27 +461,55 @@ def quadkey_prune_ranges(
     }
 
 
-def tile_prune_filter(
-    windows: dict,
+def tile_prune_filter(windows: dict, meta: dict, *, pad_tiles: int = 0,
+                      **kw):
+    """Scan-level tile-pruning predicate from the pixel ``windows`` of
+    the collected zone dim (zone_windows): rects_prune_filter over every
+    zone's tile window widened by ``pad_tiles`` and clipped to the grid
+    (_zone_tile_rects)."""
+    return rects_prune_filter(
+        _zone_tile_rects(windows, meta, pad_tiles=pad_tiles), meta, **kw
+    )
+
+
+def storage_fence(tiles: DataFrame, windows: dict, meta: dict, *,
+                  pad_tiles: int = 0, quadkey_level: int = 16) -> DataFrame:
+    """``tiles`` fenced to the tiles of the pixel ``windows``
+    ``{(key, dataset): window}`` (tile_prune_filter): in the quadkey
+    forms, plus the qk_prefix directory IN-list, when ``tiles`` has those
+    columns."""
+    pred = tile_prune_filter(
+        windows, meta, pad_tiles=pad_tiles,
+        quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
+        quadkey_level=quadkey_level,
+        prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
+    )
+    return tiles if pred is None else tiles.filter(pred)
+
+
+def rects_prune_filter(
+    rects_by_ds: dict,
     meta: dict,
     *,
-    pad_tiles: int = 0,
     max_ranges: int = 64,
     quadkey_col: str | None = None,
     quadkey_level: int = 16,
     prefix_col: str | None = None,
 ):
-    """Scan-level tile-pruning predicate from the pixel ``windows`` of
-    the collected zone dim (zone_windows).
+    """Scan-level tile-pruning predicate admitting every tile of the
+    per-dataset tile rects ``rects_by_ds`` ``{dataset: [(tc0, tc1, tr0,
+    tr1), ...]}`` — the engine's one predicate builder, for the pixel
+    windows of the broadcast regime's zones and of the point query's
+    vertices (tile_prune_filter) and the SMJ regime's sizing rects
+    (smj_sizing_summary).
 
     At 100 TB this is the difference between scanning the planet and
     scanning the working set: the predicate reaches the parquet scan
     (PushedFilters), so row groups — and with dataset/tile-key partition
     or bucket layout, whole files — outside every zone's working set are
     never read. Correct by superset: any tile that could join a cover
-    cell lies inside its zone's padded bbox rect (``pad_tiles`` widens
-    every rect — the point operator's 2×2 bilinear windows reach 1 px
-    past the vertex bbox). Returns None when nothing can be pruned.
+    cell lies inside one of the rects. Returns None when nothing can be
+    pruned.
 
     Two storage regimes:
 
@@ -525,7 +553,6 @@ def tile_prune_filter(
     # (coverage > _DENSE_FRAC of the union) — sparse scattered zones keep
     # full per-zone granularity, dense corpora keep the r3-cheap plan.
     parts = []
-    rects_by_ds = _zone_tile_rects(windows, meta, pad_tiles=pad_tiles)
     if quadkey_col is not None:
         for ds, rects in rects_by_ds.items():
             ranges = _quadkey_ranges(rects, quadkey_level, max_ranges)
@@ -845,31 +872,6 @@ def _morton_expr(colc, colr, level: int = 16):
         term = cbit.bitwiseOR(rbit)
         qk = term if qk is None else qk.bitwiseOR(term)
     return qk
-
-
-def _rects_pred(by_ds: dict):
-    """Per-dataset rect lists → the scan predicate (dense sets collapse
-    to their union exactly as tile_prune_filter does)."""
-    parts = []
-    for ds, rects in by_ds.items():
-        rects = _coalesce_rects(rects, 64)
-        u = (
-            min(r[0] for r in rects),
-            max(r[1] for r in rects),
-            min(r[2] for r in rects),
-            max(r[3] for r in rects),
-        )
-        cov = sum((r[1] - r[0] + 1) * (r[3] - r[2] + 1) for r in rects)
-        area = (u[1] - u[0] + 1) * (u[3] - u[2] + 1)
-        if len(rects) > 1 and cov > _DENSE_FRAC * area:
-            rects = [u]
-        rng = " OR ".join(
-            f"(tile_col BETWEEN {tc0} AND {tc1} "
-            f"AND tile_row BETWEEN {tr0} AND {tr1})"
-            for tc0, tc1, tr0, tr1 in rects
-        )
-        parts.append(f"(dataset = {_sql_str(ds)} AND ({rng}))")
-    return F.expr(" OR ".join(parts)) if parts else None
 
 
 def smj_sizing_summary(counts: DataFrame, meta: dict):
@@ -1307,23 +1309,6 @@ def broadcast_cover_cells(
     dataset, beyond-extent with boundless=False, cover-cell cap) — the
     first pending error message, same text as zone_cover_cells raises;
     tile_driven_input turns it into a stage that raises at action time."""
-    cover = cover_dict(
-        windows, meta, clip_to_grid=clip_to_grid,
-        max_cells_per_zone=max_cells_per_zone,
-        raise_beyond_extent=raise_beyond_extent,
-    )
-    return cover if isinstance(cover, str) else spark.sparkContext.broadcast(cover)
-
-
-def cover_dict(
-    windows: dict,
-    meta: dict,
-    *,
-    clip_to_grid: bool = True,
-    max_cells_per_zone: int = 4_000_000,
-    raise_beyond_extent: bool = False,
-):
-    """broadcast_cover_cells' dict (or pending error message), unbroadcast."""
     cover: dict = {}
     for (zid, ds), win in windows.items():
         tw = _cover_window(
@@ -1337,7 +1322,7 @@ def cover_dict(
         for tr in range(tr0, tr1 + 1):
             for tc in range(tc0, tc1 + 1):
                 cover.setdefault((ds, tc, tr), []).append(zid)
-    return cover
+    return spark.sparkContext.broadcast(cover)
 
 
 def _kernel_tasks(spark, keys, meta: dict) -> int:
@@ -1426,11 +1411,11 @@ def tile_driven_input(
 class FrontHalf:
     """A query's front half (front_half). ``tiles`` is the fenced tile
     scan. In the broadcast regime ``zone_geoms`` ``{(zone_id, dataset):
-    wkb}``, ``windows`` (zone_windows) and ``zone_rows``
-    (collect_zone_rows) hold the collected zone dim; in the SMJ regime
-    they are None and ``big_keys`` names the hybrid big zones, whose
-    cover cells carry a NULL WKB. ``zone_datasets`` are the datasets the
-    zones can reference.
+    wkb}`` and ``zone_rows`` (collect_zone_rows) hold the collected zone
+    dim, and ``windows()`` parses it into zone_windows once, on first
+    use; in the SMJ regime all three are None and ``big_keys`` names the
+    hybrid big zones, whose cover cells carry a NULL WKB.
+    ``zone_datasets`` are the datasets the zones can reference.
 
     ``geoms()`` (the geometry broadcast: every zone, the SMJ hybrid big
     zones, or None), ``base()`` (the join-back base, one row per input
@@ -1444,7 +1429,7 @@ class FrontHalf:
 
     tiles: DataFrame
     zone_geoms: dict | None
-    windows: dict | None
+    windows: Callable | None
     zone_rows: list | None
     zone_datasets: frozenset
     big_keys: frozenset
@@ -1477,11 +1462,10 @@ def front_half(
 
     - ``broadcast=True``: the zone dim is collected once (with
       ``extra_cols``) and each WKB parsed once into its pixel window
-      (zone_windows). The windows serve the scan fence
-      (tile_prune_filter: a quadkey predicate, plus the qk_prefix
-      directory IN-list, when ``tiles`` has those columns), the size
-      estimate and the cover dict (broadcast_cover_cells). ``join`` is
-      tile_driven_input: no tile shuffle, one wave of kernel tasks.
+      (zone_windows), when first needed. The windows serve the scan
+      fence (storage_fence), the size estimate and the cover dict
+      (broadcast_cover_cells). ``join`` is tile_driven_input: no tile
+      shuffle, one wave of kernel tasks.
     - ``broadcast=False`` (zone sets too large to collect): one
       distributed sizing pass (zone_cell_counts) summarized by ONE job
       (smj_sizing_summary) serves the scan fence, the size estimate and
@@ -1513,21 +1497,15 @@ def front_half(
         # rebuilt from the same rows (every input row, duplicates and the
         # input's zone_id type kept) as a LocalTableScan
         zone_geoms, zone_rows = collect_zone_rows(zones, *extra_cols)
-        windows = zone_windows(zone_geoms, meta)
+        windows = functools.cache(lambda: zone_windows(zone_geoms, meta))
         if prune_tiles:
-            pred = tile_prune_filter(
-                {**windows, **{
-                    (z, p): w for p in peers for (z, _), w in windows.items()
-                }},
-                meta, pad_tiles=pad_tiles,
-                quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-                quadkey_level=quadkey_level,
-                prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
-            )
+            tiles = storage_fence(tiles, {**windows(), **{
+                (z, p): w for p in peers for (z, _), w in windows().items()
+            }}, meta, pad_tiles=pad_tiles, quadkey_level=quadkey_level)
 
         def join(rows, cover=None):
             if cover is None:
-                cover = broadcast_cover_cells(spark, windows, meta, **cover_kw)
+                cover = broadcast_cover_cells(spark, windows(), meta, **cover_kw)
             return tile_driven_input(rows, cover, meta, fill_missing=fill_missing)
 
         zone_datasets = frozenset(ds for _, ds in zone_geoms)
@@ -1546,7 +1524,7 @@ def front_half(
         def est_px():  # largest zone bbox window (⊇ its true pixels)
             return max((
                 max(0, r1 - r0) * max(0, c1 - c0)
-                for (r0, r1), (c0, c1) in filter(None, windows.values())
+                for (r0, r1), (c0, c1) in filter(None, windows().values())
             ), default=0)
     else:
         zone_geoms = windows = zone_rows = big_bc = None
@@ -1568,7 +1546,9 @@ def front_half(
         if prune_tiles:
             rects = summary()[0]
             union = [r for rs in rects.values() for r in rs]
-            pred = _rects_pred({**rects, **{p: union for p in peers if union}})
+            pred = rects_prune_filter(
+                {**rects, **{p: union for p in peers if union}}, meta
+            )
 
         def join(rows, cover=None):
             if cover is None:

@@ -1,4 +1,4 @@
-"""QM arithmetic coder + the T.81 sequential DC/AC statistical models,
+"""QM arithmetic decoder + the T.81 sequential DC/AC statistical models,
 from scratch (ITU-T T.81 Annexes D, F; public spec), numpy-free.
 
 The probability-estimation state machine is Table D.3 (113 adaptive
@@ -8,23 +8,18 @@ MPS subinterval sits at the BOTTOM of [0, A); coding the top interval
 adds the bottom width to the code register; conditional exchange swaps
 the roles when the LPS width (Qe) exceeds the MPS width (A - Qe).
 
-Implementation choices (documented because this sandbox has no
-arithmetic-capable reference codec to test foreign interop against —
-validation is by encoder/decoder ROUNDTRIP from independent readings of
-the encode/decode flowcharts, coefficient-exactness vs the Huffman
-paths, and compression-ratio sanity on skewed sources):
+Only the decoder is implemented: the engine writes baseline (Huffman)
+JPEG tiles only. With no arithmetic-capable foreign codec to test
+against, decoding is pinned by committed byte streams
+(tests/data/jpeg_streams.npz): raw QM code strings of seeded skewed
+sources, and SOF9/SOF10 images (with and without DRI/RSTn) that must
+decode coefficient-exact against the Huffman baseline.
 
-- The encoder keeps the interval low end as an exact Python big
-  integer, so byte-carry propagation (T.81's stack-counter BYTEOUT
-  machinery) never arises: carries resolve inside the integer, and the
-  final code string is simply the low end's big-endian bits.
-- Serialization follows the T.81 arithmetic convention (the one
-  libjpeg's jdarith.c documents): a ZERO BYTE is stuffed after every
-  0xFF code byte (so 0xFF 0x90+ stays unambiguous as markers — the
-  caller un-stuffs FF 00 → FF exactly like the Huffman path), and the
-  decoder feeds ZERO bytes past the end of data; the code value then
-  reads back as exactly the transmitted low end, which lies inside
-  every coding interval.
+Serialization follows the T.81 arithmetic convention (the one libjpeg's
+jdarith.c documents): a ZERO BYTE is stuffed after every 0xFF code byte
+(so 0xFF 0x90+ stays unambiguous as markers — the caller un-stuffs
+FF 00 → FF exactly like the Huffman path), and the decoder feeds ZERO
+bytes past the end of data.
 """
 
 from __future__ import annotations
@@ -85,62 +80,6 @@ class Ctx:
 
 
 FIXED = 113  # the non-adapting state index
-
-
-class QMEncoder:
-    """QM encoder with an exact big-int low end (no carry machinery)."""
-
-    __slots__ = ("a", "low", "shifts")
-
-    def __init__(self):
-        self.a = 0x10000
-        self.low = 0
-        self.shifts = 0
-
-    def encode(self, bit: int, ctx: Ctx) -> None:
-        qe, nlps, nmps, switch = QM_TABLE[ctx.i]
-        self.a -= qe
-        if bit == ctx.mps:
-            if self.a >= 0x8000:
-                return  # short MPS path: no renorm, no adaptation
-            if self.a < qe:  # conditional exchange: MPS takes the top
-                self.low += self.a
-                self.a = qe
-            ctx.i = nmps
-        else:
-            if self.a >= qe:  # LPS takes the top subinterval
-                self.low += self.a
-                self.a = qe
-            # else conditional exchange: LPS keeps the bottom, width a
-            if switch:
-                ctx.mps ^= 1
-            ctx.i = nlps
-        while self.a < 0x8000:
-            self.a <<= 1
-            self.low <<= 1
-            self.shifts += 1
-
-    def encode_fixed(self, bit: int) -> None:
-        """Code one bit in the fixed near-equiprobable state."""
-        c = Ctx()
-        c.i = FIXED
-        self.encode(bit, c)
-
-    def flush(self) -> bytes:
-        """Emit the low end as the code string: big-endian bytes (tail
-        zero-padded — the decoder zero-feeds past the end, so the value
-        read back equals the low end exactly), with a zero byte stuffed
-        after every 0xFF (T.81 marker protection; un-stuffed by the
-        reader like the Huffman path)."""
-        nbits = self.shifts + 16
-        pad = (-nbits) % 8
-        raw = (self.low << pad).to_bytes((nbits + pad) // 8, "big")
-        out = bytearray()
-        for b in raw:
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)
-        return bytes(out)
 
 
 class QMDecoder:
@@ -235,36 +174,6 @@ class DCModel:
             return 12 + sign * 4  # large diff
         return 4 + sign * 4  # small diff
 
-    def encode(self, enc: QMEncoder, diff: int, context: int) -> int:
-        """Code one DC difference; returns the next conditioning context."""
-        st = context
-        if diff == 0:
-            enc.encode(0, self.bins[st])
-            return 0
-        enc.encode(1, self.bins[st])
-        sign = 1 if diff < 0 else 0
-        enc.encode(sign, self.bins[st + 1])
-        sz = abs(diff) - 1
-        st2 = st + 2 + sign
-        if sz == 0:
-            enc.encode(0, self.bins[st2])
-            m = 0
-        else:
-            enc.encode(1, self.bins[st2])
-            b = sz.bit_length()
-            t = 20  # X1: shared magnitude-category tree
-            for _ in range(b - 1):
-                enc.encode(1, self.bins[t])
-                t += 1
-            enc.encode(0, self.bins[t])
-            m = 1 << (b - 1)
-            bits_ctx = self.bins[t + 14]
-            mm = m >> 1
-            while mm:
-                enc.encode(1 if sz & mm else 0, bits_ctx)
-                mm >>= 1
-        return self._classify(m, sign)
-
     def decode(self, dec: QMDecoder, context: int) -> tuple:
         """Returns (diff, next conditioning context)."""
         st = context
@@ -308,63 +217,6 @@ class ACModel:
         self.bins = [Ctx() for _ in range(256)]
         self.kx = kx
 
-    def encode_block(self, enc: QMEncoder, zz, *, ss: int = 1,
-                     se: int = 63, al: int = 0) -> None:
-        """Code the band [ss, se] of one zigzag block (sequential scans
-        use the defaults; progressive AC-first scans pass their spectral
-        band and point transform — values are coded as v/2^Al truncated
-        toward zero, T.81 G.1.3.2)."""
-        def pt(v):
-            v = int(v)
-            return v >> al if v >= 0 else -((-v) >> al)
-
-        eob = ss - 1
-        for k in range(se, ss - 1, -1):
-            if pt(zz[k]):
-                eob = k
-                break
-        k = ss
-        while k <= eob:
-            st = 3 * (k - 1)
-            enc.encode(0, self.bins[st])  # not EOB
-            v = pt(zz[k])
-            while v == 0:
-                enc.encode(0, self.bins[st + 1])
-                st += 3
-                k += 1
-                v = pt(zz[k])
-            enc.encode(1, self.bins[st + 1])
-            sign = 1 if v < 0 else 0
-            enc.encode_fixed(sign)
-            sz = abs(v) - 1
-            st += 2
-            if sz == 0:
-                enc.encode(0, self.bins[st])
-                bits_ctx = self.bins[st + 14]
-            else:
-                enc.encode(1, self.bins[st])
-                b = sz.bit_length()
-                if b == 1:
-                    enc.encode(0, self.bins[st])
-                    bits_ctx = self.bins[st + 14]
-                else:
-                    enc.encode(1, self.bins[st])
-                    t = 189 if k <= self.kx else 217
-                    # tree starts at magnitude 2: b-2 more doublings
-                    for _ in range(b - 2):
-                        enc.encode(1, self.bins[t])
-                        t += 1
-                    enc.encode(0, self.bins[t])
-                    bits_ctx = self.bins[t + 14]
-                m = 1 << (b - 1)
-                mm = m >> 1
-                while mm:
-                    enc.encode(1 if sz & mm else 0, bits_ctx)
-                    mm >>= 1
-            k += 1
-        if eob < se:
-            enc.encode(1, self.bins[3 * (eob + 1 - 1)])  # EOB decision
-
     def decode_block(self, dec: QMDecoder, zz, *, ss: int = 1,
                      se: int = 63, al: int = 0) -> None:
         k = ss
@@ -399,47 +251,6 @@ class ACModel:
                 mm >>= 1
             v += 1
             zz[k] = (-v if sign else v) << al
-            k += 1
-
-    def encode_refine(self, enc: QMEncoder, zz, *, ss: int, se: int,
-                      al: int) -> None:
-        """AC successive-approximation refinement scan (T.81 G.1.3.3):
-        one correction bit (context st+2) per already-significant
-        coefficient, newly-significant coefficients via the st+1
-        decision + a fixed-state sign bit; the st EOB flag is coded only
-        past EOBx, the previous stage's end of band."""
-        def mag(v):
-            return abs(int(v)) >> al
-
-        kex = ss - 1  # EOBx: last index significant after the PREVIOUS stage
-        ke = ss - 1   # current-stage end of band (last |v|>>Al != 0)
-        for k in range(se, ss - 1, -1):
-            if abs(int(zz[k])) >> (al + 1):
-                kex = k
-                break
-        for k in range(se, ss - 1, -1):
-            if mag(zz[k]):
-                ke = k
-                break
-        k = ss
-        while k <= se:
-            st = 3 * (k - 1)
-            if k > kex:
-                enc.encode(0 if k <= ke else 1, self.bins[st])
-                if k > ke:
-                    return
-            while True:
-                t = mag(zz[k])
-                if t > 1:  # already significant: correction bit
-                    enc.encode(t & 1, self.bins[st + 2])
-                    break
-                if t == 1:  # newly significant
-                    enc.encode(1, self.bins[st + 1])
-                    enc.encode_fixed(1 if int(zz[k]) < 0 else 0)
-                    break
-                enc.encode(0, self.bins[st + 1])
-                st += 3
-                k += 1
             k += 1
 
     def decode_refine(self, dec: QMDecoder, zz, *, ss: int, se: int,

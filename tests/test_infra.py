@@ -343,7 +343,7 @@ def test_gather_plan_no_tile_shuffle_and_no_tile_zones(corpus):
     """Gather tier runs on the zonal broadcast front half: the tiles are
     never shuffled (no sort-merge join, no Exchange on the tile key), and
     zones with no stored tiles still produce their count-0 row (reference
-    main.py:230-234) from the NULL-payload rows of their missing keys."""
+    main.py:230-234) from their driver-built NULL-block anchor rows."""
     from python_rasterstats_spark.operators.gather import zonal_gather_df
     from python_rasterstats_spark.plans.explain import physical_plan, plan_summary
 

@@ -8,6 +8,7 @@ emit, as a foreign encoder would.
 """
 
 import struct
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -18,6 +19,16 @@ from python_rasterstats_spark.jpegcodec import (
     AC_BITS, AC_VALS, DC_BITS, DC_VALS, ZIGZAG, _canonical_codes,
     jpeg_decode, jpeg_encode,
 )
+
+# Progressive, arithmetic and restart-interval streams for the decoder
+# paths the engine's baseline encoder never emits, frozen once from a
+# reference encoder (see _stream's callers for each input image).
+STREAMS = Path(__file__).parent / "data" / "jpeg_streams.npz"
+
+
+def _stream(name: str) -> bytes:
+    with np.load(STREAMS, allow_pickle=False) as z:
+        return z[name].tobytes()
 
 
 def test_annex_k_codewords_match_published_tables():
@@ -306,21 +317,19 @@ def test_422_440_411_roundtrips():
 
 
 def test_progressive_decode_coefficient_exact():
-    """r5: progressive (SOF2) support. jpeg_encode_progressive emits a
+    """Progressive (SOF2) decode. Each committed stream carries a
     spectral-selection + successive-approximation scan script (DC Al=1 →
     DC refine → AC bands 1-5/6-63 at Al=2 → two AC refinement passes);
     since successive approximation is lossless once all bits are sent,
     decoding it must reproduce the baseline encoding's pixels EXACTLY —
-    any entropy/bit-order bug on either side breaks equality."""
-    from python_rasterstats_spark.jpegcodec import (
-        jpeg_encode_color, jpeg_encode_progressive,
-    )
+    any entropy/bit-order bug in the decoder breaks equality."""
+    from python_rasterstats_spark.jpegcodec import jpeg_encode_color
 
     y, x = np.mgrid[0:40, 0:56]
     g = (128 + 60 * np.sin(x / 9.0) + 30 * np.cos(y / 7.0)).clip(0, 255)
     g = g.astype(np.uint8)
 
-    p = jpeg_encode_progressive(g, quality=90)
+    p = _stream("prog_smooth")
     assert b"\xff\xc2" in p  # SOF2 marker present
     assert np.array_equal(jpeg_decode(p), jpeg_decode(J.jpeg_encode(g, quality=90)))
 
@@ -330,7 +339,7 @@ def test_progressive_decode_coefficient_exact():
     s[40, 33] = 0
     s[63, 71] = 200
     assert np.array_equal(
-        jpeg_decode(jpeg_encode_progressive(s, quality=85)),
+        jpeg_decode(_stream("prog_sparse")),
         jpeg_decode(J.jpeg_encode(s, quality=85)),
     )
 
@@ -338,17 +347,16 @@ def test_progressive_decode_coefficient_exact():
     # AC scans walk the component's own raster, not the MCU grid)
     rgb = np.stack([g, (g * 0.7 + 40).astype(np.uint8), 255 - g])
     for samp in ("444", "420", "422", "411", "440"):
-        for img in (rgb, rgb[:, :37, :45]):
+        for tag, img in (("even", rgb), ("odd", rgb[:, :37, :45])):
             assert np.array_equal(
-                jpeg_decode(jpeg_encode_progressive(img, quality=92,
-                                                    sampling=samp)),
+                jpeg_decode(_stream(f"prog_{samp}_{tag}")),
                 jpeg_decode(jpeg_encode_color(img, quality=92,
                                               sampling=samp)),
             ), (samp, img.shape)
 
     # noise stresses every run-length/EOB/correction-bit combination
     rng = np.random.default_rng(11)
-    for _ in range(4):
+    for i in range(4):
         n = rng.integers(
             0, 256,
             size=(int(rng.integers(8, 80)), int(rng.integers(8, 80))),
@@ -356,23 +364,17 @@ def test_progressive_decode_coefficient_exact():
         )
         q = int(rng.integers(30, 99))
         assert np.array_equal(
-            jpeg_decode(jpeg_encode_progressive(n, quality=q)),
+            jpeg_decode(_stream(f"prog_noise_{i}")),
             jpeg_decode(J.jpeg_encode(n, quality=q)),
         ), (n.shape, q)
 
 
 def test_progressive_rejects_float_and_zonal_differential():
-    """Float tiles stay on the baseline (APP15) path; a zonal-style mean
-    over progressive payloads matches the numpy mean within the known
-    quantization tolerance."""
-    from python_rasterstats_spark.jpegcodec import jpeg_encode_progressive
-
-    with pytest.raises(ValueError, match="uint8"):
-        jpeg_encode_progressive(np.zeros((8, 8), np.float32))
-
+    """A zonal-style mean over a progressive payload matches the numpy
+    mean within the known quantization tolerance."""
     rng = np.random.default_rng(4)
     tile = (rng.uniform(40, 200, (32, 32))).astype(np.uint8)
-    dec = jpeg_decode(jpeg_encode_progressive(tile, quality=95))
+    dec = jpeg_decode(_stream("prog_tile32"))
     assert abs(float(dec.mean()) - float(tile.mean())) < 1.5
 
 
@@ -383,7 +385,6 @@ def test_zonal_over_progressive_jpeg_tiles(spark):
     contains (progressive is common for large web images)."""
     from python_rasterstats_spark import geom as G
     from python_rasterstats_spark import kernel as K
-    from python_rasterstats_spark.jpegcodec import jpeg_encode_progressive
     from python_rasterstats_spark.operators.zonal import zonal_stats_df
     from python_rasterstats_spark.sources.tables import (
         ZONES_DDL, raster_to_tables,
@@ -398,10 +399,9 @@ def test_zonal_over_progressive_jpeg_tiles(spark):
     # swap every payload for a progressive encoding of the same pixels
     rows = []
     for r in tiles.collect():
-        px = C.decode_tile(bytes(r["bytes"]), "jpeg")
         d = r.asDict()
         d["bytes"] = bytearray(
-            jpeg_encode_progressive(np.asarray(px, np.uint8), quality=95)
+            _stream(f"prog_tile_r{r['tile_row']}_c{r['tile_col']}")
         )
         rows.append(d)
     tiles_p = spark.createDataFrame(rows, tiles.schema)
@@ -552,20 +552,18 @@ def test_rgb_component_ids_skip_color_transform():
 
 
 def test_arithmetic_roundtrip_exact_and_smaller():
-    """r5: sequential arithmetic coding (SOF9, from-scratch QM coder).
+    """Sequential arithmetic coding (SOF9, from-scratch QM decoder).
     Same DCT/quantization as baseline, so decode must equal the Huffman
-    encoding's pixels EXACTLY; the adaptive coder should also beat the
-    fixed Huffman tables on size. (Validation scope: roundtrip + this
-    cross-entropy-mode exactness — no arithmetic-capable foreign codec
-    exists in this environment; see qmcoder.py.)"""
-    from python_rasterstats_spark.jpegcodec import (
-        jpeg_encode_arithmetic, jpeg_encode_color,
-    )
+    encoding's pixels EXACTLY; the adaptive coder's stream is also
+    smaller than the fixed Huffman tables'. (Validation scope: committed
+    streams + this cross-entropy-mode exactness — no arithmetic-capable
+    foreign codec exists in this environment; see qmcoder.py.)"""
+    from python_rasterstats_spark.jpegcodec import jpeg_encode_color
 
     y, x = np.mgrid[0:40, 0:56]
     g = (128 + 60 * np.sin(x / 9.0) + 30 * np.cos(y / 7.0)).clip(0, 255)
     g = g.astype(np.uint8)
-    a = jpeg_encode_arithmetic(g, quality=90)
+    a = _stream("arith_smooth")
     b = jpeg_encode(g, quality=90)
     assert b"\xff\xc9" in a  # SOF9
     assert b"\xff\xcc" in a  # DAC conditioning present
@@ -574,17 +572,16 @@ def test_arithmetic_roundtrip_exact_and_smaller():
 
     rgb = np.stack([g, (g * 0.7 + 40).astype(np.uint8), 255 - g])
     for samp in ("444", "420", "422", "411", "440"):
-        for img in (rgb, rgb[:, :37, :45]):
+        for tag, img in (("even", rgb), ("odd", rgb[:, :37, :45])):
             assert np.array_equal(
-                jpeg_decode(jpeg_encode_arithmetic(img, quality=92,
-                                                   sampling=samp)),
+                jpeg_decode(_stream(f"arith_{samp}_{tag}")),
                 jpeg_decode(jpeg_encode_color(img, quality=92,
                                               sampling=samp)),
             ), (samp, img.shape)
 
     # noise stresses magnitude trees / context adaptation
     rng = np.random.default_rng(3)
-    for _ in range(3):
+    for i in range(3):
         n = rng.integers(
             0, 256,
             size=(int(rng.integers(9, 70)), int(rng.integers(9, 70))),
@@ -592,18 +589,19 @@ def test_arithmetic_roundtrip_exact_and_smaller():
         )
         q = int(rng.integers(30, 99))
         assert np.array_equal(
-            jpeg_decode(jpeg_encode_arithmetic(n, quality=q)),
+            jpeg_decode(_stream(f"arith_noise_{i}")),
             jpeg_decode(jpeg_encode(n, quality=q)),
         ), (n.shape, q)
 
 
 def test_qm_coder_entropy_and_roundtrip():
-    """The QM coder itself: bit-exact roundtrip on skewed sources and
-    compression near the source entropy (the adaptive estimator works)."""
+    """The QM decoder itself: committed code strings of seeded skewed
+    sources decode bit-exactly, and their length sits near the source
+    entropy (the adaptive estimator works)."""
     import math
     import random
 
-    from python_rasterstats_spark.qmcoder import Ctx, QMDecoder, QMEncoder
+    from python_rasterstats_spark.qmcoder import Ctx, QMDecoder
 
     def unstuff(data):  # FF 00 -> FF, as the jpeg scan reader does
         out, i = bytearray(), 0
@@ -616,11 +614,7 @@ def test_qm_coder_entropy_and_roundtrip():
     for p in (0.5, 0.9, 0.98):
         rng = random.Random(int(p * 100))
         bits = [1 if rng.random() < p else 0 for _ in range(20000)]
-        enc = QMEncoder()
-        c = Ctx()
-        for b in bits:
-            enc.encode(b, c)
-        data = enc.flush()
+        data = _stream(f"qm_{int(p * 100)}")
         dec = QMDecoder(unstuff(data))
         c2 = Ctx()
         assert [dec.decode(c2) for _ in range(len(bits))] == bits
@@ -654,19 +648,17 @@ def test_pii_phone_ip_disambiguation(spark):
 
 
 def test_progressive_arithmetic_roundtrip_exact():
-    """r5: SOF10 — progressive scan scripts with QM entropy coding
-    (T.81 G.1.3: DC point-transformed diffs, fixed-state DC refinement
-    bits, band-limited AC model, EOBx refinement contexts). Completes
-    the T.81 DCT matrix: SOF0/1/2/9/10 all decode, and every encoder's
-    output is pinned coefficient-exact against the Huffman baseline."""
-    from python_rasterstats_spark.jpegcodec import (
-        jpeg_encode_arithmetic_progressive, jpeg_encode_color,
-    )
+    """SOF10 — progressive scan scripts with QM entropy coding (T.81
+    G.1.3: DC point-transformed diffs, fixed-state DC refinement bits,
+    band-limited AC model, EOBx refinement contexts). Completes the T.81
+    DCT matrix: SOF0/1/2/9/10 all decode, and every committed stream is
+    pinned coefficient-exact against the Huffman baseline."""
+    from python_rasterstats_spark.jpegcodec import jpeg_encode_color
 
     y, x = np.mgrid[0:40, 0:56]
     g = (128 + 60 * np.sin(x / 9.0) + 30 * np.cos(y / 7.0)).clip(0, 255)
     g = g.astype(np.uint8)
-    p = jpeg_encode_arithmetic_progressive(g, quality=90)
+    p = _stream("arithprog_smooth")
     assert b"\xff\xca" in p  # SOF10
     assert np.array_equal(jpeg_decode(p),
                           jpeg_decode(jpeg_encode(g, quality=90)))
@@ -676,22 +668,21 @@ def test_progressive_arithmetic_roundtrip_exact():
     s[5, 9] = 250
     s[40, 33] = 0
     assert np.array_equal(
-        jpeg_decode(jpeg_encode_arithmetic_progressive(s, quality=85)),
+        jpeg_decode(_stream("arithprog_sparse")),
         jpeg_decode(jpeg_encode(s, quality=85)),
     )
 
     rgb = np.stack([g, (g * 0.7 + 40).astype(np.uint8), 255 - g])
     for samp in ("444", "420", "411"):
-        for img in (rgb, rgb[:, :37, :45]):
+        for tag, img in (("even", rgb), ("odd", rgb[:, :37, :45])):
             assert np.array_equal(
-                jpeg_decode(jpeg_encode_arithmetic_progressive(
-                    img, quality=92, sampling=samp)),
+                jpeg_decode(_stream(f"arithprog_{samp}_{tag}")),
                 jpeg_decode(jpeg_encode_color(img, quality=92,
                                               sampling=samp)),
             ), (samp, img.shape)
 
     rng = np.random.default_rng(9)
-    for _ in range(3):
+    for i in range(3):
         n = rng.integers(
             0, 256,
             size=(int(rng.integers(9, 60)), int(rng.integers(9, 60))),
@@ -699,106 +690,33 @@ def test_progressive_arithmetic_roundtrip_exact():
         )
         q = int(rng.integers(30, 99))
         assert np.array_equal(
-            jpeg_decode(jpeg_encode_arithmetic_progressive(n, quality=q)),
+            jpeg_decode(_stream(f"arithprog_noise_{i}")),
             jpeg_decode(jpeg_encode(n, quality=q)),
         ), (n.shape, q)
 
 
 def test_arithmetic_restart_marker_decode():
-    """Arithmetic streams with DRI/RSTn (which OUR encoder never emits):
-    per T.81 a restart re-initializes the QM coder AND the statistics.
-    Build one by hand — each MCU coded by a fresh coder, stitched with
-    RSTn — and pin it to the unrestarted encoding's pixels."""
-    from python_rasterstats_spark.jpegcodec import jpeg_encode_arithmetic
-    from python_rasterstats_spark.qmcoder import ACModel, DCModel, QMEncoder
-
+    """Arithmetic streams with DRI/RSTn: per T.81 a restart
+    re-initializes the QM coder AND the statistics. The committed stream
+    codes each block (one MCU) with a fresh coder, stitched with RSTn;
+    it must decode to the baseline encoding's pixels."""
     rng = np.random.default_rng(6)
     img = (rng.normal(scale=30, size=(8, 24)) + 128).clip(0, 255)
     img = img.astype(np.uint8)
-    plain = jpeg_encode_arithmetic(img, quality=85)
-    ref = jpeg_decode(plain)
-
-    qt = J._quality_qt(85)
-    zz = J._quantized_zigzag(img.astype(np.float64), qt)
-    segs = []
-    for blk in zz:  # one segment per block, predictors/statistics reset
-        enc = QMEncoder()
-        dcm, acm = DCModel(), ACModel()
-        dcm.encode(enc, int(blk[0]), 0)
-        acm.encode_block(enc, blk)
-        segs.append(enc.flush())
-    sos_at = plain.find(b"\xff\xda")
-    (sos_len,) = struct.unpack_from(">H", plain, sos_at + 2)
-    head = plain[:sos_at]
-    dri = b"\xff\xdd" + struct.pack(">H", 4) + struct.pack(">H", 1)
-    sos = plain[sos_at : sos_at + 2 + sos_len]
-    body = bytearray()
-    for i, s in enumerate(segs):
-        if i:
-            body += bytes([0xFF, 0xD0 + ((i - 1) % 8)])
-        body += s
-    stream = head + dri + sos + bytes(body) + b"\xff\xd9"
-    assert np.array_equal(jpeg_decode(stream), ref)
+    stream = _stream("dri_arith")
+    assert b"\xff\xdd" in stream and b"\xff\xd0" in stream
+    assert np.array_equal(jpeg_decode(stream),
+                          jpeg_decode(jpeg_encode(img, quality=85)))
 
 
 def test_progressive_arithmetic_restart_decode():
-    """SOF10 + DRI/RSTn: every scan of a progressive arithmetic stream
-    restarts per MCU — hand-build one (fresh coder + statistics per
-    segment in every scan) and pin it to the unrestarted pixels."""
-    from python_rasterstats_spark.jpegcodec import (
-        _seg, _sos_seg, jpeg_encode_arithmetic_progressive,
-    )
-    from python_rasterstats_spark.qmcoder import ACModel, DCModel, QMEncoder
-
+    """SOF10 + DRI/RSTn: every scan of the committed progressive
+    arithmetic stream restarts per MCU (fresh coder + statistics per
+    segment in every scan); it must decode to the baseline pixels."""
     rng = np.random.default_rng(8)
     img = (rng.normal(scale=25, size=(8, 24)) + 128).clip(0, 255)
     img = img.astype(np.uint8)
-    plain = jpeg_encode_arithmetic_progressive(img, quality=88)
-    ref = jpeg_decode(plain)
-
-    qt = J._quality_qt(88)
-    zz = J._quantized_zigzag(img.astype(np.float64), qt)
-
-    def stitched(code_one):
-        body = bytearray()
-        for i, blk in enumerate(zz):
-            if i:
-                body += bytes([0xFF, 0xD0 + ((i - 1) % 8)])
-            body += code_one(blk)
-        return bytes(body)
-
-    def dc_first(blk):
-        enc = QMEncoder()
-        DCModel().encode(enc, int(blk[0]) >> 1, 0)
-        return enc.flush()
-
-    def dc_refine(blk):
-        enc = QMEncoder()
-        enc.encode_fixed(int(blk[0]) & 1)
-        return enc.flush()
-
-    def ac_first(ss, se):
-        def f(blk):
-            enc = QMEncoder()
-            ACModel().encode_block(enc, blk, ss=ss, se=se, al=2)
-            return enc.flush()
-        return f
-
-    def ac_refine(al):
-        def f(blk):
-            enc = QMEncoder()
-            ACModel().encode_refine(enc, blk, ss=1, se=63, al=al)
-            return enc.flush()
-        return f
-
-    head = plain[: plain.find(b"\xff\xcc") + 2 + 6]  # through the DAC
-    out = bytearray(head)
-    out += b"\xff\xdd" + struct.pack(">HH", 4, 1)  # DRI: restart every MCU
-    out += _sos_seg([1], 0, 0, 0, 1, stitched(dc_first))
-    out += _sos_seg([1], 0, 0, 1, 0, stitched(dc_refine))
-    out += _sos_seg([1], 1, 5, 0, 2, stitched(ac_first(1, 5)))
-    out += _sos_seg([1], 6, 63, 0, 2, stitched(ac_first(6, 63)))
-    out += _sos_seg([1], 1, 63, 2, 1, stitched(ac_refine(1)))
-    out += _sos_seg([1], 1, 63, 1, 0, stitched(ac_refine(0)))
-    out += b"\xff\xd9"
-    assert np.array_equal(jpeg_decode(bytes(out)), ref)
+    stream = _stream("dri_arithprog")
+    assert b"\xff\xca" in stream and b"\xff\xdd" in stream
+    assert np.array_equal(jpeg_decode(stream),
+                          jpeg_decode(jpeg_encode(img, quality=88)))

@@ -239,8 +239,9 @@ def test_gather_tile_driven_differential(spark, big_corpus, all_touched):
         all_touched=all_touched, add_stats={"ss": ss}, raster_out=True,
     )
     got = {r["zone_id"]: r for r in df.collect()}
-    # distinct covered tile keys: 8x12 for the overlapping pair + 6x6
-    assert _kernel_input_rows(df, "bytes") == 96 + 36
+    # distinct stored tile keys covered: 8x12 for the overlapping pair +
+    # the third zone's 4x4 on the grid (its 20 off-grid keys read nothing)
+    assert _kernel_input_rows(df, "bytes") == 96 + 16
     assert sorted(got) == [0, 1, 2]
     for zid, g in enumerate(geoms):
         want = K.zonal_stats_one(

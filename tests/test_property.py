@@ -291,30 +291,3 @@ def test_sketch_weighted_properties(values, S):
         lo = np.percentile(vals, max(q - dq, 0.0))
         hi = np.percentile(vals, min(q + dq, 100.0))
         assert lo - 1e-9 <= approx <= hi + 1e-9, (n, S, q)
-
-
-@given(
-    st.lists(st.tuples(st.integers(0, 7), st.integers(0, 1)),
-             min_size=0, max_size=4000),
-)
-@settings(max_examples=40, deadline=None)
-def test_qm_coder_roundtrip_property(seq):
-    """QM arithmetic coder property: ANY bit sequence over ANY context
-    interleaving roundtrips bit-exactly through encode→stuff→unstuff→
-    decode (the adaptive estimator's state walk is part of the trip)."""
-    from python_rasterstats_spark.qmcoder import Ctx, QMDecoder, QMEncoder
-
-    enc = QMEncoder()
-    ctxs = [Ctx() for _ in range(8)]
-    for c, b in seq:
-        enc.encode(b, ctxs[c])
-    data = enc.flush()
-    out, i = bytearray(), 0
-    while i < len(data):  # FF 00 -> FF, as the jpeg scan reader does
-        out.append(data[i])
-        i += 2 if (data[i] == 0xFF and i + 1 < len(data)
-                   and data[i + 1] == 0) else 1
-    dec = QMDecoder(bytes(out))
-    ctxs2 = [Ctx() for _ in range(8)]
-    got = [dec.decode(ctxs2[c]) for c, _ in seq]
-    assert got == [b for _, b in seq]

@@ -8,7 +8,10 @@
 - The gather tier, on the same broadcast front half, raises its
   driver-detected errors (beyond-extent, cover cap, unknown dataset) at
   action time too.
-- A broadcast-regime build parses each zone's WKB once on the driver.
+- The gather tier reads the tiles by one payload scan and shuffles only
+  its per-zone groupBy; a zone with no stored tile keeps its row.
+- A broadcast-regime build parses each zone's WKB once on the driver,
+  for zonal and for the point query.
 - The point query returns one row per (zone_id, vertex_idx) in both
   regimes when a zone_id appears under two datasets, and its
   beyond-extent error (boundless=False) also surfaces at action time.
@@ -19,9 +22,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from python_rasterstats_spark import codecs as C
 from python_rasterstats_spark import geom as G
+from python_rasterstats_spark import kernel as K
 from python_rasterstats_spark.operators.gather import zonal_gather_df
 from python_rasterstats_spark.operators.point import point_query_df
+from python_rasterstats_spark.plans.explain import physical_plan, plan_summary
 from python_rasterstats_spark.operators.zonal import (
     broadcast_cover_cells, collect_dataset_meta, collect_zone_rows,
     tile_driven_input, zonal_stats_df, zone_windows,
@@ -109,6 +115,63 @@ def test_gather_errors_raise_at_action(spark, raster, case):
         assert ok.collect()[0]["count"] == 36
 
 
+def test_gather_plan_one_tile_scan_one_exchange(corpus):
+    """No key-only tile scan and no broadcast join: the one FileScan reads
+    the payloads, and the one Exchange is the per-zone groupBy."""
+    tiles, zones, datasets = corpus
+    df = zonal_gather_df(
+        zones.filter(F.col("collection") == "polygons"), tiles, datasets,
+        dataset="slope", stats=["count", "mean"],
+        add_stats={"ss": lambda m: float((m.compressed() ** 2).sum())},
+    )
+    s = plan_summary(df)
+    plan = physical_plan(df)
+    assert (s["broadcast_hash_joins"], s["exchanges"]) == (0, 1), plan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1 and "bytes" in scans[0], plan
+    assert "Exchange hashpartitioning(zone_id" in plan
+
+
+def test_gather_zones_without_stored_tiles_keep_their_row(spark, raster):
+    """A zone wholly off the grid and a zone inside a tile that is not
+    stored each still get one row (reference main.py:230-234): count 0,
+    their add_stats value and a fill-valued mini_raster; a zone on a
+    stored tile next to them is unaffected."""
+    tiles, datasets = raster
+    tiles = tiles.filter("NOT (tile_col = 1 AND tile_row = 1)")
+    mosaic = np.arange(64, dtype=np.float32).reshape(8, 8)
+    mosaic[4:8, 4:8] = -1.0  # the dropped tile reads as nodata
+    geoms = [
+        G.box(20.0, 20.0, 23.0, 23.0),  # off the grid
+        G.box(4.5, 2.5, 7.5, 5.5),      # inside the dropped tile (1, 1)
+        G.box(0.5, 6.5, 3.5, 9.5),      # inside the stored tile (0, 0)
+    ]
+
+    def n(m):
+        return float(m.count())
+
+    got = {r["zone_id"]: r for r in zonal_gather_df(
+        _zones_df(spark, geoms), tiles, datasets, dataset="td",
+        stats=["count", "mean"], add_stats={"n": n}, raster_out=True,
+    ).collect()}
+    assert sorted(got) == [0, 1, 2]
+    assert [got[z]["count"] for z in (0, 1)] == [0, 0]
+    for zid, g in enumerate(geoms):
+        want = K.zonal_stats_one(g, mosaic, AFF, nodata=-1.0,
+                                 stats=["count", "mean"])
+        block, rv, win, fill = K.prepare_zone(g, mosaic, AFF, nodata=-1.0)
+        masked = np.ma.MaskedArray(block, mask=(block == fill) | ~rv)
+        r = got[zid]
+        assert (r["count"], r["mean"], r["n"]) == (
+            want["count"], want["mean"], n(masked))
+        mr = r["mini_raster"]
+        assert bytes(mr["data"]) == C.encode_tile(
+            np.ma.filled(masked, fill).astype(np.float32), "npy")
+        assert bytes(mr["mask"]) == C.encode_tile(
+            np.ma.getmaskarray(masked), "npy")
+        assert tuple(mr["affine"]) == K.window_affine(win, AFF)
+
+
 @pytest.mark.parametrize("stats", [["count", "mean"], ["count", "median"]])
 def test_broadcast_build_parses_each_wkb_once(corpus, monkeypatch, stats):
     """The scan prune predicate, the cover dict and the auto-holistic
@@ -121,6 +184,28 @@ def test_broadcast_build_parses_each_wkb_once(corpus, monkeypatch, stats):
     monkeypatch.setattr(G, "wkb_loads", lambda b: calls.append(1) or real(b))
     zonal_stats_df(polys, tiles, datasets, dataset="slope", stats=stats)
     assert len(calls) == n == 2
+
+
+def test_point_broadcast_build_parses_each_wkb_once(corpus, monkeypatch):
+    """The broadcast point query parses each zone's WKB once, into its
+    vertex windows, whose tile keys also fence the scan; its values equal
+    the unfenced and the SMJ regime's."""
+    tiles, zones, datasets = corpus
+    pts = zones.filter(F.col("collection") == "query_points")
+    n = pts.count()
+
+    def run(**kw):
+        return sorted(map(tuple, point_query_df(
+            pts, tiles, datasets, dataset="slope", **kw
+        ).collect()))
+
+    calls = []
+    real = G.wkb_loads
+    monkeypatch.setattr(G, "wkb_loads", lambda b: calls.append(1) or real(b))
+    got = run()
+    assert len(calls) == n > 0
+    monkeypatch.undo()
+    assert got == run(prune_tiles=False) == run(broadcast_vertices=False)
 
 
 def test_boundless_input_one_row_per_tile(spark, raster):

@@ -7,10 +7,10 @@ Usage:
 ``datasets.parquet`` (for example the bench corpus that
 ``fixtures.ensure_bench_corpus("sf0.1")`` writes under ``data/``). Every
 zone is read against ``--dataset``. The cover comes from the broadcast
-regime's driver dict (``cover_dict``); the tiles it names are read in file
-order and cut into 256-row Arrow batches, which are converted to pandas up
-front. The timed part is the kernel's per-batch generator
-(``partial_generator``, the body ``partial_kernel`` runs in
+regime's driver dict (``broadcast_cover_cells``); the tiles it names
+are read in file order and cut into 256-row Arrow batches, which are
+converted to pandas up front. The timed part is the kernel's per-batch
+generator (``partial_generator``, the body ``partial_kernel`` runs in
 ``mapInPandas``) consuming those frames, for two requests:
 
 - ``scalar``: no value counts (the 6 scalar stats);
@@ -79,7 +79,7 @@ def digest(frames) -> tuple[int, str]:
 def load(corpus_dir: str, dataset: str):
     """(meta, geoms, cover, kernel input frames) of a corpus."""
     from python_rasterstats_spark.operators.zonal import (
-        cover_dict, dataset_meta, zone_windows,
+        broadcast_cover_cells, dataset_meta, zone_windows,
     )
 
     meta = dataset_meta(
@@ -88,7 +88,10 @@ def load(corpus_dir: str, dataset: str):
     z = pq.read_table(os.path.join(corpus_dir, "zones.parquet"),
                       columns=["zone_id", "geometry_wkb"]).to_pydict()
     geoms = {(zid, dataset): w for zid, w in zip(z["zone_id"], z["geometry_wkb"])}
-    cover = cover_dict(zone_windows(geoms, meta), meta)
+    # a stand-in session whose "broadcast" is the plain value holder
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(
+        broadcast=lambda value: SimpleNamespace(value=value)))
+    cover = broadcast_cover_cells(spark, zone_windows(geoms, meta), meta)
     if isinstance(cover, str):
         raise SystemExit(cover)
     tiles = pq.read_table(
@@ -97,7 +100,7 @@ def load(corpus_dir: str, dataset: str):
     )
     keys = zip(*(tiles.column(c).to_pylist()
                  for c in ("dataset", "tile_col", "tile_row")))
-    tiles = tiles.take([i for i, k in enumerate(keys) if k in cover])
+    tiles = tiles.take([i for i, k in enumerate(keys) if k in cover.value])
     frames = [b.to_pandas() for b in tiles.to_batches(max_chunksize=BATCH_ROWS)]
     return meta, geoms, cover, frames
 
@@ -123,7 +126,7 @@ def main(argv=None) -> int:
         times = []
         for _ in range(args.repeat):
             gen, _schema = partial_generator(
-                meta, cover=SimpleNamespace(value=cover),
+                meta, cover=cover,
                 geoms=SimpleNamespace(value=geoms), all_touched=False,
                 nodata_override=None, **kw,
             )

@@ -10,8 +10,8 @@ intersection index from metadata, then make one pass over the raster):
                         else quadkey ranges — tile_prune_filter)
                                    │ broadcast (SMJ regime: cover cells
                                    │ grouped per tile key, joined to tiles)
-    tiles ──pruned scan────────────┤ [+ NULL-payload rows for cover keys
-                                   ▼  with no stored tile — J4 fill]
+    tiles ──pruned scan────────────┤ [+ driver-built NULL-payload rows for
+                                   ▼  cover keys with no stored tile — J4]
             ONE mapInPandas partial kernel, ONE pass per tile: decode
             the payload and build its nodata/NaN masks once, rasterize
             all its covering zones in one scanline fill (global
@@ -51,7 +51,7 @@ estimate and the hybrid-WKB decision.
 Scale properties:
 - every tile payload crosses Arrow once, whatever the zone count covering
   it, and tiles are never shuffled in the broadcast regime (incl.
-  boundless nodata, whose missing-tile keys come from a key-only scan);
+  boundless nodata, whose fill rows are built on the driver);
   the only shuffle is the zone-keyed merge of partial structs, with
   map-side combine (scalar path) or salted pre-merge (holistic path)
   bounding the reduce fan-in.
@@ -1252,8 +1252,8 @@ def partial_kernel(tiles: DataFrame, meta: dict, *, cover=None, **kw) -> DataFra
     """The tile-driven refine + partial aggregation (J1 refine phase +
     P2-P5 masks + A1-A15 partial states): one input row per tile
     ``(dataset, tile_col, tile_row, bytes, fmt)`` — NULL ``bytes`` for a
-    cover key with no stored tile (boundless nodata fill) — and one
-    partial row per (zone, tile) pair with pixels. The body
+    cover key with no stored tile (front_half's boundless nodata fill) —
+    and one partial row per (zone, tile) pair with pixels. The body
     (partial_generator) makes ONE pass per tile: its payload crosses Arrow
     and is decoded once, its nodata/NaN masks are built once, and all its
     covering zones are rasterized in one scanline fill; each zone's block
@@ -1303,7 +1303,7 @@ def broadcast_cover_cells(
     one broadcast dict ``{(dataset, tile_col, tile_row): [zone_id, ...]}``
     — the cover source of partial_kernel and the gather tier's tile
     kernel. ``clip_to_grid=False`` also keeps keys outside the tile grid
-    (boundless nodata fill, see tile_driven_input).
+    (boundless nodata fill, see front_half).
 
     Returns the Broadcast, or — when a zone hits an error path (unknown
     dataset, beyond-extent with boundless=False, cover-cell cap) — the
@@ -1340,21 +1340,11 @@ def _kernel_tasks(spark, keys, meta: dict) -> int:
     return max(spark.sparkContext.defaultParallelism, -(-need // split))
 
 
-def tile_driven_input(
-    tiles: DataFrame, cover, meta: dict, *, fill_missing: bool = False
-):
+def tile_driven_input(tiles: DataFrame, cover, meta: dict):
     """(kernel input, cover) for a tile-driven kernel in the broadcast
     regime, from the kernel's input ``tiles``, its cover source
     (broadcast_cover_cells' result, or the point query's window dict) and
     the dataset ``meta``.
-
-    ``fill_missing`` (boundless nodata/nan) unions in one NULL-payload row
-    per cover key with no stored tile, so the kernel synthesizes its fill
-    from the cover mask alone. Spark cannot broadcast the left side of an
-    anti join, and cover-keys ⟕ tiles would shuffle the tile table, so the
-    missing keys come from a broadcast inner join of the cover keys
-    against the key-only (column-pruned, no payload bytes) scan, then a
-    left-anti join of the cover keys against that small result.
 
     A pending error message becomes a one-row stage with the schema of
     ``tiles`` that raises it when the action runs (with an empty cover):
@@ -1390,21 +1380,7 @@ def tile_driven_input(
         # builds each row once — a projection above the coalesce would
         # copy every payload a second time
         tiles = tiles.select(*_TILE_COLS)
-    tasks = _kernel_tasks(spark, cover.value, meta)
-    if not fill_missing or not cover.value:
-        return tiles.coalesce(tasks), cover
-    keys = list(_TILE_COLS[:3])
-    cover_keys = local_frame(
-        spark, pd.DataFrame(list(cover.value), columns=keys),
-        "dataset string, tile_col int, tile_row int",
-    )
-    present = F.broadcast(cover_keys).join(tiles.select(*keys), keys, "inner")
-    missing = (
-        cover_keys.join(F.broadcast(present), keys, "left_anti")
-        .withColumn("bytes", F.lit(None).cast("binary"))
-        .withColumn("fmt", F.lit(None).cast("string"))
-    )
-    return tiles.unionByName(missing).coalesce(tasks), cover
+    return tiles.coalesce(_kernel_tasks(spark, cover.value, meta)), cover
 
 
 @dataclasses.dataclass(frozen=True)
@@ -1482,9 +1458,18 @@ def front_half(
     zones' grid whose scan keeps the same tiles (crosstab's class
     raster). ``fill_missing`` (boundless nodata/nan) keeps the cover keys
     beyond the grid and gives each cover key with no stored tile a
-    NULL-payload row. A zone of an unknown dataset, a window beyond the
-    extent with ``raise_beyond_extent``, or more than
-    ``max_cells_per_zone`` cover cells raises when the action runs."""
+    NULL-payload row, whose pixels the kernel fills with nodata. The
+    broadcast ``join`` builds these rows on the driver, one local_frame
+    unioned into ``rows`` (none when no key is missing): the keys off the
+    tile grid, and the in-grid keys absent from ONE key-only collect of
+    the tile scan fenced to the zone windows (storage_fence, even with
+    ``prune_tiles=False``; skipped when every key is off the grid), so a
+    tile-scan I/O error there raises at build time. The SMJ regime keeps
+    its cover ⟕ ``rows`` left join: its zones are not collected, and the
+    left join costs what the inner one does. A zone of an unknown
+    dataset, a window beyond the extent with ``raise_beyond_extent``, or
+    more than ``max_cells_per_zone`` cover cells still raises when the
+    action runs, with the same messages."""
     spark = zones.sparkSession
     keys = list(_TILE_COLS[:3])
     cover_kw = dict(
@@ -1498,6 +1483,7 @@ def front_half(
         # input's zone_id type kept) as a LocalTableScan
         zone_geoms, zone_rows = collect_zone_rows(zones, *extra_cols)
         windows = functools.cache(lambda: zone_windows(zone_geoms, meta))
+        table = tiles
         if prune_tiles:
             tiles = storage_fence(tiles, {**windows(), **{
                 (z, p): w for p in peers for (z, _), w in windows().items()
@@ -1506,7 +1492,19 @@ def front_half(
         def join(rows, cover=None):
             if cover is None:
                 cover = broadcast_cover_cells(spark, windows(), meta, **cover_kw)
-            return tile_driven_input(rows, cover, meta, fill_missing=fill_missing)
+            if fill_missing and not isinstance(cover, str):
+                stored = set()
+                if _zone_tile_rects(windows(), meta):  # a cover key in the grid
+                    stored = set(zip(*storage_fence(
+                        table, windows(), meta, quadkey_level=quadkey_level,
+                    ).select(*keys).toArrow().to_pydict().values()))
+                missing = [k for k in cover.value if k not in stored]
+                if missing:
+                    rows = rows.select(*_TILE_COLS)
+                    rows = rows.unionByName(local_frame(spark, pd.DataFrame(
+                        missing, columns=keys,
+                    ).assign(bytes=None, fmt=None), rows.schema))
+            return tile_driven_input(rows, cover, meta)
 
         zone_datasets = frozenset(ds for _, ds in zone_geoms)
         big_keys = frozenset()

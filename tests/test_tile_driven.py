@@ -3,8 +3,10 @@
 - Driver-detected errors (beyond-extent with boundless=False, the
   max_cells_per_zone cap) surface when the action runs, not when the
   DataFrame is built, in both regimes.
-- The boundless-nodata kernel input holds each stored tile once plus one
-  NULL-payload row per cover key with no stored tile.
+- The boundless-nodata kernel input (front_half's join) holds each
+  stored tile once plus one NULL-payload row per cover key with no
+  stored tile; the stored keys come from a key collect fenced to the
+  cover, even over an unpruned scan.
 - The gather tier, on the same broadcast front half, raises its
   driver-detected errors (beyond-extent, cover cap, unknown dataset) at
   action time too.
@@ -18,6 +20,8 @@
 """
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -27,10 +31,11 @@ from python_rasterstats_spark import geom as G
 from python_rasterstats_spark import kernel as K
 from python_rasterstats_spark.operators.gather import zonal_gather_df
 from python_rasterstats_spark.operators.point import point_query_df
-from python_rasterstats_spark.plans.explain import physical_plan, plan_summary
+from python_rasterstats_spark.plans.explain import (
+    physical_plan, plan_summary, scan_output_rows,
+)
 from python_rasterstats_spark.operators.zonal import (
-    broadcast_cover_cells, collect_dataset_meta, collect_zone_rows,
-    tile_driven_input, zonal_stats_df, zone_windows,
+    collect_dataset_meta, front_half, zonal_stats_df,
 )
 from python_rasterstats_spark.sources.tables import ZONES_DDL, raster_to_tables
 
@@ -208,24 +213,43 @@ def test_point_broadcast_build_parses_each_wkb_once(corpus, monkeypatch):
     assert got == run(prune_tiles=False) == run(broadcast_vertices=False)
 
 
-def test_boundless_input_one_row_per_tile(spark, raster):
+def test_boundless_input_one_row_per_tile(spark, raster, tmp_path, monkeypatch):
     tiles, datasets = raster
     # drop the stored tile (1, 1): its key must come back with no payload
     tiles = tiles.filter("NOT (tile_col = 1 AND tile_row = 1)")
     meta = collect_dataset_meta(datasets)
     # pixel cols -3..6, rows 1..10: tile cols -1..1 × tile rows 0..2
     zones = _zones_df(spark, [G.box(-3.0, -1.0, 7.0, 9.0)], ["td"])
-    geoms, _ = collect_zone_rows(zones)
-    cover = broadcast_cover_cells(
-        spark, zone_windows(geoms, meta), meta, clip_to_grid=False
-    )
-    kernel_in, _ = tile_driven_input(tiles, cover, meta, fill_missing=True)
+    fh = front_half(zones, tiles, meta, broadcast=True, fill_missing=True)
+    kernel_in, _ = fh.join(fh.tiles)
     rows = kernel_in.collect()
     keys = sorted((r["tile_col"], r["tile_row"]) for r in rows)
     assert keys == [(c, r) for c in (-1, 0, 1) for r in (0, 1, 2)]
     stored = {(r["tile_col"], r["tile_row"]) for r in rows if r["bytes"]}
     assert stored == {(0, 0), (1, 0), (0, 1)}
     assert all(r["fmt"] is None for r in rows if r["bytes"] is None)
+
+    # the stored keys come from a key collect fenced to the cover even
+    # over an unpruned scan: over a table of one tile per row group, it
+    # outputs no more rows than the cover's in-grid keys (0, 0), (0, 1)
+    path = str(tmp_path / "tiles.parquet")
+    pq.write_table(pa.Table.from_pandas(tiles.toPandas()), path,
+                   row_group_size=1)
+    scan = spark.read.parquet(path)
+    key_scans, real = [], type(scan).toArrow
+    monkeypatch.setattr(
+        type(scan), "toArrow", lambda df: key_scans.append(df) or real(df)
+    )
+    # pixel cols -3..2, rows 1..4: tile cols -1..0 × tile rows 0..1
+    zones = _zones_df(spark, [G.box(-3.0, 5.0, 3.0, 9.0)], ["td"])
+    fh = front_half(zones, scan, meta, broadcast=True,
+                    fill_missing=True, prune_tiles=False)
+    kernel_in, _ = fh.join(fh.tiles)
+    assert [df.columns for df in key_scans] == [["dataset", "tile_col", "tile_row"]]
+    assert scan_output_rows(key_scans[0], column="tile_col") <= 2
+    missing = {(r["tile_col"], r["tile_row"])
+               for r in kernel_in.collect() if r["bytes"] is None}
+    assert missing == {(-1, 0), (-1, 1)}
 
 
 def test_point_fast_path_one_row_per_vertex(spark):

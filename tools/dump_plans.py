@@ -25,7 +25,10 @@ def main():
     from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
     from python_rasterstats_spark.operators.gather import zonal_gather_df
     from python_rasterstats_spark.operators.point import point_query_df
-    from python_rasterstats_spark.operators.zonal import zonal_stats_df
+    from python_rasterstats_spark.operators.zonal import (
+        _zone_tile_rects, collect_dataset_meta, collect_zone_rows,
+        zonal_stats_df, zone_windows,
+    )
     from python_rasterstats_spark.plans.explain import (
         map_in_pandas_inputs, physical_plan, plan_summary,
     )
@@ -41,6 +44,12 @@ def main():
     part_path = os.path.join(tempfile.mkdtemp(prefix="plans_xt_"), "tiles")
     write_quadkey_partitioned_tiles(tiles, datasets, part_path)
 
+    # a stored tile the first polygon covers, dropped: an in-grid hole
+    # whose fill row the boundless plan unions into the payload scan
+    meta = collect_dataset_meta(datasets)
+    geoms, _ = collect_zone_rows(polys.withColumn("dataset", F.lit("slope_nodata")))
+    tc, _, tr, _ = _zone_tile_rects(zone_windows(geoms, meta), meta)["slope_nodata"][0]
+    dropped = f"dataset = 'slope_nodata' AND tile_col = {tc} AND tile_row = {tr}"
     cases = {
         "zonal_default (scalar stats, broadcast regime)": zonal_stats_df(
             polys, tiles, datasets, dataset="slope"
@@ -54,6 +63,11 @@ def main():
             polys, tiles, datasets, dataset="slope_nodata",
             stats=["count", "nodata", "nan"],
         ),
+        "zonal boundless nodata over a dropped tile (driver fill union)":
+            zonal_stats_df(
+                polys, tiles.filter(f"NOT ({dropped})"), datasets,
+                dataset="slope_nodata", stats=["count", "nodata", "nan"],
+            ),
         "zonal sketch mode (bounded holistic state)": zonal_stats_df(
             zones.filter(F.col("collection") == "hd_zones"), tiles, datasets,
             dataset="slope_hd", stats=["count", "median", "percentile_90"],
@@ -101,16 +115,18 @@ def main():
         "- the payload-bearing **tile table is never shuffled** (no",
         "  SortMergeJoin; no Exchange keyed on the tile key) in the",
         "  broadcast regime — including the boundless-nodata path, whose",
-        "  NULL-payload rows for missing tiles come from the driver-known",
-        "  cover keys anti-joined against a key-only scan. The SMJ regime",
+        "  NULL-payload rows for cover keys with no stored tile are built",
+        "  on the driver (the keys off the tile grid, and the in-grid keys",
+        "  one key collect of the fenced scan does not return) and unioned",
+        "  into the payload scan as a `LocalTableScan`. The SMJ regime",
         "  (`broadcast_zones=False`, the SMJ cases) is exempt by design: its",
         "  cover cells are grouped per tile key (an Exchange on the tile",
         "  key) and joined to the tiles, by a sort-merge join at scale;",
         "  on this small fixture the planner broadcasts the grouped cells",
         "  into the tile scan instead;",
         "- **column pruning reaches the scan**: the tile scan reads only the",
-        "  tile key + payload columns (never caption/phash); the",
-        "  boundless-nodata plan's SECOND scan reads keys ONLY (no bytes);",
+        "  tile key + payload columns (never caption/phash), and a",
+        "  boundless-nodata plan has ONE tile scan, as zonal_default does;",
         "- **one wave of Python tasks** for small queries: the kernel",
         "  input is a narrow `Coalesce` to as many tasks as a scan of just",
         "  the kernel's tiles would have, and at least one wave (8 here),",
@@ -194,6 +210,8 @@ def main():
         else:
             assert s["sort_merge_joins"] == 0, name
             assert not tile_exchange, name
+        if "boundless" in name:
+            assert sum("FileScan" in ln for ln in plan.splitlines()) == 1, name
         if name in gather_cases:
             assert plan.count("FlatMapGroupsInPandas") == 1, name
             assert plan.count("MapInPandas ") == 1, name  # the tile kernel

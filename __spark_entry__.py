@@ -1026,9 +1026,10 @@ def q_ann_ivf(spark, sf_dir):
 def q_zonal_qk_prune(spark, sf_dir):
     """Quadkey-range scan pruning gate (r4): the tile table carries a
     quadkey column (sources/tables.with_quadkey — the quadkey-sorted
-    storage layout), so zonal_stats_df pushes a quadkey predicate to the
-    parquet scan instead of bbox rectangles — a sparse zone set's exact
-    key set, else quadkey ranges (operators/zonal.tile_prune_filter).
+    storage layout), so zonal_stats_df's scan fence pushes a sparse zone
+    set's exact quadkey set to the parquet scan instead of bbox
+    rectangles; a larger set keeps the per-zone rects
+    (operators/zonal.storage_fence).
     Pruning is a strict superset
     filter, so the answer equals zonal_default — shared oracle."""
     from python_rasterstats_spark.fixtures import ensure_fixtures

@@ -49,8 +49,8 @@ from .. import codecs as C
 from .. import geom as G
 from .. import kernel as K
 from .zonal import (
-    _BEYOND_EXTENT, _TILE_COLS, collect_dataset_meta, front_half, local_frame,
-    spread, storage_fence,
+    _BEYOND_EXTENT, _TILE_COLS, _zone_tile_rects, collect_dataset_meta,
+    front_half, local_frame, spread, storage_fence,
 )
 
 _WINDOWS_SCHEMA = T.StructType(
@@ -131,8 +131,8 @@ def point_query_df(
         pending = isinstance(wins, str)
         if not pending:
             if prune_tiles:  # fenced to the vertex windows' own tiles
-                scan = storage_fence(scan, vwins, meta,
-                                     quadkey_level=quadkey_level)
+                scan = storage_fence(scan, _zone_tile_rects(vwins, meta),
+                                     meta, quadkey_level=quadkey_level)
             # exact-key semi join (broadcast, JVM-side): vertex windows
             # touch few tiles, so without it every fenced-scan tile's
             # payload would cross Arrow just to be discarded by the dict

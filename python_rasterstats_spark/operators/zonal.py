@@ -5,9 +5,9 @@ tile-driven Spark plan (Raptor, VLDB 2019: build the vector↔raster
 intersection index from metadata, then make one pass over the raster):
 
     zones ──driver──▶ cover index {(dataset, tile_col, tile_row): zones}
-                      + scan prune predicate (tile-key rects; on quadkey-
-                        sorted storage a sparse set's exact quadkey set,
-                        else quadkey ranges — tile_prune_filter)
+                      + scan fence (a sparse working set's exact quadkey
+                        set over a quadkey column, else per-zone tile-key
+                        rects; + qk_prefix dirs — storage_fence)
                                    │ broadcast (SMJ regime: cover cells
                                    │ grouped per tile key, joined to tiles)
     tiles ──pruned scan────────────┤ [+ driver-built NULL-payload rows for
@@ -114,7 +114,7 @@ from .. import kernel as K
 def collect_dataset_meta(datasets: DataFrame) -> dict:
     """Materialize the (tiny) datasets dimension to a plain dict that is
     shipped to executors inside UDF closures."""
-    return dataset_meta(row.asDict() for row in datasets.collect())
+    return dataset_meta(datasets.toArrow().to_pylist())
 
 
 def dataset_meta(rows) -> dict:
@@ -233,13 +233,10 @@ def collect_zone_rows(zones: DataFrame, *extra: str):
     in row order, duplicates kept — enough to rebuild the join-back base
     on the driver. Broadcast, the dict stores each (possibly multi-MB)
     WKB once per executor, never once per covering tile."""
-    geoms, rows = {}, []
-    for zid, ds, wkb, *rest in zones.select(
+    zid, ds, wkb, *rest = (c.to_pylist() for c in zones.select(
         "zone_id", "dataset", "geometry_wkb", *extra
-    ).collect():
-        geoms[(zid, ds)] = bytes(wkb)
-        rows.append((zid, ds, *rest))
-    return geoms, rows
+    ).toArrow().columns)
+    return dict(zip(zip(zid, ds), wkb)), list(zip(zid, ds, *rest))
 
 
 def _zone_tile_rects(windows: dict, meta: dict, *, pad_tiles: int = 0) -> dict:
@@ -308,117 +305,25 @@ def _coalesce_rects(rects: list, max_rects: int) -> list:
     return out
 
 
-def _quad_cover_ranges(
-    tc0: int, tc1: int, tr0: int, tr1: int, level: int
-) -> list:
-    """Inclusive level-``level`` Morton-code (quadkey) ranges covering the
-    tile rectangle — the recursive quad-tree cover: a quad cell fully
-    inside the rect emits its whole code range in one piece; partially
-    overlapping cells subdivide. To bound the output for huge rects, cells
-    at most ``cellcap`` tiles wide are accepted whole once they overlap at
-    all (a SUPERSET — never loses a tile)."""
-    span = max(tc1 - tc0 + 1, tr1 - tr0 + 1)
-    cellcap = 1
-    while cellcap * 8 < span:  # ≲ (8+2)^2 cells per rect before merging
-        cellcap *= 2
-    out: list = []
-
-    def rec(prefix: int, size: int, cx0: int, cy0: int) -> None:
-        if cx0 > tc1 or cy0 > tr1 or cx0 + size - 1 < tc0 or cy0 + size - 1 < tr0:
-            return
-        inside = (
-            cx0 >= tc0 and cx0 + size - 1 <= tc1
-            and cy0 >= tr0 and cy0 + size - 1 <= tr1
-        )
-        if inside or size <= cellcap:
-            shift = 2 * int(math.log2(size))
-            out.append((prefix << shift, ((prefix + 1) << shift) - 1))
-            return
-        half = size // 2
-        for q in range(4):
-            cbit, rbit = q & 1, q >> 1
-            rec(
-                (prefix << 2) | (rbit << 1) | cbit,
-                half,
-                cx0 + cbit * half,
-                cy0 + rbit * half,
-            )
-
-    rec(0, 1 << level, 0, 0)
-    return out
-
-
-def _merge_ranges(ranges: list, max_ranges: int) -> list:
-    """Sort + merge overlapping/adjacent inclusive ranges, then cap the
-    count by KEEPING the ``max_ranges - 1`` largest gaps as separators
-    (the optimal coalescing: the false-positive key space added is exactly
-    the dropped gaps, so dropping the smallest gaps first adds the least)."""
-    if not ranges:
-        return []
-    ranges = sorted(ranges)
-    merged = [list(ranges[0])]
-    for lo, hi in ranges[1:]:
-        if lo <= merged[-1][1] + 1:
-            merged[-1][1] = max(merged[-1][1], hi)
-        else:
-            merged.append([lo, hi])
-    if len(merged) > max_ranges:
-        gaps = sorted(
-            range(1, len(merged)),
-            key=lambda i: merged[i][0] - merged[i - 1][1],
-            reverse=True,
-        )[: max_ranges - 1]
-        keep = sorted(gaps)
-        out = []
-        start = 0
-        for g in keep + [len(merged)]:
-            out.append([merged[start][0], merged[g - 1][1]])
-            start = g
-        merged = out
-    return [(lo, hi) for lo, hi in merged]
-
-
-# coverage fraction of the union range above which per-zone granularity
-# is collapsed back to the union (the disjunction would admit nearly
+# coverage fraction of the union rect above which a dataset's per-zone
+# rects collapse back to it (the disjunction would admit nearly
 # everything anyway, so only the predicate overhead would remain)
 _DENSE_FRAC = 0.5
 
-# most tile keys per dataset a sparse quadkey working set is pushed as
-# (its exact key set); a larger one keeps its ≤ max_ranges ranges.
-# Building, parsing and probing the set grow with its keys, the compile
-# it saves does not. Scattered draws over the sf0.1 sorted table (4
-# vCPUs, 8 paired draws each), key set vs the ranges-or-union choice
-# without it: 178 keys −17%, 523 keys −10%, 1,365 keys +1%, 1,654 keys
-# +5%.
+# most rects per dataset the rect form pushes (_coalesce_rects)
+_MAX_RECTS = 64
+
+# most tile keys per dataset the key form pushes (its exact key set); a
+# larger working set goes as its rects. Building, parsing and probing the
+# set grow with its keys, the compile it saves does not. Scattered draws
+# over the sf0.1 sorted table (4 vCPUs, 8 paired draws each), key set vs
+# the quadkey ranges or union range the fence then pushed instead: 178
+# keys −17%, 523 keys −10%, 1,365 keys +1%, 1,654 keys +5%.
 _MAX_KEYS = 1024
 
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
-
-
-def _quadkey_ranges(rects: list, level: int, max_ranges: int):
-    """Merged level-``level`` quadkey ranges (≤ ``max_ranges``) covering
-    the tile ``rects`` of one dataset, or None when its grid overflows
-    the level (quadkey_prune_ranges)."""
-    grid = 1 << level
-    if any(r[1] >= grid or r[3] >= grid for r in rects):
-        # a grid wider than 2^level tiles overflows the Morton code
-        # (with_quadkey drops the high bits, so distant tiles SHARE
-        # codes); covering only the in-level window would silently
-        # EXCLUDE real tiles — and so would ANY finite key list if
-        # storage was written at a HIGHER level than assumed here
-        # (stored codes can exceed 4^level - 1). Emit the None
-        # sentinel = no quadkey constraint at all for this dataset
-        # (superset-safe: its scan keeps only the dataset clause)
-        return None
-    # bound driver work for huge zone sets: past 4×max_ranges rects
-    # the final cap collapses most ranges anyway, so coalesce rects
-    # first (superset-safe) instead of covering 10⁵ rects one by one
-    ranges: list = []
-    for tc0, tc1, tr0, tr1 in _coalesce_rects(rects, 4 * max_ranges):
-        ranges.extend(_quad_cover_ranges(tc0, tc1, tr0, tr1, level))
-    return _merge_ranges(ranges, max_ranges)
 
 
 def _quadkey_set(rects: list, cap: int):
@@ -438,169 +343,113 @@ def _quadkey_set(rects: list, cap: int):
     return sorted(keys)
 
 
-def quadkey_prune_ranges(
-    windows: dict,
-    meta: dict,
-    *,
-    level: int = 16,
-    pad_tiles: int = 0,
-    max_ranges: int = 64,
-) -> dict:
-    """Per-dataset quadkey range sets covering the tile window of every
-    zone of ``windows`` (zone_windows): ``{dataset: [(lo, hi), ...]}``
-    over the level-``level`` Morton code (sources/tables.with_quadkey
-    layout: col bits even, row bits odd), or ``{dataset: None}`` when
-    the dataset's grid overflows the level.
-    Ranges are merged and capped at ``max_ranges`` per dataset by
-    coalescing across the smallest gaps (superset-safe)."""
-    return {
-        ds: _quadkey_ranges(rects, level, max_ranges)
-        for ds, rects in _zone_tile_rects(
-            windows, meta, pad_tiles=pad_tiles
-        ).items()
-    }
+def _grid_clip(rects: list, m: dict) -> list:
+    """``rects`` clipped to the dataset's stored tile grid, empty ones
+    dropped (the SMJ regime's boundless sizing rects reach past it)."""
+    ntc = math.ceil(m["width"] / m["tile_w"])
+    ntr = math.ceil(m["height"] / m["tile_h"])
+    out = []
+    for tc0, tc1, tr0, tr1 in rects:
+        r = (max(tc0, 0), min(tc1, ntc - 1), max(tr0, 0), min(tr1, ntr - 1))
+        if r[0] <= r[1] and r[2] <= r[3]:
+            out.append(r)
+    return out
 
 
-def tile_prune_filter(windows: dict, meta: dict, *, pad_tiles: int = 0,
-                      **kw):
-    """Scan-level tile-pruning predicate from the pixel ``windows`` of
-    the collected zone dim (zone_windows): rects_prune_filter over every
-    zone's tile window widened by ``pad_tiles`` and clipped to the grid
-    (_zone_tile_rects)."""
-    return rects_prune_filter(
-        _zone_tile_rects(windows, meta, pad_tiles=pad_tiles), meta, **kw
-    )
+def _prefix_cells(rects: list, shift: int) -> list:
+    """Sorted quad-prefix values (``quadkey >> shift``) of every tile of
+    the in-grid ``rects``, walked in prefix cells ``2^ceil(shift/2)``
+    tiles wide and ``2^floor(shift/2)`` tall (the code's low bits
+    alternate col, row)."""
+    a, b = (shift + 1) // 2, shift // 2
+    return sorted({
+        K.quadkey(c << a, r << b) >> shift
+        for tc0, tc1, tr0, tr1 in rects
+        for c in range(tc0 >> a, (tc1 >> a) + 1)
+        for r in range(tr0 >> b, (tr1 >> b) + 1)
+    })
 
 
-def storage_fence(tiles: DataFrame, windows: dict, meta: dict, *,
-                  pad_tiles: int = 0, quadkey_level: int = 16) -> DataFrame:
-    """``tiles`` fenced to the tiles of the pixel ``windows``
-    ``{(key, dataset): window}`` (tile_prune_filter): in the quadkey
-    forms, plus the qk_prefix directory IN-list, when ``tiles`` has those
-    columns."""
-    pred = tile_prune_filter(
-        windows, meta, pad_tiles=pad_tiles,
-        quadkey_col="quadkey" if "quadkey" in tiles.columns else None,
-        quadkey_level=quadkey_level,
-        prefix_col="qk_prefix" if "qk_prefix" in tiles.columns else None,
+def storage_fence(tiles: DataFrame, rects_by_ds: dict, meta: dict, *,
+                  quadkey_level: int = 16) -> DataFrame:
+    """``tiles`` fenced to every tile of the per-dataset tile rects
+    ``rects_by_ds`` — the engine's one scan fence, for the broadcast
+    regime's zone windows (_zone_tile_rects), the SMJ regime's sizing
+    rects (smj_sizing_summary), the boundless key collect and the point
+    query's vertex windows: rects_prune_filter in the forms the table's
+    own columns allow."""
+    pred = rects_prune_filter(
+        rects_by_ds, meta, tiles.columns, quadkey_level=quadkey_level
     )
     return tiles if pred is None else tiles.filter(pred)
 
 
 def rects_prune_filter(
-    rects_by_ds: dict,
-    meta: dict,
-    *,
-    max_ranges: int = 64,
-    quadkey_col: str | None = None,
-    quadkey_level: int = 16,
-    prefix_col: str | None = None,
-):
-    """Scan-level tile-pruning predicate admitting every tile of the
-    per-dataset tile rects ``rects_by_ds`` ``{dataset: [(tc0, tc1, tr0,
-    tr1), ...]}`` — the engine's one predicate builder, for the pixel
-    windows of the broadcast regime's zones and of the point query's
-    vertices (tile_prune_filter) and the SMJ regime's sizing rects
-    (smj_sizing_summary).
+    rects_by_ds: dict, meta: dict, columns=(), *, quadkey_level: int = 16,
+) -> str | None:
+    """Scan-level tile-pruning predicate (SQL text) admitting every tile
+    of the per-dataset tile rects ``rects_by_ds`` ``{dataset: [(tc0, tc1,
+    tr0, tr1), ...]}`` over a tile table with ``columns`` (storage_fence).
+    None when there is nothing to prune by.
 
     At 100 TB this is the difference between scanning the planet and
     scanning the working set: the predicate reaches the parquet scan
     (PushedFilters), so row groups — and with dataset/tile-key partition
     or bucket layout, whole files — outside every zone's working set are
     never read. Correct by superset: any tile that could join a cover
-    cell lies inside one of the rects. Returns None when nothing can be
-    pruned.
+    cell lies inside one of the rects. One rule per dataset:
 
-    Two storage regimes:
+    - **key set**: over a ``quadkey`` column whose dataset grid fits
+      ``quadkey_level``, a working set of ≤ _MAX_KEYS tiles goes as its
+      EXACT tile-key set, ``quadkey IN (...)``. Spark makes an IN list of
+      more than 10 values an ``InSet`` whose generated code references
+      its key set instead of inlining it, so a fresh zone set reuses the
+      compiled filter (a BETWEEN list inlines its literals: two Janino
+      compiles per fresh query). The residual filter passes exactly the
+      cover keys to the kernel. Parquet's ``In`` skips a row group by the
+      set's min and max and, per key, by the column's dictionary or
+      bloom filter (sources/tables.write_quadkey_sorted_tiles writes
+      one); the page index prunes by min and max only. A set of ≤10 keys
+      stays an ``In`` with inlined literals and still compiles per query.
+    - **rects**: every other case — plain tables, larger working sets and
+      grids wider than 2^``quadkey_level`` tiles, whose stored codes wrap
+      — goes as a disjunction of PER-ZONE (tile_col BETWEEN, tile_row
+      BETWEEN) rects, Morton-coalesced to _MAX_RECTS (_coalesce_rects),
+      or as their one union rect when they cover > _DENSE_FRAC of it.
+      Predicates are built as ONE SQL string: composing a 64-term
+      disjunction from Column operators costs hundreds of py4j round
+      trips (~2 s measured at 64 rects) and a 100+-node boolean tree that
+      Catalyst re-optimizes on EVERY action.
 
-    - ``quadkey_col=None`` (plain corpora): a capped disjunction of
-      PER-ZONE (dataset, tile_col BETWEEN, tile_row BETWEEN) rectangles —
-      unlike the old single union bbox, sparse scattered zone sets keep
-      per-zone granularity until ``max_ranges`` rects, then coalesce
-      Morton-ordered neighbors (still far tighter than one planet bbox).
-    - ``quadkey_col='quadkey'`` (quadkey-sorted/Iceberg-style storage),
-      per dataset, one of:
+    Over a ``qk_prefix`` partition column (sources/tables.
+    write_quadkey_partitioned_tiles) either form adds the prefix IN-list
+    of its keys, or of its rects' prefix cells, which prunes whole
+    DIRECTORIES at listing time (PartitionFilters) before any file is
+    opened; the shift is re-derived from the SAME dataset grid dims the
+    writer used. A grid that overflows ``quadkey_level`` gets none: its
+    stored codes wrap, and so do their prefixes.
 
-      - a sparse working set of ≤ _MAX_KEYS tiles: its EXACT tile-key
-        set, ``quadkey IN (...)``. Spark makes an IN list of more than
-        10 values an ``InSet`` whose generated code references its key
-        set instead of inlining it, so a fresh zone set reuses the
-        compiled filter (a BETWEEN list inlines its literals: two Janino
-        compiles per fresh query). The residual filter passes exactly
-        the cover keys to the kernel. Parquet's ``In`` skips a row group
-        by the set's min and max and, per key, by the column's
-        dictionary or bloom filter (sources/tables.
-        write_quadkey_sorted_tiles writes one); the page index prunes by
-        min and max only. A set of ≤10 keys stays an ``In`` with inlined
-        literals and still compiles per query.
-      - a dense one (coverage > _DENSE_FRAC of its span): its one
-        union range. A key set that large costs more to build, parse
-        and probe than the compile it saves (the 2,008-zone sf0.1 set,
-        2,177 keys, as a key set: scalar +1%, holistic +11%).
-      - otherwise: the per-zone quad-tree cover, ≤ ``max_ranges`` 1-D
-        quadkey ranges; on sorted storage each maps to a contiguous run
-        of row groups that min-max stats admit.
+    The reference analog is the per-feature windowed read
+    (io.py:292-362) done at storage level."""
+    shifts = {}
+    if "qk_prefix" in columns:
+        from ..sources.tables import dataset_prefix_shifts
 
-      The reference analog is the per-feature windowed read
-      (io.py:292-362) done at storage level.
-    """
-    # Predicates are built as ONE SQL string handed to F.expr: composing
-    # a 64-term disjunction from Column operators costs hundreds of py4j
-    # round-trips (~2 s measured at 64 rects) and a 100+-node boolean
-    # tree that Catalyst re-optimizes on EVERY action; the parsed string
-    # costs one round-trip. Dense working sets additionally collapse to
-    # their union range when per-zone granularity can't prune anyway
-    # (coverage > _DENSE_FRAC of the union) — sparse scattered zones keep
-    # full per-zone granularity, dense corpora keep the r3-cheap plan.
+        shifts = dataset_prefix_shifts(meta)
     parts = []
-    if quadkey_col is not None:
-        for ds, rects in rects_by_ds.items():
-            ranges = _quadkey_ranges(rects, quadkey_level, max_ranges)
-            if ranges is None:
-                # Morton overflow (grid wider than 2^quadkey_level):
-                # stored codes may exceed any key this level can
-                # express — keep only the dataset clause (unpruned scan
-                # for this dataset, never a wrong one)
-                parts.append(f"(dataset = {_sql_str(ds)})")
-                continue
-            span = ranges[-1][1] - ranges[0][0] + 1
-            cov = sum(hi - lo + 1 for lo, hi in ranges)
-            keys = None
-            if len(ranges) > 1 and cov > _DENSE_FRAC * span:
-                ranges = [(ranges[0][0], ranges[-1][1])]
-            else:
-                keys = _quadkey_set(rects, _MAX_KEYS)
-            if keys is not None:
-                inlist = ", ".join(map(str, keys))
-                clause = f"dataset = {_sql_str(ds)} AND {quadkey_col} IN ({inlist})"
-            else:
-                rng = " OR ".join(
-                    f"{quadkey_col} BETWEEN {lo} AND {hi}" for lo, hi in ranges
-                )
-                clause = f"dataset = {_sql_str(ds)} AND ({rng})"
-            if prefix_col is not None:
-                # partitioned storage: an IN-list over the quad-prefix
-                # partition column prunes whole DIRECTORIES at listing
-                # time (PartitionFilters) before any file is opened; the
-                # shift is re-derived from the SAME dataset grid dims the
-                # writer used, so partition values always agree
-                from ..sources.tables import dataset_prefix_shifts
-
-                shift = dataset_prefix_shifts(meta)[ds]
-                if keys is not None:
-                    prefixes = {k >> shift for k in keys}
-                else:
-                    prefixes = {
-                        p
-                        for lo, hi in ranges
-                        for p in range(lo >> shift, (hi >> shift) + 1)
-                    }
-                inlist = ", ".join(map(str, sorted(prefixes)))
-                clause += f" AND {prefix_col} IN ({inlist})"
-            parts.append(f"({clause})")
-    else:
-        for ds, rects in rects_by_ds.items():
-            rects = _coalesce_rects(rects, max_ranges)
+    for ds, rects in rects_by_ds.items():
+        m = meta.get(ds)
+        fits = m is not None and max(
+            math.ceil(m["width"] / m["tile_w"]),
+            math.ceil(m["height"] / m["tile_h"]),
+        ) <= 1 << quadkey_level
+        keys = None
+        if fits and "quadkey" in columns:
+            keys = _quadkey_set(_grid_clip(rects, m), _MAX_KEYS) or None
+        if keys is not None:
+            clause = f"quadkey IN ({', '.join(map(str, keys))})"
+        else:
+            rects = _coalesce_rects(rects, _MAX_RECTS)
             if not rects:
                 continue
             u = (
@@ -615,15 +464,21 @@ def rects_prune_filter(
             area = (u[1] - u[0] + 1) * (u[3] - u[2] + 1)
             if len(rects) > 1 and cov > _DENSE_FRAC * area:
                 rects = [u]
-            rng = " OR ".join(
+            clause = "(" + " OR ".join(
                 f"(tile_col BETWEEN {tc0} AND {tc1} "
                 f"AND tile_row BETWEEN {tr0} AND {tr1})"
                 for tc0, tc1, tr0, tr1 in rects
+            ) + ")"
+        if fits and ds in shifts:
+            sh = shifts[ds]
+            prefixes = (
+                sorted({k >> sh for k in keys}) if keys is not None
+                else _prefix_cells(_grid_clip(rects, m), sh)
             )
-            parts.append(f"(dataset = {_sql_str(ds)} AND ({rng}))")
-    if not parts:
-        return None
-    return F.expr(" OR ".join(parts))
+            if prefixes:
+                clause += f" AND qk_prefix IN ({', '.join(map(str, prefixes))})"
+        parts.append(f"(dataset = {_sql_str(ds)} AND {clause})")
+    return " OR ".join(parts) if parts else None
 
 
 _BEYOND_EXTENT = (
@@ -736,7 +591,8 @@ def zone_cell_counts(
     (smj_sizing_summary). ncells uses the same _zone_tile_window
     derivation as zone_cover_cells, so the wkb_bytes × ncells duplication
     estimate is exactly what the cell generator would ship; ``pad_tiles``
-    widens each window as tile_prune_filter's does.
+    widens each window as the broadcast regime's fence (_zone_tile_rects)
+    does.
 
     The returned DataFrame carries a row-counting accumulator
     (``df._sizing_rows_acc``, also ``_LAST_SIZING_ACC``): each evaluation
@@ -858,22 +714,6 @@ def holistic_plan(
     return None, salt, None
 
 
-def _morton_expr(colc, colr, level: int = 16):
-    """Morton interleave of two integer Columns (col bits even, row bits
-    odd) — the JVM-expression twin of kernel.quadkey."""
-    qk = None
-    for k in range(level):
-        cbit = F.shiftleft(
-            F.shiftright(colc, k).bitwiseAND(F.lit(1)).cast("long"), 2 * k
-        )
-        rbit = F.shiftleft(
-            F.shiftright(colr, k).bitwiseAND(F.lit(1)).cast("long"), 2 * k + 1
-        )
-        term = cbit.bitwiseOR(rbit)
-        qk = term if qk is None else qk.bitwiseOR(term)
-    return qk
-
-
 def smj_sizing_summary(counts: DataFrame, meta: dict):
     """ONE job serving all three sizing-pass consumers of the SMJ regime,
     where the zone geometries are never collected (scan fence, auto-
@@ -890,20 +730,22 @@ def smj_sizing_summary(counts: DataFrame, meta: dict):
     duplication — when it does not exceed the hybrid threshold, the
     per-zone top-cost query (a second read of the sizing table) is
     skipped entirely."""
-    from ..sources.tables import dataset_prefix_shifts
+    from ..sources.tables import dataset_prefix_shifts, morton_sql
 
-    cc = ((F.col("tc0") + F.col("tc1")) / 2).cast("long")
-    cr = ((F.col("tr0") + F.col("tr1")) / 2).cast("long")
-    # negative centers (zones off-grid left/top with clip_to_grid False)
-    # break the bit interleave — clamp to 0 (bucketing only affects
-    # grouping tightness, never the rect bounds)
-    qk = _morton_expr(F.greatest(cc, F.lit(0)), F.greatest(cr, F.lit(0)))
     shift_case = " ".join(
         f"WHEN dataset = {_sql_str(ds)} THEN {sh}"
         for ds, sh in dataset_prefix_shifts(meta).items()
     )
-    rows = counts.withColumn("_qk", qk).withColumn(
-        "_b", F.expr(f"shiftright(_qk, CASE {shift_case} ELSE 0 END)")
+    # negative centers (zones off-grid left/top with clip_to_grid False)
+    # break the bit interleave — clamp to 0 (bucketing only affects
+    # grouping tightness, never the rect bounds)
+    rows = counts.selectExpr(
+        "*",
+        "greatest(CAST((tc0 + tc1) / 2 AS BIGINT), 0) AS _cc",
+        "greatest(CAST((tr0 + tr1) / 2 AS BIGINT), 0) AS _cr",
+    ).selectExpr(
+        "*", f"shiftright({morton_sql('_cc', '_cr')}, "
+        f"CASE {shift_case} ELSE 0 END) AS _b",
     ).groupBy("dataset", "_b").agg(
         F.min("tc0").alias("tc0"),
         F.max("tc1").alias("tc1"),
@@ -1454,7 +1296,9 @@ def front_half(
       (group_cover_cells) and joins them to ``rows``.
 
     The fence (``prune_tiles``) admits every tile of each zone's tile
-    window widened by ``pad_tiles``; ``peers`` name datasets on the
+    window widened by ``pad_tiles`` (the SMJ regime: of its sizing rects),
+    in the forms storage_fence picks from the table's columns in either
+    regime; ``peers`` name datasets on the
     zones' grid whose scan keeps the same tiles (crosstab's class
     raster). ``fill_missing`` (boundless nodata/nan) keeps the cover keys
     beyond the grid and gives each cover key with no stored tile a
@@ -1476,27 +1320,26 @@ def front_half(
         clip_to_grid=not fill_missing, max_cells_per_zone=max_cells_per_zone,
         raise_beyond_extent=raise_beyond_extent,
     )
-    pred = None
     if broadcast:
         # the zone dim is read ONCE per query, here: the join-back base is
         # rebuilt from the same rows (every input row, duplicates and the
         # input's zone_id type kept) as a LocalTableScan
         zone_geoms, zone_rows = collect_zone_rows(zones, *extra_cols)
         windows = functools.cache(lambda: zone_windows(zone_geoms, meta))
-        table = tiles
         if prune_tiles:
-            tiles = storage_fence(tiles, {**windows(), **{
+            rects = _zone_tile_rects({**windows(), **{
                 (z, p): w for p in peers for (z, _), w in windows().items()
-            }}, meta, pad_tiles=pad_tiles, quadkey_level=quadkey_level)
+            }}, meta, pad_tiles=pad_tiles)
 
         def join(rows, cover=None):
             if cover is None:
                 cover = broadcast_cover_cells(spark, windows(), meta, **cover_kw)
             if fill_missing and not isinstance(cover, str):
                 stored = set()
-                if _zone_tile_rects(windows(), meta):  # a cover key in the grid
+                in_grid = _zone_tile_rects(windows(), meta)
+                if in_grid:  # a cover key in the grid
                     stored = set(zip(*storage_fence(
-                        table, windows(), meta, quadkey_level=quadkey_level,
+                        tiles, in_grid, meta, quadkey_level=quadkey_level,
                     ).select(*keys).toArrow().to_pydict().values()))
                 missing = [k for k in cover.value if k not in stored]
                 if missing:
@@ -1544,9 +1387,7 @@ def front_half(
         if prune_tiles:
             rects = summary()[0]
             union = [r for rs in rects.values() for r in rs]
-            pred = rects_prune_filter(
-                {**rects, **{p: union for p in peers if union}}, meta
-            )
+            rects = {**rects, **{p: union for p in peers if union}}
 
         def join(rows, cover=None):
             if cover is None:
@@ -1566,9 +1407,11 @@ def front_half(
 
         def est_px():
             return summary()[1]
+    fenced = tiles
+    if prune_tiles:  # a new name: join's key collect fences ``tiles`` itself
+        fenced = storage_fence(tiles, rects, meta, quadkey_level=quadkey_level)
     return FrontHalf(
-        tiles if pred is None else tiles.filter(pred),
-        zone_geoms, windows, zone_rows, zone_datasets, big_keys, join,
+        fenced, zone_geoms, windows, zone_rows, zone_datasets, big_keys, join,
         geoms, base, est_px,
     )
 
@@ -2033,9 +1876,10 @@ def zonal_stats_df(
 
     ``quadkey_level`` must match the level the tile corpus's quadkey
     column was written with (sources/tables.with_quadkey default 16) —
-    pruning ranges are computed over that Morton code space. A grid too
-    wide for the level is detected and that dataset's scan simply goes
-    unpruned (never wrongly pruned).
+    a sparse working set's exact key set is computed in that Morton code
+    space. A grid too wide for the level is detected and that dataset's
+    scan is fenced by its tile_col/tile_row rects instead (never wrongly
+    pruned; storage_fence).
 
     ``holistic_mode`` (median/percentiles/majority/minority/unique/
     value_counts execution): ``'auto'`` (default) picks the plan from the

@@ -25,12 +25,11 @@ def plan_summary(df: DataFrame) -> dict:
     }
 
 
-def scan_output_rows(df: DataFrame, column: str = "bytes") -> int:
-    """Rows the parquet scans reading ``column`` output in ``df``'s
-    executed plan (their ``numOutputRows`` metric, so run the plan
-    first), through AQE and query-stage wrappers: what row-group and
-    page skipping let through, before any row filter."""
-    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+def payload_scans(df: DataFrame, column: str = "bytes") -> list:
+    """The parquet scans (``FileSourceScanExec`` JVM nodes) reading
+    ``column`` in ``df``'s executed plan, through AQE and query-stage
+    wrappers."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
     while stack:
         plan = stack.pop()
         cls = plan.getClass().getSimpleName()
@@ -43,10 +42,21 @@ def scan_output_rows(df: DataFrame, column: str = "bytes") -> int:
         if cls == "FileSourceScanExec" and column in list(
             plan.requiredSchema().fieldNames()
         ):
-            total += plan.metrics().apply("numOutputRows").value()
+            out.append(plan)
         children = plan.children()
         stack.extend(children.apply(i) for i in range(children.size()))
-    return total
+    return out
+
+
+def scan_output_rows(df: DataFrame, column: str = "bytes") -> int:
+    """Rows the parquet scans reading ``column`` output in ``df``'s
+    executed plan (their ``numOutputRows`` metric, so run the plan
+    first): what row-group and page skipping let through, before any row
+    filter."""
+    return sum(
+        scan.metrics().apply("numOutputRows").value()
+        for scan in payload_scans(df, column)
+    )
 
 
 def _names(s: str) -> list:

@@ -127,23 +127,22 @@ def with_quadkey(
     ranges instead of a scatter of (col, row) points). The default
     level 16 addresses grids up to 65,536 tiles per dim (≈4.3B tiles per
     dataset); a wider grid wraps the code (high bits dropped) — sorting
-    stays deterministic and the pruning predicate detects the overflow
-    and falls back to an unpruned scan for that dataset
-    (operators/zonal.tile_prune_filter), so results are never wrong,
-    only unpruned. Raise ``level`` (≤31) for wider grids."""
-    qk = None
-    for k in range(level):
-        cbit = F.shiftleft(
-            F.shiftright(F.col(col), k).bitwiseAND(F.lit(1)).cast("long"),
-            2 * k,
-        )
-        rbit = F.shiftleft(
-            F.shiftright(F.col(row), k).bitwiseAND(F.lit(1)).cast("long"),
-            2 * k + 1,
-        )
-        term = cbit.bitwiseOR(rbit)
-        qk = term if qk is None else qk.bitwiseOR(term)
-    return tiles.withColumn(out, qk)
+    stays deterministic and the scan fence detects the overflow and
+    fences that dataset by its tile_col/tile_row rects instead of a key
+    set (operators/zonal.storage_fence), so results are never wrong,
+    only less tightly pruned. Raise ``level`` (≤31) for wider grids."""
+    return tiles.withColumn(out, F.expr(morton_sql(col, row, level)))
+
+
+def morton_sql(col: str, row: str, level: int = 16) -> str:
+    """SQL text of the level-``level`` Morton interleave of two integer
+    expressions (col bits even, row bits odd; higher bits dropped) — the
+    JVM twin of kernel.quadkey, parsed in one driver round trip."""
+    return " | ".join(
+        f"shiftleft(CAST(shiftright({e}, {k}) & 1 AS BIGINT), {2 * k + b})"
+        for k in range(level)
+        for b, e in ((0, col), (1, row))
+    )
 
 
 def _tile_payload_bytes(tiles: DataFrame) -> int:
@@ -194,11 +193,13 @@ def write_quadkey_sorted_tiles(
 ) -> None:
     """Persist the tile table range-partitioned + sorted by (dataset,
     quadkey) — the storage layout that makes PER-ZONE scan pruning
-    (operators/zonal.tile_prune_filter) effective: a sparse zone set's
-    exact tile-key set, or a larger set's ≤64 1-D quadkey ranges, map to
-    few row groups, so a sparse zone set over a planet-sized corpus
-    reads only its working set. On a real warehouse this is Iceberg's
-    sort-order/partition transform on the Morton key.
+    (operators/zonal.storage_fence) effective: a sparse zone set's exact
+    tile-key set, or a larger set's ≤64 tile_col/tile_row rects, map to
+    few row groups (a group is a compact Morton block, so its tile_col
+    and tile_row min-max stats are narrow too), so a sparse zone set
+    over a planet-sized corpus reads only its working set. On a real
+    warehouse this is Iceberg's sort-order/partition transform on the
+    Morton key.
 
     ``row_group_bytes`` caps the parquet row-group size (default 1 MiB vs
     parquet's 128 MiB default): the row group is the skipping granule,
@@ -261,23 +262,20 @@ def write_quadkey_partitioned_tiles(
     per dataset; shift derived from the dataset's grid dims so both this
     writer and the pruning predicate agree) and sorted by quadkey within
     partitions — Iceberg's partition-transform idea on plain parquet. A
-    zone set's quadkey predicate then prunes at THREE levels: directory listing
+    zone set's scan fence then prunes at THREE levels: directory listing
     (Spark partition pruning on qk_prefix — PartitionFilters in the
     scan), row-group skipping (quadkey min-max stats and the bloom
     filter, written as by write_quadkey_sorted_tiles), and the residual
-    row filter. The pruning predicate picks the prefix IN-list up
-    automatically when the scan has a qk_prefix column
-    (operators/zonal.tile_prune_filter)."""
-    from ..operators.zonal import collect_dataset_meta
+    row filter. The scan fence adds the prefix IN-list — of its key set,
+    or of its rects' prefix cells — whenever the table has a qk_prefix
+    column, in either regime (operators/zonal.storage_fence); a grid that
+    overflows ``level`` gets none, as its codes and prefixes wrap."""
+    from ..operators.zonal import _sql_str, collect_dataset_meta
 
     shifts = dataset_prefix_shifts(collect_dataset_meta(datasets))
     qk = with_quadkey(tiles, level=level)
-
-    def _q(s: str) -> str:  # same escaping as the pruning predicates
-        return "'" + s.replace("'", "''") + "'"
-
     cases = " ".join(
-        f"WHEN dataset = {_q(ds)} THEN shiftright(quadkey, {sh})"
+        f"WHEN dataset = {_sql_str(ds)} THEN shiftright(quadkey, {sh})"
         for ds, sh in shifts.items()
     )
     _quadkey_layout_writer(

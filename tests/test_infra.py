@@ -389,7 +389,7 @@ def test_gather_plan_no_tile_shuffle_and_no_tile_zones(corpus):
     assert len(zero) == 9 and all(r["mean"] is None for r in zero)
 
 
-def test_tile_prune_filter_reaches_scan(spark, corpus):
+def test_tile_fence_reaches_scan(spark, corpus):
     """Scan-level pruning (r3): a small zone over the corpus pushes its
     bbox tile-key range into the parquet scan (PushedFilters), so row
     groups outside the working set are never read — and the answer is

@@ -1,18 +1,21 @@
-"""Per-zone scan pruning (r3 verdict 'Next round #1').
+"""Per-zone scan pruning: the one scan fence (operators/zonal.
+storage_fence) and its two forms.
 
 The r3 predicate pushed ONE union bbox per dataset — for sparse scattered
 zones (two corners of a planet-sized corpus) that degenerates to "scan
-everything". These tests pin the fix:
+everything". These tests pin the fence that replaced it:
 
-- per-zone quadkey range sets over quadkey-sorted storage: >10× fewer row
-  groups can match than under the union bbox (pyarrow min-max stat
-  analysis of the actual parquet file Spark reads),
-- the predicate reaches the parquet scan (PushedFilters),
-- results are bit-identical with pruning on, off, and in both predicate
-  regimes (rect disjunction / quadkey ranges),
-- over sorted storage a sparse zone set goes as its exact tile-key set:
-  a fresh zone set compiles no new class, and the executed scan skips
-  row groups per key through the writer's quadkey bloom filter.
+- over a quadkey column a sparse working set goes as its exact tile-key
+  set, every other case as per-zone tile_col/tile_row rects; on
+  quadkey-sorted storage both admit >10× fewer row groups than the union
+  bbox (pyarrow analysis of the actual parquet file Spark reads),
+- the predicate reaches the parquet scan (PushedFilters), and over
+  quad-prefix partitioned storage it prunes directories (PartitionFilters)
+  in both regimes, for zonal, crosstab and point,
+- results are bit-identical with pruning on, off, and in both forms,
+- a grid wider than the quadkey level gets the rects, never a key set,
+- a fresh sparse zone set compiles no new class, and the executed scan
+  skips row groups per key through the writer's quadkey bloom filter.
 """
 
 import os
@@ -26,10 +29,10 @@ from python_rasterstats_spark import kernel as K
 from python_rasterstats_spark.operators.point import point_query_df
 from python_rasterstats_spark.operators.zonal import (
     _coalesce_rects,
-    _merge_ranges,
-    _quad_cover_ranges,
-    quadkey_prune_ranges,
-    tile_prune_filter,
+    _zone_tile_rects,
+    collect_dataset_meta,
+    rects_prune_filter,
+    storage_fence,
     zonal_stats_df,
     zone_windows,
 )
@@ -38,6 +41,13 @@ from python_rasterstats_spark.sources.tables import (
     features_to_zones,
     raster_to_tables,
     with_quadkey,
+)
+from tools.audit_prune_bytes import (
+    admit_bytes,
+    key_admit_bytes,
+    pred_keys,
+    pred_rects,
+    rect_admit,
 )
 
 LEVEL = 6  # 64×64 tile grid
@@ -51,34 +61,15 @@ def _codes(tc0, tc1, tr0, tr1):
     }
 
 
-def _in_ranges(code, ranges):
-    return any(lo <= code <= hi for lo, hi in ranges)
+def _key_set(pred: str) -> set:
+    return set(pred_keys(pred) or ())
 
 
-def test_quad_cover_is_exact_for_small_rects():
-    for rect in [(0, 2, 0, 2), (61, 63, 61, 63), (5, 9, 17, 21), (7, 7, 7, 7)]:
-        ranges = _quad_cover_ranges(*rect, LEVEL)
-        want = _codes(*rect)
-        covered = set()
-        for lo, hi in ranges:
-            covered.update(range(lo, hi + 1))
-        assert want == covered  # small rects: exact, no false positives
+def _pred_prefixes(pred: str) -> list:
+    import re
 
-
-def test_quad_cover_is_superset_for_huge_rects():
-    rect = (3, 60, 2, 59)  # big rect: cellcap kicks in, superset allowed
-    ranges = _merge_ranges(_quad_cover_ranges(*rect, LEVEL), 64)
-    assert len(ranges) <= 64
-    want = _codes(*rect)
-    assert all(_in_ranges(c, ranges) for c in want)
-
-
-def test_merge_ranges_caps_by_keeping_largest_gaps():
-    ranges = [(0, 1), (3, 4), (100, 101), (200, 300), (205, 210)]
-    out = _merge_ranges(ranges, 2)
-    assert len(out) == 2
-    # the 5..99 gap is smaller than 102..199 → it is the one swallowed
-    assert out == [(0, 101), (200, 300)]
+    m = re.search(r"qk_prefix IN \(([^)]*)\)", pred)
+    return [int(p) for p in m.group(1).split(",")] if m else []
 
 
 def test_coalesce_rects_caps_and_stays_superset():
@@ -192,13 +183,9 @@ def test_quadkey_predicate_reaches_parquet_scan(spark, sparse_corpus):
 
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    pred = tile_prune_filter(
-        zone_windows(_zone_geom_dict(c["zones"]), meta), meta,
-        quadkey_col="quadkey",
-    )
+    rects = _zone_tile_rects(zone_windows(_zone_geom_dict(c["zones"]), meta), meta)
     plan = (
-        spark.read.parquet(c["qk"])
-        .filter(pred)
+        storage_fence(spark.read.parquet(c["qk"]), rects, meta)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -207,64 +194,48 @@ def test_quadkey_predicate_reaches_parquet_scan(spark, sparse_corpus):
 
 
 def test_rowgroup_pruning_evidence_10x(spark, sparse_corpus):
-    """The judge's 'done' criterion: on the quadkey-sorted file, the
-    per-zone quadkey ranges admit >10× fewer row groups than the union
-    bbox predicate (which spans the whole grid here → admits ALL)."""
-    from python_rasterstats_spark.operators.zonal import collect_dataset_meta
-
+    """On the quadkey-sorted file, each of the fence's two forms admits
+    >10× fewer row groups than the union bbox predicate (which spans the
+    whole grid here → admits ALL): the key set by the groups holding one
+    of its keys (what the column's dictionary or bloom filter admits; its
+    min and max span the grid), the rects by tile_col/tile_row min-max
+    stats (a sorted group is a compact Morton block)."""
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
-    ranges = quadkey_prune_ranges(gd, meta, level=LEVEL)["sparse"]
-    assert 1 <= len(ranges) <= 64
+    rects = _zone_tile_rects(zone_windows(_zone_geom_dict(c["zones"]), meta), meta)
+    keys = _key_set(rects_prune_filter(rects, meta, ["quadkey"]))
+    pushed_rects = pred_rects(rects_prune_filter(rects, meta))
+    assert len(keys) == 18 and len(pushed_rects) == 2
 
-    md = pq.ParquetFile(c["qk"]).metadata
-    schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-    qk_i = schema_names.index("quadkey")
-    tc_i = schema_names.index("tile_col")
-    tr_i = schema_names.index("tile_row")
-
-    union_bbox = (0, 63, 0, 63)  # the r3 predicate for these two zones
-    rg_quad = rg_bbox = 0
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        qlo = rg.column(qk_i).statistics.min
-        qhi = rg.column(qk_i).statistics.max
-        if any(lo <= qhi and qlo <= hi for lo, hi in ranges):
-            rg_quad += 1
-        clo = rg.column(tc_i).statistics.min
-        chi = rg.column(tc_i).statistics.max
-        rlo = rg.column(tr_i).statistics.min
-        rhi = rg.column(tr_i).statistics.max
-        if (
-            clo <= union_bbox[1] and union_bbox[0] <= chi
-            and rlo <= union_bbox[3] and union_bbox[2] <= rhi
-        ):
-            rg_bbox += 1
-    assert md.num_row_groups >= 32
-    assert rg_bbox == md.num_row_groups  # union bbox scans the planet
-    assert rg_quad * 10 <= rg_bbox  # the fix reads only the working set
+    rg_keys, groups, _ = key_admit_bytes(c["qk"], keys)
+    rg_rects, _, _ = admit_bytes(c["qk"], rect_admit(pushed_rects))
+    rg_bbox, _, _ = admit_bytes(c["qk"], rect_admit([(0, 63, 0, 63)]))
+    assert groups >= 32
+    assert rg_bbox == groups  # union bbox scans the planet
+    assert 1 <= rg_keys and rg_keys * 10 <= rg_bbox
+    assert 1 <= rg_rects and rg_rects * 10 <= rg_bbox
 
 
-def test_quadkey_ranges_cover_every_cover_cell(spark, sparse_corpus):
+def test_fence_admits_every_cover_cell(spark, sparse_corpus):
     """Superset safety: every (tile_col, tile_row) cover cell of every
-    zone falls inside the pushed quadkey ranges (a pruned stored tile
-    would silently become boundless nodata fill)."""
-    from python_rasterstats_spark.operators.zonal import (
-        collect_dataset_meta,
-        zone_cover_cells,
-    )
+    zone is admitted by the pushed quadkey constraint — its key set — and
+    by the rect form (a pruned stored tile would silently become
+    boundless nodata fill)."""
+    from python_rasterstats_spark.operators.zonal import zone_cover_cells
 
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
-    ranges = quadkey_prune_ranges(gd, meta, level=LEVEL)["sparse"]
+    rects = _zone_tile_rects(zone_windows(_zone_geom_dict(c["zones"]), meta), meta)
+    keys = _key_set(rects_prune_filter(rects, meta, ["quadkey"]))
+    pushed_rects = pred_rects(rects_prune_filter(rects, meta))
     cells = zone_cover_cells(
         c["zones"], meta, clip_to_grid=True
     ).collect()
     assert len(cells) == 18
     for r in cells:
-        assert _in_ranges(K.quadkey(r["tile_col"], r["tile_row"]), ranges)
+        tc, tr = r["tile_col"], r["tile_row"]
+        assert K.quadkey(tc, tr) in keys
+        assert any(a <= tc <= b and d <= tr <= e for a, b, d, e in pushed_rects)
 
 
 def test_crosstab_quadkey_pruning_matches_plain(spark, corpus):
@@ -324,48 +295,93 @@ def test_partitioned_quadkey_prunes_directories(spark, sparse_corpus, tmp_path):
 
     ndirs = len([d for d in _os.listdir(part_path) if d.startswith("qk_prefix=")])
     assert ndirs >= 32  # the transform really spread the corpus
-    from python_rasterstats_spark.operators.zonal import collect_dataset_meta
-    from python_rasterstats_spark.sources.tables import dataset_prefix_shifts
-
     meta = collect_dataset_meta(c["datasets"])
-    shift = dataset_prefix_shifts(meta)["sparse"]
-    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
-    ranges = quadkey_prune_ranges(gd, meta)["sparse"]
-    prefixes = {p for lo, hi in ranges for p in range(lo >> shift, (hi >> shift) + 1)}
-    assert len(prefixes) <= 4  # 2 corners -> a handful of directories
+    rects = _zone_tile_rects(zone_windows(_zone_geom_dict(c["zones"]), meta), meta)
+    prefixes = _pred_prefixes(
+        rects_prune_filter(rects, meta, part_tiles.columns)
+    )
+    assert len(prefixes) == 2  # 2 corners -> their 2 directories
 
 
-def test_crosstab_partitioned_prunes_both_scans(spark, corpus, tmp_path):
-    """Crosstab runs zonal's front half: over quad-prefix partitioned
-    storage both payload scans (value and class raster) prune
-    directories at listing time, and the rows equal those over the plain
-    table."""
-    import re
+def _scan_filters(df) -> list:
+    """``(partition filters, data filters)`` text of each payload scan of
+    ``df``'s executed plan."""
+    from python_rasterstats_spark.plans.explain import payload_scans
 
-    from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
-    from python_rasterstats_spark.plans.explain import physical_plan
+    return [
+        (scan.partitionFilters().toString(), scan.dataFilters().toString())
+        for scan in payload_scans(df)
+    ]
+
+
+@pytest.fixture(scope="module")
+def partitioned_corpus(spark, corpus, tmp_path_factory):
+    """The fixture tiles written by write_quadkey_partitioned_tiles."""
     from python_rasterstats_spark.sources.tables import (
         write_quadkey_partitioned_tiles,
     )
 
+    tiles, _, datasets = corpus
+    path = str(tmp_path_factory.mktemp("part") / "tiles")
+    write_quadkey_partitioned_tiles(tiles, datasets, path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "smj"])
+def test_crosstab_partitioned_prunes_both_scans(
+    spark, corpus, partitioned_corpus, broadcast
+):
+    """Crosstab runs zonal's front half: over quad-prefix partitioned
+    storage both payload scans (value and class raster) prune
+    directories at listing time in either regime, and the rows equal
+    those over the plain table."""
+    from python_rasterstats_spark.operators.crosstab import zonal_crosstab_df
+
     tiles, zones, datasets = corpus
     polys = zones.filter(F.col("collection") == "polygons")
-    path = str(tmp_path / "xtab_part")
-    write_quadkey_partitioned_tiles(tiles, datasets, path)
-    kw = dict(value_dataset="slope", class_dataset="slope_classes")
+    kw = dict(value_dataset="slope", class_dataset="slope_classes",
+              broadcast_zones=broadcast)
     want = _collect_sorted(zonal_crosstab_df(polys, tiles, datasets, **kw))
-    out = zonal_crosstab_df(polys, spark.read.parquet(path), datasets, **kw)
+    out = zonal_crosstab_df(polys, partitioned_corpus, datasets, **kw)
     assert _collect_sorted(out) == want and len(want) > 0
-    # one entry per scan (an executed adaptive plan prints each twice)
-    filters = {
-        m.group(1)
-        for ln in physical_plan(out).splitlines()
-        if "Scan parquet" in ln and "bytes" in ln
-        for m in [re.search(r"PartitionFilters: \[([^\]]*)\]", ln)]
-        if m
-    }
+    filters = _scan_filters(out)
     assert len(filters) == 2, filters
-    assert all("qk_prefix" in f for f in filters), filters
+    assert all("qk_prefix" in p and "quadkey" in d for p, d in filters), filters
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "smj"])
+def test_zonal_and_point_partitioned_prune_scans(
+    spark, corpus, partitioned_corpus, broadcast
+):
+    """Zonal and point fence their scan with one storage_fence in either
+    regime: over quad-prefix partitioned storage the payload scan prunes
+    directories (PartitionFilters on qk_prefix) and pushes the working
+    set's exact quadkey set, as the broadcast regime does; rows equal
+    those over the plain table."""
+    import re
+
+    from python_rasterstats_spark.operators.point import point_query_df
+
+    tiles, zones, datasets = corpus
+    polys = zones.filter(F.col("collection") == "polygons")
+    runs = {
+        "zonal": lambda t: zonal_stats_df(
+            polys, t, datasets, dataset="slope", broadcast_zones=broadcast,
+        ),
+        "point": lambda t: point_query_df(
+            polys, t, datasets, dataset="slope",
+            broadcast_vertices=broadcast,
+        ),
+    }
+    for name, run in runs.items():
+        want = _collect_sorted(run(tiles))
+        out = run(partitioned_corpus)
+        assert _collect_sorted(out) == want and len(want) > 0, name
+        filters = _scan_filters(out)
+        assert filters and all(
+            "qk_prefix" in p and re.search(r"quadkey#\d+L (INSET|IN \()", d)
+            for p, d in filters
+        ), (name, filters)
 
 
 def test_multi_dataset_grids_get_independent_prefix_shifts(spark, tmp_path):
@@ -408,13 +424,16 @@ def test_multi_dataset_grids_get_independent_prefix_shifts(spark, tmp_path):
     assert all(r[1] > 0 for r in want)
 
 
-def test_quadkey_overflow_grid_falls_back_to_no_constraint():
+def test_quadkey_overflow_grid_falls_back_to_no_constraint(
+    spark, sparse_corpus, sorted_tiles
+):
     """A dataset grid wider than 2^level tiles overflows the Morton code
     (high bits dropped → distant tiles SHARE codes, and codes written at
-    a HIGHER storage level exceed 4^level-1). The range builder must emit
-    the no-constraint sentinel (None → dataset clause only) rather than
-    ANY finite range list, which would silently exclude real tiles
-    (ADVICE r4 #1)."""
+    a HIGHER storage level exceed 4^level-1), so ANY finite key set could
+    silently exclude real tiles (ADVICE r4 #1). The fence puts no
+    quadkey constraint on it and pushes the tile_col/tile_row rects
+    instead: the scan admits fewer tiles than the table, and the rows
+    equal the unpruned run."""
     import python_rasterstats_spark.geom as G
 
     # 50k-tile-wide grid: overflows the level-6 code space (64 tiles)
@@ -427,12 +446,30 @@ def test_quadkey_overflow_grid_falls_back_to_no_constraint():
     }}
     wkt = "POLYGON ((700000 100, 700100 100, 700100 200, 700000 200, 700000 100))"
     geom = G.parse_feature(wkt)["geometry"]
-    gd = zone_windows({(0, "huge"): G.wkb_dumps(geom)}, m)
-    ranges = quadkey_prune_ranges(gd, m, level=LEVEL)["huge"]
-    assert ranges is None  # no quadkey constraint: superset-safe
-    # and the same zone at level 16 (fits) prunes normally
-    r16 = quadkey_prune_ranges(gd, m, level=16)["huge"]
-    assert r16 is not None and len(r16) >= 1
+    rects = _zone_tile_rects(zone_windows({(0, "huge"): G.wkb_dumps(geom)}, m), m)
+    cols = ["quadkey", "qk_prefix"]
+    pred = rects_prune_filter(rects, m, cols, quadkey_level=LEVEL)
+    assert "quadkey" not in pred and pred_rects(pred) == rects["huge"]
+    # and the same zone at level 16 (fits) goes as its key set
+    assert _key_set(rects_prune_filter(rects, m, cols, quadkey_level=16))
+
+    # the 64×64-tile corpus stored quadkey-sorted at level 16, fenced at
+    # level 5 (a 32×32 grid): overflow; the rects skip row groups by
+    # their tile_col/tile_row stats
+    c = sparse_corpus
+    qk_tiles = spark.read.parquet(sorted_tiles)
+    stats = ["count", "min", "max", "mean"]
+    out = zonal_stats_df(
+        c["zones"], qk_tiles, c["datasets"], dataset="sparse", stats=stats,
+        quadkey_level=5,
+    )
+    got = _collect_sorted(out)
+    assert 18 <= scan_output_rows(out) < 4096
+    want = _collect_sorted(zonal_stats_df(
+        c["zones"], qk_tiles, c["datasets"], dataset="sparse", stats=stats,
+        prune_tiles=False,
+    ))
+    assert got == want and want[0][1] > 0
 
 
 def test_smj_regime_prunes_without_collecting_geoms(spark, sparse_corpus):
@@ -471,26 +508,21 @@ def test_smj_regime_prunes_without_collecting_geoms(spark, sparse_corpus):
 
 
 def test_sorted_writer_rowgroup_sizing_beats_rects(spark, sparse_corpus, tmp_path):
-    """r5 (VERDICT r4 'Next round #2'): write_quadkey_sorted_tiles now caps
+    """r5 (VERDICT r4 'Next round #2'): write_quadkey_sorted_tiles caps
     parquet row-group bytes, so the Morton sort's locality reaches the
-    skipping granule. Audit (same pyarrow min-max admission the reader
-    uses): bytes-must-read under per-zone quadkey ranges on the sized
-    sorted file ≤ bytes under the per-zone rect predicate on the plain
-    row-major corpus at the SAME granularity — the r4 residue was sorted
-    storage losing to rects purely on 36 MiB groups."""
+    skipping granule. Audit: bytes-must-read under the fence's key set on
+    the sized sorted file (groups holding a covered key, what its bloom
+    filter admits) ≤ bytes under its rect form on the plain row-major
+    corpus at the SAME granularity (min-max admission) — the r4 residue
+    was sorted storage losing to rects purely on 36 MiB groups."""
     import pyarrow as pa
 
-    from python_rasterstats_spark.operators.zonal import (
-        _zone_tile_rects, collect_dataset_meta, quadkey_prune_ranges,
-    )
     from python_rasterstats_spark.sources.tables import (
         write_quadkey_sorted_tiles,
     )
-    from tools.audit_prune_bytes import admit_bytes, qk_admit, rect_admit
-
     c = sparse_corpus
     meta = collect_dataset_meta(c["datasets"])
-    gd = zone_windows(_zone_geom_dict(c["zones"]), meta)
+    rects = _zone_tile_rects(zone_windows(_zone_geom_dict(c["zones"]), meta), meta)
 
     # plain corpus re-written at the same granularity for a fair audit
     gran = 64 << 10
@@ -506,10 +538,10 @@ def test_sorted_writer_rowgroup_sizing_beats_rects(spark, sparse_corpus, tmp_pat
         row_group_bytes=gran,
     )
 
-    rects = _zone_tile_rects(gd, meta)["sparse"]
-    ranges = quadkey_prune_ranges(gd, meta, level=LEVEL)["sparse"]
-    adm_r, tot_r, by_rect = admit_bytes(plain_rg, rect_admit(rects))
-    adm_q, tot_q, by_qk = admit_bytes(qk_path, qk_admit(ranges))
+    keys = _key_set(rects_prune_filter(rects, meta, ["quadkey"]))
+    pushed_rects = pred_rects(rects_prune_filter(rects, meta))
+    adm_r, tot_r, by_rect = admit_bytes(plain_rg, rect_admit(pushed_rects))
+    adm_q, tot_q, by_qk = key_admit_bytes(qk_path, keys)
     # the writer option took effect: many small groups, not one big one
     assert tot_q >= 16, f"row-group sizing ignored ({tot_q} groups)"
     # the layout's win: sorted-storage must-read ≤ the rect number, and
@@ -647,41 +679,40 @@ def test_sorted_scan_prunes_row_groups_per_key(spark, sparse_corpus, sorted_tile
     [
         # two 3×3-tile corners: 18 keys
         ([(0, 2, 0, 2), (61, 63, 61, 63)], 16, "keys"),
-        # a 24×24-tile block tiled by four zones: covers > _DENSE_FRAC of
-        # its code span
+        # a 24×24-tile block tiled by four zones: 576 keys, dense
         ([(0, 11, 0, 11), (12, 23, 0, 11), (0, 11, 12, 23),
-          (12, 23, 12, 23)], 16, "union"),
+          (12, 23, 12, 23)], 16, "keys"),
         # two opposite 24×24-tile blocks: 1,152 keys, past _MAX_KEYS
-        ([(0, 23, 0, 23), (40, 63, 40, 63)], 16, "ranges"),
+        ([(0, 23, 0, 23), (40, 63, 40, 63)], 16, "rects"),
         # level 2 addresses a 4×4 grid: Morton overflow
-        ([(0, 5, 0, 5)], 2, "dataset"),
+        ([(0, 5, 0, 5)], 2, "rects"),
     ],
     ids=["sparse", "dense", "above_cap", "overflow"],
 )
 def test_quadkey_predicate_form_follows_the_working_set(
     spark, sparse_corpus, boxes, level, form
 ):
-    """Over a quadkey column, a sparse set goes as its exact key set, a
-    dense one as its union range, a sparse one past the key cap as its
-    quadkey ranges, and a Morton overflow as the dataset clause alone."""
-    import re
-
-    from python_rasterstats_spark.operators.zonal import collect_dataset_meta
-
+    """Over a quadkey column a working set of ≤ _MAX_KEYS tiles goes as
+    its exact key set, dense or not; a larger one, and any set on a grid
+    that overflows the level, as its tile_col/tile_row rects."""
     meta = collect_dataset_meta(sparse_corpus["datasets"])
-    gd = zone_windows(_zone_geom_dict(_box_zones(spark, boxes)), meta)
-    pred = str(
-        tile_prune_filter(gd, meta, quadkey_col="quadkey", quadkey_level=level)
+    rects = _zone_tile_rects(
+        zone_windows(_zone_geom_dict(_box_zones(spark, boxes)), meta), meta
     )
-    ins = re.findall(r"quadkey IN \(([^)]*)\)", pred)
-    betweens = pred.count("BETWEEN")
+    pred = rects_prune_filter(rects, meta, ["quadkey"], quadkey_level=level)
+    want = set().union(*(_codes(*b) for b in boxes))
     if form == "keys":
-        keys = {int(k) for k in ins[0].split(",")}
-        assert len(ins) == 1 and betweens == 0
-        assert keys == _codes(0, 2, 0, 2) | _codes(61, 63, 61, 63)
-    elif form == "union":
-        assert not ins and betweens == 1
-    elif form == "ranges":
-        assert not ins and 1 < betweens <= 64
+        assert "BETWEEN" not in pred and _key_set(pred) == want
     else:
-        assert "quadkey" not in pred and "dataset" in pred
+        got = pred_rects(pred)
+        assert "quadkey" not in pred and 1 <= len(got) <= 64
+        cells = {
+            (c, r)
+            for tc0, tc1, tr0, tr1 in boxes
+            for c in range(tc0, tc1 + 1)
+            for r in range(tr0, tr1 + 1)
+        }
+        assert all(
+            any(x0 <= c <= x1 and y0 <= r <= y1 for x0, x1, y0, y1 in got)
+            for c, r in cells
+        )

@@ -1,9 +1,10 @@
 """Round-5 fixes (ADVICE r4 items 1-4 + VERDICT r4 'Next round' 3-5):
 
 - ADVICE #1 (medium, wrong results): Morton overflow in the quadkey
-  pruning must emit NO quadkey constraint (dataset clause only) — a
-  finite BETWEEN list over a level the storage exceeded silently drops
-  real tiles; quadkey_level is now threaded through the operators.
+  pruning must emit NO quadkey constraint (the tile_col/tile_row rects
+  stand in) — a finite key list over a level the storage exceeded
+  silently drops real tiles; quadkey_level is threaded through the
+  operators.
 - ADVICE #2: _coalesce_rects must survive negative window centers
   (boundless SMJ path) — clamp the Morton sort key.
 - ADVICE #3: write_quadkey_partitioned_tiles must escape dataset names
@@ -28,10 +29,11 @@ from python_rasterstats_spark import geom as G
 from python_rasterstats_spark.operators import zonal as Z
 from python_rasterstats_spark.operators.zonal import (
     _coalesce_rects,
+    _zone_tile_rects,
     auto_holistic_plan,
     collect_dataset_meta,
-    quadkey_prune_ranges,
-    tile_prune_filter,
+    rects_prune_filter,
+    storage_fence,
     zonal_stats_df,
     zone_windows,
 )
@@ -66,27 +68,31 @@ def _sorted(df):
 # --------------------------------------------------------------------------
 
 def test_quadkey_overflow_emits_none_sentinel(grid):
-    _, _, datasets, zones = grid
+    """Past the level's grid the key set is None: no quadkey constraint,
+    the rects stand in, and the fenced scan admits fewer tiles than the
+    table."""
+    _, tiles, datasets, zones = grid
     meta = collect_dataset_meta(datasets)
-    gd = zone_windows({
+    rects = _zone_tile_rects(zone_windows({
         (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
         for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
-    }, meta)
+    }, meta), meta)
+    qk_tiles = with_quadkey(tiles)
     # level 2 addresses a 4×4 grid; ours is 16×16 → overflow
-    assert quadkey_prune_ranges(gd, meta, level=2) == {"g": None}
-    pred = tile_prune_filter(gd, meta, quadkey_col="quadkey", quadkey_level=2)
-    s = str(pred)
-    assert "dataset" in s and "quadkey" not in s  # dataset clause only
-    # no overflow at the true level: real ranges appear
-    ranges = quadkey_prune_ranges(gd, meta, level=4)["g"]
-    assert ranges is not None and len(ranges) >= 1
+    s = rects_prune_filter(rects, meta, qk_tiles.columns, quadkey_level=2)
+    assert "tile_col BETWEEN" in s and "quadkey" not in s
+    fenced = storage_fence(qk_tiles, rects, meta, quadkey_level=2)
+    assert 0 < fenced.count() < tiles.count()
+    # no overflow at the true level: the key set appears
+    s = rects_prune_filter(rects, meta, qk_tiles.columns, quadkey_level=4)
+    assert "quadkey IN" in s and "BETWEEN" not in s
 
 
 def test_quadkey_overflow_end_to_end_results_unchanged(grid):
     """With a quadkey level too small for the grid, the scan must be
-    UNPRUNED for that dataset, never wrongly pruned (the pre-fix predicate
+    fenced by the rects, never wrongly pruned (the pre-fix predicate
     BETWEEN 0 AND 4^level-1 drops every tile whose stored code exceeds
-    it)."""
+    it): fewer tiles than the table, the rows of the unpruned run."""
     _, tiles, datasets, zones = grid
     qk_tiles = with_quadkey(tiles)  # stored codes up to 255 on this grid
     stats = ["count", "min", "max", "mean", "median"]
@@ -98,6 +104,11 @@ def test_quadkey_overflow_end_to_end_results_unchanged(grid):
         zones, qk_tiles, datasets, dataset="g", stats=stats,
         quadkey_level=2,
     ))
+    fenced = Z.front_half(
+        zones, qk_tiles, collect_dataset_meta(datasets), broadcast=True,
+        quadkey_level=2,
+    ).tiles
+    assert 0 < fenced.count() < 256
     got_level = _sorted(zonal_stats_df(
         zones, qk_tiles, datasets, dataset="g", stats=stats,
         quadkey_level=4,  # the grid's true level, threaded through

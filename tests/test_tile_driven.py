@@ -236,14 +236,15 @@ def test_boundless_input_one_row_per_tile(spark, raster, tmp_path, monkeypatch):
     pq.write_table(pa.Table.from_pandas(tiles.toPandas()), path,
                    row_group_size=1)
     scan = spark.read.parquet(path)
-    key_scans, real = [], type(scan).toArrow
-    monkeypatch.setattr(
-        type(scan), "toArrow", lambda df: key_scans.append(df) or real(df)
-    )
     # pixel cols -3..2, rows 1..4: tile cols -1..0 × tile rows 0..1
     zones = _zones_df(spark, [G.box(-3.0, 5.0, 3.0, 9.0)], ["td"])
     fh = front_half(zones, scan, meta, broadcast=True,
                     fill_missing=True, prune_tiles=False)
+    # every Arrow collect of the join (front_half collected the zones)
+    key_scans, real = [], type(scan).toArrow
+    monkeypatch.setattr(
+        type(scan), "toArrow", lambda df: key_scans.append(df) or real(df)
+    )
     kernel_in, _ = fh.join(fh.tiles)
     assert [df.columns for df in key_scans] == [["dataset", "tile_col", "tile_row"]]
     assert scan_output_rows(key_scans[0], column="tile_col") <= 2

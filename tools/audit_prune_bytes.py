@@ -1,34 +1,43 @@
-"""Bytes-must-read audit for the sparse-zone pruning regimes (BENCH.md
+"""Bytes-must-read audit for the sparse-zone pruning forms (BENCH.md
 "Sparse zones at 604 M px" table; VERDICT r4 'Next round #2').
 
 8 small scattered zones over the 2.3-GiB scaling corpus. For each
-predicate/storage regime, admit parquet row groups by their min-max stats
+predicate/storage pair, admit parquet row groups by their min-max stats
 (exactly what the reader's row-group filter does) and total the compressed
 bytes a reader MUST fetch — at 100 TB over object storage, the dominant
 cost:
 
 - r3 union bbox on the plain (row-major) corpus,
-- r4 per-zone rect disjunction on the plain corpus,
-- per-zone quadkey ranges on quadkey-sorted storage written by
-  sources.tables.write_quadkey_sorted_tiles — r5 sizes row groups to
-  ``row_group_bytes`` so the sort's locality is no longer
-  granularity-bound (r4 measured 36 MiB/group → 288 MiB must-read, 2.25×
-  the rect number; the layout's point is to be BELOW it),
-- the exact tile-key set on the same storage, the predicate a sparse
-  zone set gets (operators/zonal.tile_prune_filter): a group is
-  admitted when it holds a covered key — what the writer's quadkey
-  bloom filter admits, without its false positives (min-max stats alone
-  admit every group between the set's min and max).
+- the scan fence's rect form (operators/zonal.storage_fence: per-zone
+  tile_col/tile_row rects) on the plain corpus and on quadkey-sorted
+  storage written by sources.tables.write_quadkey_sorted_tiles — r5 sizes
+  row groups to ``row_group_bytes`` so the sort's locality is no longer
+  granularity-bound (r4 measured 36 MiB/group → 288 MiB must-read),
+- the fence's key set on the same sorted storage, the form a sparse zone
+  set gets: a group is admitted when it holds a covered key — what the
+  writer's quadkey bloom filter admits, without its false positives
+  (min-max stats alone admit every group between the set's min and max).
+
+``--replay N`` instead replays the fence's decision over N seeded draws of
+48 up to all of the corpus zones on the sf0.1 bench corpus, stored
+quadkey-sorted as the sparse_interactive workload stores it (1 MiB row
+groups): per draw, the form pushed (key set or rects) and the tile rows
+in the row groups min-max stats admit (key set: a group whose quadkey
+min..max holds one of its keys; rects: a group whose tile_col/tile_row
+box meets one of them), then the count of draws per form.
 
 Usage: python tools/audit_prune_bytes.py [--row-group-mib 1] [--files 64]
+       python tools/audit_prune_bytes.py --replay 250 [--seed 1]
 """
 
 from __future__ import annotations
 
 import argparse
+import bisect
 import glob
 import json
 import os
+import re
 import sys
 
 import numpy as np
@@ -37,7 +46,6 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from python_rasterstats_spark import geom as G  # noqa: E402
-from python_rasterstats_spark import kernel as K  # noqa: E402
 
 MIB = 1 << 20
 
@@ -117,12 +125,88 @@ def rect_admit(rects):
     return fn
 
 
-def qk_admit(ranges):
-    def fn(rg, names):
-        qi = names.index("quadkey")
-        s = rg.column(qi).statistics
-        return any(lo <= s.max and s.min <= hi for lo, hi in ranges)
-    return fn
+def pred_keys(pred: str):
+    """The sorted keys of a fence predicate's key set (operators/zonal.
+    rects_prune_filter text), or None in its rect form."""
+    m = re.search(r"quadkey IN \(([^)]*)\)", pred)
+    return sorted(int(k) for k in m.group(1).split(",")) if m else None
+
+
+def pred_rects(pred: str) -> list:
+    """The (tc0, tc1, tr0, tr1) rects of a fence predicate's rect form."""
+    return [tuple(map(int, r)) for r in re.findall(
+        r"tile_col BETWEEN (\d+) AND (\d+) AND tile_row BETWEEN (\d+) AND (\d+)",
+        pred,
+    )]
+
+
+def fence_rowgroup_rows(path_or_dir, pred: str) -> tuple[int, int]:
+    """(tile rows, total rows) in the row groups whose min-max stats admit
+    the fence predicate ``pred`` of one dataset: a group whose quadkey
+    min..max holds one of the key set's keys, or whose tile_col/tile_row
+    box meets one of the rects."""
+    keys, admit = pred_keys(pred), rect_admit(pred_rects(pred))
+    adm = tot = 0
+    for rg, names in rowgroups(path_or_dir):
+        tot += rg.num_rows
+        if keys is not None:
+            s = rg.column(names.index("quadkey")).statistics
+            i = bisect.bisect_left(keys, s.min)
+            hit = i < len(keys) and keys[i] <= s.max
+        else:
+            hit = admit(rg, names)
+        adm += rg.num_rows if hit else 0
+    return adm, tot
+
+
+def replay(args) -> None:
+    """The fence's form and min-max admitted rows over seeded zone draws
+    (module docstring)."""
+    from python_rasterstats_spark.fixtures import ensure_bench_corpus
+    from python_rasterstats_spark.operators.zonal import (
+        _zone_tile_rects, dataset_meta, rects_prune_filter, zone_windows,
+    )
+
+    corpus_dir = args.corpus or ensure_bench_corpus("sf0.1")[0]
+    meta = dataset_meta(
+        pq.read_table(os.path.join(corpus_dir, "datasets.parquet")).to_pylist()
+    )
+    (ds,) = meta
+    qk_path = os.path.join(corpus_dir, "tiles_qk_sorted_1mib.parquet")
+    if not os.path.isdir(qk_path):
+        from python_rasterstats_spark.session import get_spark
+        from python_rasterstats_spark.sources.tables import (
+            write_quadkey_sorted_tiles,
+        )
+
+        spark = get_spark()
+        spark.sparkContext.setLogLevel("ERROR")
+        write_quadkey_sorted_tiles(
+            spark.read.parquet(os.path.join(corpus_dir, "tiles.parquet")),
+            qk_path,
+        )
+        spark.stop()
+    columns = pq.read_schema(_paths(qk_path)[0]).names
+    z = pq.read_table(
+        os.path.join(corpus_dir, "zones.parquet"),
+        columns=["zone_id", "geometry_wkb"],
+    ).to_pydict()
+    windows = list(zone_windows(
+        {(zid, ds): w for zid, w in zip(z["zone_id"], z["geometry_wkb"])}, meta,
+    ).items())
+    rng = np.random.default_rng(args.seed)
+    forms: dict = {}
+    for d in range(args.replay):
+        n = int(rng.integers(48, len(windows) + 1))
+        pick = rng.choice(len(windows), n, replace=False)
+        rects = _zone_tile_rects(dict(windows[i] for i in pick), meta)
+        pred = rects_prune_filter(rects, meta, columns)
+        form = "keys" if "quadkey IN" in pred else "rects"
+        adm, tot = fence_rowgroup_rows(qk_path, pred)
+        forms[form] = forms.get(form, 0) + 1
+        print(f"draw {d}: zones {n} form {form} admitted rows {adm}/{tot}")
+    print(json.dumps({"corpus": corpus_dir, "draws": args.replay,
+                      "seed": args.seed, "forms": forms}))
 
 
 def main():
@@ -130,12 +214,16 @@ def main():
     ap.add_argument("--row-group-mib", type=float, default=1.0)
     ap.add_argument("--files", type=int, default=64)
     ap.add_argument("--corpus", default=None)
+    ap.add_argument("--replay", type=int, default=0)
+    ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
+    if args.replay:
+        return replay(args)
 
     from python_rasterstats_spark.fixtures import ensure_bench_corpus
     from python_rasterstats_spark.operators.zonal import (
-        _quadkey_set, _zone_tile_rects, collect_dataset_meta,
-        quadkey_prune_ranges, zone_windows,
+        _zone_tile_rects, collect_dataset_meta, rects_prune_filter,
+        zone_windows,
     )
     from python_rasterstats_spark.session import get_spark
     from python_rasterstats_spark.sources.tables import (
@@ -161,28 +249,20 @@ def main():
         spark.read.parquet(tiles_path), qk_path, files=args.files,
         row_group_bytes=int(args.row_group_mib * MIB),
     )
-    ranges = quadkey_prune_ranges(gd, meta)[ds]
-    keys = _quadkey_set(rects, 1 << 30)
-    if ranges is None:  # Morton-overflow sentinel: no quadkey constraint
-        print(f"{ds}: grid overflows the quadkey level — unpruned scan")
-        ranges = [(0, (1 << 63) - 1)]  # admit-all, matching the real scan
-        keys = None
+    keys = pred_keys(rects_prune_filter({ds: rects}, meta, ["quadkey"]))
+    pushed = pred_rects(rects_prune_filter({ds: rects}, meta))
+    mib = f"{args.row_group_mib:g}mib"
     rows = {
         "union_bbox_plain": admit_bytes(tiles_path, rect_admit([union])),
-        "perzone_rects_plain": admit_bytes(tiles_path, rect_admit(rects)),
-        f"quadkey_sorted_{args.row_group_mib:g}mib": admit_bytes(
-            qk_path, qk_admit(ranges)
-        ),
-        f"quadkey_keys_sorted_{args.row_group_mib:g}mib": (
-            admit_bytes(qk_path, qk_admit(ranges)) if keys is None
-            else key_admit_bytes(qk_path, keys)
-        ),
+        "perzone_rects_plain": admit_bytes(tiles_path, rect_admit(pushed)),
+        f"perzone_rects_sorted_{mib}": admit_bytes(qk_path, rect_admit(pushed)),
     }
+    if keys is not None:  # the form the fence pushes over the sorted table
+        rows[f"quadkey_keys_sorted_{mib}"] = key_admit_bytes(qk_path, keys)
     out = {
         "corpus": corpus_dir,
         "zones": len(gd),
-        "rects": len(rects),
-        "qk_ranges": len(ranges),
+        "rects": len(pushed),
         "qk_keys": None if keys is None else len(keys),
         "rows": {
             k: {"admitted": a, "groups": t, "mib": round(b / MIB, 1)}

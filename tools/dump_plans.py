@@ -98,6 +98,12 @@ def main():
             polys, tiles, datasets, value_dataset="slope",
             class_dataset="slope_classes", broadcast_zones=False,
         ),
+        "zonal_crosstab (SMJ regime) over quad-prefix partitioned tiles":
+            zonal_crosstab_df(
+                polys, spark.read.parquet(part_path), datasets,
+                value_dataset="slope", class_dataset="slope_classes",
+                broadcast_zones=False,
+            ),
     }
     # the SMJ regime groups its cover cells per tile key (an Exchange on
     # the tile key) before joining them to the tiles, so the broadcast
@@ -237,11 +243,9 @@ def _sparse_quadkey_section(spark):
     import numpy as np
 
     from python_rasterstats_spark.operators.zonal import (
-        _quadkey_set,
         _zone_tile_rects,
         collect_dataset_meta,
-        quadkey_prune_ranges,
-        tile_prune_filter,
+        rects_prune_filter,
         zonal_stats_df,
         zone_windows,
     )
@@ -250,7 +254,9 @@ def _sparse_quadkey_section(spark):
         raster_to_tables,
         write_quadkey_sorted_tiles,
     )
-    from tools.audit_prune_bytes import admit_bytes, key_admit_bytes, qk_admit
+    from tools.audit_prune_bytes import (
+        admit_bytes, key_admit_bytes, pred_keys, pred_rects, rect_admit,
+    )
 
     rng = np.random.default_rng(11)
     arr = rng.uniform(0, 100, size=(1024, 1024)).astype(np.float32)
@@ -273,19 +279,14 @@ def _sparse_quadkey_section(spark):
         (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
         for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
     }
-    windows = zone_windows(gd, meta)
-    ranges = quadkey_prune_ranges(windows, meta)["sparse"]
-    pred = str(tile_prune_filter(windows, meta, quadkey_col="quadkey"))
-    keys = re.search(r"quadkey IN \(([^)]*)\)", pred)
-    nkeys = len(keys.group(1).split(",")) if keys else 0
-    form = (
-        f"`dataset = 'sparse' AND quadkey IN (<{nkeys} keys>)`"
-        if keys else f"`{pred[:120]}`"
+    rects = _zone_tile_rects(zone_windows(gd, meta), meta)
+    keys = pred_keys(rects_prune_filter(rects, meta, ["quadkey"])) or []
+    nkeys = len(keys)
+    form = f"`dataset = 'sparse' AND quadkey IN (<{nkeys} keys>)`"
+    rg_rects, groups, _ = admit_bytes(
+        qk_path, rect_admit(pred_rects(rects_prune_filter(rects, meta)))
     )
-    rg_quad, groups, _ = admit_bytes(qk_path, qk_admit(ranges))
-    rg_key, _, _ = key_admit_bytes(
-        qk_path, _quadkey_set(_zone_tile_rects(windows, meta)["sparse"], 4096)
-    )
+    rg_key, _, _ = key_admit_bytes(qk_path, keys)
     df = zonal_stats_df(
         zones, spark.read.parquet(qk_path), datasets, dataset="sparse"
     )
@@ -330,9 +331,9 @@ def _sparse_quadkey_section(spark):
         ),
         "(none)",
     )
-    pf = re.search(r"qk_prefix IN \(([^)]*)\)", str(tile_prune_filter(
-        windows, meta, quadkey_col="quadkey", prefix_col="qk_prefix",
-    )))
+    pf = re.search(r"qk_prefix IN \(([^)]*)\)", rects_prune_filter(
+        rects, meta, ["quadkey", "qk_prefix"],
+    ))
     prefixes = pf.group(1).split(",")
     ndirs = len(
         [d for d in os.listdir(part_path) if d.startswith("qk_prefix=")]
@@ -350,8 +351,9 @@ def _sparse_quadkey_section(spark):
         "groups are skipped by the bloom filter, per key:",
         "",
         f"- predicate: {form}",
-        f"- row groups admitted: union bbox {groups}/{groups}; the ≤64",
-        f"  quadkey ranges, by min-max: {rg_quad}/{groups}; holding a",
+        f"- row groups admitted: union bbox {groups}/{groups}; the fence's",
+        f"  rect form (a plain table's, or a set past 1,024 keys), by",
+        f"  tile_col/tile_row min-max: {rg_rects}/{groups}; holding a",
         f"  covered key (the key set, by bloom filter): {rg_key}/{groups}",
         f"- executed scan output rows: {scan_rows} of {total} tiles",
         f"- pushed filters (reach the parquet reader): {pushed}",

@@ -1002,7 +1002,7 @@ def q_tile_quadkey(spark, sf_dir):
     from python_rasterstats_spark.sources.tables import with_quadkey
 
     tiles, _, _ = _fixture_corpus(spark)
-    out = with_quadkey(tiles, level=16)
+    out = with_quadkey(tiles)
     return out.select(
         "dataset", "tile_col", "tile_row", "quadkey",
         F.shiftright("quadkey", 2).alias("parent_qk"),
@@ -1024,11 +1024,12 @@ def q_ann_ivf(spark, sf_dir):
 
 
 def q_zonal_qk_prune(spark, sf_dir):
-    """Quadkey-range scan pruning gate (r4): the tile table carries a
-    quadkey column (sources/tables.with_quadkey — the quadkey-sorted
-    storage layout), so zonal_stats_df's scan fence pushes a sparse zone
-    set's exact quadkey set to the parquet scan instead of bbox
-    rectangles; a larger set keeps the per-zone rects
+    """Quadkey scan pruning gate (r4): the tile table carries a quadkey
+    column (sources/tables.with_quadkey: the Morton code of every bit of
+    the tile indices — the key of the quadkey-sorted storage layout), so
+    zonal_stats_df's scan fence pushes a sparse zone set's exact quadkey
+    set to the parquet scan instead of bbox rectangles, on a grid of any
+    width; a larger set keeps the per-zone rects
     (operators/zonal.storage_fence).
     Pruning is a strict superset
     filter, so the answer equals zonal_default — shared oracle."""

@@ -444,30 +444,36 @@ def boxify_points(geom: dict, aff) -> dict:
 # ---------------------------------------------------------------------------
 
 
+# (shift, mask) steps ``v = (v | v << shift) & mask`` spreading the 32
+# bits of v to the even bits of a 64-bit word; sources/tables.morton_sql
+# writes the same steps as SQL
+SPREAD_STEPS = (
+    (16, 0x0000FFFF0000FFFF),
+    (8, 0x00FF00FF00FF00FF),
+    (4, 0x0F0F0F0F0F0F0F0F),
+    (2, 0x3333333333333333),
+    (1, 0x5555555555555555),
+)
+
+
 def _part1by1(v: int) -> int:
     v &= 0xFFFFFFFF
-    v = (v | (v << 16)) & 0x0000FFFF0000FFFF
-    v = (v | (v << 8)) & 0x00FF00FF00FF00FF
-    v = (v | (v << 4)) & 0x0F0F0F0F0F0F0F0F
-    v = (v | (v << 2)) & 0x3333333333333333
-    v = (v | (v << 1)) & 0x5555555555555555
+    for shift, mask in SPREAD_STEPS:
+        v = (v | (v << shift)) & mask
     return v
 
 
-def quadkey(tile_col: int, tile_row: int, level: int = 32) -> int:
-    """Morton-interleaved quadkey of a tile cell at the given level.
+def quadkey(tile_col: int, tile_row: int) -> int:
+    """Morton-interleaved quadkey of a tile cell, over all 32 bits of
+    each coordinate.
 
     Bit i-pair encodes the quadrant at depth i (row bit high). Property:
-    ``quadkey(c, r, L) >> 2 == quadkey(c // 2, r // 2, L - 1)`` — parents
-    are prefixes, like quadkey strings / H3 cell truncation.
+    ``quadkey(c, r) >> 2 == quadkey(c // 2, r // 2)`` — parents are
+    prefixes, like quadkey strings / H3 cell truncation.
     """
     if tile_col < 0 or tile_row < 0:
         raise ValueError("quadkey requires non-negative cell coords")
     return _part1by1(tile_col) | (_part1by1(tile_row) << 1)
-
-
-def quadkey_parent(qk: int, levels: int = 1) -> int:
-    return qk >> (2 * levels)
 
 
 # ---------------------------------------------------------------------------

@@ -68,7 +68,6 @@ def zonal_crosstab_df(
     broadcast_zones: bool = True,
     meta: dict | None = None,
     hybrid_wkb_bytes: int | None = 16 << 20,
-    quadkey_level: int = 16,
 ) -> DataFrame:
     """Per-(zone, class) statistics of ``value_dataset`` where
     ``class_dataset`` holds the class. Pixels are valid when covered by the
@@ -92,8 +91,8 @@ def zonal_crosstab_df(
     # the value dataset's: the fence keeps the same tiles of both
     fh = front_half(
         zones.withColumn("dataset", F.lit(value_dataset)), tiles, meta,
-        broadcast=broadcast_zones, quadkey_level=quadkey_level,
-        hybrid_wkb_bytes=hybrid_wkb_bytes, peers=(class_dataset,),
+        broadcast=broadcast_zones, hybrid_wkb_bytes=hybrid_wkb_bytes,
+        peers=(class_dataset,),
     )
     keys = ["tile_col", "tile_row"]
     tv = fh.tiles.filter(F.col("dataset") == value_dataset).select(

@@ -90,7 +90,6 @@ def point_query_df(
     band: int = 1,
     broadcast_vertices: bool = True,
     prune_tiles: bool = True,
-    quadkey_level: int = 16,
 ) -> DataFrame:
     """Raster values at each vertex of each zone geometry (J3 kNN join:
     k=1 nearest / k=4 bilinear grid neighbors).
@@ -121,7 +120,6 @@ def point_query_df(
     fh = front_half(
         zones, tiles, meta, broadcast=broadcast_vertices, pad_tiles=1,
         prune_tiles=prune_tiles and not broadcast_vertices,
-        quadkey_level=quadkey_level,
     )
     if broadcast_vertices:
         wins, vwins = _driver_windows(
@@ -131,8 +129,7 @@ def point_query_df(
         pending = isinstance(wins, str)
         if not pending:
             if prune_tiles:  # fenced to the vertex windows' own tiles
-                scan = storage_fence(scan, _zone_tile_rects(vwins, meta),
-                                     meta, quadkey_level=quadkey_level)
+                scan = storage_fence(scan, _zone_tile_rects(vwins, meta), meta)
             # exact-key semi join (broadcast, JVM-side): vertex windows
             # touch few tiles, so without it every fenced-scan tile's
             # payload would cross Arrow just to be discarded by the dict

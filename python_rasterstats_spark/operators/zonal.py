@@ -77,15 +77,16 @@ Scale properties:
   pre-merge re-spreads the merge of hot zones.
 - holistic stats are exact at parity scale: merged (value, count) pairs
   reproduce np.percentile's linear interpolation and np.unique-order
-  tiebreaks (reference main.py:270-292, utils.py:117-122). Past
-  ``auto_px_per_zone`` bbox pixels per zone the default
-  ``holistic_mode='auto'`` switches plans with no knob: on continuous
-  float rasters (exact domain degenerates to one pair per pixel) a
-  deterministic uniform-rank quantile summary bounds the shuffle
-  (kernel.sketch_weighted — count/min/max stay exact, quantile rank error
-  ≤ n/(8×sketch_px)); when the exact domain is required, a salted
-  two-stage exact merge spreads the hot zone instead. ``'exact'``/
-  ``'sketch'`` force either plan.
+  tiebreaks (reference main.py:270-292, utils.py:117-122). Past 8 Mi
+  bbox pixels per zone the default ``holistic_mode='auto'`` switches
+  plans with no knob (holistic_plan): on continuous float rasters
+  (exact domain degenerates to one pair per pixel), quantile-only stats
+  take a deterministic uniform-rank quantile summary that bounds the
+  shuffle (kernel.sketch_weighted — count/min/max stay exact, quantile
+  rank error ≤ n/(8×sketch_px)), and stats needing the exact domain keep
+  the plain exact merge (a pre-merge has no duplicates to collapse);
+  on integer rasters a salted two-stage exact merge spreads the hot
+  zone. ``'exact'``/``'sketch'`` force either plan.
 """
 
 from __future__ import annotations
@@ -151,15 +152,16 @@ def local_frame(spark, pdf: pd.DataFrame, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition a narrow table so the following stage parallelizes —
     zone tables and small document corpora often arrive as one parquet
-    file → one task. SKIPPED when the input already has ≥ target
-    partitions (r5 verdict #6: at 10⁹ zones the unconditional round-robin
-    was a gratuitous full shuffle of an already-spread table). The
+    file → one task. SKIPPED when the input already has ≥ default
+    parallelism partitions (r5 verdict #6: at 10⁹ zones the unconditional
+    round-robin was a gratuitous full shuffle of an already-spread
+    table). The
     partition probe plans the RDD without executing it — tens of ms,
     cheap next to either outcome."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -370,23 +372,18 @@ def _prefix_cells(rects: list, shift: int) -> list:
     })
 
 
-def storage_fence(tiles: DataFrame, rects_by_ds: dict, meta: dict, *,
-                  quadkey_level: int = 16) -> DataFrame:
+def storage_fence(tiles: DataFrame, rects_by_ds: dict, meta: dict) -> DataFrame:
     """``tiles`` fenced to every tile of the per-dataset tile rects
     ``rects_by_ds`` — the engine's one scan fence, for the broadcast
     regime's zone windows (_zone_tile_rects), the SMJ regime's sizing
     rects (smj_sizing_summary), the boundless key collect and the point
     query's vertex windows: rects_prune_filter in the forms the table's
     own columns allow."""
-    pred = rects_prune_filter(
-        rects_by_ds, meta, tiles.columns, quadkey_level=quadkey_level
-    )
+    pred = rects_prune_filter(rects_by_ds, meta, tiles.columns)
     return tiles if pred is None else tiles.filter(pred)
 
 
-def rects_prune_filter(
-    rects_by_ds: dict, meta: dict, columns=(), *, quadkey_level: int = 16,
-) -> str | None:
+def rects_prune_filter(rects_by_ds: dict, meta: dict, columns=()) -> str | None:
     """Scan-level tile-pruning predicate (SQL text) admitting every tile
     of the per-dataset tile rects ``rects_by_ds`` ``{dataset: [(tc0, tc1,
     tr0, tr1), ...]}`` over a tile table with ``columns`` (storage_fence).
@@ -399,8 +396,8 @@ def rects_prune_filter(
     never read. Correct by superset: any tile that could join a cover
     cell lies inside one of the rects. One rule per dataset:
 
-    - **key set**: over a ``quadkey`` column whose dataset grid fits
-      ``quadkey_level``, a working set of ≤ _MAX_KEYS tiles goes as its
+    - **key set**: over a ``quadkey`` column (sources/tables.
+      with_quadkey), a working set of ≤ _MAX_KEYS tiles goes as its
       EXACT tile-key set, ``quadkey IN (...)``. Spark makes an IN list of
       more than 10 values an ``InSet`` whose generated code references
       its key set instead of inlining it, so a fresh zone set reuses the
@@ -411,8 +408,7 @@ def rects_prune_filter(
       bloom filter (sources/tables.write_quadkey_sorted_tiles writes
       one); the page index prunes by min and max only. A set of ≤10 keys
       stays an ``In`` with inlined literals and still compiles per query.
-    - **rects**: every other case — plain tables, larger working sets and
-      grids wider than 2^``quadkey_level`` tiles, whose stored codes wrap
+    - **rects**: every other case — plain tables and larger working sets
       — goes as a disjunction of PER-ZONE (tile_col BETWEEN, tile_row
       BETWEEN) rects, Morton-coalesced to _MAX_RECTS (_coalesce_rects),
       or as their one union rect when they cover > _DENSE_FRAC of it.
@@ -426,8 +422,8 @@ def rects_prune_filter(
     of its keys, or of its rects' prefix cells, which prunes whole
     DIRECTORIES at listing time (PartitionFilters) before any file is
     opened; the shift is re-derived from the SAME dataset grid dims the
-    writer used. A grid that overflows ``quadkey_level`` gets none: its
-    stored codes wrap, and so do their prefixes.
+    writer used. Both forms hold on a grid of any width: the stored code
+    takes every bit of the tile indices.
 
     The reference analog is the per-feature windowed read
     (io.py:292-362) done at storage level."""
@@ -439,12 +435,8 @@ def rects_prune_filter(
     parts = []
     for ds, rects in rects_by_ds.items():
         m = meta.get(ds)
-        fits = m is not None and max(
-            math.ceil(m["width"] / m["tile_w"]),
-            math.ceil(m["height"] / m["tile_h"]),
-        ) <= 1 << quadkey_level
         keys = None
-        if fits and "quadkey" in columns:
+        if m is not None and "quadkey" in columns:
             keys = _quadkey_set(_grid_clip(rects, m), _MAX_KEYS) or None
         if keys is not None:
             clause = f"quadkey IN ({', '.join(map(str, keys))})"
@@ -469,7 +461,7 @@ def rects_prune_filter(
                 f"AND tile_row BETWEEN {tr0} AND {tr1})"
                 for tc0, tc1, tr0, tr1 in rects
             ) + ")"
-        if fits and ds in shifts:
+        if ds in shifts:
             sh = shifts[ds]
             prefixes = (
                 sorted({k >> sh for k in keys}) if keys is not None
@@ -643,43 +635,12 @@ def zone_cell_counts(
 _LAST_SIZING_ACC = None
 
 
-def auto_holistic_plan(
-    est_px: int,
-    *,
-    want_exact_domain: bool,
-    continuous: bool,
-    threshold_px: int,
-) -> str:
-    """The driver-side heuristic behind ``holistic_mode='auto'`` (the
-    default): returns 'exact', 'sketch' or 'salt'.
+# largest per-zone bbox pixel estimate the 'auto' holistic plan merges
+# exactly; every parity-scale corpus stays below it
+_BIG_ZONE_PX = 8 << 20
 
-    - est_px ≤ threshold: 'exact' — every parity-scale corpus lands here
-      (bit-equal to the reference; kernel merge cost is trivial).
-    - above threshold, quantiles-only on a CONTINUOUS (float) raster:
-      'sketch' — the exact (value,count) merge would move ~1 pair per
-      pixel for a continent zone (no duplicates to collapse); the bounded
-      quantile summary is the only plan whose state doesn't grow with px.
-    - above threshold with the exact domain required on a CONTINUOUS
-      raster: 'exact' — a salted pre-merge cannot collapse a domain with
-      no duplicates, so it only re-serializes the full value multiset
-      through a second pandas round while the final task still holds the
-      same multiset (measured 4–5× slower on the 604 M-px corpus:
-      247 s salted vs 51 s exact, identical results).
-    - above threshold on an INTEGER (bounded-domain) raster needing the
-      exact domain: 'salt' — cross-block duplicates collapse in the
-      pre-merge, so the final merge sees ≤ salt × |domain| rows instead
-      of one row per distinct (block, value).
-    """
-    if est_px <= threshold_px:
-        return "exact"
-    if continuous and not want_exact_domain:
-        return "sketch"
-    if continuous:
-        return "exact"
-    return "salt"
-
-
-_DEFAULT_SALT = 16
+# pre-merge groups per zone of the salted and sketch plans (holistic_plan)
+_SALT = 16
 
 
 def holistic_plan(
@@ -689,29 +650,48 @@ def holistic_plan(
     want_exact_domain: bool,
     est_px: int,
     continuous: bool,
-    threshold_px: int,
-    salt: int | None,
     sketch_px: int,
 ):
-    """The holistic merge plan, resolved in ONE step: ``(kernel sketch_px
-    or None, salt, recompress_px)`` for ``holistic_mode`` 'exact',
-    'sketch', or 'auto' (auto_holistic_plan on the per-zone size
-    estimate). The sketch plan always pre-merges: each (zone, salt) group
-    is re-sketched to 8×sketch_px points, so the final merge sees ≤
-    salt×8×sketch_px points per zone whatever the corpus size. The salt
-    plan spreads each hot zone over ≤ min(``salt``, kernel tasks)
-    pre-merge groups (the salt is the kernel's partition id mod ``salt``)."""
-    plan = holistic_mode
-    if want_holistic and plan == "auto":
-        plan = auto_holistic_plan(
-            est_px, want_exact_domain=want_exact_domain,
-            continuous=continuous, threshold_px=threshold_px,
-        )
-    if want_holistic and plan == "sketch":
-        return sketch_px, salt or _DEFAULT_SALT, sketch_px * 8
-    if want_holistic and plan == "salt" and salt is None:
-        salt = _DEFAULT_SALT
-    return None, salt, None
+    """The holistic merge plan, decided in ONE place: ``(kernel sketch_px
+    or None, salt or None, recompress_px or None)``. ``holistic_mode``
+    'exact' and 'sketch' force their plan; 'auto' (the default) picks
+    one of three from the largest per-zone bbox pixel estimate
+    ``est_px``:
+
+    - ``est_px`` ≤ _BIG_ZONE_PX: the plain exact merge — every parity-
+      scale corpus lands here (bit-equal to the reference; kernel merge
+      cost is trivial).
+    - above it on a CONTINUOUS (float) raster: the quantile sketch when
+      only quantiles are wanted — the exact (value, count) merge would
+      move ~1 pair per pixel for a continent zone (no duplicates to
+      collapse), and the bounded summary is the only plan whose state
+      does not grow with px. When the exact domain is required, the
+      plain exact merge: a salted pre-merge cannot collapse a domain
+      with no duplicates, so it only re-serializes the full value
+      multiset through a second pandas round while the final task still
+      holds it (measured 4–5× slower on the 604 M-px corpus: 247 s
+      salted vs 51 s exact, identical results).
+    - above it on an INTEGER (bounded-domain) raster: the salted
+      two-stage exact merge — cross-block duplicates collapse in the
+      pre-merge, so the final merge sees ≤ _SALT × |domain| rows instead
+      of one row per distinct (block, value).
+
+    Both salted plans spread each hot zone over ≤ min(_SALT, kernel
+    tasks) pre-merge groups (the salt is the kernel's partition id mod
+    _SALT). The sketch plan re-sketches each (zone, salt) group to
+    8×sketch_px points, so the final merge sees ≤ _SALT×8×sketch_px
+    points per zone whatever the corpus size."""
+    plan = holistic_mode if want_holistic else "exact"
+    if plan == "auto":
+        if est_px <= _BIG_ZONE_PX:
+            plan = "exact"
+        elif continuous:
+            plan = "exact" if want_exact_domain else "sketch"
+        else:
+            plan = "salt"
+    if plan == "sketch":
+        return sketch_px, _SALT, sketch_px * 8
+    return None, _SALT if plan == "salt" else None, None
 
 
 def smj_sizing_summary(counts: DataFrame, meta: dict):
@@ -769,12 +749,15 @@ def smj_sizing_summary(counts: DataFrame, meta: dict):
     return by_ds, est_px, max_cost
 
 
+# most zones the hybrid-WKB selection broadcasts (hybrid_big_zone_geoms)
+_MAX_BIG_ZONES = 4096
+
+
 def hybrid_big_zone_geoms(
     zones: DataFrame,
     counts: DataFrame,
     *,
     threshold_bytes: int,
-    max_zones: int = 4096,
 ):
     """The hybrid-WKB selection for the SMJ regime (r3 verdict 'What's
     wrong #1'): from the sizing pass ``counts`` (zone_cell_counts), find
@@ -783,7 +766,7 @@ def hybrid_big_zone_geoms(
     MB-scale continent polygons covering 10⁴-10⁶ tiles each — and ship
     exactly those once per executor via a broadcast dict instead. Returns
     (broadcast_dict_or_None, key_set); deterministic (ordered by
-    duplication desc, then keys) and capped at ``max_zones`` rows /
+    duplication desc, then keys) and capped at _MAX_BIG_ZONES rows /
     driver memory, which bounds the collect however huge the zone set
     is — zones past the cap simply stay inline, which is correct, just
     heavier."""
@@ -791,7 +774,7 @@ def hybrid_big_zone_geoms(
     big = (
         counts.filter(cost > threshold_bytes)
         .orderBy(F.desc(cost), "zone_id", "dataset")
-        .limit(max_zones)
+        .limit(_MAX_BIG_ZONES)
         .collect()
     )
     if not big:
@@ -1267,7 +1250,6 @@ def front_half(
     max_cells_per_zone: int = 4_000_000,
     raise_beyond_extent: bool = False,
     prune_tiles: bool = True,
-    quadkey_level: int = 16,
     hybrid_wkb_bytes: int | None = None,
     pad_tiles: int = 0,
     peers: tuple = (),
@@ -1339,7 +1321,7 @@ def front_half(
                 in_grid = _zone_tile_rects(windows(), meta)
                 if in_grid:  # a cover key in the grid
                     stored = set(zip(*storage_fence(
-                        tiles, in_grid, meta, quadkey_level=quadkey_level,
+                        tiles, in_grid, meta,
                     ).select(*keys).toArrow().to_pydict().values()))
                 missing = [k for k in cover.value if k not in stored]
                 if missing:
@@ -1409,7 +1391,7 @@ def front_half(
             return summary()[1]
     fenced = tiles
     if prune_tiles:  # a new name: join's key collect fences ``tiles`` itself
-        fenced = storage_fence(tiles, rects, meta, quadkey_level=quadkey_level)
+        fenced = storage_fence(tiles, rects, meta)
     return FrontHalf(
         fenced, zone_geoms, windows, zone_rows, zone_datasets, big_keys, join,
         geoms, base, est_px,
@@ -1826,9 +1808,7 @@ def zonal_stats_df(
     zone_func=None,
     broadcast_zones: bool = True,
     max_cells_per_zone: int = 4_000_000,
-    holistic_salt: int | None = None,
     holistic_mode: str = "auto",
-    auto_px_per_zone: int = 8 << 20,
     sketch_px: int = 1024,
     meta: dict | None = None,
     band: int = 1,
@@ -1836,7 +1816,6 @@ def zonal_stats_df(
     add_stats: dict | None = None,
     prune_tiles: bool = True,
     hybrid_wkb_bytes: int | None = 16 << 20,
-    quadkey_level: int = 16,
 ) -> DataFrame:
     """Zonal statistics of the tile corpus aggregated to zone geometries.
 
@@ -1874,23 +1853,16 @@ def zonal_stats_df(
     each payload decoded once, each zone rasterized once per covering tile,
     output long format with a ``band`` column (one row per zone × band).
 
-    ``quadkey_level`` must match the level the tile corpus's quadkey
-    column was written with (sources/tables.with_quadkey default 16) —
-    a sparse working set's exact key set is computed in that Morton code
-    space. A grid too wide for the level is detected and that dataset's
-    scan is fenced by its tile_col/tile_row rects instead (never wrongly
-    pruned; storage_fence).
-
     ``holistic_mode`` (median/percentiles/majority/minority/unique/
     value_counts execution): ``'auto'`` (default) picks the plan from the
     per-zone size estimate the regime already has (the collected zone dim,
-    or the SMJ sizing pass) — zones up to ``auto_px_per_zone`` bbox pixels
-    run the EXACT merge (bit-equal to the reference; every parity corpus),
-    larger zones pick the deterministic quantile sketch when only
-    quantiles are wanted on a continuous float raster, else a salted
-    two-stage exact merge (see auto_holistic_plan). ``'exact'`` forces the
-    exact merge at any size, ``'sketch'`` forces the bounded summary
-    (quantiles only).
+    or the SMJ sizing pass), one of three (holistic_plan): zones up to
+    8 Mi bbox pixels run the EXACT merge (bit-equal to the reference;
+    every parity corpus). Larger zones on a continuous float raster take
+    the deterministic quantile sketch when only quantiles are wanted,
+    else the same exact merge; on an integer raster they take a salted
+    two-stage exact merge. ``'exact'`` forces the exact merge at any
+    size, ``'sketch'`` forces the bounded summary (quantiles only).
     """
     stats, run_count = K.check_stats(stats, categorical)
     want_holistic = run_count or K.needs_counts(stats)
@@ -1950,7 +1922,7 @@ def zonal_stats_df(
         zones, tiles, meta, broadcast=broadcast_zones,
         fill_missing=need_missing, max_cells_per_zone=max_cells_per_zone,
         raise_beyond_extent=not boundless, prune_tiles=prune_tiles,
-        quadkey_level=quadkey_level, hybrid_wkb_bytes=hybrid_wkb_bytes,
+        hybrid_wkb_bytes=hybrid_wkb_bytes,
     )
     # float rasters: no duplicate values for a merge to collapse
     continuous = auto_holistic and all(
@@ -1962,8 +1934,7 @@ def zonal_stats_df(
         holistic_mode, want_holistic=want_holistic,
         want_exact_domain=want_exact_domain,
         est_px=fh.est_px() if auto_holistic else 0,
-        continuous=continuous, threshold_px=auto_px_per_zone,
-        salt=holistic_salt, sketch_px=sketch_px,
+        continuous=continuous, sketch_px=sketch_px,
     )
     kernel_in, cover = fh.join(fh.tiles)
 

@@ -111,38 +111,31 @@ def raster_to_tables(
     return tiles, datasets
 
 
-def with_quadkey(
-    tiles: DataFrame,
-    *,
-    level: int = 16,
-    col: str = "tile_col",
-    row: str = "tile_row",
-    out: str = "quadkey",
-) -> DataFrame:
-    """Morton-interleaved quadkey column for the tile grid (JVM bit
-    expressions; bit-identical to kernel.quadkey). Parents are bit
-    prefixes (``qk >> 2``), so quadkey ranges align with spatial locality
-    — the Iceberg partition/sort-transform candidate for the tile key at
-    10^12 rows (a zone's cover cells become O(few) contiguous quadkey
-    ranges instead of a scatter of (col, row) points). The default
-    level 16 addresses grids up to 65,536 tiles per dim (≈4.3B tiles per
-    dataset); a wider grid wraps the code (high bits dropped) — sorting
-    stays deterministic and the scan fence detects the overflow and
-    fences that dataset by its tile_col/tile_row rects instead of a key
-    set (operators/zonal.storage_fence), so results are never wrong,
-    only less tightly pruned. Raise ``level`` (≤31) for wider grids."""
-    return tiles.withColumn(out, F.expr(morton_sql(col, row, level)))
+def with_quadkey(tiles: DataFrame) -> DataFrame:
+    """The tile table with its ``quadkey`` column: the Morton interleave
+    of ``tile_col`` and ``tile_row`` (JVM bit expressions; bit-identical
+    to kernel.quadkey). Parents are bit prefixes (``qk >> 2``), so
+    quadkey ranges align with spatial locality — the Iceberg partition/
+    sort-transform candidate for the tile key at 10^12 rows (a zone's
+    cover cells become O(few) contiguous quadkey ranges instead of a
+    scatter of (col, row) points). The code takes every bit of the two
+    int columns, so it never wraps, whatever the grid's width."""
+    return tiles.withColumn("quadkey", F.expr(morton_sql("tile_col", "tile_row")))
 
 
-def morton_sql(col: str, row: str, level: int = 16) -> str:
-    """SQL text of the level-``level`` Morton interleave of two integer
-    expressions (col bits even, row bits odd; higher bits dropped) — the
-    JVM twin of kernel.quadkey, parsed in one driver round trip."""
-    return " | ".join(
-        f"shiftleft(CAST(shiftright({e}, {k}) & 1 AS BIGINT), {2 * k + b})"
-        for k in range(level)
-        for b, e in ((0, col), (1, row))
-    )
+def morton_sql(col: str, row: str) -> str:
+    """SQL text of the Morton interleave of two non-negative int
+    expressions (col bits even, row bits odd) into a non-negative BIGINT
+    — the JVM twin of kernel.quadkey (its mask steps, K.SPREAD_STEPS),
+    parsed in one driver round trip."""
+
+    def spread(e):
+        v = f"CAST({e} AS BIGINT)"
+        for shift, mask in K.SPREAD_STEPS:
+            v = f"(({v} | shiftleft({v}, {shift})) & {mask})"
+        return v
+
+    return f"({spread(col)} | shiftleft({spread(row)}, 1))"
 
 
 def _tile_payload_bytes(tiles: DataFrame) -> int:
@@ -187,7 +180,6 @@ def write_quadkey_sorted_tiles(
     tiles: DataFrame,
     path: str,
     *,
-    level: int = 16,
     files: int | None = None,
     row_group_bytes: int = 1 << 20,
 ) -> None:
@@ -215,28 +207,36 @@ def write_quadkey_sorted_tiles(
     the set. Spark writes ``quadkey`` PLAIN (its keys are distinct, so
     parquet drops the dictionary), so no dictionary can play that role.
     The reference analog is the per-feature windowed read
-    (io.py:292-362): read the window, not the strip it lives in."""
+    (io.py:292-362): read the window, not the strip it lives in.
+
+    The quadkey takes every bit of the tile indices (with_quadkey), so a
+    grid of any width gets its exact key set. A table written with the
+    former 16-level code holds the same codes on grids of ≤ 65,536
+    tiles per side and wrapped ones on wider grids: rewrite those."""
     n = files or tiles.sparkSession.sparkContext.defaultParallelism
     _quadkey_layout_writer(
-        with_quadkey(tiles, level=level)
+        with_quadkey(tiles)
         .repartitionByRange(n, "dataset", "quadkey")
         .sortWithinPartitions("dataset", "quadkey"),
         tiles, row_group_bytes,
     ).parquet(path)
 
 
-def quad_prefix_shift(ntc: int, ntr: int, target_partitions: int = 64) -> int:
+# quad-prefix bits of the partitioned layout: ≤ 2^6 = 64 directories per
+# dataset whatever the grid size
+_PREFIX_BITS = 6
+
+
+def quad_prefix_shift(ntc: int, ntr: int) -> int:
     """Bit shift turning a quadkey into its quad-prefix partition value
     for a dataset whose grid is ``ntc × ntr`` tiles: the populated code
     space spans ``2*levels`` bits (levels = ceil(log2(max dim))), and the
-    top ~log2(target_partitions) bits become the prefix — ≤64 directories
-    whatever the grid size. Writer and pruning predicate MUST derive the
-    shift from the same datasets metadata (this function) so partition
-    values always agree."""
+    top _PREFIX_BITS bits become the prefix. Writer and pruning predicate
+    MUST derive the shift from the same datasets metadata (this
+    function) so partition values always agree."""
     dim = max(ntc, ntr, 1)
     levels = max(1, math.ceil(math.log2(dim)))
-    bits = max(1, round(math.log2(max(target_partitions, 2))))
-    return max(0, 2 * levels - bits)
+    return max(0, 2 * levels - _PREFIX_BITS)
 
 
 def dataset_prefix_shifts(meta: dict) -> dict:
@@ -254,7 +254,6 @@ def write_quadkey_partitioned_tiles(
     datasets: DataFrame,
     path: str,
     *,
-    level: int = 16,
     row_group_bytes: int = 1 << 20,
 ) -> None:
     """Persist the tile table PARTITIONED by the quad-prefix of its
@@ -268,12 +267,13 @@ def write_quadkey_partitioned_tiles(
     filter, written as by write_quadkey_sorted_tiles), and the residual
     row filter. The scan fence adds the prefix IN-list — of its key set,
     or of its rects' prefix cells — whenever the table has a qk_prefix
-    column, in either regime (operators/zonal.storage_fence); a grid that
-    overflows ``level`` gets none, as its codes and prefixes wrap."""
+    column, in either regime (operators/zonal.storage_fence), on a grid
+    of any width (a table written with the former 16-level code wraps
+    past 65,536 tiles per side: write_quadkey_sorted_tiles)."""
     from ..operators.zonal import _sql_str, collect_dataset_meta
 
     shifts = dataset_prefix_shifts(collect_dataset_meta(datasets))
-    qk = with_quadkey(tiles, level=level)
+    qk = with_quadkey(tiles)
     cases = " ".join(
         f"WHEN dataset = {_sql_str(ds)} THEN shiftright(quadkey, {sh})"
         for ds, sh in shifts.items()

@@ -27,3 +27,21 @@ def corpus(spark, fixture_dir):
     from python_rasterstats_spark.sources.tables import load_corpus
 
     return load_corpus(spark, fixture_dir)
+
+
+@pytest.fixture
+def pin_salt(monkeypatch):
+    """``pin_salt(n)`` pins zonal_stats_df's holistic plan to the exact
+    merge behind a salted pre-merge of ``n`` groups; ``pin_salt(None)``
+    gives the choice back to operators/zonal.holistic_plan."""
+    from python_rasterstats_spark.operators import zonal as Z
+
+    plan = Z.holistic_plan
+
+    def pin(n):
+        monkeypatch.setattr(
+            Z, "holistic_plan",
+            plan if n is None else lambda *a, **kw: (None, n, None),
+        )
+
+    return pin

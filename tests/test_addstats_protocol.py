@@ -55,18 +55,18 @@ def _expected(arr, zone):
     return float((seg ** 2).sum()), float((seg ** 2).mean())
 
 
-def test_protocol_matches_numpy_and_salted_merge(spark):
+def test_protocol_matches_numpy_and_salted_merge(spark, pin_salt):
     arr, tiles, datasets = _corpus(spark)
     z0, z1 = G.box(1.0, 1.0, 9.0, 15.0), G.box(6.0, 2.0, 14.0, 10.0)
     zones = _zones(spark, [z0, z1])
     for salt in (None, 4):
+        pin_salt(salt)
         out = {
             r["zone_id"]: r.asDict()
             for r in zonal_stats_df(
                 zones, tiles, datasets, dataset="d",
                 stats=["count", "mean"],
                 add_stats={"sumsq": SUMSQ, "meansq": MEANSQ},
-                holistic_salt=salt,
             ).collect()
         }
         ss0, ms0 = _expected(arr, z0)

@@ -426,9 +426,10 @@ def test_tile_fence_reaches_scan(spark, corpus):
 
 
 def test_with_quadkey_matches_kernel(spark):
-    """JVM Morton quadkey is bit-identical to kernel.quadkey, and parents
-    are bit prefixes (the locality property Iceberg partition transforms
-    would exploit)."""
+    """JVM Morton quadkey is bit-identical to kernel.quadkey over the full
+    int range of the tile columns (past 2^16 tiles per side too, where a
+    16-level code would wrap), and parents are bit prefixes (the locality
+    property Iceberg partition transforms would exploit)."""
     import random
 
     from python_rasterstats_spark import kernel as K
@@ -437,14 +438,19 @@ def test_with_quadkey_matches_kernel(spark):
     rng = random.Random(1)
     rows = [(rng.randrange(1 << 16), rng.randrange(1 << 16))
             for _ in range(200)]
+    rows += [(rng.randrange(1 << 16, 1 << 31), rng.randrange(1 << 31))
+             for _ in range(100)]
+    rows += [(rng.randrange(1 << 31), rng.randrange(1 << 16, 1 << 31))
+             for _ in range(100)]
+    rows += [((1 << 31) - 1, (1 << 31) - 1), (1 << 16, 0), (0, 1 << 16)]
     df = spark.createDataFrame(rows, "tile_col int, tile_row int")
-    got = with_quadkey(df, level=16).collect()
+    got = with_quadkey(df).collect()
+    assert len(got) == len(rows)
     for r in got:
-        want = K.quadkey(r["tile_col"], r["tile_row"], level=16)
-        assert r["quadkey"] == want
-        assert K.quadkey_parent(r["quadkey"]) == K.quadkey(
-            r["tile_col"] // 2, r["tile_row"] // 2, level=15
-        )
+        c, rw = r["tile_col"], r["tile_row"]
+        assert r["quadkey"] == K.quadkey(c, rw)
+        assert r["quadkey"] >> 2 == K.quadkey(c // 2, rw // 2)
+    assert max(r["quadkey"] for r in got) == (1 << 62) - 1
 
 
 def test_spark_submit_pyfiles_smoke(tmp_path):

@@ -532,7 +532,7 @@ def test_quadkey_hierarchy():
             qk = K.quadkey(tc, tr)
             assert qk not in seen
             seen.add(qk)
-            assert K.quadkey_parent(qk) == K.quadkey(tc // 2, tr // 2)
-            assert K.quadkey_parent(qk, 3) == K.quadkey(tc // 8, tr // 8)
+            assert qk >> 2 == K.quadkey(tc // 2, tr // 2)
+            assert qk >> 6 == K.quadkey(tc // 8, tr // 8)
     with pytest.raises(ValueError):
         K.quadkey(-1, 0)

@@ -377,7 +377,7 @@ def _same(a, b, stat, rel=1e-12):
         assert a == b, stat
 
 
-def test_merge_paths_agree_with_oracle(spark, small):
+def test_merge_paths_agree_with_oracle(spark, small, pin_salt):
     arr, geoms, tiles, datasets, zones = small
     outs = {}
     # two rows per Arrow batch: zone 0's partials (12 tiles) span several
@@ -388,10 +388,11 @@ def test_merge_paths_agree_with_oracle(spark, small):
     try:
         for broadcast_zones in (True, False):
             for salt in (None, 7):
+                pin_salt(salt)
                 df = zonal_stats_df(
                     zones, tiles, datasets, dataset="d", stats=HOLISTIC,
                     categorical=True, add_stats={"sumsq": SUMSQ},
-                    broadcast_zones=broadcast_zones, holistic_salt=salt,
+                    broadcast_zones=broadcast_zones,
                 )
                 assert df.columns == (
                     ["zone_id"] + HOLISTIC + ["value_counts", "sumsq"]
@@ -418,14 +419,17 @@ def test_merge_paths_agree_with_oracle(spark, small):
 
 
 @pytest.mark.parametrize("broadcast_zones", [True, False])
-def test_merges_read_a_sort_over_their_key_exchange(small, broadcast_zones):
+def test_merges_read_a_sort_over_their_key_exchange(
+    small, broadcast_zones, pin_salt
+):
     """Each merge stage is repartition + sortWithinPartitions + mapInPandas:
     without the Sort, a zone's rows would reach the fold in pieces and
     silently split into several output rows."""
     _, _, tiles, datasets, zones = small
+    pin_salt(7)
     df = zonal_stats_df(
         zones, tiles, datasets, dataset="d", stats=["count", "median"],
-        broadcast_zones=broadcast_zones, holistic_salt=7,
+        broadcast_zones=broadcast_zones,
     )
     df.collect()
     plan = physical_plan(df)

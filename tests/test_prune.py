@@ -13,12 +13,14 @@ everything". These tests pin the fence that replaced it:
   quad-prefix partitioned storage it prunes directories (PartitionFilters)
   in both regimes, for zonal, crosstab and point,
 - results are bit-identical with pruning on, off, and in both forms,
-- a grid wider than the quadkey level gets the rects, never a key set,
+- a grid wider than 65,536 tiles gets its exact key set, as a narrow one
+  does (the stored code takes every bit of the tile indices),
 - a fresh sparse zone set compiles no new class, and the executed scan
   skips row groups per key through the writer's quadkey bloom filter.
 """
 
 import os
+import re
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -38,6 +40,7 @@ from python_rasterstats_spark.operators.zonal import (
 )
 from python_rasterstats_spark.plans.explain import scan_output_rows
 from python_rasterstats_spark.sources.tables import (
+    dataset_prefix_shifts,
     features_to_zones,
     raster_to_tables,
     with_quadkey,
@@ -49,9 +52,6 @@ from tools.audit_prune_bytes import (
     pred_rects,
     rect_admit,
 )
-
-LEVEL = 6  # 64×64 tile grid
-
 
 def _codes(tc0, tc1, tr0, tr1):
     return {
@@ -66,8 +66,6 @@ def _key_set(pred: str) -> set:
 
 
 def _pred_prefixes(pred: str) -> list:
-    import re
-
     m = re.search(r"qk_prefix IN \(([^)]*)\)", pred)
     return [int(p) for p in m.group(1).split(",")] if m else []
 
@@ -102,7 +100,7 @@ def sparse_corpus(spark, tmp_path_factory):
     # quadkey-sorted single file with many row groups → row-group-level
     # min-max stats are the skipping granularity Spark's reader uses
     sorted_pdf = (
-        with_quadkey(tiles, level=LEVEL).orderBy("quadkey").toPandas()
+        with_quadkey(tiles).orderBy("quadkey").toPandas()
     )
     qk_path = os.path.join(root, "tiles_qk.parquet")
     import pyarrow as pa
@@ -358,8 +356,6 @@ def test_zonal_and_point_partitioned_prune_scans(
     directories (PartitionFilters on qk_prefix) and pushes the working
     set's exact quadkey set, as the broadcast regime does; rows equal
     those over the plain table."""
-    import re
-
     from python_rasterstats_spark.operators.point import point_query_df
 
     tiles, zones, datasets = corpus
@@ -424,52 +420,98 @@ def test_multi_dataset_grids_get_independent_prefix_shifts(spark, tmp_path):
     assert all(r[1] > 0 for r in want)
 
 
-def test_quadkey_overflow_grid_falls_back_to_no_constraint(
-    spark, sparse_corpus, sorted_tiles
-):
-    """A dataset grid wider than 2^level tiles overflows the Morton code
-    (high bits dropped → distant tiles SHARE codes, and codes written at
-    a HIGHER storage level exceed 4^level-1), so ANY finite key set could
-    silently exclude real tiles (ADVICE r4 #1). The fence puts no
-    quadkey constraint on it and pushes the tile_col/tile_row rects
-    instead: the scan admits fewer tiles than the table, and the rows
-    equal the unpruned run."""
-    import python_rasterstats_spark.geom as G
+# a dataset grid wider than 2^16 tiles, where a 16-level Morton code
+# would wrap (high bits dropped, distant tiles sharing codes)
+WIDE = 70_004
 
-    # 50k-tile-wide grid: overflows the level-6 code space (64 tiles)
-    # but fits level 16 (65,536)
-    m = {"huge": {
-        "affine": (1.0, 0.0, 0.0, 0.0, -1.0, 800_000.0),
-        "height": 800_000, "width": 800_000,
-        "tile_w": 16, "tile_h": 16, "nodata": None,
+
+def _wide_meta() -> dict:
+    return {"wide": {
+        "affine": (1.0, 0.0, 0.0, 0.0, -1.0, 64.0),
+        "height": 64, "width": WIDE * 16,
+        "tile_w": 16, "tile_h": 16, "nodata": -9999.0,
         "fmt": "npy", "band_count": 1, "dtype": "float32",
     }}
-    wkt = "POLYGON ((700000 100, 700100 100, 700100 200, 700000 200, 700000 100))"
-    geom = G.parse_feature(wkt)["geometry"]
-    rects = _zone_tile_rects(zone_windows({(0, "huge"): G.wkb_dumps(geom)}, m), m)
-    cols = ["quadkey", "qk_prefix"]
-    pred = rects_prune_filter(rects, m, cols, quadkey_level=LEVEL)
-    assert "quadkey" not in pred and pred_rects(pred) == rects["huge"]
-    # and the same zone at level 16 (fits) goes as its key set
-    assert _key_set(rects_prune_filter(rects, m, cols, quadkey_level=16))
 
-    # the 64×64-tile corpus stored quadkey-sorted at level 16, fenced at
-    # level 5 (a 32×32 grid): overflow; the rects skip row groups by
-    # their tile_col/tile_row stats
-    c = sparse_corpus
-    qk_tiles = spark.read.parquet(sorted_tiles)
-    stats = ["count", "min", "max", "mean"]
-    out = zonal_stats_df(
-        c["zones"], qk_tiles, c["datasets"], dataset="sparse", stats=stats,
-        quadkey_level=5,
+
+def test_wide_grid_goes_as_its_key_set(spark):
+    """A zone at tile_col ~70,000 of a grid that wide goes as its exact
+    key set, with the qk_prefix directories of those keys: the stored
+    code takes every bit of the tile indices, so no width needs the rect
+    fallback."""
+    m = _wide_meta()
+    box = (WIDE - 4, WIDE - 2, 1, 2)
+    rects = _zone_tile_rects(
+        zone_windows(_zone_geom_dict(_wide_boxes(spark, [box])), m), m
     )
-    got = _collect_sorted(out)
-    assert 18 <= scan_output_rows(out) < 4096
+    pred = rects_prune_filter(rects, m, ["quadkey", "qk_prefix"])
+    keys = _codes(*box)
+    assert "BETWEEN" not in pred and _key_set(pred) == keys
+    shift = dataset_prefix_shifts(m)["wide"]
+    assert _pred_prefixes(pred) == sorted({k >> shift for k in keys})
+
+
+def test_wide_grid_layouts_push_the_key_set(spark, tmp_path):
+    """Stored tiles at tile_col ≥ 65,536 of a grid that wide, plus their
+    16-level aliases (tile_col − 65,536, where a 16-level code would put
+    them), written by both quadkey layouts in 4-tile row groups: the
+    fence pushes the zones' exact key set (and their qk_prefix
+    directories on the partitioned table), the executed scan outputs no
+    more rows than the keys, and the rows equal the unpruned run."""
+    from python_rasterstats_spark.sources.tables import (
+        write_quadkey_partitioned_tiles, write_quadkey_sorted_tiles,
+    )
+
+    rng = np.random.default_rng(12)
+    arr = rng.uniform(0, 100, size=(64, 64)).astype(np.float32)
+    aff = (1.0, 0.0, 0.0, 0.0, -1.0, 64.0)
+    tiles, datasets = raster_to_tables(
+        spark, arr, aff, dataset="wide", nodata=-9999.0, tile=16
+    )
+    base = WIDE - 4  # 70,000: an aligned 4×4 block of stored tiles
+    alias = base - (1 << 16)
+    tiles = tiles.withColumn("tile_col", F.col("tile_col") + base).unionByName(
+        tiles.withColumn("tile_col", F.col("tile_col") + alias)
+    )
+    datasets = datasets.withColumn("width", F.lit(WIDE * 16))
+    meta = collect_dataset_meta(datasets)
+    assert meta == _wide_meta()
+    # 2×2 Morton blocks, one row group each: one at the far end, one on
+    # its 16-level alias
+    boxes = [(base, base + 1, 0, 1), (alias, alias + 1, 2, 3)]
+    zones = _wide_boxes(spark, boxes)
+    want_keys = _codes(*boxes[0]) | _codes(*boxes[1])
+    rects = _zone_tile_rects(zone_windows(_zone_geom_dict(zones), meta), meta)
+    stats = ["count", "min", "max", "mean"]
     want = _collect_sorted(zonal_stats_df(
-        c["zones"], qk_tiles, c["datasets"], dataset="sparse", stats=stats,
-        prune_tiles=False,
+        zones, tiles, datasets, dataset="wide", stats=stats, prune_tiles=False,
     ))
-    assert got == want and want[0][1] > 0
+    assert len(want) == 2 and all(r[1] == 28 * 28 for r in want)
+    writers = {
+        "sorted": lambda p: write_quadkey_sorted_tiles(
+            tiles, p, files=1, row_group_bytes=1),
+        "partitioned": lambda p: write_quadkey_partitioned_tiles(
+            tiles, datasets, p, row_group_bytes=1),
+    }
+    for name, write in writers.items():
+        path = str(tmp_path / name)
+        write(path)
+        table = spark.read.parquet(path)
+        assert table.count() == 32, name
+        pred = rects_prune_filter(rects, meta, table.columns)
+        assert "BETWEEN" not in pred and _key_set(pred) == want_keys, name
+        out = zonal_stats_df(
+            zones, table, datasets, dataset="wide", stats=stats,
+        )
+        assert _collect_sorted(out) == want, name
+        assert scan_output_rows(out) <= len(want_keys), name
+        assert _collect_sorted(zonal_stats_df(
+            zones, table, datasets, dataset="wide", stats=stats,
+            prune_tiles=False,
+        )) == want, name
+        (parts, data), = _scan_filters(out)
+        assert re.search(r"quadkey#\d+L (INSET|IN \()", data), (name, data)
+        assert ("qk_prefix" in parts) == (name == "partitioned"), (name, parts)
 
 
 def test_smj_regime_prunes_without_collecting_geoms(spark, sparse_corpus):
@@ -534,7 +576,7 @@ def test_sorted_writer_rowgroup_sizing_beats_rects(spark, sparse_corpus, tmp_pat
     )
     qk_path = os.path.join(tmp_path, "qk_sized")
     write_quadkey_sorted_tiles(
-        spark.read.parquet(c["plain"]), qk_path, level=LEVEL, files=1,
+        spark.read.parquet(c["plain"]), qk_path, files=1,
         row_group_bytes=gran,
     )
 
@@ -601,21 +643,26 @@ def sorted_tiles(spark, sparse_corpus, tmp_path_factory):
     return path
 
 
-def _box_zones(spark, tile_boxes):
-    """One zone per inclusive (tc0, tc1, tr0, tr1) tile box of the
-    sparse_corpus grid (16-px tiles, 1024 px per side, y flipped), inset
-    by 2 px so it covers exactly those tiles."""
+def _box_zones(spark, tile_boxes, dataset="sparse", height=1024):
+    """One zone per inclusive (tc0, tc1, tr0, tr1) tile box of a grid of
+    16-px tiles ``height`` px tall, y flipped (default: sparse_corpus),
+    inset by 2 px so it covers exactly those tiles."""
     import python_rasterstats_spark.geom as G
 
     return features_to_zones(
         spark,
         [
-            G.box(tc0 * 16 + 2, 1024 - (tr1 + 1) * 16 + 2,
-                  (tc1 + 1) * 16 - 2, 1024 - tr0 * 16 - 2)
+            G.box(tc0 * 16 + 2, height - (tr1 + 1) * 16 + 2,
+                  (tc1 + 1) * 16 - 2, height - tr0 * 16 - 2)
             for tc0, tc1, tr0, tr1 in tile_boxes
         ],
-        dataset="sparse",
+        dataset=dataset,
     )
+
+
+def _wide_boxes(spark, tile_boxes):
+    """_box_zones of the wide grid (_wide_meta)."""
+    return _box_zones(spark, tile_boxes, dataset="wide", height=64)
 
 
 def test_fresh_sparse_draw_compiles_nothing(spark, sparse_corpus, sorted_tiles):
@@ -675,31 +722,35 @@ def test_sorted_scan_prunes_row_groups_per_key(spark, sparse_corpus, sorted_tile
 
 
 @pytest.mark.parametrize(
-    "boxes, level, form",
+    "boxes, form",
     [
         # two 3×3-tile corners: 18 keys
-        ([(0, 2, 0, 2), (61, 63, 61, 63)], 16, "keys"),
+        ([(0, 2, 0, 2), (61, 63, 61, 63)], "keys"),
         # a 24×24-tile block tiled by four zones: 576 keys, dense
         ([(0, 11, 0, 11), (12, 23, 0, 11), (0, 11, 12, 23),
-          (12, 23, 12, 23)], 16, "keys"),
+          (12, 23, 12, 23)], "keys"),
         # two opposite 24×24-tile blocks: 1,152 keys, past _MAX_KEYS
-        ([(0, 23, 0, 23), (40, 63, 40, 63)], 16, "rects"),
-        # level 2 addresses a 4×4 grid: Morton overflow
-        ([(0, 5, 0, 5)], 2, "rects"),
+        ([(0, 23, 0, 23), (40, 63, 40, 63)], "rects"),
+        # past 2^16 tiles per side, where a 16-level code would wrap
+        ([(WIDE - 6, WIDE - 1, 0, 3)], "keys"),
     ],
-    ids=["sparse", "dense", "above_cap", "overflow"],
+    ids=["sparse", "dense", "above_cap", "wide"],
 )
 def test_quadkey_predicate_form_follows_the_working_set(
-    spark, sparse_corpus, boxes, level, form
+    spark, sparse_corpus, boxes, form
 ):
     """Over a quadkey column a working set of ≤ _MAX_KEYS tiles goes as
-    its exact key set, dense or not; a larger one, and any set on a grid
-    that overflows the level, as its tile_col/tile_row rects."""
-    meta = collect_dataset_meta(sparse_corpus["datasets"])
-    rects = _zone_tile_rects(
-        zone_windows(_zone_geom_dict(_box_zones(spark, boxes)), meta), meta
+    its exact key set, dense or not, on a grid of any width; a larger
+    one as its tile_col/tile_row rects."""
+    wide = boxes[0][1] >= 1 << 16
+    meta = _wide_meta() if wide else collect_dataset_meta(
+        sparse_corpus["datasets"]
     )
-    pred = rects_prune_filter(rects, meta, ["quadkey"], quadkey_level=level)
+    zones = (_wide_boxes if wide else _box_zones)(spark, boxes)
+    rects = _zone_tile_rects(
+        zone_windows(_zone_geom_dict(zones), meta), meta
+    )
+    pred = rects_prune_filter(rects, meta, ["quadkey"])
     want = set().union(*(_codes(*b) for b in boxes))
     if form == "keys":
         assert "BETWEEN" not in pred and _key_set(pred) == want

@@ -1,10 +1,8 @@
-"""Round-5 fixes (ADVICE r4 items 1-4 + VERDICT r4 'Next round' 3-5):
+"""Round-5 fixes (ADVICE r4 items 2-4 + VERDICT r4 'Next round' 3-5;
+item 1, the Morton overflow of a 16-level quadkey, cannot occur since the
+code takes every bit of the tile indices — tests/test_prune.py pins the
+wide-grid key set):
 
-- ADVICE #1 (medium, wrong results): Morton overflow in the quadkey
-  pruning must emit NO quadkey constraint (the tile_col/tile_row rects
-  stand in) — a finite key list over a level the storage exceeded
-  silently drops real tiles; quadkey_level is threaded through the
-  operators.
 - ADVICE #2: _coalesce_rects must survive negative window centers
   (boundless SMJ path) — clamp the Morton sort key.
 - ADVICE #3: write_quadkey_partitioned_tiles must escape dataset names
@@ -16,7 +14,9 @@
 - VERDICT #4: the SMJ sizing pass runs ONCE (persisted across its
   consumers) — asserted via the sizing accumulator.
 - VERDICT #5: holistic_mode='auto' (new default) picks exact/sketch/salt
-  from the per-zone size estimate; parity corpora stay bit-exact.
+  from the per-zone size estimate; parity corpora stay bit-exact. The
+  tests reach the big-zone plans by patching the size threshold
+  (zonal._BIG_ZONE_PX) to 0.
 """
 
 import os
@@ -29,26 +29,21 @@ from python_rasterstats_spark import geom as G
 from python_rasterstats_spark.operators import zonal as Z
 from python_rasterstats_spark.operators.zonal import (
     _coalesce_rects,
-    _zone_tile_rects,
-    auto_holistic_plan,
-    collect_dataset_meta,
-    rects_prune_filter,
-    storage_fence,
     zonal_stats_df,
-    zone_windows,
+)
+from python_rasterstats_spark.plans.explain import (
+    map_in_pandas_inputs,
+    physical_plan,
 )
 from python_rasterstats_spark.sources.tables import (
     features_to_zones,
     raster_to_tables,
-    with_quadkey,
 )
 
 
-@pytest.fixture(scope="module")
-def grid(spark):
-    """256×256 px / 16×16-tile corpus + two small zones (y row 0 at top)."""
-    rng = np.random.default_rng(7)
-    arr = rng.uniform(0, 100, size=(256, 256)).astype(np.float32)
+def _grid(spark, arr):
+    """256×256 px / 16×16-tile corpus of ``arr`` + two small zones (y row
+    0 at top)."""
     aff = (1.0, 0.0, 0.0, 0.0, -1.0, 256.0)
     tiles, datasets = raster_to_tables(
         spark, arr, aff, dataset="g", nodata=-9999.0, tile=16
@@ -59,62 +54,29 @@ def grid(spark):
     return arr, tiles, datasets, zones
 
 
+@pytest.fixture(scope="module")
+def grid(spark):
+    """A continuous (float32) raster."""
+    rng = np.random.default_rng(7)
+    return _grid(spark, rng.uniform(0, 100, size=(256, 256)).astype(np.float32))
+
+
+@pytest.fixture(scope="module")
+def int_grid(spark):
+    """An integer (int16) raster: a bounded value domain with duplicates."""
+    rng = np.random.default_rng(8)
+    return _grid(spark, rng.integers(0, 50, size=(256, 256)).astype(np.int16))
+
+
+@pytest.fixture
+def big_zones(monkeypatch):
+    """Every zone counts as big: the 'auto' holistic plan leaves the
+    parity-scale exact merge."""
+    monkeypatch.setattr(Z, "_BIG_ZONE_PX", 0)
+
+
 def _sorted(df):
     return sorted(map(tuple, df.collect()))
-
-
-# --------------------------------------------------------------------------
-# ADVICE #1 — Morton overflow must never drop tiles
-# --------------------------------------------------------------------------
-
-def test_quadkey_overflow_emits_none_sentinel(grid):
-    """Past the level's grid the key set is None: no quadkey constraint,
-    the rects stand in, and the fenced scan admits fewer tiles than the
-    table."""
-    _, tiles, datasets, zones = grid
-    meta = collect_dataset_meta(datasets)
-    rects = _zone_tile_rects(zone_windows({
-        (r["zone_id"], r["dataset"]): bytes(r["geometry_wkb"])
-        for r in zones.select("zone_id", "dataset", "geometry_wkb").collect()
-    }, meta), meta)
-    qk_tiles = with_quadkey(tiles)
-    # level 2 addresses a 4×4 grid; ours is 16×16 → overflow
-    s = rects_prune_filter(rects, meta, qk_tiles.columns, quadkey_level=2)
-    assert "tile_col BETWEEN" in s and "quadkey" not in s
-    fenced = storage_fence(qk_tiles, rects, meta, quadkey_level=2)
-    assert 0 < fenced.count() < tiles.count()
-    # no overflow at the true level: the key set appears
-    s = rects_prune_filter(rects, meta, qk_tiles.columns, quadkey_level=4)
-    assert "quadkey IN" in s and "BETWEEN" not in s
-
-
-def test_quadkey_overflow_end_to_end_results_unchanged(grid):
-    """With a quadkey level too small for the grid, the scan must be
-    fenced by the rects, never wrongly pruned (the pre-fix predicate
-    BETWEEN 0 AND 4^level-1 drops every tile whose stored code exceeds
-    it): fewer tiles than the table, the rows of the unpruned run."""
-    _, tiles, datasets, zones = grid
-    qk_tiles = with_quadkey(tiles)  # stored codes up to 255 on this grid
-    stats = ["count", "min", "max", "mean", "median"]
-    want = _sorted(zonal_stats_df(
-        zones, qk_tiles, datasets, dataset="g", stats=stats,
-        prune_tiles=False,
-    ))
-    got_overflow = _sorted(zonal_stats_df(
-        zones, qk_tiles, datasets, dataset="g", stats=stats,
-        quadkey_level=2,
-    ))
-    fenced = Z.front_half(
-        zones, qk_tiles, collect_dataset_meta(datasets), broadcast=True,
-        quadkey_level=2,
-    ).tiles
-    assert 0 < fenced.count() < 256
-    got_level = _sorted(zonal_stats_df(
-        zones, qk_tiles, datasets, dataset="g", stats=stats,
-        quadkey_level=4,  # the grid's true level, threaded through
-    ))
-    assert want == got_overflow == got_level
-    assert want[0][1] > 0
 
 
 # --------------------------------------------------------------------------
@@ -193,27 +155,30 @@ def test_mixed_add_stats_raises_clear_error(spark):
 # --------------------------------------------------------------------------
 
 def test_auto_holistic_plan_unit():
-    kw = dict(threshold_px=1000)
+    def auto(est_px, want_exact_domain, continuous):
+        return Z.holistic_plan(
+            "auto", want_holistic=True, want_exact_domain=want_exact_domain,
+            est_px=est_px, continuous=continuous, sketch_px=1024,
+        )
+
+    exact, salt = (None, None, None), (None, Z._SALT, None)
+    sketch = (1024, Z._SALT, 8 * 1024)
+    big = 10**9
+    assert Z._BIG_ZONE_PX < big
     # parity scale → exact, whatever the stats/dtype
-    assert auto_holistic_plan(
-        999, want_exact_domain=False, continuous=True, **kw) == "exact"
-    assert auto_holistic_plan(
-        0, want_exact_domain=True, continuous=False, **kw) == "exact"
+    assert auto(Z._BIG_ZONE_PX, False, True) == exact
+    assert auto(0, True, False) == exact
     # huge + quantiles-only + continuous → sketch
-    assert auto_holistic_plan(
-        10**9, want_exact_domain=False, continuous=True, **kw) == "sketch"
+    assert auto(big, False, True) == sketch
     # huge + exact domain on a CONTINUOUS raster → plain exact merge: a
     # salted pre-merge cannot collapse a duplicate-free domain, so it
     # only re-serializes the full multiset through a second pandas round
     # (r6: measured 247 s salted vs 51 s exact on the 604 M-px corpus,
     # identical values)
-    assert auto_holistic_plan(
-        10**9, want_exact_domain=True, continuous=True, **kw) == "exact"
+    assert auto(big, True, True) == exact
     # huge integer raster (bounded domain collapses under merge) → salt
-    assert auto_holistic_plan(
-        10**9, want_exact_domain=False, continuous=False, **kw) == "salt"
-    assert auto_holistic_plan(
-        10**9, want_exact_domain=True, continuous=False, **kw) == "salt"
+    assert auto(big, False, False) == salt
+    assert auto(big, True, False) == salt
 
 
 def test_auto_default_is_exact_at_parity_scale(corpus):
@@ -227,13 +192,12 @@ def test_auto_default_is_exact_at_parity_scale(corpus):
     assert default == exact  # bit-equal: parity corpora never sketch
 
 
-def test_auto_picks_sketch_past_threshold(corpus):
+def test_auto_picks_sketch_past_threshold(corpus, big_zones):
     tiles, zones, datasets = corpus
     z = zones.filter(F.col("collection") == "hd_zones")
     kw = dict(dataset="slope_hd", stats=["count", "median", "percentile_90"],
               sketch_px=256)
-    auto = _sorted(zonal_stats_df(
-        z, tiles, datasets, auto_px_per_zone=0, **kw))
+    auto = _sorted(zonal_stats_df(z, tiles, datasets, **kw))
     forced = _sorted(zonal_stats_df(
         z, tiles, datasets, holistic_mode="sketch", **kw))
     exact = _sorted(zonal_stats_df(
@@ -242,23 +206,38 @@ def test_auto_picks_sketch_past_threshold(corpus):
     assert auto != exact   # ...and the sketch is observably not exact here
 
 
-def test_auto_salts_exact_domain_past_threshold(corpus):
-    tiles, zones, datasets = corpus
-    z = zones.filter(F.col("collection") == "hd_zones")
-    kw = dict(dataset="slope_hd", stats=["count", "median", "unique"])
-    auto = _sorted(zonal_stats_df(
-        z, tiles, datasets, auto_px_per_zone=0, **kw))
-    exact = _sorted(zonal_stats_df(
-        z, tiles, datasets, holistic_mode="exact", **kw))
-    assert auto == exact  # salted exact merge: values unchanged
+def _merge_keys(df) -> list:
+    """The sort keys of each merge stage in ``df``'s executed plan."""
+    return [
+        sort for cols, sort, _ in map_in_pandas_inputs(physical_plan(df))
+        if "median" in cols or "_salt" in cols
+    ]
 
 
-def test_auto_in_smj_regime_uses_sizing_estimate(grid):
+def test_auto_salts_exact_domain_past_threshold(int_grid, big_zones):
+    """Big zones of an INTEGER raster needing the exact domain take the
+    salted two-stage exact merge in either regime: a (zone_id, _salt)
+    pre-merge under the zone_id merge, with the rows of the plain exact
+    merge."""
+    _, tiles, datasets, zones = int_grid
+    for broadcast_zones in (True, False):
+        kw = dict(dataset="g", stats=["count", "median", "unique"],
+                  broadcast_zones=broadcast_zones)
+        auto = zonal_stats_df(zones, tiles, datasets, **kw)
+        got = _sorted(auto)
+        assert _merge_keys(auto) == [["zone_id"], ["zone_id", "_salt"]]
+        exact = zonal_stats_df(
+            zones, tiles, datasets, holistic_mode="exact", **kw)
+        want = _sorted(exact)
+        assert _merge_keys(exact) == [["zone_id"]]
+        assert got == want and got[0][1] > 0
+
+
+def test_auto_in_smj_regime_uses_sizing_estimate(grid, big_zones):
     _, tiles, datasets, zones = grid
     kw = dict(dataset="g", stats=["count", "median"], sketch_px=256,
               broadcast_zones=False)
-    auto = _sorted(zonal_stats_df(
-        zones, tiles, datasets, auto_px_per_zone=0, **kw))
+    auto = _sorted(zonal_stats_df(zones, tiles, datasets, **kw))
     forced = _sorted(zonal_stats_df(
         zones, tiles, datasets, holistic_mode="sketch", **kw))
     assert auto == forced and auto[0][1] > 0
@@ -268,17 +247,18 @@ def test_auto_in_smj_regime_uses_sizing_estimate(grid):
 # VERDICT #4 — the SMJ sizing pass scans the zone table exactly once
 # --------------------------------------------------------------------------
 
-def test_smj_sizing_pass_runs_once(grid):
+def test_smj_sizing_pass_runs_once(grid, monkeypatch):
     _, tiles, datasets, zones = grid
     n_zone_rows = zones.count()
-    out = zonal_stats_df(
-        zones, tiles, datasets, dataset="g",
-        stats=["count", "mean", "median"],
-        broadcast_zones=False,          # SMJ regime
-        hybrid_wkb_bytes=1,             # force the hybrid consumer
-        prune_tiles=True,               # force the scan-fence consumer
-        auto_px_per_zone=0,             # force the auto-plan consumer
-    )
+    with monkeypatch.context() as m:
+        m.setattr(Z, "_BIG_ZONE_PX", 0)  # force the auto-plan consumer
+        out = zonal_stats_df(
+            zones, tiles, datasets, dataset="g",
+            stats=["count", "mean", "median"],
+            broadcast_zones=False,          # SMJ regime
+            hybrid_wkb_bytes=1,             # force the hybrid consumer
+            prune_tiles=True,               # force the scan-fence consumer
+        )
     acc = Z._LAST_SIZING_ACC
     assert acc is not None
     # all three consumers (hybrid selection, scan fence, size estimate)

@@ -10,7 +10,7 @@ STATS = ["count", "median", "majority", "minority", "unique",
          "percentile_25", "percentile_90"]
 
 
-def test_salted_merge_identical(corpus):
+def test_salted_merge_identical(corpus, pin_salt):
     tiles, zones, datasets = corpus
     polys = zones.filter(
         F.col("collection").isin("polygons", "multipolygons", "lines")
@@ -18,8 +18,9 @@ def test_salted_merge_identical(corpus):
     base = zonal_stats_df(
         polys, tiles, datasets, dataset="slope", stats=STATS
     ).orderBy("zone_id").toPandas()
+    pin_salt(7)
     salted = zonal_stats_df(
-        polys, tiles, datasets, dataset="slope", stats=STATS, holistic_salt=7
+        polys, tiles, datasets, dataset="slope", stats=STATS
     ).orderBy("zone_id").toPandas()
     assert base["count"].tolist() == salted["count"].tolist()
     for col in STATS[1:]:
@@ -28,16 +29,17 @@ def test_salted_merge_identical(corpus):
         ), col
 
 
-def test_salted_categorical_identical(corpus):
+def test_salted_categorical_identical(corpus, pin_salt):
     tiles, zones, datasets = corpus
     polys = zones.filter(F.col("collection") == "polygons")
     base = zonal_stats_df(
         polys, tiles, datasets, dataset="slope_classes", categorical=True,
         stats=["count"],
     ).orderBy("zone_id").toPandas()
+    pin_salt(4)
     salted = zonal_stats_df(
         polys, tiles, datasets, dataset="slope_classes", categorical=True,
-        stats=["count"], holistic_salt=4,
+        stats=["count"],
     ).orderBy("zone_id").toPandas()
     for a, b in zip(base["value_counts"], salted["value_counts"]):
         assert (a is None) == (b is None)
